@@ -2,7 +2,7 @@
 """Layered lake benchmark of the graft engine: one run of one workload.
 
 Usage (from the repository root):
-  python3 perfbench/run.py --workload lake_mixed --seed 1 --seconds 10 --trace 0
+  python3 perfbench/run.py --workload lake_mixed --seed 1 --seconds 12 --trace 0
 
 Workloads: lake_mixed, llm_pipeline (see perfbench/README.md).
 A run builds the engine and the benchmark from source with sbt the first
@@ -33,7 +33,11 @@ CP_FILE = os.path.join(HERE, "target", "perfbench-classpath.txt")
 WORKLOADS = ("lake_mixed", "llm_pipeline")
 # input scale factor of each workload's generated tables
 SCALE = {"lake_mixed": 0.02, "llm_pipeline": 0.01}
-RUN_LIMIT_S = 170
+# a run's own time limit, counted from the end of the build: fixed work,
+# a multiple of the window, and the traced run's two extra decks or passes
+RUN_FIXED_S = 120
+RUN_PER_WINDOW_S = 3
+RUN_TRACE_S = 60
 BUILD_LIMIT_S = 800
 ADD_OPENS = ["java.lang", "java.lang.invoke", "java.lang.reflect", "java.io",
              "java.net", "java.nio", "java.util", "java.util.concurrent",
@@ -152,11 +156,12 @@ def main():
     # the JVM and delete the run's files
     signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
     started = time.time()
-    deadline = started + RUN_LIMIT_S
     if not os.path.isdir(os.path.join(ROOT, "src", "main", "scala", "graft")):
         raise SystemExit("engine sources not found next to perfbench/")
 
     cp = build()
+    deadline = (time.time() + RUN_FIXED_S + RUN_PER_WINDOW_S * a.seconds
+                + RUN_TRACE_S * a.trace)
     work = os.path.join(WORK, f"run-{os.getpid()}")
     shutil.rmtree(work, ignore_errors=True)
     os.makedirs(work)

@@ -40,9 +40,8 @@ final class LayerObs(ctx: Ctx) {
     * the commit-file write attempts and the Iceberg manifest list.
     */
   def afterCommit(t: DeltaTable, kind: String, ms: Double, version: Long): Unit = {
-    val writes = Iterator.continually(FsCounters.commitWrites.poll())
+    attempts += Iterator.continually(FsCounters.commitWrites.poll())
       .takeWhile(_ != null).map(_.longValue).toSeq
-    attempts += writes
     val log = Paths.get(t.deltaLog.logPath.toUri.getPath)
     val prefix = f"$version%020d.checkpoint"
     val landed = scala.util.Using.resource(Files.list(log))(
@@ -118,7 +117,9 @@ final class LayerObs(ctx: Ctx) {
       "exec.shuffle_mb" -> (if (execSpans.isEmpty) 0.0 else mean(execSpans.map(s =>
         jobsBySpan.getOrElse(s.id, Nil).map(_.shuffleBytes).sum / 1048576.0))),
       "delta.txn.commit_ms" -> med(named("delta.txn", "commit")),
-      "delta.txn.commit_jobs" -> perCommit("delta.txn")(_.size.toDouble),
+      // every job the metadata-only commit runs, whatever layer its call
+      // site names (most are the post-commit snapshot update's)
+      "delta.txn.commit_jobs" -> jobsIn(named("delta.txn", "commit")),
       "delta.txn.retries_per_commit" ->
         (if (attempts.isEmpty) 0.0 else mean(attempts.map(a => math.max(0, a.size - 1).toDouble).toSeq)),
       "delta.txn.conflict_ms" -> (if (conflicts.isEmpty) 0.0 else median(conflicts.toSeq)),

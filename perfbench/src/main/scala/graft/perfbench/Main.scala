@@ -32,6 +32,7 @@ final case class OpRec(kind: String, cls: String, ms: Double, ok: Boolean)
 final case class Outcome(
     setupS: Seq[Double],
     windowS: Double,
+    opsPerS: Double,
     ops: Seq[OpRec],
     passS: Seq[Double],
     spaceAmp: Double,
@@ -78,7 +79,6 @@ object Main {
     val spark = session(o)
     mark("session")
     val tracer = new Tracer(spark.sparkContext)
-    if (o.trace) spark.sparkContext.addSparkListener(tracer.listener)
     val ctx = new Ctx(spark, o, tracer)
     val gcBefore = gcMillis()
     val out: Outcome = o.workload match {
@@ -149,7 +149,7 @@ object Report {
     val correct = failed == 0 && out.checks.forall(_._2)
     val e2e = mutable.LinkedHashMap[String, Any](
       "setup_s" -> metric(Stats.median(out.setupS), "s"),
-      "ops_per_s" -> metric(out.ops.count(_.ok) / out.windowS, "1/s"),
+      "ops_per_s" -> metric(out.opsPerS, "1/s"),
       "read_p50_ms" -> metric(Stats.median(reads), "ms"),
       "read_p90_ms" -> metric(Stats.pct(reads, 0.9), "ms"),
       "commit_p50_ms" -> metric(Stats.median(commits), "ms"),
@@ -180,6 +180,7 @@ object Report {
       "pass_samples_s" -> out.passS.asJava,
       "read_tail" -> tail(reads), "commit_tail" -> tail(commits),
       "op_counts" -> out.ops.groupBy(_.kind).map { case (k, v) => k -> v.size }.asJava,
+      "op_samples_ms" -> out.ops.map(o => s"${o.kind}:${math.round(o.ms)}").asJava,
       "checks" -> out.checks.map { case (n, ok) => n -> ok }.toMap.asJava,
       "end_to_end" -> e2e.asJava,
       "info" -> out.info.map { case (k, v) => k -> (v match {

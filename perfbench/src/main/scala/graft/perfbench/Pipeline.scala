@@ -6,20 +6,21 @@ import scala.collection.mutable
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{Row, SaveMode}
-import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 
 import graft.SparkEntry
 import graft.delta.DeltaTable
 
 /** `llm_pipeline`: repeated passes over a fixed list of the engine's
   * pipeline queries (`SparkEntry.queries`) on the generated corpus. An
-  * operation is one query: its result is collected (a read), appended to
-  * that query's Delta sink table and recorded as one provenance row (query,
-  * pass, row count) in the pipeline's run-log table (two commits).
+  * operation is one query, whose result is collected (a read). After each
+  * pass, outside its time, every result is appended to that query's Delta
+  * sink table (one commit per query): `pass_s` and `ops_per_s` are the
+  * queries' alone, `commit_p50_ms`/`commit_p90_ms` the appends'.
   *
   * A first, untimed pass warms the JVM and writes every result as parquet
   * with the query's DuckDB oracle SQL beside it, for the oracle check that
-  * follows the run. Set-up creates the empty sink and run-log tables.
+  * follows the run. Set-up creates the empty sink tables.
   */
 final class Pipeline(ctx: Ctx) {
   private val spark = ctx.spark
@@ -31,10 +32,7 @@ final class Pipeline(ctx: Ctx) {
   private val opFs = mutable.ArrayBuffer.empty[(String, String, Map[String, Long])]
   private val layerObs = new LayerObs(ctx)
   private var sinkRoot: String = _
-  private var passNo = 0
-  private val RunLog = "_runlog"
-  private val logSchema = StructType(Seq(StructField("query", StringType),
-    StructField("pass", IntegerType), StructField("rows", LongType)))
+  private val appendS = mutable.ArrayBuffer.empty[Double]
   private def sink(name: String) = DeltaTable.forPath(spark, Paths.get(sinkRoot, name).toString)
 
   private def timed(kind: String, cls: String)(body: => Unit): Boolean = {
@@ -51,36 +49,36 @@ final class Pipeline(ctx: Ctx) {
     if (tr.enabled) {
       opFs += ((kind, cls, FsCounters.snapshot().map { case (k, v) => k -> (v - fs0.getOrElse(k, 0L)) }))
       if (cls == "commit") {
-        val t = sink(if (kind.startsWith("log:")) RunLog else kind.stripPrefix("sink:"))
+        val t = sink(kind.stripPrefix("sink:"))
         layerObs.afterCommit(t, "sink", ms, t.snapshot.version)
       }
     }
     ok
   }
 
+  /** One pass over the queries, then their sink appends; returns the
+    * queries' wall time.
+    */
   private def pass(): Double = {
-    passNo += 1
+    val results = mutable.ArrayBuffer.empty[(String, StructType, Array[Row])]
     val t0 = System.nanoTime()
     names.foreach { q =>
-      var rows: Array[Row] = null
-      var schema: StructType = null
-      val ok = timed(q, "read") {
+      timed(q, "read") {
         tr.span("queries", q) {
           val df = fns(q)(spark, data)
-          schema = df.schema
-          rows = df.collect()
+          results += ((q, df.schema, df.collect()))
         }
       }
-      if (ok && timed(s"sink:$q", "commit") {
+    }
+    val t1 = System.nanoTime()
+    results.foreach { case (q, schema, rows) =>
+      timed(s"sink:$q", "commit") {
         tr.span("delta.dml", "append")(sink(q)
           .write(spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema), SaveMode.Append))
-      }) timed(s"log:$q", "commit") {
-        val entry = Row(q, passNo, rows.length.toLong)
-        tr.span("delta.dml", "append")(sink(RunLog)
-          .write(spark.createDataFrame(java.util.List.of(entry), logSchema), SaveMode.Append))
       }
     }
-    (System.nanoTime() - t0) / 1e9
+    appendS += (System.nanoTime() - t1) / 1e9
+    (t1 - t0) / 1e9
   }
 
   /** Untimed: every result as one parquet file, plus the oracle SQL.
@@ -102,9 +100,9 @@ final class Pipeline(ctx: Ctx) {
   }
 
   private def createSinks(root: String, results: Map[String, (StructType, Long)]): Unit =
-    (names.map(q => q -> results(q)._1) :+ (RunLog -> logSchema)).foreach { case (name, schema) =>
+    names.foreach { name =>
       DeltaTable.forPath(spark, Paths.get(root, name).toString)
-        .write(spark.createDataFrame(java.util.Collections.emptyList[Row](), schema),
+        .write(spark.createDataFrame(java.util.Collections.emptyList[Row](), results(name)._1),
           SaveMode.Append)
     }
 
@@ -129,42 +127,42 @@ final class Pipeline(ctx: Ctx) {
     var layers = Map.empty[String, Double]
     val t0 = System.nanoTime()
     def elapsed = (System.nanoTime() - t0) / 1e9
+    def queriesDone(from: Int) = ops.drop(from).count(o => o.ok && o.cls == "read")
+    var timedFrom = 0 // first operation of the passes in `passes`
     if (!ctx.opts.trace) {
-      do passes += pass() while (elapsed + passes.last <= ctx.opts.seconds)
+      // another pass only if it is predicted, appends included, to end in time
+      do passes += pass() while (elapsed + passes.last + appendS.last <= ctx.opts.seconds)
     } else {
       val p0 = pass()
-      val n0 = ops.size
-      tr.enabled = true
+      timedFrom = ops.size
+      tr.start()
       val p1 = pass()
-      tr.enabled = false
-      tr.drain()
+      tr.stop()
       passes += p1
-      val untraced = ops.take(n0).count(_.ok) / p0
-      val traced = ops.drop(n0).count(_.ok) / p1
+      val untraced = queriesDone(0) / p0
+      val traced = queriesDone(timedFrom) / p1
       layers = layerObs.metrics(opFs.toSeq) ++ Map(
         "trace.ops_per_s_untraced" -> untraced,
         "trace.ops_per_s_traced" -> traced,
         "trace.overhead_ratio" -> (untraced - traced) / untraced)
     }
-    val windowS = if (ctx.opts.trace) passes.last else elapsed
     phase("window")
 
-    // sink tables hold one result per pass, the run log one row per query
-    // and pass
+    // sink tables hold one result per pass
     val checks = mutable.ArrayBuffer.empty[(String, Boolean)]
     val nPasses = if (ctx.opts.trace) 2 else passes.size
     var live = 0.0
-    (names.map(q => q -> results(q)._2) :+ (RunLog -> names.size.toLong)).foreach {
-      case (name, perPass) =>
-        val files = sink(name).snapshot.allFiles
-        live += files.map(_.size).sum
-        val rows = files.map(f => Pipeline.numRecords(f.stats)).sum
-        checks += s"sink_rows.$name" -> (rows == perPass * nPasses)
+    names.foreach { name =>
+      val files = sink(name).snapshot.allFiles
+      live += files.map(_.size).sum
+      val rows = files.map(f => Pipeline.numRecords(f.stats)).sum
+      checks += s"sink_rows.$name" -> (rows == results(name)._2 * nPasses)
     }
     phase("checks")
-    Outcome(setups, windowS, ops.toSeq, passes.toSeq,
+    Outcome(setups, passes.sum, queriesDone(timedFrom) / passes.sum, ops.toSeq, passes.toSeq,
       Lake.treeBytes(sinkRoot) / math.max(1.0, live), checks.toSeq, layers,
-      Map("queries" -> names, "passes" -> passes.size, "phase_s" -> phases.toMap))
+      Map("queries" -> names, "passes" -> passes.size,
+        "sink_append_s" -> appendS.toSeq, "phase_s" -> phases.toMap))
   }
 }
 

@@ -9,6 +9,7 @@ import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** File-system counters of the traced run, split by what a path is:
   * commit files of `_delta_log`, other log files (checkpoints, `.crc`,
@@ -21,6 +22,10 @@ object FsCounters {
     def values: Seq[Long] = Seq(opens, bytesRead, creates, bytesWritten, lists).map(_.get)
   }
   val commitLog, otherLog, checkpoint, iceberg, data = new Kind
+  /** Off, the file system only passes calls through: the traced run's
+    * untraced deck pays no counting.
+    */
+  @volatile var enabled = false
   /** Start times (ns) of commit-file writes, for commit attempt timing. */
   val commitWrites = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
 
@@ -54,6 +59,7 @@ class CountingFileSystem extends LocalFileSystem {
   import FsCounters._
 
   override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    if (!enabled) return super.open(f, bufferSize)
     val k = kindOf(f)
     k.opens.incrementAndGet()
     val in = super.open(f, bufferSize)
@@ -63,11 +69,12 @@ class CountingFileSystem extends LocalFileSystem {
   override def create(f: Path, permission: FsPermission, overwrite: Boolean,
       bufferSize: Int, replication: Short, blockSize: Long,
       progress: Progressable): FSDataOutputStream = {
+    val inner = super.create(f, permission, overwrite, bufferSize, replication,
+      blockSize, progress)
+    if (!enabled) return inner
     val k = kindOf(f)
     k.creates.incrementAndGet()
     if (k eq commitLog) commitWrites.add(System.nanoTime())
-    val inner = super.create(f, permission, overwrite, bufferSize, replication,
-      blockSize, progress)
     new FSDataOutputStream(new java.io.OutputStream {
       override def write(b: Int): Unit = { inner.write(b); k.bytesWritten.incrementAndGet() }
       override def write(b: Array[Byte], off: Int, len: Int): Unit = {
@@ -79,7 +86,7 @@ class CountingFileSystem extends LocalFileSystem {
   }
 
   override def listStatus(f: Path): Array[FileStatus] = {
-    kindOf(f).lists.incrementAndGet()
+    if (enabled) kindOf(f).lists.incrementAndGet()
     super.listStatus(f)
   }
 }
@@ -117,10 +124,13 @@ final case class JobRec(id: Int, var span: Long, var group: String, siteLayer: S
     startMs: Long, var endMs: Long = -1L, var shuffleBytes: Long = 0L)
 
 /** Spans around calls into the engine's layers, plus Spark job attribution.
-  * Disabled, `span` just runs its body: the end-to-end run pays nothing.
+  * Disabled, `span` just runs its body and the listener is not installed:
+  * the end-to-end run pays nothing.
   */
 final class Tracer(sc: SparkContext) {
   @volatile var enabled = false
+  /** Call site (the submitting thread's stack) of each SQL execution. */
+  private val executionSite = mutable.HashMap.empty[Long, String]
   val spans = mutable.ArrayBuffer.empty[Span]
   val jobs = mutable.LinkedHashMap.empty[Int, JobRec]
   private val stageJob = mutable.HashMap.empty[Int, Int]
@@ -155,12 +165,33 @@ final class Tracer(sc: SparkContext) {
     }
   }
 
-  val listener: SparkListener = new SparkListener {
+  /** Turns spans, the listener and the file-system counters on. */
+  def start(): Unit = {
+    sc.addSparkListener(listener)
+    FsCounters.enabled = true
+    enabled = true
+  }
+
+  /** Turns tracing off again and attributes the jobs it saw ([[drain]]). */
+  def stop(): Unit = {
+    enabled = false
+    FsCounters.enabled = false
+    drain()
+    sc.removeSparkListener(listener)
+  }
+
+  private val listener: SparkListener = new SparkListener {
     override def onJobStart(e: SparkListenerJobStart): Unit = {
       val props = Option(e.properties)
       val group = props.flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
-      // the result stage (created last) carries the job's call site
-      val site = if (e.stageInfos.isEmpty) "" else e.stageInfos.maxBy(_.stageId).details
+      // the result stage (created last) carries the job's call site; a job
+      // that Spark submits from its own pool threads (adaptive execution)
+      // has no engine frame there, so it takes its SQL execution's call site
+      val stageSite = if (e.stageInfos.isEmpty) "" else e.stageInfos.maxBy(_.stageId).details
+      val site =
+        if (Layers.engineFrame(stageSite).nonEmpty) stageSite
+        else props.flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .flatMap(id => executionSite.get(id.toLong)).getOrElse(stageSite)
       val spanId = group.split('#') match {
         case Array(_, id) => id.toLong
         case _ => 0L
@@ -170,6 +201,10 @@ final class Tracer(sc: SparkContext) {
           Layers.ofCallSite(site).getOrElse(""), Layers.engineFrame(site), e.time)
         e.stageIds.foreach(s => stageJob(s) = e.jobId)
       }
+    }
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case x: SparkListenerSQLExecutionStart => executionSite(x.executionId) = x.details
+      case _ =>
     }
     override def onJobEnd(e: SparkListenerJobEnd): Unit =
       jobs.synchronized(jobs.get(e.jobId).foreach(_.endMs = e.time))
@@ -190,7 +225,7 @@ final class Tracer(sc: SparkContext) {
     * their own) to the innermost span that was open when they started:
     * the client is single-threaded, so that span caused them.
     */
-  def drain(): Unit = {
+  private def drain(): Unit = {
     org.apache.spark.PerfbenchBus.drain(sc)
     val byStart = spans.sortBy(_.startMs)
     jobs.values.foreach { j =>
@@ -212,7 +247,7 @@ final class Tracer(sc: SparkContext) {
     }
     jobs.values.foreach { j =>
       sb.append(f"""{"job":${j.id},"span":${j.span},"layer":"${Layers.of(j)}",""" +
-        f""""site":"${j.site}","ms":${j.endMs - j.startMs}}""").append('\n')
+        f""""site":"${j.site}","start_ms":${j.startMs},"ms":${j.endMs - j.startMs}}""").append('\n')
     }
     java.nio.file.Files.writeString(path, sb.toString)
   }
@@ -229,6 +264,7 @@ object Layers {
     ("graft.delta.IcebergMetadata", "") -> "delta.iceberg",
     ("graft.delta.Puffin", "") -> "delta.iceberg",
     ("graft.delta.DeltaLog", "checkpoint") -> "delta.checkpoint",
+    ("graft.delta.DeltaLog", "reconcileChecksum") -> "delta.checkpoint",
     ("graft.delta.Checkpoints", "write") -> "delta.checkpoint",
     ("graft.delta.DeltaScan", "") -> "delta.scan",
     ("graft.delta.DeltaFileIndex", "") -> "delta.scan",
