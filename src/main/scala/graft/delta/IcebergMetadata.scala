@@ -77,15 +77,6 @@ private[delta] object PrevManifest {
   * so an Iceberg reader (HadoopTables catalog) reads the Delta table
   * with zero data copies.
   *
-  * Scale shape: data manifests are written ON EXECUTORS, one Avro file
-  * per partition of the AddFile dataset — the driver collects only the
-  * per-manifest summaries (path, length, counts), never the file list.
-  * A 10^7-file table generates metadata with O(#manifests) driver state.
-  * Deletion vectors become Iceberg v2 POSITION-DELETE parquet files
-  * (file_path, pos), decoded and written distributed, referenced by a
-  * deletes manifest under an unpartitioned spec so they apply to every
-  * matching data file regardless of its partition.
-  *
   * Field ids are STABLE across generations: each generation reuses the
   * previous metadata's name-mapping ids by (physical-name) path, so
   * schema evolution never rebinds an id to a different column — prior
@@ -94,25 +85,49 @@ private[delta] object PrevManifest {
   * `delta.logRetentionDuration` cadence, and each generation sweeps
   * metadata files no retained snapshot references.
   *
-  * Generation is INCREMENTAL (r18): a previous-generation data manifest
-  * whose entries are ALL still live is referenced verbatim in the new
-  * manifest list (identical path — Iceberg manifests are immutable and
-  * the spec expects this reuse), so an append-only commit writes one
-  * new manifest of just its own files and rewrites nothing; only
-  * manifests that LOST a file are rewritten, their survivors entering
-  * as EXISTING with original snapshot/sequence. Position-delete files
-  * and their manifest are likewise carried forward by reference while
-  * the live DV set is unchanged (content fingerprint in the snapshot
-  * summary), so append commits skip the O(all-DVs) re-decode. Past
-  * `spark.graft.iceberg.maxDataManifests` (default 64) data manifests,
-  * one generation skips reuse and does a full partition-clustered
-  * rewrite — the manifest-compaction maintenance action, amortized.
+  * Data manifests are generated by one of three paths, recorded in the
+  * snapshot summary as `graft.gen-path`:
+  *  - `incremental` (every commit's post-commit generation, when it
+  *    can): the previous generation is current — its snapshot is this
+  *    Delta version's parent — so the commit's change set, read back from
+  *    the Delta log, is applied to it on the driver with zero Spark jobs
+  *    (Iceberg's manifest filter/merge on commit). Only the previous
+  *    manifests whose manifest-list partition summaries can hold a
+  *    removed file are opened; one that lists a removed file is
+  *    rewritten (removed entries as DELETED tombstones, the others as
+  *    EXISTING with their original snapshot id, sequence numbers and
+  *    data_file), every other manifest is referenced unchanged (Iceberg
+  *    manifests are immutable and designed for this reuse), and the
+  *    commit's adds are ADDED — one new manifest per partition tuple.
+  *    Position-delete files and their manifest carry forward by
+  *    reference, since the DV set is unchanged.
+  *  - `general`: the distributed path. The previous data manifests are
+  *    read on executors and joined against the snapshot's file set; a
+  *    manifest whose entries are all still live is reused by reference,
+  *    the others are rewritten with their survivors as EXISTING and the
+  *    vanished files as DELETED tombstones, hash-clustered by partition
+  *    tuple. The driver collects only per-manifest summaries, so a
+  *    10^7-file table generates with O(#manifests) driver state.
+  *  - `full`: the general path with no reuse — there is no usable
+  *    previous generation (none, or a partition-spec/format change), or
+  *    it holds `spark.graft.iceberg.maxDataManifests` (default 64) data
+  *    manifests, and this generation compacts them (Iceberg's
+  *    manifest-rewrite maintenance action, amortized).
+  * Generation falls back from incremental to general/full when the
+  * previous generation is not current (none, or stale), on schema,
+  * spec or format drift, when manifest compaction is due, when the
+  * change set holds metadata, protocol or any action other than files,
+  * SetTransactions and the row-tracking domain, when a file action
+  * carries a deletion vector (the DV set changes), or when the touched
+  * manifests hold more entries than the driver-side bound.
   *
-  * Removed files appear as status=2 DELETED tombstone entries in the
-  * rewritten manifests (r18): snapshot_id = the deleting snapshot with
-  * the data sequence preserved, so incremental DELETE consumers read
-  * the removed set directly (entries built from the previous
-  * generation's manifest rows — nothing is re-opened).
+  * Deletion vectors become Iceberg v2 POSITION-DELETE parquet files
+  * (file_path, pos) — v3: Puffin DV blobs — decoded and written
+  * distributed, referenced by a deletes manifest under an unpartitioned
+  * spec so they apply to every matching data file regardless of its
+  * partition. They carry forward by reference while the live DV set is
+  * unchanged (content fingerprint in the snapshot summary), per hash
+  * bucket of DV'd files otherwise.
   *
   * Honest simplifications vs the full UniForm implementation, each
   * loud or documented:
@@ -131,46 +146,68 @@ object IcebergMetadata {
 
   private val mapper = new ObjectMapper()
 
-  // temporary phase profiler for optimization work; prints only when
-  // GRAFT_GEN_PROF is set in the environment
-  private val profGen = sys.env.contains("GRAFT_GEN_PROF")
-  // test observability: whether the LAST generate() call on this JVM took
-  // the pure-append fast path. The fast≡general equivalence spec asserts
-  // on it so a silently-dead fast path (the r19 v3 bug) can't hide behind
-  // an implicitly-exercised suite.
-  @volatile private[delta] var lastGenUsedFastPath: Boolean = false
-  private def gprof[A](label: String)(f: => A): A =
-    if (!profGen) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[GENPROF $label] ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      r
-    }
+  /** Most manifest entries the incremental path writes on the driver (the
+    * touched manifests' entries plus the commit's adds). A larger commit
+    * takes the general path, whose manifest write is distributed.
+    */
+  private val IncrementalMaxEntries = 20000L
 
+  /** What every data manifest of one generation is written with; shipped
+    * to the executors by the general path.
+    */
+  private final case class ManifestSpec(dirStr: String,
+      entrySchemaJson: String, schemaJsonStr: String, schemaId: Int,
+      specFieldsJson: String, formatVersion: Int,
+      partMeta: Seq[(String, DataType)],
+      statsCols: Seq[(String, DataType, Int)], seqNum: Long)
+
+  /** One data-manifest entry: status (0 EXISTING, 1 ADDED, 2 DELETED),
+    * the snapshot id it records and its data sequence number (None for
+    * ADDED: inherited from the manifest list). The data_file is built from
+    * `add` at absolute path `fp`, or is `record`, copied verbatim from a
+    * previous manifest.
+    */
+  private final case class ManifestEntry(status: Int, snapshotId: Long,
+      seq: Option[Long], fp: String = null, add: AddFile = null,
+      record: GenericRecord = null) {
+    def path: String =
+      if (record == null) fp else record.get("file_path").toString
+    /** Typed partition tuple: the manifest clustering key. A value
+      * sequence, so a null value and the string "null" stay apart.
+      */
+    def tuple(partMeta: Seq[(String, DataType)]): Seq[Any] =
+      if (record == null) partMeta.map { case (pn, dt) =>
+        parsePartValue(dt, Option(add.partitionValues).flatMap(_.get(pn)).orNull)
+      } else {
+        val p = record.get("partition").asInstanceOf[GenericRecord]
+        partMeta.map { case (pn, _) => avroValue(p.get(pn)) }
+      }
+  }
+
+  private def avroValue(v: Any): Any = v match {
+    case u: org.apache.avro.util.Utf8 => u.toString
+    case o => o
+  }
+
+  private def less(a: Any, b: Any): Boolean = (a, b) match {
+    case (x: java.lang.Integer, y: java.lang.Integer) => x < y
+    case (x: java.lang.Long, y: java.lang.Long) => x < y
+    case (x: String, y: String) => x < y
+    case _ => false
+  }
 
   /** Write ONE data manifest from an entry iterator — shared by the
-    * distributed manifest rewrite (one call per shuffle partition, on
-    * executors) and the pure-append fast path (driver-side, one call
-    * per partition tuple of the commit's own files). Empty iterator →
-    * no file, empty result.
+    * general path's distributed rewrite (one call per shuffle partition,
+    * on executors) and the incremental path (driver-side, one call per
+    * partition tuple). Empty iterator → no file, empty result.
     */
-  private def writeDataManifestFile(
-      files: Iterator[(String, AddFile, Option[Long], Option[Long], Boolean)],
+  private def writeDataManifestFile(entries: Iterator[ManifestEntry],
       conf: org.apache.hadoop.conf.Configuration,
-      dirStr: String,
-      entrySchemaJson: String,
-      schemaJsonStr: String,
-      schemaId: Int,
-      specFieldsJson: String,
-      formatVersion: Int,
-      partMeta: Seq[(String, DataType)],
-      statsCols: Seq[(String, DataType, Int)],
-      snapshotId: Long,
-      seqNum: Long): Iterator[IcebergManifestSummary] = {
-        if (!files.hasNext) Iterator.empty
+      ms: ManifestSpec): Iterator[IcebergManifestSummary] = {
+        import ms.{partMeta, statsCols}
+        if (!entries.hasNext) Iterator.empty
         else {
-          val entrySchema = new org.apache.avro.Schema.Parser().parse(entrySchemaJson)
+          val entrySchema = new org.apache.avro.Schema.Parser().parse(ms.entrySchemaJson)
           val dfSchema = entrySchema.getField("data_file").schema()
           val pSchema = dfSchema.getField("partition").schema()
           val statsMapper = new ObjectMapper()
@@ -189,69 +226,7 @@ object IcebergMetadata {
             }
             arr
           }
-          val name = f"${java.util.UUID.randomUUID()}-m0.avro"
-          val out = new Path(dirStr, name)
-          val fsx = out.getFileSystem(conf)
-          val stream = fsx.create(out, true)
-          val w = new DataFileWriter[GenericRecord](
-            new GenericDatumWriter[GenericRecord](entrySchema))
-          // key-value file metadata the Iceberg spec requires on every
-          // manifest — conformant readers refuse files without it
-          w.setMeta("schema", schemaJsonStr)
-          w.setMeta("schema-id", schemaId.toString)
-          w.setMeta("partition-spec", specFieldsJson)
-          w.setMeta("partition-spec-id", "0")
-          w.setMeta("format-version", formatVersion.toString)
-          w.setMeta("content", "data")
-          w.create(entrySchema, stream)
-          var rows = 0L
-          var n = 0L
-          var existingN = 0L
-          var existingRows = 0L
-          var deletedN = 0L
-          var deletedRows = 0L
-          var minSeq = Long.MaxValue
-          // per-partition-column field_summary state
-          val containsNull = Array.fill(partMeta.length)(false)
-          val lo = Array.fill[Any](partMeta.length)(null)
-          val hi = Array.fill[Any](partMeta.length)(null)
-          def less(a: Any, b: Any): Boolean = (a, b) match {
-            case (x: java.lang.Integer, y: java.lang.Integer) => x < y
-            case (x: java.lang.Long, y: java.lang.Long) => x < y
-            case (x: String, y: String) => x < y
-            case _ => false
-          }
-          files.foreach { case (fp, a, prevSnap, prevSeq, isDeleted) =>
-            val rec = new GenericData.Record(entrySchema)
-            // a file the previous generation listed (under an OLDER
-            // snapshot) is EXISTING with its original snapshot-id and
-            // sequence number, stored explicitly (spec: only ADDED
-            // entries inherit from the manifest list); genuinely new
-            // files — and a same-version regeneration's own files —
-            // are ADDED by this snapshot; a file that VANISHED is a
-            // DELETED tombstone (snapshot_id = the deleting snapshot,
-            // data sequence preserved) for incremental DELETE consumers
-            val existing = !isDeleted && prevSnap.exists(_ != snapshotId)
-            if (isDeleted) {
-              rec.put("status", 2)
-              rec.put("snapshot_id", snapshotId)
-              val sq = prevSeq.getOrElse(seqNum)
-              rec.put("sequence_number", sq)
-              rec.put("file_sequence_number", sq)
-              if (sq < minSeq) minSeq = sq
-            } else if (existing) {
-              rec.put("status", 0)
-              rec.put("snapshot_id", prevSnap.get)
-              val sq = prevSeq.getOrElse(seqNum)
-              rec.put("sequence_number", sq)
-              rec.put("file_sequence_number", sq)
-              if (sq < minSeq) minSeq = sq
-            } else {
-              rec.put("status", 1)
-              rec.put("snapshot_id", snapshotId)
-              // null sequence numbers inherit from the manifest-list entry
-              if (seqNum < minSeq) minSeq = seqNum
-            }
+          def dataFileOf(fp: String, a: AddFile): GenericRecord = {
             val df = new GenericData.Record(dfSchema)
             df.put("content", 0)
             df.put("file_path", fp)
@@ -259,18 +234,12 @@ object IcebergMetadata {
             // v3 row lineage: EXPLICIT per-file first_row_id = the Delta
             // base row id (stable across generations; tombstones carry
             // the vanished file's original id)
-            if (formatVersion >= 3)
+            if (ms.formatVersion >= 3)
               df.put("first_row_id",
                 a.baseRowId.map(java.lang.Long.valueOf).orNull)
             val p = new GenericData.Record(pSchema)
-            partMeta.zipWithIndex.foreach { case ((pn, dt), i) =>
-              val v = parsePartValue(dt, a.partitionValues.getOrElse(pn, null))
-              if (v == null) containsNull(i) = true
-              else {
-                if (lo(i) == null || less(v, lo(i))) lo(i) = v
-                if (hi(i) == null || less(hi(i), v)) hi(i) = v
-              }
-              p.put(pn, v)
+            partMeta.foreach { case (pn, dt) =>
+              p.put(pn, parsePartValue(dt, a.partitionValues.getOrElse(pn, null)))
             }
             df.put("partition", p)
             // record_count is the PHYSICAL row count: deletion vectors
@@ -308,11 +277,56 @@ object IcebergMetadata {
               val highs = bounds("maxValues", isUpper = true)
               if (highs.nonEmpty) df.put("upper_bounds", kvArray("upper_bounds", highs))
             }
+            df
+          }
+          val name = f"${java.util.UUID.randomUUID()}-m0.avro"
+          val out = new Path(ms.dirStr, name)
+          val fsx = out.getFileSystem(conf)
+          val stream = fsx.create(out, true)
+          val w = new DataFileWriter[GenericRecord](
+            new GenericDatumWriter[GenericRecord](entrySchema))
+          // key-value file metadata the Iceberg spec requires on every
+          // manifest — conformant readers refuse files without it
+          w.setMeta("schema", ms.schemaJsonStr)
+          w.setMeta("schema-id", ms.schemaId.toString)
+          w.setMeta("partition-spec", ms.specFieldsJson)
+          w.setMeta("partition-spec-id", "0")
+          w.setMeta("format-version", ms.formatVersion.toString)
+          w.setMeta("content", "data")
+          w.create(entrySchema, stream)
+          // per-status (files, rows)
+          val files = Array.fill(3)(0L)
+          val rows = Array.fill(3)(0L)
+          var minSeq = Long.MaxValue
+          // per-partition-column field_summary state
+          val containsNull = Array.fill(partMeta.length)(false)
+          val lo = Array.fill[Any](partMeta.length)(null)
+          val hi = Array.fill[Any](partMeta.length)(null)
+          entries.foreach { en =>
+            val rec = new GenericData.Record(entrySchema)
+            // EXISTING and DELETED entries store their sequence numbers
+            // explicitly (spec: only ADDED entries inherit from the
+            // manifest list); a DELETED tombstone's snapshot_id is the
+            // deleting snapshot, its data sequence the file's own
+            rec.put("status", en.status)
+            rec.put("snapshot_id", en.snapshotId)
+            en.seq.foreach { sq =>
+              rec.put("sequence_number", sq)
+              rec.put("file_sequence_number", sq)
+            }
+            minSeq = math.min(minSeq, en.seq.getOrElse(ms.seqNum))
+            val df = if (en.record != null) en.record else dataFileOf(en.fp, en.add)
+            en.tuple(partMeta).zipWithIndex.foreach { case (v, i) =>
+              if (v == null) containsNull(i) = true
+              else {
+                if (lo(i) == null || less(v, lo(i))) lo(i) = v
+                if (hi(i) == null || less(hi(i), v)) hi(i) = v
+              }
+            }
             rec.put("data_file", df)
             w.append(rec)
-            if (isDeleted) { deletedN += 1; deletedRows += rc }
-            else if (existing) { existingN += 1; existingRows += rc }
-            else { rows += rc; n += 1 }
+            files(en.status) += 1
+            rows(en.status) += df.get("record_count").asInstanceOf[Long]
           }
           w.close()
           val len = fsx.getFileStatus(out).getLen
@@ -321,10 +335,10 @@ object IcebergMetadata {
               Option(lo(i)).map(v => boundBytes(partMeta(i)._2, v)),
               Option(hi(i)).map(v => boundBytes(partMeta(i)._2, v)))
           }
-          Iterator(IcebergManifestSummary(out.toString, len, n, rows, sums,
-            existingN, existingRows,
+          Iterator(IcebergManifestSummary(out.toString, len, files(1), rows(1),
+            sums, files(0), rows(0),
             if (minSeq == Long.MaxValue) None else Some(minSeq),
-            deletedN, deletedRows))
+            files(2), rows(2)))
         }
 
   }
@@ -734,16 +748,298 @@ object IcebergMetadata {
     case other => throw new UnsupportedOperationException(other.simpleString)
   }
 
+  /** The incremental path's plan for one commit: its adds, the previous
+    * data manifests it rewrites, and the entries of their replacements.
+    */
+  private final case class IncrementalPlan(adds: Seq[AddFile],
+      rewritten: Set[String], entries: Seq[ManifestEntry])
+
+  /** Plan the incremental path from one commit's `actions` against the
+    * previous generation's data manifests (Iceberg's manifest
+    * filter/merge on commit):
+    *  - the manifests OPENED are those whose manifest-list partition
+    *    summaries can hold a removed file, or a dataChange=false add
+    *    (a maintenance re-add may name a path a manifest still lists);
+    *  - an opened manifest that lists a removed file is REWRITTEN: the
+    *    removed entries become DELETED tombstones, every other entry
+    *    EXISTING with its original snapshot id, sequence number and
+    *    data_file record (v3 first_row_id included); every other manifest
+    *    stays referenced unchanged;
+    *  - the commit's adds are ADDED.
+    * None — take the general path — when the change set holds anything but
+    * file, SetTransaction, CommitInfo and row-tracking domain actions; when
+    * a file action carries a deletion vector (the DV set changes); when an
+    * add lacks a record count (v3: a base row id); when a path is removed
+    * and re-added, or an add names a path an opened manifest lists; when a
+    * removed file is not found; when an opened manifest was written under
+    * another entry schema; or past [[IncrementalMaxEntries]] entries.
+    */
+  private def planIncremental(actions: Seq[Action],
+      prevDataMs: Seq[PrevManifest], ms: ManifestSpec, root: Path,
+      conf: org.apache.hadoop.conf.Configuration,
+      snapshotId: Long): Option[IncrementalPlan] = {
+    def hasDv(d: DeletionVectorDescriptor, tags: Map[String, String]): Boolean =
+      d != null || (tags != null && tags.contains(DeletionVectors.PathTag))
+    val adds = actions.collect { case a: AddFile => a }
+    val removes = actions.collect { case r: RemoveFile => r }
+    val plain = actions.forall {
+      case _: AddFile | _: RemoveFile | _: CommitInfo | _: SetTransaction => true
+      case d: DomainMetadata => d.domain == RowTracking.Domain
+      case _ => false
+    }
+    val removed = removes.map(r => FileNames.absolutePathString(root, r.path)).toSet
+    val added = adds.map(a => FileNames.absolutePathString(root, a.path))
+    val probes = (removes.map(_.partitionValues) ++
+      adds.filterNot(_.dataChange).map(_.partitionValues)).distinct
+    val opened = prevDataMs.filter(m => probes.exists(mayHold(m, _, ms.partMeta)))
+    if (!plain || removes.exists(r => hasDv(r.deletionVector, r.tags)) ||
+        adds.exists(a => hasDv(a.deletionVector, a.tags) ||
+          Stats.numRecords(a.stats).isEmpty ||
+          (ms.formatVersion >= 3 && a.baseRowId.isEmpty)) ||
+        added.exists(removed) ||
+        opened.map(m => m.addedFiles.toLong + m.existingFiles + m.deletedFiles)
+          .sum + adds.size > IncrementalMaxEntries) return None
+    val entrySchema = new org.apache.avro.Schema.Parser().parse(ms.entrySchemaJson)
+    val addedSet = added.toSet
+    val rewritten = Set.newBuilder[String]
+    val entries = Seq.newBuilder[ManifestEntry]
+    var found = 0
+    val consistent = opened.forall { m =>
+      val r = DataFileReader.openReader(
+        new org.apache.avro.mapred.FsInput(new Path(m.path), conf),
+        new GenericDatumReader[GenericRecord]())
+      try r.getSchema == entrySchema && {
+        val live = r.iterator().asScala
+          .filter(_.get("status").asInstanceOf[Int] != 2).toList
+        def dataFile(e: GenericRecord) = e.get("data_file").asInstanceOf[GenericRecord]
+        val hits = live.count(e => removed(dataFile(e).get("file_path").toString))
+        if (hits > 0) {
+          rewritten += m.path
+          found += hits
+          live.foreach { e =>
+            val df = dataFile(e)
+            val seq = Some(Option(e.get("sequence_number"))
+              .map(_.asInstanceOf[Long]).getOrElse(m.seq))
+            entries += (
+              if (removed(df.get("file_path").toString))
+                ManifestEntry(2, snapshotId, seq, record = df)
+              else ManifestEntry(0, Option(e.get("snapshot_id"))
+                .map(_.asInstanceOf[Long]).getOrElse(m.addedSnapId), seq, record = df))
+          }
+        }
+        !live.exists(e => addedSet(dataFile(e).get("file_path").toString))
+      } finally r.close()
+    }
+    if (!consistent || found != removed.size) None
+    else Some(IncrementalPlan(adds, rewritten.result(), entries.result() ++
+      adds.zip(added).map { case (a, fp) => ManifestEntry(1, snapshotId, None, fp, a) }))
+  }
+
+  /** Whether a manifest can hold a file with partition values `pv`, judged
+    * from its manifest-list partition summaries (unknown values or
+    * summaries: it can).
+    */
+  private def mayHold(m: PrevManifest, pv: Map[String, String],
+      partMeta: Seq[(String, DataType)]): Boolean =
+    pv == null || m.partSummaries.size != partMeta.size ||
+      partMeta.zip(m.partSummaries).forall { case ((pn, dt), (hasNull, lo, hi)) =>
+        val v = parsePartValue(dt, pv.getOrElse(pn, null))
+        if (v == null) hasNull
+        else lo.exists(l => !less(v, boundValue(dt, l))) &&
+          hi.exists(h => !less(boundValue(dt, h), v))
+      }
+
+  /** Inverse of [[boundBytes]]. */
+  private def boundValue(dt: DataType, b: Array[Byte]): Any = dt match {
+    case LongType => java.lang.Long.valueOf(java.nio.ByteBuffer.wrap(b)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN).getLong)
+    case StringType => new String(b, StandardCharsets.UTF_8)
+    case _ => java.lang.Integer.valueOf(java.nio.ByteBuffer.wrap(b)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt)
+  }
+
+  /** The GENERAL path's data manifests: `(reused previous manifest paths,
+    * summaries of the manifests written)`. Files the previous generation
+    * already listed are written as EXISTING with their ORIGINAL
+    * snapshot-id and sequence number, read from its data manifests
+    * DISTRIBUTED (one task per manifest) and joined against the
+    * snapshot's file set — never driver-sized.
+    */
+  private def generalManifests(spark: SparkSession, snapshot: Snapshot,
+      prevDataMs: Seq[PrevManifest], reuseCandidates: Boolean,
+      manifestSpec: ManifestSpec, snapshotId: Long,
+      hconf: SerializableHadoopConf): (Set[String], Seq[IcebergManifestSummary]) = {
+    import spark.implicits._
+    val partMeta = manifestSpec.partMeta
+    val seqNum = manifestSpec.seqNum
+    val prevFileInfo: Option[DataFrame] =
+      if (prevDataMs.isEmpty) None
+      else Some(spark.sparkContext
+        .parallelize(prevDataMs.map(m => (m.path, m.seq)),
+          math.max(1, prevDataMs.size))
+        .flatMap { case (mp, listSeq) =>
+          val localPartMeta = partMeta
+          val mr = DataFileReader.openReader(
+            new org.apache.avro.mapred.FsInput(new Path(mp), hconf.value),
+            new GenericDatumReader[GenericRecord]())
+          try mr.iterator().asScala
+            .filter(_.get("status").asInstanceOf[Int] != 2)
+            .map { e =>
+              val df = e.get("data_file").asInstanceOf[GenericRecord]
+              // partition values + counts ride along so a file that
+              // VANISHES this generation can be written as a DELETED
+              // tombstone entry without re-opening anything
+              val struct = df.get("partition").asInstanceOf[GenericRecord]
+              val pvs: Map[String, String] = localPartMeta.map { case (pn, dt) =>
+                val v = struct.get(pn)
+                pn -> (if (v == null) null else dt match {
+                  case DateType => java.time.LocalDate
+                    .ofEpochDay(v.asInstanceOf[Int].toLong).toString
+                  case _ => v.toString
+                })
+              }.toMap
+              (mp, df.get("file_path").toString,
+                Option(e.get("snapshot_id")).map(_.asInstanceOf[Long])
+                  .getOrElse(0L),
+                Option(e.get("sequence_number")).map(_.asInstanceOf[Long])
+                  .getOrElse(listSeq),
+                pvs,
+                df.get("record_count").asInstanceOf[Long],
+                df.get("file_size_in_bytes").asInstanceOf[Long],
+                // v3 row lineage rides along so a DELETED tombstone can
+                // preserve the vanished file's first_row_id
+                (if (df.getSchema.getField("first_row_id") == null) None
+                 else Option(df.get("first_row_id")).map(_.asInstanceOf[Long])))
+            }.toList
+          finally mr.close()
+        }.toDF("mp", "fp", "prev_snap", "prev_seq", "pvs", "rc", "fsize", "frid")
+        // read three times below (reuse vote, lineage join, tombstone
+        // anti-join) — cache so the Avro manifests are opened once
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val rootForKey = snapshot.deltaLog.dataPath.toString
+    val keyedFiles = snapshot.allFilesDS
+      .map(a => (FileNames.absolutePathString(new Path(rootForKey), a.path), a))
+      .toDF("fp", "add")
+
+    // ---- manifest REUSE vote: a prev data manifest is carried forward
+    // by reference iff every entry it lists is still live
+    val reusable: Set[String] = prevFileInfo match {
+      case Some(pi) if reuseCandidates =>
+        val live = keyedFiles.select(col("fp"))
+          .withColumn("__live", org.apache.spark.sql.functions.lit(1))
+        pi.join(live, Seq("fp"), "left")
+          .groupBy(col("mp"))
+          .agg(org.apache.spark.sql.functions.min(
+            org.apache.spark.sql.functions.coalesce(col("__live"),
+              org.apache.spark.sql.functions.lit(0))).as("allLive"))
+          .collect()
+          .collect { case r if r.getInt(1) == 1 => r.getString(0) }.toSet
+      case _ => Set.empty
+    }
+    val withPrev0 = prevFileInfo match {
+      // a corrupted/racing prior generation could double-list a path
+      // across its manifests; dedup on fp (keep the OLDEST sequence —
+      // the original lineage) so the left join can never fan out an
+      // AddFile into duplicate manifest entries
+      case Some(pi) =>
+        // __anyReuse rides the same aggregation: "this path is listed
+        // in SOME reusable manifest" — the pool filter below then
+        // drops reused-manifest files with a map-only predicate.
+        // `reusable` is bounded by spark.graft.iceberg.maxDataManifests,
+        // so the membership test is a small plan literal.
+        val anyReuse =
+          if (reusable.isEmpty) org.apache.spark.sql.functions.lit(0)
+          else org.apache.spark.sql.functions.max(
+            org.apache.spark.sql.functions.when(
+              col("mp").isInCollection(reusable), 1).otherwise(0))
+        val piDedup = pi
+          .groupBy(col("fp"))
+          .agg(org.apache.spark.sql.functions.min(
+            org.apache.spark.sql.functions.struct(
+              col("prev_seq"), col("prev_snap"))).as("__ps"),
+            anyReuse.as("__anyReuse"))
+          .select(col("fp"), col("__ps.prev_snap").as("prev_snap"),
+            col("__ps.prev_seq").as("prev_seq"), col("__anyReuse"))
+        keyedFiles.join(piDedup, Seq("fp"), "left")
+      case None => keyedFiles
+        .withColumn("prev_snap", org.apache.spark.sql.functions.lit(null).cast("long"))
+        .withColumn("prev_seq", org.apache.spark.sql.functions.lit(null).cast("long"))
+        .withColumn("__anyReuse", org.apache.spark.sql.functions.lit(0))
+    }
+    // the REWRITE pool: live files not covered by a reused manifest —
+    // truly-new files (ADDED, __anyReuse null after the left join)
+    // plus the survivors of rewritten manifests (EXISTING with
+    // original lineage)
+    val withPrev = withPrev0
+      .filter(org.apache.spark.sql.functions.coalesce(col("__anyReuse"),
+        org.apache.spark.sql.functions.lit(0)) === 0)
+      .drop("__anyReuse")
+    // files that VANISHED this generation become status=2 DELETED
+    // tombstone entries in the rewritten manifests (spec: snapshot_id =
+    // the deleting snapshot, data sequence preserved), so an Iceberg
+    // incremental DELETE consumer reads the removed set directly. They
+    // ride the pool as pseudo-AddFiles (partition/count/size from the
+    // prev manifest entry — nothing is re-opened); a reused manifest
+    // by definition lost nothing.
+    val removedDF: Option[DataFrame] = prevFileInfo.map { pi =>
+      pi.join(keyedFiles.select(col("fp")), Seq("fp"), "left_anti")
+        .dropDuplicates("fp")
+        .select(col("fp"), col("pvs"), col("rc"), col("fsize"),
+          col("prev_snap"), col("prev_seq"), col("frid"))
+        .as[(String, Map[String, String], Long, Long, Long, Long, Option[Long])]
+        .map { case (fp0, pvs, rc, fsize, snap, seq, frid) =>
+          (fp0, AddFile(fp0, pvs, fsize, 0L, dataChange = false,
+            stats = s"""{"numRecords":$rc}""", baseRowId = frid),
+            Option(snap), Option(seq), true)
+        }.toDF("fp", "add", "prev_snap", "prev_seq", "__deleted")
+    }
+    val pool = removedDF match {
+      case Some(r) => withPrev
+        .withColumn("__deleted", org.apache.spark.sql.functions.lit(false))
+        .unionByName(r)
+      case None => withPrev
+        .withColumn("__deleted", org.apache.spark.sql.functions.lit(false))
+    }
+    // cluster manifests BY THE FULL PARTITION TUPLE (one metadata-sized
+    // shuffle): a manifest covering one partition value gets tight
+    // field_summary bounds on EVERY partition column
+    val clustered =
+      if (partMeta.isEmpty) pool
+      else pool.repartition(
+        partMeta.map(pc => col("add.partitionValues").getItem(pc._1)): _*)
+    val clusteredFiles = clustered
+      .select(col("fp"), col("add"), col("prev_snap"), col("prev_seq"),
+        col("__deleted"))
+      .as[(String, AddFile, Option[Long], Option[Long], Boolean)]
+    // a file the previous generation listed (under an OLDER snapshot)
+    // is EXISTING with its original snapshot-id and sequence number;
+    // genuinely new files — and a same-version regeneration's own
+    // files — are ADDED by this snapshot
+    val written = clusteredFiles.mapPartitions(files =>
+        writeDataManifestFile(files.map {
+          case (fp, a, _, prevSeq, true) =>
+            ManifestEntry(2, snapshotId, Some(prevSeq.getOrElse(seqNum)), fp, a)
+          case (fp, a, Some(ps), prevSeq, _) if ps != snapshotId =>
+            ManifestEntry(0, ps, Some(prevSeq.getOrElse(seqNum)), fp, a)
+          case (fp, a, _, _, _) => ManifestEntry(1, snapshotId, None, fp, a)
+        }, hconf.value, manifestSpec))
+      .collect().toSeq
+    prevFileInfo.foreach(_.unpersist())
+    (reusable, written)
+  }
+
   /** Generate Iceberg metadata for `snapshot`; returns the Iceberg
     * metadata version N (= delta version + 1). `retainMsOverride`
     * replaces the snapshot-retention window (normally the table's
     * `delta.logRetentionDuration`) — VACUUM passes Some(0) to expire
     * every non-current Iceberg snapshot before their data files go away.
+    * `incremental` reads this version's change set from the Delta log and
+    * takes the incremental path when its conditions hold (see the class
+    * doc); without it generation always takes the general (or full) path.
     */
   def generate(spark: SparkSession, log: DeltaLog, snapshot: Snapshot,
       retainMsOverride: Option[Long] = None,
-      appendHint: Option[Seq[AddFile]] = None,
-      dmlHint: Option[(Seq[AddFile], Seq[RemoveFile])] = None): Long = {
+      incremental: Boolean = false): Long = {
     val genStart = log.clock.nowMillis
     val md = snapshot.metadataOpt.getOrElse(throw new IllegalStateException(
       "cannot generate Iceberg metadata for a table without metadata"))
@@ -794,14 +1090,16 @@ object IcebergMetadata {
           "initial-default requires graft.iceberg.formatVersion=3 " +
           "(initial-default is a v3 schema field; a v2 export would " +
           "silently null-fill pre-evolution rows in external readers)")
-    // (missing, legacyDvs, min added frid): the v3 validation + frid
-    // aggregation over the FULL file listing — the pure-append fast
-    // path below replaces it with a driver fold over the commit's adds
-    def rowIdInfoGeneral(): Option[(Long, Long, Option[Long])] = {
-        require(RowTracking.enabled(md),
-          "graft.iceberg.formatVersion=3 requires delta.enableRowTracking: " +
-            "Iceberg v3 row lineage (first_row_id / next-row-id) maps from " +
-            "Delta base row ids")
+    def requireRowTracking(): Unit =
+      require(RowTracking.enabled(md),
+        "graft.iceberg.formatVersion=3 requires delta.enableRowTracking: " +
+          "Iceberg v3 row lineage (first_row_id / next-row-id) maps from " +
+          "Delta base row ids")
+    // the smallest base row id this version assigned: the v3 validation +
+    // aggregation over the FULL file listing (the incremental path folds
+    // the commit's adds instead)
+    def firstRowIdGeneral(): Option[Long] = {
+        requireRowTracking()
         import org.apache.spark.sql.functions.{min => sqlMin, sum => sqlSum, when => sqlWhen, lit => sqlLit}
         val r = snapshot.allFilesDS.toDF()
           .agg(
@@ -820,7 +1118,7 @@ object IcebergMetadata {
           s"$legacy file(s) carry legacy-parquet deletion vectors, which " +
             "cannot be exported as Puffin blobs — a DELETE or OPTIMIZE " +
             "migrates them to the protocol format")
-        Some((missing, legacy, if (r.isNullAt(2)) None else Some(r.getLong(2))))
+        if (r.isNullAt(2)) None else Some(r.getLong(2))
       }
     // partition column names are interpolated into the Avro partition
     // struct schema — refuse names outside Avro's name grammar loudly
@@ -917,10 +1215,6 @@ object IcebergMetadata {
     val snapshotId = version + 1L // Iceberg snapshot ids start life at 1 here
     val seqNum = version + 1L
 
-    // ---- data manifests: one Avro file per partition, written on the
-    // executors; the driver sees only the summaries
-    val partStructJson = partitionStructSchemaJson(partCols)
-    val entrySchemaJson = manifestEntrySchemaJson(partStructJson, formatVersion)
     val partMeta = partCols.map { case (n, dt, _) => (n, dt) }
     // top-level primitive columns whose Delta stats become Iceberg
     // per-file column stats (value/null counts + typed bounds)
@@ -929,34 +1223,32 @@ object IcebergMetadata {
            DoubleType | StringType | DateType => true
       case _ => false
     }
-    val statsCols: Seq[(String, DataType, Int)] = schema.fields.toSeq
-      .filter(f => statsSupported(f.dataType))
-      .map(f => (f.name, f.dataType, fieldIds(f.name)))
+    val manifestSpec = ManifestSpec(dirStr,
+      manifestEntrySchemaJson(partitionStructSchemaJson(partCols), formatVersion),
+      schemaJsonStr, schemaId, specFieldsJson, formatVersion, partMeta,
+      schema.fields.toSeq.filter(f => statsSupported(f.dataType))
+        .map(f => (f.name, f.dataType, fieldIds(f.name))),
+      seqNum)
     import spark.implicits._
-    // incremental-consumption fidelity: files the PREVIOUS generation
-    // already listed are written as status EXISTING with their ORIGINAL
-    // snapshot-id and sequence number (read from the prev generation's
-    // data manifests, DISTRIBUTED — one task per manifest — and joined
-    // against the current file set; never driver-sized), so an Iceberg
-    // incremental reader sees only the truly-new files of each snapshot
     // previous generation's manifest-list entries, parsed in full on the
-    // driver (O(#manifests)): both the lineage source and the REUSE pool
-    val prevList: Seq[PrevManifest] = gprof("prevList")(prev.toSeq.flatMap { p =>
+    // driver (O(#manifests)): both the lineage source and the REUSE pool.
+    // None when unreadable: no reuse and no incremental path, every live
+    // file enters as ADDED (full-scan readers unaffected; incremental
+    // ones re-see old files once)
+    val prevListRead: Option[Seq[PrevManifest]] = prev.flatMap { p =>
       p.get("snapshots").elements().asScala
         .find(_.get("snapshot-id").asLong == p.get("current-snapshot-id").asLong)
-        .map(_.get("manifest-list").asText).toSeq.flatMap { lp =>
+        .flatMap { sn =>
           try {
-            val r = DataFileReader.openReader(
-              new org.apache.avro.mapred.FsInput(new Path(lp), fs.getConf),
+            val r = DataFileReader.openReader(new org.apache.avro.mapred.FsInput(
+              new Path(sn.get("manifest-list").asText), fs.getConf),
               new GenericDatumReader[GenericRecord]())
-            try r.iterator().asScala.map(PrevManifest.of).toList
+            try Some(r.iterator().asScala.map(PrevManifest.of).toList)
             finally r.close()
-          } catch { case scala.util.control.NonFatal(_) => Nil }
-          // unreadable prev generation: fall back to all-ADDED, no reuse
-          // (full-scan readers unaffected; incremental ones re-see old
-          // files once)
+          } catch { case scala.util.control.NonFatal(_) => None }
         }
-    })
+    }
+    val prevList = prevListRead.getOrElse(Nil)
     val prevDataMs = prevList.filter(_.content == 0)
     val prevCurSummary: Option[JsonNode] = prev.flatMap(p =>
       p.get("snapshots").elements().asScala
@@ -979,319 +1271,49 @@ object IcebergMetadata {
           sp.get("fields") == mapper.readTree(specFieldsJson))) &&
         Option(p.get("format-version")).map(_.asInt).getOrElse(2) == formatVersion
     }
+    // manifest reuse is valid only under an unchanged partition spec and
+    // format, and is skipped for one generation past the manifest-count
+    // threshold — that generation does a full partition-clustered
+    // rewrite, compacting the list (Iceberg's manifest-rewrite action)
     val reuseCandidates = specUnchanged && prevDataMs.size < maxDataManifests
-    // ---- pure-append FAST PATH: when the caller hands the committed
-    // actions and they are append-only, the general machinery below is
-    // algebraically determined — no file vanished, so EVERY previous
-    // data manifest passes the reuse vote by definition (no distributed
-    // re-read of the prior manifest set: the O(live-files)-per-commit
-    // cost the delta_uniform_incremental trend exists to catch), the
-    // rewrite pool is exactly the commit's own files (written
-    // driver-side, one manifest per partition tuple), and the DV /
-    // delete-manifest state carries forward verbatim. Falls back to the
-    // general path whenever any precondition is off (prev generation
-    // missing or stale, schema/spec/format drift, manifest-count
-    // compaction due, DV'd or stats-less adds, or a pre-fingerprint
-    // generation whose delete reuse cannot be proven).
-    // adds-count gate: the fast path writes manifests DRIVER-side,
-    // sequentially — fine for a trickle append (the case it exists for),
-    // a local-mode assumption for a 100-TB bulk load committing tens of
-    // thousands of files. Past the threshold the general path's
-    // distributed clustered writer takes over. 0 disables the fast path
-    // outright (the equivalence spec's suppression switch).
-    val maxFastAdds = spark.conf.get(
-      "spark.graft.iceberg.fastAppendMaxFiles", "1000").toInt
-    val fastAdds: Option[Seq[AddFile]] = appendHint.filter { adds =>
-      adds.size <= maxFastAdds && maxFastAdds > 0 &&
-        prev.exists(p => Option(p.get("current-snapshot-id"))
-          .exists(_.asLong == version)) &&
-        reuseCandidates &&
-        prevCurrentSchemaId.contains(schemaId) &&
-        (prevDeleteMs.isEmpty || prevDvFp.isDefined) &&
-        adds.forall(a => a.dataChange && a.deletionVector == null &&
-          (a.tags == null || !a.tags.contains(DeletionVectors.PathTag)) &&
-          Stats.numRecords(a.stats).isDefined &&
-          (formatVersion < 3 || a.baseRowId.isDefined))
-    }
-    lastGenUsedFastPath = fastAdds.isDefined
-    // ---- DML hint (commit = adds + removes only): the reuse vote and
-    // the DELETED-tombstone source are algebraically determined by the
-    // commit's own remove set — no join of the prior manifest population
-    // against the snapshot, and no snapshot-wide DV scan when the prior
-    // generation provably had no deletion vectors. The pool/lineage join
-    // and the clustered manifest write stay DISTRIBUTED and
-    // snapshot-backed (survivor column stats come from the snapshot,
-    // never reconstructed from Avro). Conservative gates mirror the
-    // append fast path; two in-vote integrity probes (an add colliding
-    // with a resident path — e.g. RESTORE re-adding a file a reusable
-    // manifest still lists — or a double-listed path across prev
-    // manifests) fall back to the general join-vote.
-    val maxDmlRemoves = spark.conf.get(
-      "spark.graft.iceberg.fastDmlMaxRemoves", "100000").toInt
-    val dmlSets: Option[(Set[String], Set[String], Seq[AddFile])] =
-      dmlHint.filter { case (adds, removes) =>
-        fastAdds.isEmpty && maxFastAdds > 0 &&
-          removes.nonEmpty && removes.size <= maxDmlRemoves &&
-          prev.exists(p => Option(p.get("current-snapshot-id"))
-            .exists(_.asLong == version)) &&
-          reuseCandidates && prevCurrentSchemaId.contains(schemaId) &&
-          (prevDeleteMs.isEmpty || prevDvFp.isDefined) &&
-          adds.forall(a => a.deletionVector == null &&
-            (a.tags == null || !a.tags.contains(DeletionVectors.PathTag)) &&
-            Stats.numRecords(a.stats).isDefined &&
-            (formatVersion < 3 || a.baseRowId.isDefined))
-      }.flatMap { case (adds, removes) =>
-        val root = new Path(dataRoot)
-        val rem = removes.map(r =>
-          FileNames.absolutePathString(root, r.path)).toSet
-        val ad = adds.map(a =>
-          FileNames.absolutePathString(root, a.path)).toSet
-        // a path both removed and re-added in one commit is ambiguous
-        // for the membership vote — general path
-        if (ad.exists(rem)) None else Some((rem, ad, adds))
-      }
-    val rowIdInfo: Option[(Long, Long, Option[Long])] =
+    // ---- INCREMENTAL path: the previous generation is this version's
+    // parent (its snapshot id is this Delta version), so the commit's
+    // change set, read from the Delta log, is all that separates them
+    val incr: Option[IncrementalPlan] =
+      if (!incremental || !reuseCandidates || prevListRead.isEmpty ||
+          !prev.exists(_.get("current-snapshot-id").asLong == version) ||
+          !prevCurrentSchemaId.contains(schemaId) ||
+          (prevDeleteMs.nonEmpty && prevDvFp.isEmpty)) None
+      else log.readCommit(version).flatMap(lines =>
+        planIncremental(lines.flatMap(Actions.fromJson), prevDataMs,
+          manifestSpec, log.dataPath, fs.getConf, snapshotId))
+    val genPath =
+      if (incr.isDefined) "incremental" else if (reuseCandidates) "general" else "full"
+    val firstRowId: Option[Long] =
       if (formatVersion < 3) None
-      else fastAdds.orElse(dmlSets.map(_._3)) match {
-        case Some(adds) =>
-          // resident files were validated by the previous generation
-          // (whose currency the hint gate requires); the hint
-          // precondition validated the commit's own adds. Removes
-          // cannot introduce a missing baseRowId.
-          require(RowTracking.enabled(md),
-            "graft.iceberg.formatVersion=3 requires delta.enableRowTracking: " +
-              "Iceberg v3 row lineage (first_row_id / next-row-id) maps from " +
-              "Delta base row ids")
-          Some((0L, 0L,
-            adds.filter(_.defaultRowCommitVersion.contains(version))
-              .flatMap(_.baseRowId).reduceOption((a, b) => math.min(a, b))))
-        case None => rowIdInfoGeneral()
+      else incr match {
+        case Some(plan) =>
+          // resident files were validated by the previous generation and
+          // the plan validated the commit's own adds
+          requireRowTracking()
+          plan.adds.filter(_.defaultRowCommitVersion.contains(version))
+            .flatMap(_.baseRowId).minOption
+        case None => firstRowIdGeneral()
       }
-    val prevFileInfo: Option[DataFrame] =
-      if (prevDataMs.isEmpty || fastAdds.isDefined) None
-      else Some(spark.sparkContext
-        .parallelize(prevDataMs.map(m => (m.path, m.seq)),
-          math.max(1, prevDataMs.size))
-        .flatMap { case (mp, listSeq) =>
-          val localPartMeta = partMeta
-          val mr = DataFileReader.openReader(
-            new org.apache.avro.mapred.FsInput(new Path(mp), hconf.value),
-            new GenericDatumReader[GenericRecord]())
-          try mr.iterator().asScala
-            .filter(_.get("status").asInstanceOf[Int] != 2)
-            .map { e =>
-              val df = e.get("data_file").asInstanceOf[GenericRecord]
-              // partition values + counts ride along so a file that
-              // VANISHES this generation can be written as a DELETED
-              // tombstone entry without re-opening anything
-              val struct = df.get("partition").asInstanceOf[GenericRecord]
-              val pvs: Map[String, String] = localPartMeta.map { case (pn, dt) =>
-                val v = struct.get(pn)
-                pn -> (if (v == null) null else dt match {
-                  case DateType => java.time.LocalDate
-                    .ofEpochDay(v.asInstanceOf[Int].toLong).toString
-                  case _ => v.toString
-                })
-              }.toMap
-              (mp, df.get("file_path").toString,
-                Option(e.get("snapshot_id")).map(_.asInstanceOf[Long])
-                  .getOrElse(0L),
-                Option(e.get("sequence_number")).map(_.asInstanceOf[Long])
-                  .getOrElse(listSeq),
-                pvs,
-                df.get("record_count").asInstanceOf[Long],
-                df.get("file_size_in_bytes").asInstanceOf[Long],
-                // v3 row lineage rides along so a DELETED tombstone can
-                // preserve the vanished file's first_row_id
-                (if (df.getSchema.getField("first_row_id") == null) None
-                 else Option(df.get("first_row_id")).map(_.asInstanceOf[Long])))
-            }.toList
-          finally mr.close()
-        }.toDF("mp", "fp", "prev_snap", "prev_seq", "pvs", "rc", "fsize", "frid")
-        // read three times below (reuse vote, lineage join, pool
-        // anti-join) — cache so the Avro manifests are opened once
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val rootForKey = dataRoot
-    val keyedFiles = snapshot.allFilesDS
-      .map(a => (FileNames.absolutePathString(new Path(rootForKey), a.path), a))
-      .toDF("fp", "add")
-
-    // ---- manifest REUSE vote: a prev data manifest is carried forward
-    // by reference iff every entry it lists is still live. Reuse is
-    // valid only under an unchanged partition spec, and is skipped for
-    // one generation past the manifest-count threshold — that
-    // generation does a full partition-clustered rewrite, compacting
-    // the list (the Iceberg manifest-rewrite maintenance action).
-    // dmlVote: when the commit's remove set is known, "every entry still
-    // live" reduces to "no entry is in the remove set" (prev generation
-    // listed exactly the prior snapshot's live files; adds cannot
-    // un-live anything). One aggregation over the prior entries — the
-    // snapshot is never joined. Per-manifest addHit and a global
-    // double-list probe guard the two cases where the reduction is
-    // unsound; either falls back to the general join-vote below.
-    // No cross-manifest double-list probe: path uniqueness across a
-    // generation's data manifests is an invariant of self-generated
-    // metadata (the pool excludes every reused manifest's paths and the
-    // snapshot's own file set is unique; the hint gate already refuses
-    // foreign metadata via the current-snapshot-id check), so one
-    // aggregation suffices. The general path below keeps its defensive
-    // per-fp dedup regardless.
-    val dmlVote: Option[Set[String]] = (dmlSets, prevFileInfo) match {
-      case (Some((removedSet, addSet, _)), Some(pi)) => gprof("dmlVote") {
-        import org.apache.spark.sql.functions.{lit, max, when}
-        val touched = max(when(col("fp").isInCollection(removedSet), 1)
-          .otherwise(0)).as("touched")
-        val addHit =
-          (if (addSet.isEmpty) max(lit(0))
-           else max(when(col("fp").isInCollection(addSet), 1).otherwise(0)))
-            .as("addHit")
-        val per = pi.groupBy(col("mp")).agg(touched, addHit).collect()
-        if (per.exists(_.getInt(2) == 1))
-          None // an add collides with a resident path (RESTORE): general vote
-        else Some(per.collect {
-          case r if r.getInt(1) == 0 => r.getString(0) }.toSet)
+    val (reusableMps, summaries): (Set[String], Seq[IcebergManifestSummary]) =
+      incr match {
+        case Some(plan) =>
+          // one manifest per partition tuple (tight field_summary bounds,
+          // so Iceberg planning skips whole manifests on partition
+          // predicates), written on the driver
+          (prevDataMs.map(_.path).toSet -- plan.rewritten,
+            plan.entries.groupBy(_.tuple(partMeta)).values.toSeq
+              .sortBy(_.map(_.path).min)
+              .flatMap(g => writeDataManifestFile(g.sortBy(_.path).iterator,
+                fs.getConf, manifestSpec)))
+        case None => generalManifests(spark, snapshot, prevDataMs,
+          reuseCandidates, manifestSpec, snapshotId, hconf)
       }
-      case _ => None
-    }
-    val reusableMps: Set[String] =
-      if (fastAdds.isDefined) prevDataMs.map(_.path).toSet
-      else dmlVote.getOrElse(gprof("reuseVote")(prevFileInfo match {
-      case Some(pi) if reuseCandidates =>
-        val live = keyedFiles.select(col("fp"))
-          .withColumn("__live", org.apache.spark.sql.functions.lit(1))
-        pi.join(live, Seq("fp"), "left")
-          .groupBy(col("mp"))
-          .agg(org.apache.spark.sql.functions.min(
-            org.apache.spark.sql.functions.coalesce(col("__live"),
-              org.apache.spark.sql.functions.lit(0))).as("allLive"))
-          .collect()
-          .collect { case r if r.getInt(1) == 1 => r.getString(0) }.toSet
-      case _ => Set.empty
-    }))
-    // valid only while the vote's reduction held — consumers below pick
-    // the remove-set tombstone source and the DV-scan skip off this flag
-    val dmlActive = dmlVote.isDefined
-    val summaries: Seq[IcebergManifestSummary] = gprof("manifestWrite")(
-      fastAdds match {
-        case Some(adds) =>
-          // pure append: the pool is exactly the commit's own files —
-          // manifests written DRIVER-side, ONE PER PARTITION TUPLE (the
-          // same per-tuple clustering the distributed rewrite produces),
-          // so each manifest's field_summary bounds stay tight and
-          // Iceberg planning skips whole manifests on partition
-          // predicates exactly as over general-path output; zero Spark
-          // jobs, zero reads of the previous manifest set
-          val rootPath = new Path(dataRoot)
-          val genConf = spark.sessionState.newHadoopConf()
-          adds.groupBy(a => partCols.map(pc =>
-              String.valueOf(a.partitionValues.getOrElse(pc._1, null)))
-            .mkString("\u0001"))
-            .toSeq.sortBy(_._1)
-            .flatMap { case (_, grp) =>
-              writeDataManifestFile(
-                grp.sortBy(_.path).iterator
-                  .map(a => (FileNames.absolutePathString(rootPath,
-                    a.path), a, Option.empty[Long], Option.empty[Long], false)),
-                genConf, dirStr, entrySchemaJson, schemaJsonStr, schemaId,
-                specFieldsJson, formatVersion, partMeta, statsCols,
-                snapshotId, seqNum)
-            }
-        case None =>
-        val withPrev0 = prevFileInfo match {
-          // a corrupted/racing prior generation could double-list a path
-          // across its manifests; dedup on fp (keep the OLDEST sequence —
-          // the original lineage) so the left join can never fan out an
-          // AddFile into duplicate manifest entries
-          case Some(pi) =>
-            // __anyReuse rides the same aggregation: "this path is listed
-            // in SOME reusable manifest" — the pool filter below then
-            // drops reused-manifest files with a map-only predicate
-            // instead of the r19 anti-join (a second shuffle of the
-            // reused entries against the whole snapshot). reusableMps is
-            // bounded by spark.graft.iceberg.maxDataManifests, so the
-            // membership test is a small plan literal.
-            val anyReuse =
-              if (reusableMps.isEmpty) org.apache.spark.sql.functions.lit(0)
-              else org.apache.spark.sql.functions.max(
-                org.apache.spark.sql.functions.when(
-                  col("mp").isInCollection(reusableMps), 1).otherwise(0))
-            val piDedup = pi
-              .groupBy(col("fp"))
-              .agg(org.apache.spark.sql.functions.min(
-                org.apache.spark.sql.functions.struct(
-                  col("prev_seq"), col("prev_snap"))).as("__ps"),
-                anyReuse.as("__anyReuse"))
-              .select(col("fp"), col("__ps.prev_snap").as("prev_snap"),
-                col("__ps.prev_seq").as("prev_seq"), col("__anyReuse"))
-            keyedFiles.join(piDedup, Seq("fp"), "left")
-          case None => keyedFiles
-            .withColumn("prev_snap", org.apache.spark.sql.functions.lit(null).cast("long"))
-            .withColumn("prev_seq", org.apache.spark.sql.functions.lit(null).cast("long"))
-            .withColumn("__anyReuse", org.apache.spark.sql.functions.lit(0))
-        }
-        // the REWRITE pool: live files not covered by a reused manifest —
-        // truly-new files (ADDED, __anyReuse null after the left join)
-        // plus the survivors of rewritten manifests (EXISTING with
-        // original lineage). An append-only commit's pool is exactly its
-        // own files.
-        val withPrev = withPrev0
-          .filter(org.apache.spark.sql.functions.coalesce(col("__anyReuse"),
-            org.apache.spark.sql.functions.lit(0)) === 0)
-          .drop("__anyReuse")
-        // files that VANISHED this generation become status=2 DELETED
-        // tombstone entries in the rewritten manifests (spec: snapshot_id =
-        // the deleting snapshot, data sequence preserved), so an Iceberg
-        // incremental DELETE consumer reads the removed set directly instead
-        // of falling back on the snapshot summary operation. They ride the
-        // pool as pseudo-AddFiles (partition/count/size from the prev
-        // manifest entry — nothing is re-opened); a reused manifest by
-        // definition lost nothing.
-        val removedDF: Option[DataFrame] = prevFileInfo.map { pi =>
-          // with an active DML hint the vanished set IS the commit's
-          // remove set (the vote's integrity probes held): a map-only
-          // membership filter replaces the snapshot-wide anti-join
-          (if (dmlActive)
-             pi.filter(col("fp").isInCollection(dmlSets.get._1))
-           else pi.join(keyedFiles.select(col("fp")), Seq("fp"), "left_anti"))
-            .dropDuplicates("fp")
-            .select(col("fp"), col("pvs"), col("rc"), col("fsize"),
-              col("prev_snap"), col("prev_seq"), col("frid"))
-            .as[(String, Map[String, String], Long, Long, Long, Long, Option[Long])]
-            .map { case (fp0, pvs, rc, fsize, snap, seq, frid) =>
-              (fp0, AddFile(fp0, pvs, fsize, 0L, dataChange = false,
-                stats = s"""{"numRecords":$rc}""", baseRowId = frid),
-                Option(snap), Option(seq), true)
-            }.toDF("fp", "add", "prev_snap", "prev_seq", "__deleted")
-        }
-        val pool = removedDF match {
-          case Some(r) => withPrev
-            .withColumn("__deleted", org.apache.spark.sql.functions.lit(false))
-            .unionByName(r)
-          case None => withPrev
-            .withColumn("__deleted", org.apache.spark.sql.functions.lit(false))
-        }
-        // cluster manifests BY THE FULL PARTITION TUPLE (one metadata-sized
-        // shuffle): a manifest covering one partition value gets tight
-        // field_summary bounds on EVERY partition column, so Iceberg
-        // planning skips whole manifests — the manifest-level analogue of
-        // the cell-bucketed ANN layout
-        val clustered =
-          if (partCols.isEmpty) pool
-          else pool.repartition(
-            partCols.map(pc => col("add.partitionValues").getItem(pc._1)): _*)
-        val clusteredFiles = clustered
-          .select(col("fp"), col("add"), col("prev_snap"), col("prev_seq"),
-            col("__deleted"))
-          .as[(String, AddFile, Option[Long], Option[Long], Boolean)]
-        val localSchemaId = schemaId
-        val localFormatVersion = formatVersion
-      clusteredFiles.mapPartitions(files =>
-            writeDataManifestFile(files, hconf.value, dirStr, entrySchemaJson,
-              schemaJsonStr, localSchemaId, specFieldsJson, localFormatVersion,
-              partMeta, statsCols, snapshotId, seqNum))
-            .collect().toSeq
-      })
-    prevFileInfo.foreach(_.unpersist())
 
     // ---- position deletes: every live deletion vector becomes rows of
     // an Iceberg v2 position-delete parquet file (file_path, pos), so a
@@ -1307,17 +1329,8 @@ object IcebergMetadata {
     // on them (v3 refuses them above — Puffin blobs need the protocol
     // payload format)
     val dvFiles: Seq[AddFile] =
-      if (fastAdds.isDefined) Nil // append-only: the DV set is untouched
-      else if (dmlActive && prevDeleteMs.isEmpty) Nil
-      // ^ DML hint + no prior delete manifests: the prior generation
-      // provably had no live DVs (it writes a delete manifest whenever
-      // any exist, legacy tags included), removes cannot create DVs and
-      // the hint's adds were gated DV-free — the set is empty without
-      // scanning the snapshot's full file listing
-      else gprof("dvCollect")(
-        snapshot.allFilesDS.filter(f => f.deletionVector != null ||
-          (f.tags != null && f.tags.contains(DeletionVectors.PathTag)))
-          .collect().toSeq)
+      if (incr.isDefined) Nil // the plan requires an unchanged DV set
+      else snapshot.dvFiles
     val deleteSpecId = if (partCols.isEmpty) 0 else 1
     // ---- delete-side reuse, two granularities:
     // (1) whole-set: a content fingerprint of the live DV descriptors —
@@ -1360,7 +1373,7 @@ object IcebergMetadata {
       dvByBucket.map { case (b, fsq) => b -> fpDigest(fsq.map(dvDescLine)) }
     val dvFingerprint: String =
       if (dvFiles.isEmpty) "" else fpDigest(dvFiles.map(dvDescLine))
-    val reuseDeletes = (fastAdds.isDefined && prevDeleteMs.nonEmpty) ||
+    val reuseDeletes = (incr.isDefined && prevDeleteMs.nonEmpty) ||
       (dvFiles.nonEmpty && specUnchanged &&
         prevDeleteMs.nonEmpty && prevDvFp.contains(dvFingerprint))
     // previous generation's delete-file entries (driver, O(#delete
@@ -1784,10 +1797,12 @@ object IcebergMetadata {
     }
     val sumNode = sn.putObject("summary")
     sumNode.put("operation", icebergOp)
+    // which path generated this snapshot: incremental, general or full
+    sumNode.put("graft.gen-path", genPath)
     // DV-set fingerprint: the next generation reuses the delete manifest
     // + delete parquet files by reference when this is unchanged
-    if (fastAdds.isDefined) {
-      // append-only: the DV set is untouched — carry the previous
+    if (incr.isDefined) {
+      // incremental: the DV set is untouched — carry the previous
       // generation's fingerprints forward so a later DML commit still
       // gets whole-set / per-bucket delete reuse against them
       prevDvFp.foreach(fp => sumNode.put("graft.dv-fingerprint", fp))
@@ -1810,7 +1825,7 @@ object IcebergMetadata {
     // explicit-assignment allowance); no assignment this commit =
     // the current next-row-id
     if (formatVersion >= 3)
-      sn.put("first-row-id", rowIdInfo.flatMap(_._3).getOrElse(
+      sn.put("first-row-id", firstRowId.getOrElse(
         RowTracking.highWaterMark(snapshot.domainMetadata) + 1))
     val retainedIds = snaps.elements().asScala.map(_.get("snapshot-id").asLong).toSet
     val slog = root.putArray("snapshot-log")

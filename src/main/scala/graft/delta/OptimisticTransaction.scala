@@ -325,19 +325,8 @@ class OptimisticTransaction(val deltaLog: DeltaLog, val snapshot: Snapshot) {
         }
       else assigned
     }
-    // the assigned action set of the LAST serialization — i.e. the winning
-    // attempt's, since the loop below serializes immediately before each
-    // write and stops on the first success. postCommit must see THIS set,
-    // not finalActions: row tracking (mandatory under
-    // graft.iceberg.formatVersion=3) assigns baseRowId /
-    // defaultRowCommitVersion per attempt inside actionsFor, and the
-    // Iceberg pure-append fast path's precondition checks baseRowId on
-    // v3 adds — handing it the pre-assignment adds made the fast path
-    // dead code for every v3 append.
-    var committedActions: Seq[Action] = finalActions
     def serialized(attempt: Long): Seq[String] = {
       val acts0 = actionsFor(attempt)
-      committedActions = acts0
       if (!ictEnabled) return (commitInfo +: acts0).map(Actions.toJson)
       val floor =
         if (attempt == 0) Long.MinValue
@@ -355,7 +344,6 @@ class OptimisticTransaction(val deltaLog: DeltaLog, val snapshot: Snapshot) {
             (DeltaConfig.IctEnablementTimestampKey -> ict.toString))
           case a => a
         }
-      committedActions = acts
       (ci +: acts).map(Actions.toJson)
     }
     // a declared row-tracking domain must also re-serialize per attempt:
@@ -386,7 +374,7 @@ class OptimisticTransaction(val deltaLog: DeltaLog, val snapshot: Snapshot) {
       adds.size, adds.map(_.size).sum, removes.size,
       if (removes.forall(_.size.isDefined)) Some(removes.flatMap(_.size).sum) else None)
     catch { case scala.util.control.NonFatal(_) => () }
-    postCommit(done, Some(committedActions))
+    postCommit(done, incrementalUniform = true)
     done
   }
 
@@ -710,9 +698,12 @@ class OptimisticTransaction(val deltaLog: DeltaLog, val snapshot: Snapshot) {
     latest
   }
 
-  /** cf. reference `trnx.go:647` postCommit: checkpoint on interval. */
+  /** cf. reference `trnx.go:647` postCommit: checkpoint on interval.
+    * `incrementalUniform` lets Iceberg generation read the commit back
+    * from the log (false for [[commitLarge]]'s unbounded action sets).
+    */
   private def postCommit(committedVersion: Long,
-      actions: Option[Seq[Action]] = None): Unit = {
+      incrementalUniform: Boolean = false): Unit = {
     val interval = DeltaConfig.CheckpointInterval.fromMetadata(metadata)
     if (committedVersion != 0 && committedVersion % interval == 0) {
       val s = deltaLog.update()
@@ -732,36 +723,8 @@ class OptimisticTransaction(val deltaLog: DeltaLog, val snapshot: Snapshot) {
     if (DeltaConfig.UniversalFormats.fromMetadata(metadata).contains("iceberg")) {
       val s = deltaLog.snapshot
       if (s.version == committedVersion) {
-        // pure-append hint: hand generation the commit's own AddFiles
-        // when nothing else changed — RowTracking's hwm DomainMetadata,
-        // SetTransaction and CommitInfo are append-compatible; anything
-        // else (removes, metadata, protocol, CDC) disables the fast path
-        val appendHint = actions.filter(_.forall {
-          case _: AddFile => true
-          case _: CommitInfo => true
-          case _: SetTransaction => true
-          case dm: DomainMetadata => dm.domain == RowTracking.Domain
-          case _ => false
-        }).map(_.collect { case a: AddFile => a })
-        // DML hint: a plain add/remove commit (DELETE, OPTIMIZE, MERGE's
-        // file churn — no metadata/protocol/CDC/foreign-domain actions).
-        // Generation can then vote manifest reuse against the commit's
-        // own remove set and source the DELETED tombstones from the
-        // prior manifests directly, instead of re-joining the full prior
-        // manifest population with the full snapshot (see
-        // IcebergMetadata.generate's dmlHint leg).
-        val dmlHint =
-          if (appendHint.isDefined) None
-          else actions.filter(_.forall {
-            case _: AddFile | _: RemoveFile | _: CommitInfo |
-                 _: SetTransaction => true
-            case dm: DomainMetadata => dm.domain == RowTracking.Domain
-            case _ => false
-          }).map(as => (as.collect { case a: AddFile => a },
-            as.collect { case r: RemoveFile => r }))
-            .filter(_._2.nonEmpty)
         try IcebergMetadata.generate(deltaLog.spark, deltaLog, s,
-          appendHint = appendHint, dmlHint = dmlHint)
+          incremental = incrementalUniform)
         catch {
           case scala.util.control.NonFatal(e) =>
             System.err.println(s"WARN graft: Iceberg metadata generation " +

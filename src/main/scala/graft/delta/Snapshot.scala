@@ -131,7 +131,10 @@ class Snapshot(
     }
   }
 
-  private def checkpointDF: Option[DataFrame] =
+  /** The checkpoint's actions. A lazy val: its schema probe is a Spark
+    * job, run once per snapshot.
+    */
+  private lazy val checkpointDF: Option[DataFrame] =
     segment.checkpoint.map { ci =>
       val ckFiles = ci.files(logPath)
       val df = ci.v2Uuid match {
@@ -223,10 +226,10 @@ class Snapshot(
       .groupBy($"path")
       .agg(max_by($"w", struct($"version", $"w.isAdd")).as("w"))
 
-  /** Files carrying deletion-vector sidecars, materialized ONCE per
-    * snapshot: snapshots are cached per version in [[DeltaLog]], so every
-    * read of a DV table at the same version reuses this list instead of
-    * re-running an `activeFilesDF` collect per query.
+  /** Files carrying deletion-vector sidecars, materialized once per
+    * Snapshot object. `DeltaLog.update()` builds a new Snapshot on every
+    * call, so the list is shared only by the reads that hold the same
+    * Snapshot (e.g. one scan and its DV resolution), not across queries.
     */
   lazy val dvFiles: Seq[AddFile] = activeFilesDF
     .where($"deletionVector".isNotNull ||
@@ -291,22 +294,15 @@ class Snapshot(
       case (_, t: SetTransaction) => txns += (t.appId -> t)
       case _ =>
     }
-    if ((proto.isEmpty || meta.isEmpty) && checkpointDF.isDefined) {
-      val c = checkpointDF.get
-      if (meta.isEmpty)
-        meta = c.where($"metaData".isNotNull).select($"metaData.*")
-          .as[Metadata].collect().headOption
-      if (proto.isEmpty)
-        proto = c.where($"protocol".isNotNull).select($"protocol.*")
-          .as[Protocol].collect().headOption
-    }
-    val ckptTxns: Map[String, SetTransaction] = checkpointDF match {
-      case Some(c) =>
-        c.where($"txn".isNotNull).select($"txn.*")
-          .as[SetTransaction].collect().map(t => t.appId -> t).toMap
-      case None => Map.empty
-    }
-    (proto, meta, ckptTxns ++ txns)
+    // the checkpoint's protocol, metadata and SetTransactions in ONE
+    // collect; the tail's newer protocol/metadata win
+    val ckpt = checkpointDF.toSeq.flatMap(_
+      .where($"metaData".isNotNull || $"protocol".isNotNull || $"txn".isNotNull)
+      .select($"metaData", $"protocol", $"txn")
+      .as[(Option[Metadata], Option[Protocol], Option[SetTransaction])].collect())
+    val ckptTxns = ckpt.flatMap(_._3).map(t => t.appId -> t).toMap
+    (proto.orElse(ckpt.flatMap(_._2).headOption),
+      meta.orElse(ckpt.flatMap(_._1).headOption), ckptTxns ++ txns)
   }
 
   /** Live domain metadata (latest action per domain; removed domains

@@ -1233,14 +1233,14 @@ class IcebergUniformSuite extends AnyFunSuite {
     try {
       val dir = tmp()
       val t = mkUniform(dir)
-      // seed through the GENERAL path: the r20 fast path clusters
-      // per-tuple, which would put x and y in separate manifests and the
-      // delete below would then REUSE y's manifest instead of rewriting
-      // it — this test pins the rewrite-survivor (EXISTING) semantics, so
-      // the seed needs both tuples in ONE manifest
-      spark.conf.set("spark.graft.iceberg.fastAppendMaxFiles", "0")
+      // seed through a compacting (full) generation: the incremental path
+      // clusters per tuple, which would put x and y in separate manifests
+      // and the delete below would then REUSE y's manifest instead of
+      // rewriting it — this test pins the rewrite-survivor (EXISTING)
+      // semantics, so the seed needs both tuples in ONE manifest
+      spark.conf.set("spark.graft.iceberg.maxDataManifests", "0")
       t.write(df((1L, "a", "x"), (2L, "b", "y")), partitionBy = Seq("part")) // snap 2
-      spark.conf.unset("spark.graft.iceberg.fastAppendMaxFiles")
+      spark.conf.unset("spark.graft.iceberg.maxDataManifests")
       val paths2 = currentManifests(currentMeta(dir))
         .map(_.get("manifest_path").toString).toSet
       t.write(df((3L, "c", "x")), partitionBy = Seq("part"))                 // snap 3
