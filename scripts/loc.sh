@@ -1,0 +1,12 @@
+#!/usr/bin/env bash
+# Size of the shipped engine: the line count of the Scala sources under
+# src/main, then every `spark.graft.*` Spark conf key they read, sorted.
+# Usage: scripts/loc.sh [repo-root]   (default: the checkout holding this script)
+set -euo pipefail
+root="${1:-$(cd "$(dirname "$0")/.." && pwd)}"
+cd "$root"
+echo "src/main scala lines: $(find src/main -name '*.scala' -print0 | xargs -0 cat | wc -l)"
+keys=$(grep -rhoE '"spark\.graft\.[A-Za-z0-9_.]*[A-Za-z0-9_]"' src/main --include='*.scala' \
+  | tr -d '"' | sort -u)
+echo "spark.graft.* keys read: $(printf '%s\n' "$keys" | grep -c .)"
+printf '%s\n' "$keys" | sed 's/^/  /'

@@ -606,24 +606,13 @@ class DeltaTable private (val spark: SparkSession, val deltaLog: DeltaLog) {
       case SaveMode.Overwrite =>
         txn.readWholeTable()
         val now = deltaLog.clock.nowMillis
-        val removedCount = txn.snapshot.numOfFiles
-        if (removedCount > DeltaTable.commitLargeThreshold(spark)) {
-          // huge overwrite: stream the remove list straight from the
-          // snapshot Dataset into the commit file — the driver holds one
-          // action at a time, never a 10^7-element list
-          import scala.jdk.CollectionConverters._
-          val removes = txn.snapshot.allFilesDS.toLocalIterator.asScala
-            .map(f => f.remove(now): Action)
-          val v = txn.commitLarge(removes ++ adds.iterator, operation,
-            operationParameters = params,
-            operationMetrics = Map(
-              "numAddedFiles" -> adds.size.toString,
-              "numRemovedFiles" -> removedCount.toString,
-              "numAddedBytes" -> adds.map(_.size).sum.toString))
-          autoCompactAfter(adds)
-          return v
-        }
-        txn.snapshot.allFiles.map(_.remove(now)) ++ adds
+        // the remove list stays a Dataset: a 10^7-file overwrite streams
+        // it into the commit file instead of holding it on the driver
+        import spark.implicits._
+        val v = txn.commit(adds, txn.snapshot.allFilesDS.map(_.remove(now).wrap),
+          operation, params)
+        autoCompactAfter(adds)
+        return v
       case m => throw new IllegalArgumentException(s"unsupported save mode $m")
     }
     val v = txn.commit(actions, operation, operationParameters = params)
@@ -663,9 +652,8 @@ class DeltaTable private (val spark: SparkSession, val deltaLog: DeltaLog) {
     * partitioning AND data while keeping the table's log — history,
     * table id and configuration survive, time travel to pre-replace
     * versions still works (contrast DROP + CREATE, which severs both).
-    * On a fresh path it degrades to CREATE TABLE AS. A 10^7-file
-    * replace streams its remove list through commitLarge like a full
-    * overwrite — the driver never materializes the file set.
+    * On a fresh path it degrades to CREATE TABLE AS. The remove list
+    * stays a Dataset commit body, as in a full overwrite.
     */
   def replaceAs(df: DataFrame, partitionBy: Seq[String] = Nil): Long = {
     val txn = deltaLog.startTransaction()
@@ -683,20 +671,9 @@ class DeltaTable private (val spark: SparkSession, val deltaLog: DeltaLog) {
     val now = deltaLog.clock.nowMillis
     val op = if (exists) Op.ReplaceTable else Op.CreateTable
     val params = Map("partitionBy" -> partitionBy.mkString(","))
-    val removedCount = if (exists) txn.snapshot.numOfFiles else 0L
-    if (removedCount > DeltaTable.commitLargeThreshold(spark)) {
-      import scala.jdk.CollectionConverters._
-      val removes = txn.snapshot.allFilesDS.toLocalIterator.asScala
-        .map(f => f.remove(now): Action)
-      return txn.commitLarge(removes ++ adds.iterator, op,
-        operationParameters = params,
-        operationMetrics = Map(
-          "numAddedFiles" -> adds.size.toString,
-          "numRemovedFiles" -> removedCount.toString))
-    }
-    val removes: Seq[Action] =
-      if (exists) txn.snapshot.allFiles.map(_.remove(now)) else Nil
-    txn.commit(removes ++ adds, op, operationParameters = params)
+    if (!exists) return txn.commit(adds, op, operationParameters = params)
+    import spark.implicits._
+    txn.commit(adds, txn.snapshot.allFilesDS.map(_.remove(now).wrap), op, params)
   }
 
   /** Auto compaction (opt-in via `delta.autoOptimize.autoCompact`): after
@@ -2622,8 +2599,8 @@ class DeltaTable private (val spark: SparkSession, val deltaLog: DeltaLog) {
     * target snapshots is computed as distributed anti-joins on path, and
     * the existence of every re-surfaced file is checked on executors (a
     * VACUUM may have deleted files the target version needs — that fails
-    * the restore, matching Delta semantics). Huge diffs stream through
-    * [[OptimisticTransaction.commitLarge]].
+    * the restore, matching Delta semantics). The diff is the commit's
+    * Dataset body: it never lands on the driver as a whole.
     */
   def restoreToVersion(version: Long): Long =
     restore(deltaLog.snapshotForVersionAsOf(version),
@@ -2677,23 +2654,9 @@ class DeltaTable private (val spark: SparkSession, val deltaLog: DeltaLog) {
     if (target.metadataOpt.exists(m => !current.metadataOpt.contains(m)))
       txn.updateMetadata(target.metadata)
     val now = deltaLog.clock.nowMillis
-    val nAdd = toAdd.count()
-    val nRemove = toRemove.count()
-    val metrics = Map(
-      "numRestoredFiles" -> nAdd.toString,
-      "numRemovedFiles" -> nRemove.toString)
-    if (nAdd + nRemove > DeltaTable.commitLargeThreshold(spark)) {
-      import scala.jdk.CollectionConverters._
-      txn.commitLarge(
-        toAdd.toLocalIterator().asScala.map(f => f.copy(dataChange = true): Action) ++
-          toRemove.toLocalIterator().asScala.map(f => f.remove(now): Action),
-        Op.Restore, operationParameters = params, operationMetrics = metrics)
-    } else {
-      txn.commit(
-        toAdd.collect().toSeq.map(_.copy(dataChange = true)) ++
-          toRemove.collect().toSeq.map(_.remove(now)),
-        Op.Restore, operationParameters = params)
-    }
+    txn.commit(Nil,
+      toAdd.map(_.copy(dataChange = true).wrap).union(toRemove.map(_.remove(now).wrap)),
+      Op.Restore, params)
   }
 
   // ---------------------------------------------------------------- clone
@@ -2731,25 +2694,8 @@ class DeltaTable private (val spark: SparkSession, val deltaLog: DeltaLog) {
     val md = src.metadata
     val destLog = DeltaLog.forTable(spark, destPath)
     require(!destLog.tableExists, s"clone destination already exists: $destPath")
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = deltaLog.dataPath.getFileSystem(conf)
-    val qualified = fs.makeQualified(deltaLog.dataPath)
-    def absUri(child: String): String =
-      FileNames.absolutePath(qualified, child).toUri.toString
-    def rewrite(f: AddFile): AddFile = {
-      // DV payloads stay in the SOURCE table's tree: "u" descriptors
-      // (root-relative) turn absolute ("p"); legacy tag paths absolutize
-      val withDv = DeletionVectors.descriptor(f) match {
-        case Some(d) if d.storageType == "u" =>
-          f.copy(deletionVector = d.copy(storageType = "p",
-            pathOrInlineDv = fs.makeQualified(
-              DeletionVectors.absolutePathOf(qualified, d)).toUri.toString))
-        case Some(d) if d.storageType == DeletionVectors.LegacyParquet =>
-          f.copy(tags = f.tags + (DeletionVectors.PathTag -> absUri(d.pathOrInlineDv)))
-        case _ => f
-      }
-      withDv.copy(path = absUri(f.path), dataChange = true)
-    }
+    val root = deltaLog.dataPath.getFileSystem(spark.sessionState.newHadoopConf())
+      .makeQualified(deltaLog.dataPath).toString
     val txn = destLog.startTransaction()
     txn.updateMetadata(md.copy(
       id = java.util.UUID.randomUUID.toString,
@@ -2758,22 +2704,13 @@ class DeltaTable private (val spark: SparkSession, val deltaLog: DeltaLog) {
       "source" -> deltaLog.dataPath.toString,
       "sourceVersion" -> src.version.toString,
       "isShallow" -> "true")
-    val n = src.numOfFiles
     // live domains come along (the row-tracking high-water mark in
     // particular: the clone's AddFiles keep their baseRowIds, so a fresh
     // mark would hand out colliding ids on the first append)
-    val domains = src.domainMetadataMap.values.toSeq.map(d => d: Action)
-    if (n > DeltaTable.commitLargeThreshold(spark)) {
-      import scala.jdk.CollectionConverters._
-      txn.commitLarge(
-        ((src.protocol: Action) +: domains).iterator ++
-          src.allFilesDS.toLocalIterator().asScala.map(f => rewrite(f): Action),
-        Op.Clone, operationParameters = params,
-        operationMetrics = Map("numClonedFiles" -> n.toString))
-    } else {
-      txn.commit((src.protocol +: domains) ++ src.allFiles.map(rewrite), Op.Clone,
-        operationParameters = params)
-    }
+    val domains = src.domainMetadataMap.values.toSeq
+    import spark.implicits._
+    txn.commit(src.protocol +: domains,
+      src.allFilesDS.map(f => DeltaTable.shallowCloneAdd(root, f).wrap), Op.Clone, params)
     DeltaTable.forPath(spark, destPath)
   }
 
@@ -2867,21 +2804,11 @@ class DeltaTable private (val spark: SparkSession, val deltaLog: DeltaLog) {
       "source" -> deltaLog.dataPath.toString,
       "sourceVersion" -> src.version.toString,
       "isShallow" -> "false")
-    val domains = src.domainMetadataMap.values.toSeq.map(d => d: Action)
-    val n = src.numOfFiles
-    if (n > DeltaTable.commitLargeThreshold(spark)) {
-      // a 10^7-file clone streams its AddFiles straight from the copy
-      // job into the commit file — the driver holds one action at a time
-      import scala.jdk.CollectionConverters._
-      txn.commitLarge(
-        ((src.protocol: Action) +: domains).iterator ++
-          rewrittenDS.toLocalIterator().asScala.map(a => a: Action),
-        Op.Clone, operationParameters = params,
-        operationMetrics = Map("numClonedFiles" -> n.toString))
-    } else {
-      txn.commit((src.protocol +: domains) ++ rewrittenDS.collect().toSeq,
-        Op.Clone, operationParameters = params)
-    }
+    // the copy job is the commit body: the commit's tally runs it once
+    // (the body is cached), and a recomputed partition re-copies the same
+    // files to the same names
+    txn.commit(src.protocol +: src.domainMetadataMap.values.toSeq,
+      rewrittenDS.map(_.wrap), Op.Clone, params)
     DeltaTable.forPath(spark, destPath)
   }
 
@@ -2889,22 +2816,15 @@ class DeltaTable private (val spark: SparkSession, val deltaLog: DeltaLog) {
     * remove-all commit — no file is read or rewritten, every live
     * AddFile turns into a dataChange RemoveFile, so CDF readers derive
     * the deleted rows from the removed files exactly like a
-    * full-table DELETE. Streams the remove list via commitLarge past
-    * the same threshold as overwrites, so a 10^7-file truncate never
-    * materializes the action list on the driver.
+    * full-table DELETE. The remove list is the commit's Dataset body,
+    * so a 10^7-file truncate never materializes it on the driver.
     */
   def truncate(): Long = {
+    import spark.implicits._
     val txn = deltaLog.startTransaction()
     txn.readWholeTable()
     val now = deltaLog.clock.nowMillis
-    val n = txn.snapshot.numOfFiles
-    if (n > DeltaTable.commitLargeThreshold(spark)) {
-      import scala.jdk.CollectionConverters._
-      val removes = txn.snapshot.allFilesDS.toLocalIterator.asScala
-        .map(f => f.remove(now): Action)
-      txn.commitLarge(removes, Op.Truncate,
-        operationMetrics = Map("numRemovedFiles" -> n.toString))
-    } else txn.commit(txn.snapshot.allFiles.map(_.remove(now)), Op.Truncate)
+    txn.commit(Nil, txn.snapshot.allFilesDS.map(_.remove(now).wrap), Op.Truncate, Map.empty)
   }
 
   /** Partition-level delete: drops whole files selected by a
@@ -2929,12 +2849,25 @@ class DeltaTable private (val spark: SparkSession, val deltaLog: DeltaLog) {
 
 object DeltaTable {
 
-  /** Above this many removed files, overwrite commits stream via
-    * [[OptimisticTransaction.commitLarge]] instead of materializing the
-    * action list on the driver (trade: no conflict retry on that commit).
+  /** `f` as a shallow clone references it: by absolute URI under the
+    * source's qualified `root`. DV payloads stay in the SOURCE table's
+    * tree: "u" descriptors (root-relative) turn absolute ("p"); legacy
+    * tag paths absolutize.
     */
-  private[delta] def commitLargeThreshold(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.commitLarge.threshold").map(_.toLong).getOrElse(50000L)
+  private def shallowCloneAdd(root: String, f: AddFile): AddFile = {
+    val qualified = new Path(root)
+    def absUri(child: String): String =
+      FileNames.absolutePath(qualified, child).toUri.toString
+    val withDv = DeletionVectors.descriptor(f) match {
+      case Some(d) if d.storageType == "u" =>
+        f.copy(deletionVector = d.copy(storageType = "p",
+          pathOrInlineDv = DeletionVectors.absolutePathOf(qualified, d).toUri.toString))
+      case Some(d) if d.storageType == DeletionVectors.LegacyParquet =>
+        f.copy(tags = f.tags + (DeletionVectors.PathTag -> absUri(d.pathOrInlineDv)))
+      case _ => f
+    }
+    withDv.copy(path = absUri(f.path), dataChange = true)
+  }
 
   /** Optimized write layout: a REBALANCE shuffle keyed on the partition
     * columns (AQE merges undersized bins and splits skewed ones), so the
@@ -3025,8 +2958,7 @@ object DeltaTable {
     require(rels.nonEmpty, s"no parquet files found at $path")
     // size / mtime / footer stats AND the AddFile actions themselves are
     // built on executors, like the write path — the driver never opens a
-    // footer, and past the streaming threshold never holds the action
-    // list either (commitLarge streams from the Dataset iterator, A29)
+    // footer, and the action list stays the commit's Dataset body (A29)
     val serConf = new SerializableHadoopConf(conf)
     val confB = spark.sparkContext.broadcast(serConf)
     val partColSet = partCols.toSet
@@ -3056,16 +2988,7 @@ object DeltaTable {
       schemaString = fullSchema.json,
       partitionColumns = partCols,
       createdTime = Some(log.clock.nowMillis)))
-    val streamThreshold = spark.conf.get(
-      "spark.graft.convert.streamCommitThreshold", "50000").toLong
-    if (rels.size > streamThreshold) {
-      import scala.jdk.CollectionConverters._
-      txn.commitLarge(addsDS.toLocalIterator().asScala.map(a => a: Action),
-        Op.Convert, operationParameters = Map(
-          "numFiles" -> rels.size.toString, "streamed" -> "true"))
-    } else
-      txn.commit(addsDS.collect().toSeq, Op.Convert,
-        operationParameters = Map("numFiles" -> rels.size.toString))
+    txn.commit(Nil, addsDS.map(_.wrap), Op.Convert, Map("numFiles" -> rels.size.toString))
     new DeltaTable(spark, log)
   }
 

@@ -150,7 +150,7 @@ object IcebergMetadata {
     * touched manifests' entries plus the commit's adds). A larger commit
     * takes the general path, whose manifest write is distributed.
     */
-  private val IncrementalMaxEntries = 20000L
+  private[delta] val IncrementalMaxEntries = 20000L
 
   /** What every data manifest of one generation is written with; shipped
     * to the executors by the general path.
@@ -2549,8 +2549,8 @@ object IcebergMetadata {
     // ---- data-manifest entries: DISTRIBUTED, one task per manifest
     // (the per-file SEQUENCE NUMBER rides along: equality deletes apply
     // only to strictly-older files). The rows stay an RDD — cached, NOT
-    // collected: the commit streams AddFiles from it (commitLarge past
-    // the threshold), so a 10^7-file adoption never materializes
+    // collected: the AddFiles are the commit's Dataset body, so a
+    // 10^7-file adoption never materializes
     // O(#files) stats JSON on the driver. The trailing element is the
     // ReadDefaults missing-columns JSON (null when none).
     val dataManifests = manifests.collect { case (p, 0, sid, sq) => (p, sid, sq) }
@@ -3006,8 +3006,7 @@ object IcebergMetadata {
       case None =>
         // ---- the fresh CONVERT commit. Protocol features ride the
         // sanctioned `delta.feature.<name>=supported` request keys
-        // (absorbed and stripped by BOTH commit paths), so the same
-        // staging works for the streaming commit. A v2 merge-on-read
+        // (absorbed and stripped by the commit). A v2 merge-on-read
         // Iceberg table stays merge-on-read as Delta: stamping
         // delta.enableDeletionVectors keeps future DML producing DVs
         // (readers honor attached DVs regardless — descriptor-gated).
@@ -3047,20 +3046,10 @@ object IcebergMetadata {
           "numFiles" -> fileCount.toString,
           "sourceFormat" -> "iceberg",
           "icebergSnapshotId" -> curId.toString)
-        // past the threshold the commit STREAMS from the Dataset iterator
-        // (one partition of AddFiles resident at a time — A29's
-        // contract): a 10^7-file adoption with ~1 KB stats JSON each
-        // never holds ~10 GB of actions on the driver
-        val streamThreshold = spark.conf.get(
-          "spark.graft.convert.streamCommitThreshold", "50000").toLong
-        if (fileCount > streamThreshold)
-          txn.commitLarge(
-            addsDS.toLocalIterator().asScala.map(a => a: Action) ++
-              lineageDomain.iterator,
-            Op.Convert, operationParameters = opParams + ("streamed" -> "true"))
-        else
-          txn.commit(addsDS.collect().toSeq ++ lineageDomain, Op.Convert,
-            operationParameters = opParams)
+        // the AddFiles are the commit's Dataset body (A29's contract): a
+        // 10^7-file adoption with ~1 KB stats JSON each never holds
+        // ~10 GB of actions on the driver
+        txn.commit(lineageDomain, addsDS.map(_.wrap), Op.Convert, opParams)
 
       case Some(s) =>
         // ---- RE-SYNC diff commit: the Delta view becomes EQUAL to the
@@ -3167,7 +3156,7 @@ object IcebergMetadata {
             partitionValues = pvs, size = size, modificationTime = now,
             dataChange = dataChg, stats = stats,
             tags = tags,
-            deletionVector = dvByFp
+            deletionVector = dvB.value
               .get(abs.replaceFirst("^file:/+", "/")).orNull,
             baseRowId = base, defaultRowCommitVersion = dcv)
         }
@@ -3211,13 +3200,6 @@ object IcebergMetadata {
           "icebergSnapshotId" -> curId.toString,
           "numAddedFiles" -> (nNew + nChanged).toString,
           "numRemovedFiles" -> (nGone + nChanged).toString)
-        // same bounded-driver contract as the fresh adoption: a sync
-        // whose diff exceeds the threshold (first sync after a foreign
-        // backfill, a compaction rewriting the table) STREAMS removes +
-        // adds through commitLarge — one Dataset partition resident at
-        // a time, never O(changed files) of action objects on the driver
-        val syncStreamThreshold = spark.conf.get(
-          "spark.graft.convert.streamCommitThreshold", "50000").toLong
         // lineage: advance the high-water mark to the snapshot's
         // next-row-id (never backwards — Iceberg's assignment is
         // monotonic, but a foreign writer that lost ids must not lower
@@ -3234,44 +3216,21 @@ object IcebergMetadata {
           }
         val newFileBase: Option[Long] => Option[Long] =
           frid => if (lineageImport) frid else None
-        val v =
-          if (nNew + nGone + 2 * nChanged > syncStreamThreshold) {
-            val it: Iterator[Action] =
-              goneDS.toLocalIterator().asScala.map(a => mkRemove(a): Action) ++
-                commonChangedDS.toLocalIterator().asScala.flatMap {
-                  case (a, abs, pvs, size, stats, missing) =>
-                    Iterator(mkRemove(a): Action,
-                      mkAdd(abs, pvs, size, stats, a.baseRowId,
-                        a.defaultRowCommitVersion,
-                        retag(a.tags, missing)): Action)
-                } ++
-                newFilesDS.toLocalIterator().asScala.map {
-                  case (abs, pvs, size, stats, frid, missing) =>
-                    mkAdd(abs, pvs, size, stats, newFileBase(frid), None,
-                      missing.map(m =>
-                        Map(ReadDefaults.MissingTag -> m)).orNull): Action
-                } ++ syncLineageDomain.iterator
-            txn.commitLarge(it, Op.Convert,
-              operationParameters = syncParams + ("streamed" -> "true"))
-          } else {
-            val removes: Seq[Action] =
-              (goneDS.collect().toSeq ++ commonChangedDS.collect().map(_._1))
-                .map(mkRemove)
-            val addsOut: Seq[Action] =
-              commonChangedDS.collect().map {
-                case (a, abs, pvs, size, stats, missing) =>
-                  mkAdd(abs, pvs, size, stats, a.baseRowId,
-                    a.defaultRowCommitVersion, retag(a.tags, missing)): Action
-              }.toSeq ++
-                newFilesDS.collect().map {
-                  case (abs, pvs, size, stats, frid, missing) =>
-                    mkAdd(abs, pvs, size, stats, newFileBase(frid), None,
-                      missing.map(m =>
-                        Map(ReadDefaults.MissingTag -> m)).orNull): Action
-                }
-            txn.commit(removes ++ addsOut ++ syncLineageDomain, Op.Convert,
-              operationParameters = syncParams)
-          }
+        // same bounded-driver contract as the fresh adoption: the diff
+        // (a first sync after a foreign backfill, a compaction rewriting
+        // the table) is the commit's Dataset body, never O(changed files)
+        // of action objects on the driver
+        val v = txn.commit(syncLineageDomain,
+          goneDS.map(a => mkRemove(a).wrap)
+            .union(commonChangedDS.flatMap { case (a, abs, pvs, size, stats, missing) =>
+              Seq(mkRemove(a).wrap, mkAdd(abs, pvs, size, stats, a.baseRowId,
+                a.defaultRowCommitVersion, retag(a.tags, missing)).wrap)
+            })
+            .union(newFilesDS.map { case (abs, pvs, size, stats, frid, missing) =>
+              mkAdd(abs, pvs, size, stats, newFileBase(frid), None,
+                missing.map(m => Map(ReadDefaults.MissingTag -> m)).orNull).wrap
+            }),
+          Op.Convert, syncParams)
         newFilesDS.unpersist()
         goneDS.unpersist()
         commonChangedDS.unpersist()

@@ -135,14 +135,14 @@ class HadoopLogStore(hadoopConf: Configuration) extends LogStore {
     val f = fs(path)
     f.mkdirs(path.getParent)
     val temp = new Path(path.getParent, s".${path.getName}.${UUID.randomUUID}.tmp")
-    val out = f.create(temp, true)
     try {
-      lines.foreach { l =>
-        out.write(l.getBytes(StandardCharsets.UTF_8))
-        out.write('\n')
-      }
-    } finally out.close()
-    try {
+      val out = f.create(temp, true)
+      try {
+        lines.foreach { l =>
+          out.write(l.getBytes(StandardCharsets.UTF_8))
+          out.write('\n')
+        }
+      } finally out.close()
       if (overwrite) {
         fc(path).rename(temp, path, Options.Rename.OVERWRITE)
       } else {

@@ -1,8 +1,9 @@
 package graft.delta
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, Encoders}
+import org.apache.spark.sql.{Column, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 
 import DeltaErrors._
@@ -18,10 +19,19 @@ case object SnapshotIsolation extends IsolationLevel("SnapshotIsolation")
   * `trnx.go:73` optimisticTransactionImp).
   *
   * Lifecycle: read through `markFilesAsRead` / `readWholeTable` /
-  * `txnVersion`, stage metadata via `updateMetadata`, then `commit`:
-  * prepareCommit -> put-if-absent of `<v>.json` -> on collision, conflict
-  * check against the winning commits and retry at the next version
-  * (cf. `trnx.go:541` doCommitRetryIteratively).
+  * `txnVersion`, stage metadata via `updateMetadata`, then `commit` —
+  * with a `Seq` of actions, or with a `Seq` plus a Dataset body of file
+  * actions too large for the driver. Both run one pipeline:
+  *  - prepare: protocol write check, first-commit protocol, one
+  *    Metadata, every feature upgrade the new state needs, CommitInfo
+  *    (metrics from the file tally; a Dataset body is tallied by one
+  *    aggregation);
+  *  - write: put-if-absent of `<v>.json` streaming CommitInfo, the
+  *    actions, the body and the row-tracking mark, with row ids numbered
+  *    by one running counter and the in-commit timestamp set per attempt;
+  *  - retry: on collision, conflict check against the winning commits
+  *    and write again at the next version (cf. `trnx.go:541`
+  *    doCommitRetryIteratively).
   */
 class OptimisticTransaction(val deltaLog: DeltaLog, val snapshot: Snapshot) {
 
@@ -97,10 +107,7 @@ class OptimisticTransaction(val deltaLog: DeltaLog, val snapshot: Snapshot) {
     * protocol BY THE COMMIT that carries them and stripped from the
     * stored configuration — one-shot directives, not persistent config.
     * Unknown names fail loudly: silently recording an unenforceable
-    * feature would hand a corrupt table to conforming readers. Shared
-    * by [[commit]] and [[commitLarge]] so a metadata-bearing large
-    * commit (e.g. a replace past the commitLarge threshold) gets the
-    * identical validate/strip/upgrade treatment.
+    * feature would hand a corrupt table to conforming readers.
     */
   private def featureRequestsIn(config: Map[String, String]): Set[String] =
     config.collect {
@@ -124,14 +131,61 @@ class OptimisticTransaction(val deltaLog: DeltaLog, val snapshot: Snapshot) {
   def commit(actions: Seq[Action], operation: String,
       engineInfo: String = "graft-spark",
       operationParameters: Map[String, String] = Map.empty,
-      operationMetrics: Map[String, String] = Map.empty): Long = {
+      operationMetrics: Map[String, String] = Map.empty): Long =
+    commitPipeline(actions, None, operation, engineInfo, operationParameters,
+      operationMetrics)
+
+  /** Commit `actions` plus a bulk `body` of file actions (add, remove or
+    * cdc rows only) that never lands on the driver as a whole: it is
+    * tallied by one aggregation, which also caches it, and then streamed
+    * into the commit file — in one job up to
+    * [[OptimisticTransaction.SingleFetchMaxFiles]] files, a partition at
+    * a time past that, so a 10^7-file overwrite holds one partition of
+    * actions, not the list. A lost race retries like any other commit
+    * (the cached body is streamed again), and the conflict check filters
+    * the body on the executors. The body may be recomputed if a cached
+    * block is lost, so any side effect it has must be idempotent.
+    */
+  def commit(actions: Seq[Action], body: Dataset[SingleAction], operation: String,
+      operationParameters: Map[String, String]): Long =
+    commitPipeline(actions, Some(body), operation, "graft-spark",
+      operationParameters, Map.empty)
+
+  /** The one commit protocol: prepare (protocol checks and upgrades) ->
+    * tally and CommitInfo -> write head ++ body -> on a lost race, check
+    * the winners for conflicts and write again at the next version
+    * (cf. `trnx.go:428` prepareCommit, `trnx.go:541`
+    * doCommitRetryIteratively).
+    */
+  private def commitPipeline(actions: Seq[Action], body: Option[Dataset[SingleAction]],
+      operation: String, engineInfo: String,
+      operationParameters: Map[String, String],
+      operationMetrics: Map[String, String]): Long = {
     require(!committed, "transaction already committed")
     Op.validate(operation)
     validateStagedCoordinator()
+    val head = prepare(newMetadata.map(m => m: Action).toSeq ++ actions)
+    val cached = body.map(_.persist())
+    val (done, tally) =
+      try writeWithRetry(head, cached, operation, engineInfo, operationParameters,
+        operationMetrics)
+      finally cached.foreach(_.unpersist())
+    committed = true
+    // version checksum: incremental table aggregates (best-effort)
+    try deltaLog.writeChecksum(done, tally.adds, tally.addBytes, tally.removes,
+      if (tally.sizedRemoves == tally.removes) Some(tally.removeBytes) else None)
+    catch { case scala.util.control.NonFatal(_) => () }
+    postCommit(done, tally)
+    done
+  }
 
-    var finalActions = newMetadata.map(m => m: Action).toSeq ++ actions
-
-    // prepareCommit checks (cf. trnx.go:428)
+  /** prepareCommit's protocol half (cf. reference `trnx.go:428`): the
+    * staged metadata and `actions` with the first-commit protocol, every
+    * feature upgrade the new state requires and the metadata rewrites
+    * (materialized row-tracking names, stripped feature requests).
+    */
+  private def prepare(actions: Seq[Action]): Seq[Action] = {
+    var finalActions = actions
     if (snapshot.version >= 0) snapshot.assertProtocolWrite()
     // identity columns are a writer-6 capability: stamp the upgrade with
     // the commit that introduces them, so foreign writers without
@@ -172,6 +226,12 @@ class OptimisticTransaction(val deltaLog: DeltaLog, val snapshot: Snapshot) {
         case a => a
       }
     }
+    val featureRequests = featureRequestsIn(metadata.configuration)
+    if (featureRequests.nonEmpty)
+      finalActions = finalActions.map {
+        case m: Metadata => stripFeatureRequests(m)
+        case a => a
+      }
     val wantedWriterFeatures: Set[String] =
       (if (rtEnabled) Set(RowTracking.FeatureName, RowTracking.DomainFeatureName)
        else Set.empty[String]) ++
@@ -188,61 +248,60 @@ class OptimisticTransaction(val deltaLog: DeltaLog, val snapshot: Snapshot) {
         // coordinated commits: a pre-feature writer would bypass the
         // coordinator with a filesystem commit and fork the table
         (if (DeltaConfig.CommitCoordinatorName.fromMetadata(metadata).nonEmpty)
-          Set(CoordinatedCommits.FeatureName) else Set.empty[String])
-    val featureRequests = featureRequestsIn(metadata.configuration)
-    if (featureRequests.nonEmpty)
-      finalActions = finalActions.map {
-        case m: Metadata => stripFeatureRequests(m)
-        case a => a
-      }
+          Set(CoordinatedCommits.FeatureName) else Set.empty[String]) ++
+        (featureRequests -- Snapshot.SupportedReaderFeatures)
     val rwFeatures = readerWriterFeatureRequirements ++
       featureRequests.intersect(Snapshot.SupportedReaderFeatures)
-    val wantedWriterFeatures2 = wantedWriterFeatures ++
-      (featureRequests -- Snapshot.SupportedReaderFeatures)
-    if (wantedWriterFeatures2.nonEmpty || rwFeatures.nonEmpty) {
+    if (wantedWriterFeatures.nonEmpty || rwFeatures.nonEmpty) {
       finalActions.collectFirst { case p: Protocol => p } match {
         case Some(p) =>
-          upgradedProtocol(p, wantedWriterFeatures2, rwFeatures).foreach { up =>
+          upgradedProtocol(p, wantedWriterFeatures, rwFeatures).foreach { up =>
             finalActions = finalActions.map { case q: Protocol if q eq p => up; case a => a }
           }
         case None =>
-          val cur = if (snapshot.version == -1) Protocol() else snapshot.protocol
-          upgradedProtocol(cur, wantedWriterFeatures2, rwFeatures)
+          upgradedProtocol(snapshot.protocol, wantedWriterFeatures, rwFeatures)
             .foreach(up => finalActions = up +: finalActions)
       }
     }
+    finalActions
+  }
+
+  /** Tallies `head` ++ `body`, builds the CommitInfo and writes the
+    * commit at the first free version; returns it with the tally.
+    */
+  private def writeWithRetry(head: Seq[Action], body: Option[Dataset[SingleAction]],
+      operation: String, engineInfo: String,
+      operationParameters: Map[String, String],
+      operationMetrics: Map[String, String]): (Long, OptimisticTransaction.Tally) = {
+    import OptimisticTransaction._
+    val bodyTally = body.map(Tally.of).getOrElse(Tally())
+    val tally = Tally.of(head) + bodyTally
     // appendOnly tables reject data-changing removes
     // (cf. reference config.go:92 DeltaConfigIsAppendOnly)
-    if (DeltaConfig.AppendOnly.fromMetadata(metadata) &&
-        finalActions.exists { case r: RemoveFile => r.dataChange; case _ => false })
+    if (DeltaConfig.AppendOnly.fromMetadata(metadata) && tally.dataChangeRemoves > 0)
       throw new UnsupportedOperationException(
         "this table is append-only (delta.appendOnly=true); removes with dataChange are not allowed")
 
     val isBlindAppend = !readTheWholeTable && readPredicates.isEmpty &&
-      finalActions.forall {
+      tally.removes == 0 && tally.cdcFiles == 0 && head.forall {
         case _: AddFile | _: SetTransaction | _: CommitInfo => true
         case _: Metadata | _: Protocol => snapshot.version == -1
         case _ => false
       }
     val isolationLevel: IsolationLevel =
       if (isBlindAppend) WriteSerializable else Serializable
-
-    // operation metrics derived from the staged actions — free to compute,
-    // and what history()/audit consumers want (cf. reference
-    // action/commit_info.go operationMetrics)
-    val adds = finalActions.collect { case a: AddFile => a }
-    val removes = finalActions.collect { case r: RemoveFile => r }
-    val cdcFiles = finalActions.collect { case c: AddCDCFile => c }
-    // caller-supplied metrics (e.g. exact DML row counts) layer on top
+    // operation metrics derived from the tally — free to compute, and
+    // what history()/audit consumers want (cf. reference
+    // action/commit_info.go operationMetrics); caller-supplied metrics
+    // (e.g. exact DML row counts) layer on top
     val metrics = Map(
-      "numAddedFiles" -> adds.size.toString,
-      "numRemovedFiles" -> removes.size.toString,
-      "numAddedBytes" -> adds.map(_.size).sum.toString,
-      "numRemovedBytes" -> removes.flatMap(_.size).sum.toString) ++
-      (if (cdcFiles.nonEmpty)
-        Map("numAddedChangeFiles" -> cdcFiles.size.toString) else Map.empty) ++
+      "numAddedFiles" -> tally.adds.toString,
+      "numRemovedFiles" -> tally.removes.toString,
+      "numAddedBytes" -> tally.addBytes.toString,
+      "numRemovedBytes" -> tally.removeBytes.toString) ++
+      (if (tally.cdcFiles > 0)
+        Map("numAddedChangeFiles" -> tally.cdcFiles.toString) else Map.empty) ++
       operationMetrics
-
     val commitInfo = CommitInfo(
       timestamp = deltaLog.clock.nowMillis,
       operation = operation,
@@ -253,104 +312,101 @@ class OptimisticTransaction(val deltaLog: DeltaLog, val snapshot: Snapshot) {
       operationMetrics = metrics,
       engineInfo = Some(engineInfo),
       txnId = Some(java.util.UUID.randomUUID.toString))
+
+    // a small body is fetched in one job; a large one streams a partition
+    // at a time
+    val bodyRows: () => Iterator[Action] = body match {
+      case None => () => Iterator.empty
+      case Some(ds) =>
+        val parts = if (bodyTally.files <= SingleFetchMaxFiles) ds.coalesce(1) else ds
+        () => parts.toLocalIterator().asScala.map(_.unwrap)
+    }
     // in-commit timestamps: the commit's timestamp lives IN the commit
     // (mtime is unreliable once an object store copies the log). It must
-    // exceed the previous commit's ICT, so under conflict retry it is
-    // recomputed per attempt against the new winner.
+    // exceed the previous commit's ICT, so it is recomputed per attempt
+    // against the latest winner.
     val ictEnabled = DeltaConfig.InCommitTimestamps.fromMetadata(metadata)
     val ictNewlyEnabled = ictEnabled && snapshot.version >= 0 &&
       !snapshot.metadataOpt.exists(DeltaConfig.InCommitTimestamps.fromMetadata)
     // row tracking: fresh files get contiguous baseRowId ranges above the
-    // table's high-water mark. Under conflict retry both the ranges (a
-    // winner may have raised the mark) and defaultRowCommitVersion move,
-    // so assignment is per-attempt like the ICT; each winning commit's
-    // mark is read once and memoized.
-    val needsRowIds = rtEnabled && finalActions.exists {
-      case a: AddFile => a.baseRowId.isEmpty || a.defaultRowCommitVersion.isEmpty
+    // table's high-water mark, numbered by one running counter as the
+    // actions stream past. A caller-DECLARED mark (CONVERT FROM ICEBERG
+    // imports next-row-id − 1) is a floor for that counter; the final
+    // mark is written once, behind the body. Under conflict retry a
+    // winner may have raised the mark and defaultRowCommitVersion moves,
+    // so numbering is per attempt; each winner's mark is read once.
+    val rtEnabled = DeltaConfig.RowTracking.fromMetadata(metadata)
+    def isRtDomain(a: Action): Boolean = a match {
+      case d: DomainMetadata => rtEnabled && d.domain == RowTracking.Domain
       case _ => false
     }
-    // a caller-DECLARED row-tracking mark (CONVERT FROM ICEBERG imports
-    // next-row-id − 1 as an explicit DomainMetadata) must be re-clamped
-    // per attempt: the domain is exempt from conflict detection, so a
-    // concurrent winner that raised the mark would otherwise be
-    // overwritten with a lower value and the next fresh assignment
-    // would re-issue its row ids
-    val declaresRtDomain = rtEnabled && finalActions.exists {
-      case d: DomainMetadata => d.domain == RowTracking.Domain
-      case _ => false
-    }
+    val declaredHwm = head.collect {
+      case d: DomainMetadata if isRtDomain(d) =>
+        RowTracking.highWaterMark(Map(d.domain -> d.configuration))
+    }.maxOption
+    val headOut = if (declaredHwm.isEmpty) head else head.filterNot(isRtDomain)
     val winnerHwm = mutable.Map.empty[Long, Long]
-    def actionsFor(attempt: Long): Seq[Action] = {
-      if (!needsRowIds && !declaresRtDomain) return finalActions
-      var hwm = RowTracking.highWaterMark(snapshot.domainMetadata)
-      ((snapshot.version + 1) until attempt).foreach { v =>
-        val h = winnerHwm.getOrElseUpdate(v,
+    def hwmBefore(attempt: Long): Long =
+      ((snapshot.version + 1) until attempt).foldLeft(
+          RowTracking.highWaterMark(snapshot.domainMetadata)) { (hwm, v) =>
+        math.max(hwm, winnerHwm.getOrElseUpdate(v,
           deltaLog.readCommit(v).getOrElse(throw new IllegalStateException(
               s"winning commit $v vanished during row-id assignment"))
             .flatMap(Actions.fromJson)
             .collectFirst { case d: DomainMetadata if d.domain == RowTracking.Domain =>
               RowTracking.highWaterMark(Map(d.domain -> d.configuration))
-            }.getOrElse(-1L))
-        hwm = math.max(hwm, h)
+            }.getOrElse(-1L)))
       }
-      val clamped =
-        if (!declaresRtDomain) finalActions
-        else finalActions.map {
-          case d: DomainMetadata if d.domain == RowTracking.Domain =>
-            val declared = RowTracking.highWaterMark(
-              Map(d.domain -> d.configuration))
-            if (declared >= hwm) d
-            else DomainMetadata(d.domain, RowTracking.configJson(hwm))
-          case a => a
-        }
-      if (!needsRowIds) return clamped
-      // fresh assignment starts above BOTH the winners' mark and any
-      // declared one, and its final mark replaces the declared action
-      // (one domain write per commit)
-      val declaredHwm =
-        if (!declaresRtDomain) -1L
-        else finalActions.collect {
-          case d: DomainMetadata if d.domain == RowTracking.Domain =>
-            RowTracking.highWaterMark(Map(d.domain -> d.configuration))
-        }.max
-      val (assigned, newHwm, any) =
-        RowTracking.assign(clamped, math.max(hwm, declaredHwm), attempt)
-      if (any && !declaresRtDomain)
-        assigned :+ DomainMetadata(RowTracking.Domain, RowTracking.configJson(newHwm))
-      else if (any)
-        assigned.map {
-          case d: DomainMetadata if d.domain == RowTracking.Domain =>
-            DomainMetadata(d.domain, RowTracking.configJson(newHwm))
-          case a => a
-        }
-      else assigned
+    def lines(attempt: Long): Iterator[String] = {
+      val ict = if (!ictEnabled) None else {
+        val floor =
+          if (attempt == 0) Long.MinValue
+          else deltaLog.commitInfoAt(attempt - 1)
+            .flatMap(_.inCommitTimestamp).getOrElse(Long.MinValue)
+        Some(math.max(deltaLog.clock.nowMillis, floor + 1))
+      }
+      val ci = ict.fold(commitInfo)(t =>
+        commitInfo.copy(timestamp = t, inCommitTimestamp = Some(t)))
+      lazy val floorHwm = math.max(hwmBefore(attempt), declaredHwm.getOrElse(-1L))
+      var nextRowId = -1L // no fresh id assigned yet
+      val acts = (headOut.iterator ++ bodyRows()).map {
+        case a: AddFile if rtEnabled && a.baseRowId.isEmpty =>
+          val n = Stats.numRecords(a.stats).getOrElse(throw new IllegalStateException(
+            s"row tracking requires numRecords stats on every added file; missing for ${a.path}"))
+          if (nextRowId < 0) nextRowId = floorHwm + 1
+          val b = a.copy(baseRowId = Some(nextRowId), defaultRowCommitVersion = Some(attempt))
+          nextRowId += n
+          b
+        // imported id (CONVERT FROM ICEBERG v3): keep it, stamp the version
+        case a: AddFile if rtEnabled && a.defaultRowCommitVersion.isEmpty =>
+          a.copy(defaultRowCommitVersion = Some(attempt))
+        // enabling ICT on an existing table records WHERE the clock source
+        // switches, so readers know which versions to trust mtime for
+        case m: Metadata if ictNewlyEnabled => m.copy(configuration = m.configuration +
+          (DeltaConfig.IctEnablementVersionKey -> attempt.toString) +
+          (DeltaConfig.IctEnablementTimestampKey -> ict.get.toString))
+        case a => a
+      }
+      // evaluated only once the body has streamed past
+      def mark: Iterator[Action] =
+        if (nextRowId >= 0)
+          Iterator(DomainMetadata(RowTracking.Domain, RowTracking.configJson(nextRowId - 1)))
+        else if (declaredHwm.isDefined)
+          Iterator(DomainMetadata(RowTracking.Domain, RowTracking.configJson(floorHwm)))
+        else Iterator.empty
+      (Iterator(ci) ++ acts ++ mark).map(Actions.toJson)
     }
-    def serialized(attempt: Long): Seq[String] = {
-      val acts0 = actionsFor(attempt)
-      if (!ictEnabled) return (commitInfo +: acts0).map(Actions.toJson)
-      val floor =
-        if (attempt == 0) Long.MinValue
-        else deltaLog.commitInfoAt(attempt - 1)
-          .flatMap(_.inCommitTimestamp).getOrElse(Long.MinValue)
-      val ict = math.max(deltaLog.clock.nowMillis, floor + 1)
-      val ci = commitInfo.copy(timestamp = ict, inCommitTimestamp = Some(ict))
-      // enabling ICT on an existing table records WHERE the clock source
-      // switches, so readers know which versions to trust mtime for
-      val acts =
-        if (!ictNewlyEnabled) acts0
-        else acts0.map {
-          case m: Metadata => m.copy(configuration = m.configuration +
-            (DeltaConfig.IctEnablementVersionKey -> attempt.toString) +
-            (DeltaConfig.IctEnablementTimestampKey -> ict.toString))
-          case a => a
-        }
-      (ci +: acts).map(Actions.toJson)
+    lazy val ourDomains = head.collect { case d: DomainMetadata => d.domain }.toSet
+    lazy val headRemoves = head.collect { case r: RemoveFile => r.path }.toSet
+    def ourDeletedAmong(paths: Set[String]): Set[String] = {
+      val fromBody = body match {
+        case Some(ds) if paths.nonEmpty && bodyTally.removes > 0 =>
+          ds.where(col("remove.path").isInCollection(paths))
+            .select("remove.path").as(Encoders.STRING).take(3).toSet
+        case _ => Set.empty[String]
+      }
+      headRemoves.intersect(paths) ++ fromBody
     }
-    // a declared row-tracking domain must also re-serialize per attempt:
-    // actionsFor() re-clamps the declared mark against each new winner,
-    // which is pointless if attempt 0's serialization is reused verbatim
-    val perAttempt = ictEnabled || needsRowIds || declaresRtDomain
-    val preSerialized = if (perAttempt) null else serialized(0L)
 
     var attempt = snapshot.version + 1
     var done = -1L
@@ -359,167 +415,15 @@ class OptimisticTransaction(val deltaLog: DeltaLog, val snapshot: Snapshot) {
       tries += 1
       if (tries > 10000) throw new IllegalStateException("commit retry limit exceeded")
       try {
-        val lines = if (perAttempt) serialized(attempt) else preSerialized
-        writeCommitFile(attempt, lines.iterator)
+        writeCommitFile(attempt, lines(attempt))
         done = attempt
       } catch {
         case _: FileAlreadyExistsException =>
           // losing the race: check every winning commit for conflicts
-          attempt = checkForConflicts(attempt, finalActions, isolationLevel) + 1
+          attempt = checkForConflicts(attempt, isolationLevel, ourDomains, ourDeletedAmong) + 1
       }
     }
-    committed = true
-    // version checksum: incremental table aggregates (best-effort)
-    try deltaLog.writeChecksum(done,
-      adds.size, adds.map(_.size).sum, removes.size,
-      if (removes.forall(_.size.isDefined)) Some(removes.flatMap(_.size).sum) else None)
-    catch { case scala.util.control.NonFatal(_) => () }
-    postCommit(done, incrementalUniform = true)
-    done
-  }
-
-  /** Streaming commit for huge action sets (cf. Delta's own commitLarge):
-    * actions flow straight from the iterator to the commit file — the
-    * driver never materializes the list, so a 10^7-file overwrite commit
-    * is bounded by one action in memory at a time (the snapshot read path
-    * already spills huge tails to Spark). Contract differences from
-    * [[commit]], same as Delta's: NO conflict retry (a lost race throws
-    * immediately — the single-pass iterator cannot be replayed), metrics
-    * are caller-supplied (the stream is not inspected twice), and
-    * `isBlindAppend` is conservatively false. Metadata goes through
-    * [[updateMetadata]], never through the stream.
-    */
-  def commitLarge(actions: Iterator[Action], operation: String,
-      engineInfo: String = "graft-spark",
-      operationParameters: Map[String, String] = Map.empty,
-      operationMetrics: Map[String, String] = Map.empty): Long = {
-    require(!committed, "transaction already committed")
-    Op.validate(operation)
-    validateStagedCoordinator()
-    if (snapshot.version == -1 && newMetadata.isEmpty)
-      throw new IllegalStateException("first commit must include table metadata")
-    val appendOnly = DeltaConfig.AppendOnly.fromMetadata(metadata)
-    val checked = actions.map {
-      case _: Metadata =>
-        throw new IllegalStateException(
-          "stage Metadata via updateMetadata, not the commitLarge stream")
-      case r: RemoveFile if appendOnly && r.dataChange =>
-        throw new UnsupportedOperationException(
-          "this table is append-only (delta.appendOnly=true); removes with dataChange are not allowed")
-      case a => a
-    }
-    val attempt = snapshot.version + 1
-    // row tracking on the streaming path: ids are assigned as actions flow
-    // past (running counter, no materialization); the domain-metadata
-    // high-water-mark bump rides behind the stream and reads the final
-    // counter only after the adds have been serialized
-    val rtEnabled = DeltaConfig.RowTracking.fromMetadata(metadata)
-    if (rtEnabled) RowTracking.assertNoCollision(metadata)
-    var nextRowId =
-      (if (rtEnabled) RowTracking.highWaterMark(snapshot.domainMetadata) else -1L) + 1
-    var assignedRowIds = false
-    val withIds: Iterator[Action] =
-      if (!rtEnabled) checked
-      else checked.map {
-        case a: AddFile if a.baseRowId.isEmpty =>
-          val n = Stats.numRecords(a.stats).getOrElse(throw new IllegalStateException(
-            s"row tracking requires numRecords stats on every added file; missing for ${a.path}"))
-          val b = a.copy(baseRowId = Some(nextRowId),
-            defaultRowCommitVersion = Some(attempt))
-          nextRowId += n; assignedRowIds = true; b
-        // imported id (CONVERT FROM ICEBERG v3): keep it, stamp the version
-        case a: AddFile if a.defaultRowCommitVersion.isEmpty =>
-          a.copy(defaultRowCommitVersion = Some(attempt))
-        case a => a
-      }
-    val domainTail: Iterator[Action] = new Iterator[Action] {
-      private var emitted = false
-      def hasNext: Boolean = rtEnabled && assignedRowIds && !emitted
-      def next(): Action = {
-        emitted = true
-        DomainMetadata(RowTracking.Domain, RowTracking.configJson(nextRowId - 1))
-      }
-    }
-    // ICT applies to EVERY post-enablement commit — a large overwrite that
-    // skipped it would be timed by unreliable file mtime, the exact failure
-    // ICT exists to prevent. No retry here, so one computation suffices.
-    val ictEnabled = DeltaConfig.InCommitTimestamps.fromMetadata(metadata)
-    val ictNewlyEnabled = ictEnabled && snapshot.version >= 0 &&
-      !snapshot.metadataOpt.exists(DeltaConfig.InCommitTimestamps.fromMetadata)
-    val ict: Option[Long] = if (!ictEnabled) None else {
-      val floor =
-        if (attempt == 0) Long.MinValue
-        else deltaLog.commitInfoAt(attempt - 1)
-          .flatMap(_.inCommitTimestamp).getOrElse(Long.MinValue)
-      Some(math.max(deltaLog.clock.nowMillis, floor + 1))
-    }
-    val commitInfo = CommitInfo(
-      timestamp = ict.getOrElse(deltaLog.clock.nowMillis),
-      operation = operation,
-      operationParameters = operationParameters,
-      readVersion = if (snapshot.version >= 0) Some(snapshot.version) else None,
-      isolationLevel = Some(Serializable.name),
-      isBlindAppend = Some(false),
-      operationMetrics = operationMetrics,
-      engineInfo = Some(engineInfo),
-      txnId = Some(java.util.UUID.randomUUID.toString),
-      inCommitTimestamp = ict)
-    // identical `delta.feature.<name>=supported` treatment as commit():
-    // validate, strip from the stored configuration, absorb into the
-    // protocol below — a metadata-bearing large commit must not persist
-    // the raw one-shot keys without the upgrade
-    val featureRequests = featureRequestsIn(metadata.configuration)
-    val mdActions = newMetadata.toSeq.map {
-      case m if ictNewlyEnabled => m.copy(configuration = m.configuration +
-        (DeltaConfig.IctEnablementVersionKey -> attempt.toString) +
-        (DeltaConfig.IctEnablementTimestampKey -> ict.get.toString))
-      case m => m
-    }.map(RowTracking.withMaterializedNames).map(stripFeatureRequests)
-    // same feature-requirement set as commit(): a table whose
-    // metadata-bearing commits all flow through commitLarge must still
-    // declare v2Checkpoint / typeWidening / row-tracking features before
-    // using them
-    val baseProto: Option[Protocol] =
-      if (snapshot.version == -1) Some(Protocol()) else None
-    val wantedWriterFeatures: Set[String] =
-      (if (rtEnabled) Set(RowTracking.FeatureName, RowTracking.DomainFeatureName)
-       else Set.empty[String]) ++
-        (if (ictEnabled) Set("inCommitTimestamp") else Set.empty[String]) ++
-        (if (ColumnDefaults.defaults(metadata).nonEmpty)
-          Set(ColumnDefaults.FeatureName) else Set.empty[String]) ++
-        (featureRequests -- Snapshot.SupportedReaderFeatures)
-    val protoActions: Seq[Action] =
-      upgradedProtocol(baseProto.getOrElse(snapshot.protocol),
-          wantedWriterFeatures,
-          readerWriterFeatureRequirements ++
-            featureRequests.intersect(Snapshot.SupportedReaderFeatures))
-        .map(Seq[Action](_)).getOrElse(baseProto.toSeq)
-    // crc tallies ride the stream — no second pass over the actions
-    var crcAddFiles = 0L; var crcAddBytes = 0L
-    var crcRmFiles = 0L; var crcRmBytes = 0L; var crcRmSizesKnown = true
-    val tallied: Iterator[Action] = withIds.map {
-      case a: AddFile => crcAddFiles += 1; crcAddBytes += a.size; a
-      case r: RemoveFile =>
-        crcRmFiles += 1
-        r.size match { case Some(b) => crcRmBytes += b; case None => crcRmSizesKnown = false }
-        r
-      case a => a
-    }
-    val head: Seq[Action] = commitInfo +: (protoActions ++ mdActions)
-    try
-      writeCommitFile(attempt,
-        (head.iterator ++ tallied ++ domainTail).map(Actions.toJson))
-    catch {
-      case _: FileAlreadyExistsException =>
-        throw new DeltaConcurrentModificationException(
-          s"version $attempt was committed concurrently; commitLarge does not retry")
-    }
-    committed = true
-    try deltaLog.writeChecksum(attempt, crcAddFiles, crcAddBytes, crcRmFiles,
-      if (crcRmSizesKnown) Some(crcRmBytes) else None)
-    catch { case scala.util.control.NonFatal(_) => () }
-    postCommit(attempt)
-    attempt
+    (done, tally)
   }
 
   /** A commit that SETS `delta.coordinatedCommits.commitCoordinator`
@@ -621,8 +525,7 @@ class OptimisticTransaction(val deltaLog: DeltaLog, val snapshot: Snapshot) {
 
   /** Protocol upgraded to declare every feature the staged state requires
     * (writer features plus the v2Checkpoint reader+writer feature); None
-    * when `p` already declares them all. Shared by commit() and
-    * commitLarge() so no commit path can use a feature undeclared.
+    * when `p` already declares them all.
     */
   private def upgradedProtocol(
       p: Protocol, wantedWriterFeatures: Set[String],
@@ -676,8 +579,8 @@ class OptimisticTransaction(val deltaLog: DeltaLog, val snapshot: Snapshot) {
   /** cf. reference `trnx.go:603` checkForConflicts + `conflict_checker.go`.
     * Returns the latest winning version when compatible; throws otherwise.
     */
-  private def checkForConflicts(
-      checkVersion: Long, actions: Seq[Action], level: IsolationLevel): Long = {
+  private def checkForConflicts(checkVersion: Long, level: IsolationLevel,
+      ourDomains: Set[String], ourDeletedAmong: Set[String] => Set[String]): Long = {
     val fsLatest = deltaLog.listDeltaVersions().lastOption.getOrElse(checkVersion - 1)
     // coordinated commits: winners can be ratified-but-unbackfilled —
     // the staged tail MUST be conflict-checked too, and each winner is
@@ -692,18 +595,19 @@ class OptimisticTransaction(val deltaLog: DeltaLog, val snapshot: Snapshot) {
       val winning = deltaLog.readCommit(v).getOrElse(throw new IllegalStateException(
           s"winning commit $v vanished during conflict check"))
         .flatMap(Actions.fromJson)
-      new ConflictChecker(this, winning.toSeq, v, level, actions).check()
+      new ConflictChecker(this, winning.toSeq, v, level, ourDomains, ourDeletedAmong)
+        .check()
       v += 1
     }
     latest
   }
 
   /** cf. reference `trnx.go:647` postCommit: checkpoint on interval.
-    * `incrementalUniform` lets Iceberg generation read the commit back
-    * from the log (false for [[commitLarge]]'s unbounded action sets).
+    * Iceberg generation reads the commit back from the log only when its
+    * tally is small enough for the incremental path.
     */
   private def postCommit(committedVersion: Long,
-      incrementalUniform: Boolean = false): Unit = {
+      tally: OptimisticTransaction.Tally): Unit = {
     val interval = DeltaConfig.CheckpointInterval.fromMetadata(metadata)
     if (committedVersion != 0 && committedVersion % interval == 0) {
       val s = deltaLog.update()
@@ -724,7 +628,7 @@ class OptimisticTransaction(val deltaLog: DeltaLog, val snapshot: Snapshot) {
       val s = deltaLog.snapshot
       if (s.version == committedVersion) {
         try IcebergMetadata.generate(deltaLog.spark, deltaLog, s,
-          incremental = incrementalUniform)
+          incremental = tally.files <= IcebergMetadata.IncrementalMaxEntries)
         catch {
           case scala.util.control.NonFatal(e) =>
             System.err.println(s"WARN graft: Iceberg metadata generation " +
@@ -748,7 +652,8 @@ class ConflictChecker(
     winningActions: Seq[Action],
     winningVersion: Long,
     level: IsolationLevel,
-    currentActions: Seq[Action]) {
+    ourDomains: Set[String],
+    ourDeletedAmong: Set[String] => Set[String]) {
 
   private val winningCommitInfo = winningActions.collectFirst { case c: CommitInfo => c }
   private val winningAdds = winningActions.collect { case a: AddFile => a }
@@ -822,9 +727,7 @@ class ConflictChecker(
 
   /** cf. conflict_checker.go checkForDeletedFilesAgainstCurrentTxnDeletedFiles. */
   private def checkDeletedFilesAgainstDeletedFiles(): Unit = {
-    val winningDeleted = winningRemoves.map(_.path).toSet
-    val ourDeleted = currentActions.collect { case r: RemoveFile => r.path }.toSet
-    val overlap = winningDeleted.intersect(ourDeleted)
+    val overlap = ourDeletedAmong(winningRemoves.map(_.path).toSet)
     if (overlap.nonEmpty)
       throw new ConcurrentDeleteDeleteException(
         s"version $winningVersion deleted files this transaction also deletes: ${overlap.take(3).mkString(", ")}")
@@ -838,9 +741,7 @@ class ConflictChecker(
   private def checkDomainMetadata(): Unit = {
     val winningDomains = winningActions
       .collect { case d: DomainMetadata => d.domain }.toSet - RowTracking.Domain
-    val ourDomains = currentActions
-      .collect { case d: DomainMetadata => d.domain }.toSet - RowTracking.Domain
-    val overlap = winningDomains.intersect(ourDomains)
+    val overlap = winningDomains.intersect(ourDomains - RowTracking.Domain)
     if (overlap.nonEmpty)
       throw new DomainMetadataChangedException(
         s"metadata domain(s) ${overlap.mkString(", ")} changed by version $winningVersion")
@@ -853,5 +754,57 @@ class ConflictChecker(
     if (overlap.nonEmpty)
       throw new ConcurrentTransactionException(
         s"idempotent transaction ids updated by version $winningVersion: ${overlap.mkString(", ")}")
+  }
+}
+
+object OptimisticTransaction {
+
+  /** Largest Dataset body fetched to the driver in one job; a larger one
+    * streams one partition at a time.
+    */
+  private[delta] val SingleFetchMaxFiles = 50000L
+
+  /** File-action totals of one commit: its operation metrics, version
+    * checksum, blind-append and append-only checks and post-commit
+    * UniForm path all derive from them.
+    */
+  private[delta] final case class Tally(adds: Long = 0L, addBytes: Long = 0L,
+      removes: Long = 0L, removeBytes: Long = 0L, sizedRemoves: Long = 0L,
+      dataChangeRemoves: Long = 0L, cdcFiles: Long = 0L) {
+    def files: Long = adds + removes
+    def +(o: Tally): Tally = Tally(adds + o.adds, addBytes + o.addBytes,
+      removes + o.removes, removeBytes + o.removeBytes,
+      sizedRemoves + o.sizedRemoves, dataChangeRemoves + o.dataChangeRemoves,
+      cdcFiles + o.cdcFiles)
+  }
+
+  private[delta] object Tally {
+    def of(actions: Seq[Action]): Tally = actions.foldLeft(Tally()) {
+      case (t, a: AddFile) => t.copy(adds = t.adds + 1, addBytes = t.addBytes + a.size)
+      case (t, r: RemoveFile) => t.copy(removes = t.removes + 1,
+        removeBytes = t.removeBytes + r.size.getOrElse(0L),
+        sizedRemoves = t.sizedRemoves + (if (r.size.isDefined) 1 else 0),
+        dataChangeRemoves = t.dataChangeRemoves + (if (r.dataChange) 1 else 0))
+      case (t, _: AddCDCFile) => t.copy(cdcFiles = t.cdcFiles + 1)
+      case (t, _) => t
+    }
+
+    /** One aggregation over a commit body, which must hold file actions
+      * only: everything else belongs in the commit's action list, where
+      * the prepare step sees it.
+      */
+    def of(body: Dataset[SingleAction]): Tally = {
+      val add = col("add")
+      val remove = col("remove")
+      val cdc = col("cdc")
+      val r = body.agg(count(add), coalesce(sum(add("size")), lit(0L)),
+        count(remove), coalesce(sum(remove("size")), lit(0L)), count(remove("size")),
+        count(when(remove("dataChange"), 1)), count(cdc),
+        count(when(add.isNull && remove.isNull && cdc.isNull, 1))).head()
+      require(r.getLong(7) == 0L,
+        s"a commit body holds file actions only; found ${r.getLong(7)} other action(s)")
+      Tally(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
+        r.getLong(5), r.getLong(6))
+    }
   }
 }

@@ -92,34 +92,4 @@ object RowTracking {
       }
     }
   }
-
-  /** Assign fresh baseRowId ranges (from `hwm + 1`) to adds that lack one;
-    * returns the patched actions, the new high-water mark, and whether
-    * any FRESH id was assigned (the caller bumps the domain mark only
-    * then). Re-added files (RESTORE) keep their original ids — that is
-    * what makes restore row-stable. An add carrying a baseRowId but no
-    * defaultRowCommitVersion (CONVERT FROM ICEBERG v3 imports the
-    * Iceberg first_row_id as-is; the original commit version is not
-    * knowable from the foreign log) gets the version stamped per attempt
-    * — the id itself is never touched and the mark does not move (the
-    * converter raises it explicitly from the metadata's next-row-id).
-    */
-  def assign(actions: Seq[Action], hwm: Long, commitVersion: Long): (Seq[Action], Long, Boolean) = {
-    var next = hwm + 1
-    var assigned = false
-    val out = actions.map {
-      case a: AddFile if a.baseRowId.isEmpty =>
-        val n = Stats.numRecords(a.stats).getOrElse(throw new IllegalStateException(
-          s"row tracking requires numRecords stats on every added file; missing for ${a.path}"))
-        val b = a.copy(baseRowId = Some(next),
-          defaultRowCommitVersion = Some(commitVersion))
-        next += n
-        assigned = true
-        b
-      case a: AddFile if a.defaultRowCommitVersion.isEmpty =>
-        a.copy(defaultRowCommitVersion = Some(commitVersion))
-      case a => a
-    }
-    (out, next - 1, assigned)
-  }
 }

@@ -43,7 +43,7 @@ object Dedup {
   // NumHashes digests per shingle; constants are build-time deterministic
   // and embedded in the oracle SQL.
   private val P = 1073741789L // prime < 2^30
-  private[llm] val hashAB: Seq[(Long, Long)] = {
+  private[graft] val hashAB: Seq[(Long, Long)] = {
     val md = java.security.MessageDigest.getInstance("MD5")
     def h7(s: String): Long = {
       val d = md.digest(s.getBytes("UTF-8"))
@@ -96,7 +96,7 @@ object Dedup {
     * of one representative per distinct content; members = (doc_id,
     * rep_id, gsize) mapping every input doc to its representative.
     */
-  private[llm] def collapsedBands(docs: DataFrame, numBands: Int,
+  private[graft] def collapsedBands(docs: DataFrame, numBands: Int,
       rowsPer: Int): (DataFrame, DataFrame) = {
     val s = docs.sparkSession
     import s.implicits._
@@ -167,7 +167,7 @@ object Dedup {
     * representative IS a real document). Output (doc_a, doc_b, jaccard)
     * with doc_a < doc_b, jaccard >= threshold.
     */
-  private[llm] def verifiedRepPairs(docs: DataFrame, repBands: DataFrame,
+  private[graft] def verifiedRepPairs(docs: DataFrame, repBands: DataFrame,
       threshold: Double): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
@@ -190,7 +190,7 @@ object Dedup {
     * n/(2n - n) = 1.0 in IEEE double. The expansion joins are
     * output-bounded: every joined row IS an output row.
     */
-  private[llm] def expandPairs(repPairs: DataFrame,
+  private[graft] def expandPairs(repPairs: DataFrame,
       members: DataFrame): DataFrame = {
     val s = repPairs.sparkSession
     import s.implicits._
@@ -319,8 +319,9 @@ object Dedup {
     // the logical plan grow exponentially with rounds — checkpointing
     // truncates it to the materialized RDD (tiny: id pairs only, and the
     // set shrinks toward one star edge per non-root node).
-    var e = edgePairs.select($"src".as("u"), $"dst".as("v"))
-      .filter($"u" =!= $"v").distinct().transform(stableCheckpoint)
+    val pairs = edgePairs.select($"src".as("u"), $"dst".as("v"))
+      .distinct().transform(stableCheckpoint)
+    var e = pairs.filter($"u" =!= $"v")
     var prev = checksum(e)
     // METADATA-SIZED edge sets short-circuit to a driver union-find:
     // every star-contraction round costs several id-only shuffles plus
@@ -332,10 +333,11 @@ object Dedup {
     // same order as a broadcast build side), NOT unbounded driver work:
     // past the threshold the O(log n) distributed contraction runs
     // unchanged. Labels are identical: union-by-min root keeps each
-    // component's root at its minimum id, one row per node in an edge.
+    // component's root at its minimum id, one row per node of
+    // `edgePairs` (a self-loop alone makes a singleton component).
     val localMax = s.conf.get("spark.graft.dedup.ccLocalMaxEdges", "100000").toLong
     if (prev._1 <= localMax) {
-      val edges = e.as[(Long, Long)].collect()
+      val edges = pairs.as[(Long, Long)].collect()
       val parent = scala.collection.mutable.LongMap.empty[Long]
       def find(x: Long): Long = {
         var r = x

@@ -1,13 +1,14 @@
-package graft.llm
+package graft.tools
 
 import org.apache.spark.sql._
 import org.apache.spark.sql.functions._
+import graft.llm.{Dedup, Similarity}
 import graft.queries.QueryDefs
 
 /** Scratch phase-level profiler for the LLM-pipeline bench paths (r20
   * investigation: ann_index_admit, ann_ivf_trained, dedup_minhash_lsh /
-  * dedup_cluster small-scale floor). Lives in graft.llm so it can reach
-  * the package-private pipeline stages. Not part of the driver contract;
+  * dedup_cluster small-scale floor). It calls the dedup stages that are
+  * private to `graft`. Not part of the driver contract;
   * body changes freely between investigations.
   */
 object ProfLlm {

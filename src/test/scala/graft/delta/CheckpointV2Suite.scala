@@ -210,9 +210,10 @@ class CheckpointV2Suite extends AnyFunSuite {
   }
 
   test("commitLarge stamps the v2Checkpoint feature when policy=v2") {
-    // a table whose metadata-bearing commits all flow through commitLarge
-    // must still declare the reader+writer feature before writing v2
+    // a table whose metadata-bearing commits carry a Dataset body must
+    // still declare the reader+writer feature before writing v2
     // checkpoints (classic readers would miss state after log cleanup)
+    import spark.implicits._
     val t = DeltaTable.forPath(spark, tmp())
     val txn = t.deltaLog.startTransaction()
     txn.updateMetadata(Metadata(
@@ -220,7 +221,7 @@ class CheckpointV2Suite extends AnyFunSuite {
       configuration = Map(
         "delta.checkpointPolicy" -> "v2",
         "delta.checkpoint.numSidecars" -> "4")))
-    txn.commitLarge(Iterator.empty, Op.CreateTable)
+    txn.commit(Nil, spark.emptyDataset[SingleAction], Op.CreateTable, Map.empty)
     val p = t.snapshot.protocol
     assert(p.minReaderVersion == 3 && p.minWriterVersion == 7)
     assert(p.readerFeatures.exists(_.contains("v2Checkpoint")))

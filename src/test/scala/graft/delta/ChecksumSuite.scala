@@ -77,9 +77,7 @@ class ChecksumSuite extends AnyFunSuite {
   test("commitLarge tallies the stream; DESCRIBE DETAIL reads the crc") {
     val t = DeltaTable.forPath(spark, tmp())
     t.write(seed(0, 6).coalesce(1), SaveMode.Append)       // v0
-    spark.conf.set("spark.graft.commitLarge.threshold", "0")
-    try t.write(seed(100, 104).coalesce(1), SaveMode.Overwrite) // v1 streams
-    finally spark.conf.unset("spark.graft.commitLarge.threshold")
+    t.write(seed(100, 104).coalesce(1), SaveMode.Overwrite) // v1: a Dataset body
     val expected = aggregated(t)
     assert(t.deltaLog.readChecksum(1L).contains(expected))
     val row = spark.sql(s"DESCRIBE DETAIL graft.`${t.deltaLog.dataPath}`").head()

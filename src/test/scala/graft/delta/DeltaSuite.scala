@@ -1019,31 +1019,66 @@ class DeltaSuite extends AnyFunSuite {
   test("commitLarge: huge overwrites stream and small tables still retry") {
     val dir = tmp()
     val t = DeltaTable.forPath(spark, dir)
-    spark.conf.set("spark.graft.commitLarge.threshold", "2")
-    try {
-      (1 to 3).foreach(_ => t.write(sampleDF)) // > threshold files
-      assert(t.snapshot.numOfFiles > 2)
-      t.write(sampleDF.filter(col("id") <= 2), SaveMode.Overwrite)
-      assert(t.toDF.count() == 2)
-      val ci = t.history(1).head
-      assert(ci.operation == "WRITE" && ci.operationParameters.get("mode").contains("Overwrite"))
-      assert(ci.operationMetrics("numRemovedFiles").toLong > 2)
-      assert(ci.isBlindAppend.contains(false))
-      // subsequent normal commits still work on top of a streamed commit
-      t.write(sampleDF)
-      assert(t.toDF.count() == 7)
-    } finally spark.conf.unset("spark.graft.commitLarge.threshold")
+    (1 to 3).foreach(_ => t.write(sampleDF))
+    val removed = t.snapshot.numOfFiles
+    assert(removed > 2)
+    // the remove list is the commit's Dataset body
+    t.write(sampleDF.filter(col("id") <= 2), SaveMode.Overwrite)
+    assert(t.toDF.count() == 2)
+    val ci = t.history(1).head
+    assert(ci.operation == "WRITE" && ci.operationParameters.get("mode").contains("Overwrite"))
+    assert(ci.operationMetrics("numRemovedFiles").toLong == removed)
+    assert(ci.isBlindAppend.contains(false))
+    // subsequent normal commits still work on top of a streamed commit
+    t.write(sampleDF)
+    assert(t.toDF.count() == 7)
   }
 
-  test("commitLarge: a lost race throws instead of retrying") {
-    val dir = tmp()
-    val t = DeltaTable.forPath(spark, dir)
+  test("a Dataset-bodied commit retries a compatible lost race and throws on a conflicting one") {
+    import spark.implicits._
+    val t = DeltaTable.forPath(spark, tmp())
     t.write(sampleDF)
     val loser = t.deltaLog.startTransaction()
-    t.write(sampleDF) // winner lands first
-    intercept[DeltaErrors.DeltaConcurrentModificationException] {
-      loser.commitLarge(Iterator(AddFile("x.parquet", Map.empty, 1L, 1L)), Op.Write)
+    t.write(sampleDF) // v1: a blind append lands first
+    val v = loser.commit(Nil, Seq(AddFile("x.parquet", Map.empty, 1L, 1L).wrap).toDS(),
+      Op.Write, Map.empty)
+    assert(v == 2L, "a blind body retries past the winning append")
+    assert(t.deltaLog.update().allFiles.exists(_.path == "x.parquet"))
+
+    // both transactions remove the same file: the body's removes are
+    // checked against the winner's on the executors
+    val victim = t.snapshot.allFiles.filter(_.path != "x.parquet").head
+    val late = t.deltaLog.startTransaction()
+    t.deltaLog.startTransaction().commit(Seq(victim.remove(1L)), Op.Delete) // v3
+    intercept[DeltaErrors.ConcurrentDeleteDeleteException] {
+      late.commit(Nil, Seq(victim.remove(2L).wrap).toDS(), Op.Delete, Map.empty)
     }
+    assert(t.deltaLog.update().version == 3L)
+  }
+
+  test("a body past the single-fetch bound streams a partition at a time") {
+    import spark.implicits._
+    val t = DeltaTable.forPath(spark, tmp())
+    t.write(sampleDF)
+    val n = OptimisticTransaction.SingleFetchMaxFiles + 1
+    val body = spark.range(0L, n, 1L, 8)
+      .map(i => AddFile(f"bulk-$i%06d.parquet", Map.empty, 1L, 1L).wrap)
+    val v = t.deltaLog.startTransaction().commit(Nil, body, Op.Write, Map.empty)
+    val ci = t.deltaLog.commitInfoAt(v).get
+    assert(ci.operationMetrics("numAddedFiles") == n.toString)
+    assert(t.deltaLog.readCommit(v).get.size == n + 1) // + CommitInfo
+  }
+
+  test("a Dataset commit body holding a non-file action is refused") {
+    import spark.implicits._
+    val t = DeltaTable.forPath(spark, tmp())
+    t.write(sampleDF)
+    val e = intercept[IllegalArgumentException] {
+      t.deltaLog.startTransaction().commit(Nil,
+        Seq(SetTransaction("app", 1L).wrap).toDS(), Op.StreamingUpdate, Map.empty)
+    }
+    assert(e.getMessage.contains("file actions only"))
+    assert(t.deltaLog.update().version == 0L)
   }
 
   test("A18: tableChanges materializes inserts and deletes per version") {

@@ -244,7 +244,7 @@ class IcebergUniformSuite extends AnyFunSuite {
     }
   }
 
-  test("streaming sink commits regenerate Iceberg metadata (commitLarge path)") {
+  test("streaming sink commits regenerate Iceberg metadata") {
     import spark.implicits._
     val dir = tmp()
     val ckpt = tmp()
@@ -264,8 +264,8 @@ class IcebergUniformSuite extends AnyFunSuite {
       .start(dir)
     q.processAllAvailable()
     q.stop()
-    // the streaming commit went through commitLarge; its post-commit
-    // hook must have regenerated the Iceberg view
+    // the streaming commit's post-commit hook must have regenerated the
+    // Iceberg view
     val meta = currentMeta(dir)
     val entries = currentManifests(meta).flatMap(m =>
       avroRecords(m.get("manifest_path").toString))
@@ -762,52 +762,50 @@ class IcebergUniformSuite extends AnyFunSuite {
   }
 
   test("convert commits stream through commitLarge past the threshold") {
-    spark.conf.set("spark.graft.convert.streamCommitThreshold", "1")
-    try {
-      // CONVERT FROM ICEBERG: UniForm+DV table, drop the Delta log,
-      // adopt back — the commit streams, DVs and protocol still land
-      val dir = tmp()
-      val t = DeltaTable.forPath(spark, dir)
-      val txn = t.deltaLog.startTransaction()
-      txn.updateMetadata(Metadata(
-        schemaString = df((0L, "x", "p")).schema.json,
-        partitionColumns = Seq("part"),
-        configuration = Map(
-          "delta.enableDeletionVectors" -> "true",
-          "delta.universalFormat.enabledFormats" -> "iceberg")))
-      txn.commit(Nil, Op.CreateTable)
-      t.write(df((1L, "a", "x"), (2L, "b", "x"), (3L, "c", "y")),
-        partitionBy = Seq("part"))
-      t.delete(col("id") === 1L) // DV
-      val logDir = new java.io.File(dir, "_delta_log")
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(logDir.toPath).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-      val back = DeltaTable.convertFromIceberg(spark, dir)
-      val ci = back.deltaLog.commitInfoAt(0L)
-      assert(ci.exists(_.operationParameters.get("streamed").contains("true")),
-        ci.toString)
-      assert(back.toDF.select("id").collect().map(_.getLong(0)).toSet ==
-        Set(2L, 3L))
-      val snap = back.deltaLog.update()
-      assert(snap.allFiles.exists(_.deletionVector != null))
-      assert(snap.protocol.readerFeatures.exists(_.contains("deletionVectors")),
-        snap.protocol.toString)
-      // post-convert DML still works on the streamed commit's table
-      back.delete(col("id") === 2L)
-      assert(back.toDF.count() == 1L)
+    // CONVERT FROM ICEBERG: UniForm+DV table, drop the Delta log,
+    // adopt back — the AddFiles are a Dataset body; DVs and protocol
+    // still land
+    val dir = tmp()
+    val t = DeltaTable.forPath(spark, dir)
+    val txn = t.deltaLog.startTransaction()
+    txn.updateMetadata(Metadata(
+      schemaString = df((0L, "x", "p")).schema.json,
+      partitionColumns = Seq("part"),
+      configuration = Map(
+        "delta.enableDeletionVectors" -> "true",
+        "delta.universalFormat.enabledFormats" -> "iceberg")))
+    txn.commit(Nil, Op.CreateTable)
+    t.write(df((1L, "a", "x"), (2L, "b", "x"), (3L, "c", "y")),
+      partitionBy = Seq("part"))
+    t.delete(col("id") === 1L) // DV
+    val logDir = new java.io.File(dir, "_delta_log")
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.walk(logDir.toPath).iterator().asScala.toSeq.reverse
+      .foreach(java.nio.file.Files.deleteIfExists(_))
+    val back = DeltaTable.convertFromIceberg(spark, dir)
+    val ci = back.deltaLog.commitInfoAt(0L)
+    assert(ci.exists(_.operationMetrics.get("numAddedFiles")
+      .contains(ci.get.operationParameters("numFiles"))), ci.toString)
+    assert(back.toDF.select("id").collect().map(_.getLong(0)).toSet ==
+      Set(2L, 3L))
+    val snap = back.deltaLog.update()
+    assert(snap.allFiles.exists(_.deletionVector != null))
+    assert(snap.protocol.readerFeatures.exists(_.contains("deletionVectors")),
+      snap.protocol.toString)
+    // post-convert DML still works on the streamed commit's table
+    back.delete(col("id") === 2L)
+    assert(back.toDF.count() == 1L)
 
-      // CONVERT TO DELTA (plain parquet): same streaming path
-      val pdir = tmp()
-      df((1L, "a", "x"), (2L, "b", "y"), (3L, "c", "z"))
-        .write.partitionBy("part").mode("overwrite").parquet(pdir)
-      val conv = DeltaTable.convertToDelta(spark, pdir)
-      val ci2 = conv.deltaLog.commitInfoAt(0L)
-      assert(ci2.exists(_.operationParameters.get("streamed").contains("true")),
-        ci2.toString)
-      assert(conv.toDF.count() == 3L)
-      assert(conv.deltaLog.update().allFiles.forall(_.stats != null))
-    } finally spark.conf.unset("spark.graft.convert.streamCommitThreshold")
+    // CONVERT TO DELTA (plain parquet): same Dataset-bodied commit
+    val pdir = tmp()
+    df((1L, "a", "x"), (2L, "b", "y"), (3L, "c", "z"))
+      .write.partitionBy("part").mode("overwrite").parquet(pdir)
+    val conv = DeltaTable.convertToDelta(spark, pdir)
+    val ci2 = conv.deltaLog.commitInfoAt(0L)
+    assert(ci2.exists(_.operationMetrics.get("numAddedFiles").contains("3")),
+      ci2.toString)
+    assert(conv.toDF.count() == 3L)
+    assert(conv.deltaLog.update().allFiles.forall(_.stats != null))
   }
 
   test("incremental re-sync: adds, removes, and DV changes at O(changed files)") {
@@ -2534,19 +2532,16 @@ class IcebergUniformSuite extends AnyFunSuite {
     java.nio.file.Files.write(metaDir.toPath.resolve("version-hint.text"),
       (hint.toLong + 1).toString.getBytes("UTF-8"))
 
-    // sync with a diff (1 add) past the threshold: the commit STREAMS
-    spark.conf.set("spark.graft.convert.streamCommitThreshold", "0")
-    try {
-      val synced = DeltaTable.convertFromIceberg(spark, dir)
-      val v1 = synced.deltaLog.update().version
-      assert(v1 == v0 + 1, s"sync must be ONE commit: $v0 -> $v1")
-      val ci = synced.deltaLog.commitInfoAt(v1)
-      assert(ci.exists(_.operationParameters.get("sync").contains("true")), ci.toString)
-      assert(ci.exists(_.operationParameters.get("streamed").contains("true")),
-        s"re-sync past the threshold must stream through commitLarge: $ci")
-      assert(synced.toDF.select("id").collect().map(_.getLong(0)).toSet ==
-        Set(1L, 2L, 3L, 4L))
-    } finally spark.conf.unset("spark.graft.convert.streamCommitThreshold")
+    // sync with a diff (1 add): the diff is the commit's Dataset body
+    val synced = DeltaTable.convertFromIceberg(spark, dir)
+    val v1 = synced.deltaLog.update().version
+    assert(v1 == v0 + 1, s"sync must be ONE commit: $v0 -> $v1")
+    val ci = synced.deltaLog.commitInfoAt(v1)
+    assert(ci.exists(_.operationParameters.get("sync").contains("true")), ci.toString)
+    assert(ci.exists(c => c.operationMetrics.get("numAddedFiles").contains("1") &&
+      c.operationMetrics.get("numRemovedFiles").contains("0")), ci.toString)
+    assert(synced.toDF.select("id").collect().map(_.getLong(0)).toSet ==
+      Set(1L, 2L, 3L, 4L))
   }
 
   test("per-bucket incremental position deletes: only changed buckets rewrite") {

@@ -104,6 +104,20 @@ class IdentityColumnSuite extends AnyFunSuite {
     assert(t.snapshot.protocol.minWriterVersion == 6)
   }
 
+  test("replaceAs that introduces an identity column upgrades the writer protocol") {
+    import spark.implicits._
+    val t = DeltaTable.forPath(spark, tmp())
+    t.write(Seq("a", "b").toDF("v"))
+    assert(t.snapshot.protocol.minWriterVersion < 6)
+    val schema = StructType(Seq(
+      IdentityColumns.field("id", allowExplicitInsert = true), StructField("v", StringType)))
+    t.replaceAs(spark.createDataFrame(
+      java.util.Arrays.asList(org.apache.spark.sql.Row(1L, "x")), schema))
+    val p = t.deltaLog.update().protocol
+    assert(p.minWriterVersion == 6 ||
+      p.writerFeatures.exists(_.contains("identityColumns")), s"got $p")
+  }
+
   test("generation is distributed: multi-partition batches get unique step-aligned ids") {
     import spark.implicits._
     val t = identityTable(start = 1L, step = 3L)

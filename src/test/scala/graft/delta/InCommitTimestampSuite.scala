@@ -91,14 +91,11 @@ class InCommitTimestampSuite extends AnyFunSuite {
   test("commitLarge carries the ICT like commit()") {
     val t = ictTable()
     t.write(seed(3), SaveMode.Append) // v1
-    // force the streaming-commit path for an overwrite
-    spark.conf.set("spark.graft.commitLarge.threshold", "0")
-    try t.write(seed(2), SaveMode.Overwrite) // v2 via commitLarge
-    finally spark.conf.unset("spark.graft.commitLarge.threshold")
+    t.write(seed(2), SaveMode.Overwrite) // v2: removes stream as a Dataset body
     val ci = t.deltaLog.commitInfoAt(2L).getOrElse(fail("no CommitInfo at v2"))
     val ict1 = t.deltaLog.commitInfoAt(1L).flatMap(_.inCommitTimestamp).get
     val ict2 = ci.inCommitTimestamp.getOrElse(
-      fail("commitLarge must write inCommitTimestamp on a post-enablement commit"))
+      fail("a Dataset-bodied commit must write inCommitTimestamp after enablement"))
     assert(ict2 > ict1 && ci.timestamp == ict2)
     // history still totally ordered through the mixed commit paths
     val cs = t.deltaLog.commits()

@@ -200,13 +200,27 @@ class RowTrackingSuite extends AnyFunSuite {
   test("commitLarge assigns row ids on the streaming path") {
     val t = rtTable()
     t.write(seed(0, 4).coalesce(1), SaveMode.Append) // ids 0..3
-    spark.conf.set("spark.graft.commitLarge.threshold", "0")
-    try {
-      t.write(seed(100, 104).coalesce(1), SaveMode.Overwrite) // streams removes+adds
-    } finally spark.conf.unset("spark.graft.commitLarge.threshold")
+    t.write(seed(100, 104).coalesce(1), SaveMode.Overwrite) // removes stream as a Dataset body
     val f = t.snapshot.allFiles.loneElement
     assert(f.baseRowId.contains(4L), s"streamed add must continue above mark, got ${f.baseRowId}")
     assert(RowTracking.highWaterMark(t.snapshot.domainMetadata) == 7L)
+  }
+
+  test("an add without record stats fails a row-tracked commit and leaves no file in the log") {
+    import spark.implicits._
+    val t = rtTable()
+    val v = t.deltaLog.update().version
+    val bare = AddFile("bare.parquet", Map.empty, 1L, 1L)
+    intercept[IllegalStateException] {
+      t.deltaLog.startTransaction().commit(Seq(bare), Op.Write)
+    }
+    intercept[IllegalStateException] {
+      t.deltaLog.startTransaction().commit(Nil, Seq(bare.wrap).toDS(), Op.Write, Map.empty)
+    }
+    assert(t.deltaLog.update().version == v)
+    val leftovers = new java.io.File(t.deltaLog.logPath.toUri.getPath).list()
+      .filter(_.contains(".tmp"))
+    assert(leftovers.isEmpty, leftovers.mkString(", "))
   }
 
   test("classic DELETE and UPDATE rewrites preserve row ids and versions") {
@@ -318,13 +332,14 @@ class RowTrackingSuite extends AnyFunSuite {
     assert(conf.get(RowTracking.MatRowIdConfigKey).contains(RowTracking.MatRowId))
     assert(conf.get(RowTracking.MatRowCommitVersionConfigKey)
       .contains(RowTracking.MatRowCommitVersion))
-    // the commitLarge metadata path stamps them too
+    // a Dataset-bodied commit stamps them too
+    import spark.implicits._
     val t2 = DeltaTable.forPath(spark, tmp())
     val txn = t2.deltaLog.startTransaction()
     txn.updateMetadata(Metadata(
       schemaString = seed(0, 1).schema.json,
       configuration = Map("delta.enableRowTracking" -> "true")))
-    txn.commitLarge(Iterator.empty, Op.CreateTable)
+    txn.commit(Nil, spark.emptyDataset[SingleAction], Op.CreateTable, Map.empty)
     assert(t2.snapshot.metadata.configuration
       .get(RowTracking.MatRowIdConfigKey).contains(RowTracking.MatRowId))
   }

@@ -7,7 +7,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Log replay's Spark-job budget on a checkpointed table. */
+/** Spark-job budgets: log replay on a checkpointed table, and the
+  * Dataset-bodied commits of small tables.
+  */
 class SnapshotReplaySuite extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -82,5 +84,34 @@ class SnapshotReplaySuite extends AnyFunSuite {
     val againCount = jobsOf(assert(snap.allFilesDS.count() == 3L))
     assert(firstCount == againCount,
       s"first file count ran $firstCount jobs, a repeat $againCount")
+  }
+
+  test("small Dataset-bodied commits stay within their job budgets and keep their metrics") {
+    import spark.implicits._
+    def table(): DeltaTable = {
+      val t = DeltaTable.forPath(spark, Files.createTempDirectory("graft-budget").toString)
+      (1 to 3).foreach(i =>
+        t.write(Seq((i.toLong, s"p$i")).toDF("id", "part"), SaveMode.Append, Seq("part")))
+      t
+    }
+    // the body is tallied by one aggregation and fetched by one job: no
+    // more than the count + collect of a driver-side action list
+    val budgets = Seq[(String, Int, DeltaTable => Unit)](
+      ("overwrite", 7, _.write(Seq((9L, "p9")).toDF("id", "part"), SaveMode.Overwrite,
+        Seq("part"))),
+      ("truncate", 5, _.truncate()),
+      ("restore", 12, _.restoreToVersion(1L)),
+      ("shallow clone", 5, _.shallowCloneTo(
+        Files.createTempDirectory("graft-budget").toString + "/clone")))
+    budgets.foreach { case (name, budget, op) =>
+      val t = table()
+      val jobs = jobsOf(op(t))
+      assert(jobs <= budget, s"$name ran $jobs jobs (budget $budget)")
+    }
+    val t = table()
+    t.truncate()
+    assert(Set("numAddedFiles", "numRemovedFiles", "numAddedBytes", "numRemovedBytes")
+      .subsetOf(t.history(1).head.operationMetrics.keySet))
+    assert(t.history(1).head.operationMetrics("numRemovedFiles") == "3")
   }
 }

@@ -229,6 +229,14 @@ class TableFeaturesSuite extends AnyFunSuite {
     intercept[IllegalArgumentException](t.shallowCloneTo(destDir)) // exists
   }
 
+  test("a shallow clone writes exactly one Protocol action in version 0") {
+    val t = seeded()
+    val c = t.shallowCloneTo(tmp() + "/clone")
+    val v0 = c.deltaLog.readCommit(0L).get.flatMap(Actions.fromJson)
+    assert(v0.count(_.isInstanceOf[Protocol]) == 1, v0.mkString("\n"))
+    assert(c.snapshot.protocol == t.snapshot.protocol)
+  }
+
   test("DML on a shallow clone never touches the source") {
     import spark.implicits._
     val t = seeded()
@@ -319,6 +327,26 @@ class TableFeaturesSuite extends AnyFunSuite {
         SaveMode.Append, Seq("part"))
     }
     assert(ex2.getMessage.contains("icebergCompatV2"))
+  }
+
+  test("a Dataset-bodied overwrite or truncate is refused on an unsupported writer feature") {
+    import spark.implicits._
+    val t = seeded()
+    t.deltaLog.startTransaction().commit(Seq(Protocol(
+      minReaderVersion = 1, minWriterVersion = 7,
+      writerFeatures = Some(Set("icebergCompatV2")))), "UPGRADE PROTOCOL")
+    val asSeq = intercept[Exception] {
+      t.deltaLog.startTransaction().commit(Nil, Op.Truncate)
+    }
+    assert(asSeq.getMessage.contains("icebergCompatV2"))
+    val truncate = intercept[Exception](t.truncate())
+    assert(truncate.getMessage.contains("icebergCompatV2"))
+    val overwrite = intercept[Exception] {
+      t.write(Seq((9L, "zoe", 90, "z")).toDF("id", "name", "score", "part"),
+        SaveMode.Overwrite, Seq("part"))
+    }
+    assert(overwrite.getMessage.contains("icebergCompatV2"))
+    assert(t.deltaLog.update().version == 1L && t.toDF.count() == 5)
   }
 
   test("feature lists round-trip through the JSON log") {
@@ -501,8 +529,8 @@ class TableFeaturesSuite extends AnyFunSuite {
     txn.updateMetadata(txn.metadata.copy(configuration = txn.metadata.configuration ++
       Map("delta.feature.deletionVectors" -> "supported",
         "delta.feature.appendOnly" -> "supported")))
-    // the streaming path must validate/strip/upgrade exactly like commit()
-    txn.commitLarge(Iterator.empty, Op.SetTableProperties)
+    // a Dataset-bodied commit must validate/strip/upgrade exactly like a Seq one
+    txn.commit(Nil, spark.emptyDataset[SingleAction], Op.SetTableProperties, Map.empty)
     val s = t.deltaLog.update()
     val p = s.protocol
     assert(p.minReaderVersion == 3 && p.minWriterVersion == 7, s"got $p")
@@ -511,14 +539,14 @@ class TableFeaturesSuite extends AnyFunSuite {
     assert(p.writerFeatures.exists(_.contains("appendOnly")), s"got $p")
     assert(!s.metadata.configuration.keys.exists(_.startsWith("delta.feature.")),
       s"raw one-shot keys must not persist: ${s.metadata.configuration}")
-    // unknown names fail loudly on the large path too
+    // unknown names fail loudly with a Dataset body too
     val t2 = DeltaTable.forPath(spark, tmp())
     t2.write(Seq((1L, "a")).toDF("id", "name"))
     val bad = t2.deltaLog.startTransaction()
     bad.updateMetadata(bad.metadata.copy(configuration = bad.metadata.configuration +
       ("delta.feature.notAThing" -> "supported")))
     val e = intercept[IllegalArgumentException] {
-      bad.commitLarge(Iterator.empty, Op.SetTableProperties)
+      bad.commit(Nil, spark.emptyDataset[SingleAction], Op.SetTableProperties, Map.empty)
     }
     assert(e.getMessage.contains("notAThing"))
   }

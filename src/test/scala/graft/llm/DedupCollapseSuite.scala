@@ -143,6 +143,18 @@ class DedupCollapseSuite extends AnyFunSuite {
       (10L, 10L), (11L, 10L), (12L, 10L), (20L, 20L), (21L, 20L)))
   }
 
+  test("connectedComponents: both branches label a vertex seen only in a self-loop") {
+    // 5 appears only as (5, 5): its own singleton component
+    val edges = Seq((1L, 2L), (5L, 5L), (2L, 2L)).toDF("src", "dst")
+    def labels(): Set[(Long, Long)] =
+      Dedup.connectedComponents(edges).as[(Long, Long)].collect().toSet
+    val want = Set((1L, 1L), (2L, 1L), (5L, 5L))
+    assert(labels() == want, "driver union-find (default cutover)")
+    spark.conf.set("spark.graft.dedup.ccLocalMaxEdges", "0")
+    try assert(labels() == want, "distributed contraction")
+    finally spark.conf.unset("spark.graft.dedup.ccLocalMaxEdges")
+  }
+
   test("dedup_cluster labels expand over exact-copy groups") {
     val dir = java.nio.file.Files.createTempDirectory("graft-collapse").toString
     corpus(50).withColumn("source", lit("srcX"))

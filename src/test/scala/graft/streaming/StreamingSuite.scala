@@ -332,28 +332,6 @@ class StreamingSuite extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("D4: delta change stream polls incremental versions") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("d4-table").toString
-    val t = DeltaTable.forPath(spark, dir)
-    t.write(Seq((1L, "a"), (2L, "b")).toDF("id", "v")) // v0
-    val stream = new DeltaChangeStream(t)
-    val (v1, b1) = stream.poll().get
-    assert(v1 == 0L && b1.count() == 2)
-    assert(stream.poll().isEmpty) // caught up
-
-    t.write(Seq((3L, "c")).toDF("id", "v")) // v1
-    t.write(Seq((4L, "d"), (5L, "e")).toDF("id", "v")) // v2
-    val (v2, b2) = stream.poll().get
-    assert(v2 == 2L && b2.count() == 3) // both new versions in one batch
-    assert(b2.select("id").as[Long].collect().sorted.toSeq == Seq(3L, 4L, 5L))
-
-    // recovery from a persisted offset sees only what follows it
-    val recovered = new DeltaChangeStream(t, startAfterVersion = 1L)
-    val (v3, b3) = recovered.poll().get
-    assert(v3 == 2L && b3.count() == 2)
-  }
-
   test("watermark drops late rows beyond the threshold") {
     import spark.implicits._
     val srcDir = Files.createTempDirectory("wm-src")
