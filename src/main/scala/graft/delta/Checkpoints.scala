@@ -224,8 +224,12 @@ object Checkpoints {
     val statuses =
       try store.listFrom(FileNames.checkpointPrefix(logPath, 0))
       catch { case _: java.io.FileNotFoundException => return Nil }
-    val instances = statuses
-      .map(_.getPath)
+    completeCheckpoints(statuses.map(_.getPath), notLaterThan)
+  }
+
+  /** [[completeCheckpoints]] over an existing listing of the log. */
+  def completeCheckpoints(listed: Seq[Path], notLaterThan: Long): Seq[CheckpointInstance] = {
+    val instances = listed
       .filter(FileNames.isCheckpointFile)
       .map(CheckpointInstance.fromPath)
       .filter(_.version <= notLaterThan)

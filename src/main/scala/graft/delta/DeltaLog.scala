@@ -23,25 +23,37 @@ class DeltaLog(val spark: SparkSession, val dataPath: Path,
   def snapshot: Snapshot = currentSnapshot.getOrElse(update())
 
   /** cf. reference `log.go:152` Update: list the log, rebuild state.
+    * Returns the current Snapshot object itself when the listing yields
+    * its segment again (same files, lengths and mtimes), so its lazily
+    * derived state serves every read until the next commit.
     * On a coordinated-commits table, reads MERGE ratified-but-unbackfilled
     * commits (see [[buildSnapshot]]): a commit is visible to every
     * session the moment the coordinator ratified it, not when its
     * backfill copy eventually lands.
     */
   def update(): Snapshot = synchronized {
-    val s = buildSnapshot(None)
+    val s = buildSnapshot(listLog(), None)
     currentSnapshot = Some(s)
     s
   }
 
-  /** cf. reference `log.go:156` SnapshotForVersionAsOf. */
+  /** cf. reference `log.go:156` SnapshotForVersionAsOf. One listing
+    * bounds the version and builds the segment; the latest snapshot is
+    * built only for a version past the listed log (a coordinator's
+    * staged tail).
+    */
   def snapshotForVersionAsOf(version: Long): Snapshot = {
-    val earliest = earliestReproducibleVersion.getOrElse(
+    val listing = listLog()
+    val earliest = earliestReproducibleVersion(listing).getOrElse(
       throw DeltaErrors.noReproducibleHistory(logPath))
-    val latest = update().version
+    val paths = listing.map(_.getPath)
+    val listedLatest = (paths.filter(FileNames.isDeltaFile).map(FileNames.deltaVersion) ++
+      Checkpoints.completeCheckpoints(paths, Long.MaxValue).map(_.version))
+      .maxOption.getOrElse(-1L)
+    val latest = if (version <= listedLatest) listedLatest else update().version
     if (version < earliest || version > latest)
       throw DeltaErrors.versionNotExist(version, earliest, latest)
-    buildSnapshot(Some(version))
+    buildSnapshot(listing, Some(version))
   }
 
   /** cf. reference `log.go:160` SnapshotForTimestampAsOf. */
@@ -147,17 +159,13 @@ class DeltaLog(val spark: SparkSession, val dataPath: Path,
     statuses.map(_.getPath).filter(FileNames.isDeltaFile).map(FileNames.deltaVersion)
   }
 
-  /** One listing -> (raw delta versions, compacted ranges). The lower
-    * bound "<0>." sorts before both name shapes.
+  /** The one listing a snapshot build makes: every file of the log from
+    * "<0>.", which sorts before each name shape (delta, compacted,
+    * checkpoint, crc), name-sorted, with lengths and mtimes.
     */
-  private def listDeltasAndCompactions(): (Seq[Long], Seq[(Long, Long)]) = {
-    val statuses =
-      try store.listFrom(new Path(logPath, f"${0L}%020d."))
-      catch { case _: java.io.FileNotFoundException => return (Nil, Nil) }
-    val paths = statuses.map(_.getPath)
-    (paths.filter(FileNames.isDeltaFile).map(FileNames.deltaVersion),
-      paths.filter(FileNames.isCompactedFile).map(FileNames.compactedRange))
-  }
+  private def listLog(): Seq[org.apache.hadoop.fs.FileStatus] =
+    try store.listFrom(new Path(logPath, f"${0L}%020d."))
+    catch { case _: java.io.FileNotFoundException => Nil }
 
   /** (version, monotonized commit timestamp) for every commit
     * (cf. reference `history_manager.go:205` getCommits).
@@ -215,26 +223,41 @@ class DeltaLog(val spark: SparkSession, val dataPath: Path,
     * checkpoint, or 0 if version 0's json is still present
     * (cf. reference `history_manager.go:130`).
     */
-  private[delta] def earliestReproducibleVersion: Option[Long] = {
-    val versions = listDeltaVersions()
-    if (versions.headOption.contains(0L)) return Some(0L)
+  private[delta] def earliestReproducibleVersion: Option[Long] =
+    earliestReproducibleVersion(listLog())
+
+  private def earliestReproducibleVersion(
+      listing: Seq[org.apache.hadoop.fs.FileStatus]): Option[Long] = {
+    val paths = listing.map(_.getPath)
+    if (paths.find(FileNames.isDeltaFile).map(FileNames.deltaVersion).contains(0L))
+      return Some(0L)
     // earliest COMPLETE checkpoint: an incomplete multi-part survivor of a
     // partial sweep must not be offered as reproducible
-    Checkpoints.completeCheckpoints(store, logPath).headOption.map(_.version)
+    Checkpoints.completeCheckpoints(paths, Long.MaxValue).headOption.map(_.version)
   }
 
-  private def buildSnapshot(versionBound: Option[Long]): Snapshot = {
+  /** The snapshot of one listing: the current Snapshot object when the
+    * listing yields its segment, else a new one.
+    */
+  private def buildSnapshot(listing: Seq[org.apache.hadoop.fs.FileStatus],
+      versionBound: Option[Long]): Snapshot = {
+    def snapshotOf(seg: LogSegment): Snapshot =
+      currentSnapshot.filter(_.segment == seg)
+        .getOrElse(new Snapshot(spark, this, seg.version, seg))
+    val byName = listing.map(st => st.getPath.getName -> st).toMap
+    val paths = listing.map(_.getPath)
     val ckpt = versionBound match {
-      case Some(v) => Checkpoints.latestCompleteCheckpoint(store, logPath, v)
+      case Some(v) => Checkpoints.completeCheckpoints(paths, v).lastOption
       case None =>
-        // fast path: _last_checkpoint hint, verified; fall back to listing
+        // fast path: _last_checkpoint hint, verified against the listing
         Checkpoints.readLastCheckpoint(store, logPath)
           .map(md => CheckpointInstance(md.version, md.parts, md.v2Uuid))
-          .filter(ci => ci.files(logPath).forall(store.exists))
-          .orElse(Checkpoints.latestCompleteCheckpoint(store, logPath))
+          .filter(ci => ci.files(logPath).forall(p => byName.contains(p.getName)))
+          .orElse(Checkpoints.completeCheckpoints(paths, Long.MaxValue).lastOption)
     }
     val from = ckpt.map(_.version + 1).getOrElse(0L)
-    val (allDeltas, allCompacted) = listDeltasAndCompactions()
+    val allDeltas = paths.filter(FileNames.isDeltaFile).map(FileNames.deltaVersion)
+    val allCompacted = paths.filter(FileNames.isCompactedFile).map(FileNames.compactedRange)
     var deltas = allDeltas.dropWhile(_ < from)
     versionBound.foreach(v => deltas = deltas.takeWhile(_ <= v))
     // verify contiguity of the tail
@@ -274,8 +297,12 @@ class DeltaLog(val spark: SparkSession, val dataPath: Path,
     // staged tail to miss. Staged entries replay exactly like deltas;
     // the classic `<v>.json` names appear whenever the next backfill
     // batch (or any ensureBackfilled caller) lands them.
-    val fsSeg = LogSegment(version, ckpt, keep.reverse, used.reverse)
-    val fsSnap = new Snapshot(spark, this, version, fsSeg)
+    val listed = (p: Path) => ListedFile(byName(p.getName))
+    val fsSeg = LogSegment(version, ckpt, keep.reverse, used.reverse,
+      listedCheckpoint = ckpt.toSeq.flatMap(_.files(logPath)).map(listed),
+      listedTail = keep.reverse.map(v => listed(FileNames.deltaFile(logPath, v))) ++
+        used.reverse.map { case (s, e) => listed(FileNames.compactedFile(logPath, s, e)) })
+    val fsSnap = snapshotOf(fsSeg)
     val staged = CoordinatedCommits.coordinatorFor(this, fsSnap.metadataOpt)
       .map { c =>
         var pend = CoordinatedCommits.pendingAfter(this, c, version)
@@ -284,9 +311,33 @@ class DeltaLog(val spark: SparkSession, val dataPath: Path,
       }
       .getOrElse(Nil)
     if (staged.isEmpty) fsSnap
-    else new Snapshot(spark, this, staged.last._1,
-      fsSeg.copy(version = staged.last._1, staged = staged))
+    else snapshotOf(fsSeg.copy(version = staged.last._1, staged = staged))
   }
+
+  /** Opened checkpoints, most recently used last: each entry is read
+    * once (see [[CheckpointState]]) and serves every Snapshot over that
+    * checkpoint. Keyed by the instance and its files' listed lengths and
+    * mtimes, so a table deleted and recreated at this path never matches
+    * an old entry.
+    */
+  private val checkpointStates =
+    new java.util.LinkedHashMap[(CheckpointInstance, Seq[ListedFile]), CheckpointState](
+      16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[
+          (CheckpointInstance, Seq[ListedFile]), CheckpointState]): Boolean =
+        size() > DeltaLog.MaxOpenCheckpoints
+    }
+
+  private[delta] def checkpointState(ci: CheckpointInstance,
+      listed: Seq[ListedFile]): CheckpointState = {
+    val key = (ci, listed)
+    checkpointStates.synchronized(Option(checkpointStates.get(key))).getOrElse {
+      val st = CheckpointState.load(spark, logPath, ci)
+      checkpointStates.synchronized(checkpointStates.put(key, st))
+      st
+    }
+  }
+
 
   /** Minor log compaction (open spec `<s>.<e>.compacted.json`): write the
     * RECONCILED actions of versions [start, end] into one file — per-path
@@ -435,25 +486,42 @@ class DeltaLog(val spark: SparkSession, val dataPath: Path,
   private def withParsedStats(s: Snapshot,
       df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.{col, from_json}
-    val want = s.metadataOpt.exists(DeltaConfig.WriteStatsAsStruct.fromMetadata)
-    s.metadataOpt match {
-      case Some(md) if want =>
-        // stats JSON is keyed by PHYSICAL names under column mapping
-        val statsType = Stats.statsSchema(
-          ColumnMapping.physicalSchema(md), md.partitionColumns)
+    parsedStatsType(s) match {
+      case Some(statsType) =>
         // withField on a null add yields null; from_json(null) is null
         val withStruct = df.withColumn("add",
           col("add").withField("stats_parsed", from_json(col("add.stats"), statsType)))
         // writeStatsAsJson=false: the struct is the source of truth, the
         // JSON string is redundant checkpoint weight — drop it (readers
         // reconstruct it lazily from the struct)
-        if (DeltaConfig.WriteStatsAsJson.fromMetadata(md)) withStruct
+        if (DeltaConfig.WriteStatsAsJson.fromMetadata(s.metadata)) withStruct
         else withStruct.withColumn("add",
           col("add").withField("stats",
             org.apache.spark.sql.functions.lit(null).cast("string")))
-      case _ => df
+      case None => df
     }
   }
+
+  /** The `add.stats_parsed` type a checkpoint of `s` writes, if any. */
+  private def parsedStatsType(s: Snapshot): Option[org.apache.spark.sql.types.StructType] =
+    s.metadataOpt.filter(DeltaConfig.WriteStatsAsStruct.fromMetadata).map(md =>
+      // stats JSON is keyed by PHYSICAL names under column mapping
+      Stats.statsSchema(ColumnMapping.physicalSchema(md), md.partitionColumns))
+
+  /** Open the checkpoint just written at `ci` with what it holds, so the
+    * first snapshot over it runs no Spark job. A checkpoint that dropped
+    * the stats JSON is left to open cold: its readers rebuild the JSON
+    * from the struct, which need not match this snapshot's string byte
+    * for byte.
+    */
+  private def seedWritten(s: Snapshot, ci: CheckpointInstance, sidecars: Seq[String],
+      content: ReplayState): Unit =
+    if (s.metadataOpt.forall(DeltaConfig.WriteStatsAsJson.fromMetadata)) {
+      val fs = logPath.getFileSystem(spark.sessionState.newHadoopConf())
+      val key = (ci, ci.files(logPath).map(p => ListedFile(fs.getFileStatus(p))))
+      val st = CheckpointState.written(spark, logPath, ci, parsedStatsType(s), sidecars, content)
+      checkpointStates.synchronized(checkpointStates.put(key, st))
+    }
 
   /** V2 checkpoint (open `v2Checkpoint` table feature): one small
     * MANIFEST (`<v>.checkpoint.<uuid>.parquet` — non-file actions +
@@ -478,8 +546,10 @@ class DeltaLog(val spark: SparkSession, val dataPath: Path,
       DeltaConfig.CheckpointNumSidecars.fromMetadata(s.metadata))
     val scDir = FileNames.sidecarDir(logPath)
     fs.mkdirs(scDir)
+    // the manifest always names a protocol
+    val content = s.checkpointContent.copy(protocol = Some(s.protocol))
     // bucket + order-independent content fingerprint, one aggregation
-    val fileRows = withParsedStats(s, s.checkpointActionsDF)
+    val fileRows = withParsedStats(s, s.checkpointActionsDF(content))
       .where(col("add").isNotNull || col("remove").isNotNull)
       .withColumn("__b", pmod(xxhash64(coalesce(col("add.path"), col("remove.path"))),
         lit(numBuckets)).cast("int"))
@@ -527,10 +597,11 @@ class DeltaLog(val spark: SparkSession, val dataPath: Path,
       SidecarFile(sidecarName(b), st.getLen, st.getModificationTime).wrap
     }
     val manifestRows: Seq[SingleAction] =
-      Seq(CheckpointMetadata(s.version).wrap, s.protocol.wrap) ++
+      Seq(CheckpointMetadata(s.version).wrap) ++
+        content.protocol.map(_.wrap) ++
         meta.map(_.wrap).toSeq ++
-        s.setTransactions.map(_.wrap) ++
-        s.domainMetadataMap.values.map(_.wrap) ++
+        content.txns.values.map(_.wrap) ++
+        content.domains.values.map(_.wrap) ++
         sidecarActions
     val uuid = java.util.UUID.randomUUID.toString.replace("-", "")
     val tmpM = new Path(logPath, s".ckpt-v2m-${java.util.UUID.randomUUID}")
@@ -549,6 +620,8 @@ class DeltaLog(val spark: SparkSession, val dataPath: Path,
     writeBuckets(fps.keys.toSeq.filter(b => !fs.exists(new Path(scDir, sidecarName(b)))))
     val size = fs.getFileStatus(manifest).getLen +
       sidecarActions.map(_.sidecar.sizeInBytes).sum
+    seedWritten(s, CheckpointInstance(s.version, None, Some(uuid)),
+      sidecarActions.map(_.sidecar.path), content)
     Checkpoints.writeLastCheckpoint(store, logPath,
       CheckpointMetaData(s.version, size, None, Some(uuid)))
     cleanUpExpiredLogs(s)
@@ -560,7 +633,8 @@ class DeltaLog(val spark: SparkSession, val dataPath: Path,
     // multi-part (A17): delta.checkpoint.partSize = max actions per part
     val partSize = s.metadataOpt
       .flatMap(md => DeltaConfig.CheckpointPartSize.fromMetadata(md))
-    val df = withParsedStats(s, s.checkpointActionsDF)
+    val content = s.checkpointContent
+    val df = withParsedStats(s, s.checkpointActionsDF(content))
     val numParts = partSize match {
       case None => 1
       case Some(ps) => math.max(1, math.ceil(df.count().toDouble / ps).toInt)
@@ -583,6 +657,7 @@ class DeltaLog(val spark: SparkSession, val dataPath: Path,
     }
     fs.delete(tmpDir, true)
     val size = targets.map(t => fs.getFileStatus(t).getLen).sum
+    seedWritten(s, instance, Nil, content)
     Checkpoints.writeLastCheckpoint(store, logPath,
       CheckpointMetaData(s.version, size, instance.numParts))
     cleanUpExpiredLogs(s)
@@ -717,6 +792,11 @@ class DeltaLog(val spark: SparkSession, val dataPath: Path,
 object DeltaLog {
   /** Test hook mirroring the reference's injectable `clock.go` Clock. */
   @volatile private[delta] var clockOverride: Option[Clock] = None
+
+  /** Checkpoints a DeltaLog keeps open: the latest, plus a few older
+    * ones that time travel revisits.
+    */
+  private val MaxOpenCheckpoints = 8
 
   // one DeltaLog per canonical table path per JVM (cf. the deltaLogCache
   // of every Delta implementation): concurrent same-process writers share

@@ -22,7 +22,21 @@ final case class LogSegment(
       * like classic deltas, so a ratified commit is readable the moment
       * the coordinator accepts it, before any backfill copy lands.
       */
-    staged: Seq[(Long, String)] = Nil)
+    staged: Seq[(Long, String)] = Nil,
+    /** The checkpoint's files as the log listing saw them. */
+    listedCheckpoint: Seq[ListedFile] = Nil,
+    /** The raw deltas and compacted files as the log listing saw them. */
+    listedTail: Seq[ListedFile] = Nil)
+
+/** A log file as one listing saw it. Log files are written once, so two
+  * listings that agree on name, length and mtime saw the same bytes.
+  */
+final case class ListedFile(name: String, size: Long, modificationTime: Long)
+
+object ListedFile {
+  def apply(st: org.apache.hadoop.fs.FileStatus): ListedFile =
+    ListedFile(st.getPath.getName, st.getLen, st.getModificationTime)
+}
 
 /** An immutable view of the table at one version
   * (cf. reference `snapshot.go:21` Snapshot interface).
@@ -30,10 +44,16 @@ final case class LogSegment(
   * Scale design (diverging from the reference on purpose): the reference
   * materializes every AddFile in process memory (`snapshot.go:299`
   * loadActiveFiles); at 100 TB that is O(10^7) objects. Here the file
-  * state is a Spark DataFrame — checkpoint parquet unioned with the
-  * driver-parsed JSON tail (bounded by the checkpoint interval), reduced
-  * with one `max_by` aggregation per path. Driver-side collections happen
-  * only in the explicit `allFiles`-style APIs that mirror the reference.
+  * list is a Spark DataFrame — checkpoint parquet unioned with the JSON
+  * tail (bounded by the checkpoint interval), reduced with one `max_by`
+  * aggregation per path. What is driver-resident is the small state: per
+  * checkpoint, its protocol, metadata, SetTransactions, domains and the
+  * adds with a deletion vector or read-default tag, collected once per
+  * checkpoint and kept by [[DeltaLog]]; on top of it, the driver-parsed
+  * tail folded once. So building a snapshot and reading its metadata or
+  * DV list runs no Spark job once its checkpoint is open. Driver-side
+  * file collections happen only in the explicit `allFiles`-style APIs
+  * that mirror the reference.
   */
 class Snapshot(
     val spark: SparkSession,
@@ -45,12 +65,6 @@ class Snapshot(
 
   private def logPath = deltaLog.logPath
 
-  /** Above this many tail bytes, the JSON tail is parsed by Spark
-    * (`spark.read.json`) instead of driver-side Jackson: the tail is
-    * normally bounded by the checkpoint interval, but one overwrite
-    * commit can carry millions of add/remove lines and must not heap the
-    * driver. Tunable via `spark.graft.snapshot.spillThresholdBytes`.
-    */
   /** Tail parts in replay order: (file, version its actions replay at) —
     * raw deltas at their own version, compacted files at the range end.
     */
@@ -63,6 +77,13 @@ class Snapshot(
         new Path(CoordinatedCommits.commitsDir(logPath), name) -> v
       }).sortBy(_._2)
 
+  /** Above this many tail bytes (the listed lengths of the segment's
+    * tail files), the JSON tail is parsed by Spark (`spark.read.json`)
+    * instead of driver-side Jackson: the tail is normally bounded by the
+    * checkpoint interval, but one overwrite commit can carry millions of
+    * add/remove lines and must not heap the driver. Tunable via
+    * `spark.graft.snapshot.spillThresholdBytes`.
+    */
   private lazy val spillTail: Boolean = {
     val threshold = spark.conf
       .getOption("spark.graft.snapshot.spillThresholdBytes")
@@ -71,20 +92,8 @@ class Snapshot(
     // by a concurrent backfill mid-job (the executor JSON read has no
     // per-file fallback), and the staged tail is bounded by the
     // backfill batch anyway — driver parsing with fallback is safe
-    segment.staged.isEmpty && tailFiles.nonEmpty && {
-      val minV = math.min(segment.deltas.headOption.getOrElse(Long.MaxValue),
-        segment.compacted.headOption.map(_._1).getOrElse(Long.MaxValue))
-      // "<v>." sorts before both "<v>.json" and "<v>.<e>.compacted.json"
-      val first = new Path(logPath, f"$minV%020d.")
-      deltaLog.store.listFrom(first)
-        .filter { st =>
-          (FileNames.isDeltaFile(st.getPath) &&
-            FileNames.deltaVersion(st.getPath) <= version) ||
-          (FileNames.isCompactedFile(st.getPath) &&
-            FileNames.compactedRange(st.getPath)._2 <= version)
-        }
-        .map(_.getLen).sum > threshold
-    }
+    segment.staged.isEmpty && tailFiles.nonEmpty &&
+      segment.listedTail.map(_.size).sum > threshold
   }
 
   /** Driver-parsed actions of the JSON tail, replay order (only touched
@@ -105,74 +114,21 @@ class Snapshot(
       lines.flatMap(Actions.fromJson).map(v -> _)
     }
 
-  // fully-nullable: checkpoint rows have exactly one non-null action
-  private val saSchema: org.apache.spark.sql.types.StructType =
-    Snapshot.nullable(Encoders.product[SingleAction].schema)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-
-  /** saSchema with `add` spliced to carry the probed file's
-    * `add.stats_parsed` struct, when the checkpoint was written with
-    * `delta.checkpoint.writeStatsAsStruct`. The probe is one parquet
-    * FOOTER read — the config value itself lives inside the checkpoint
-    * being opened, so the file's own schema is the source of truth.
+  /** The checkpoint, opened once per [[DeltaLog]] (see
+    * [[DeltaLog.checkpointState]]): every Snapshot over it shares its read
+    * DataFrame and its collected [[ReplayState]].
     */
-  private def statsExtendedSchema(probeFile: Path): org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types.StructType
-    val probed =
-      try spark.read.parquet(probeFile.toString).schema
-      catch { case scala.util.control.NonFatal(_) => return saSchema }
-    probed.fields.find(_.name == "add").map(_.dataType) match {
-      case Some(addT: StructType) if addT.fieldNames.contains("stats_parsed") =>
-        val addBase = saSchema("add").dataType.asInstanceOf[StructType]
-        val extended = StructType(addBase.fields :+ addT("stats_parsed"))
-        StructType(saSchema.fields.map(f =>
-          if (f.name == "add") f.copy(dataType = extended) else f))
-      case _ => saSchema
-    }
-  }
+  private lazy val checkpointState: Option[CheckpointState] =
+    segment.checkpoint.map(deltaLog.checkpointState(_, segment.listedCheckpoint))
 
-  /** The checkpoint's actions. A lazy val: its schema probe is a Spark
-    * job, run once per snapshot.
-    */
-  private lazy val checkpointDF: Option[DataFrame] =
-    segment.checkpoint.map { ci =>
-      val ckFiles = ci.files(logPath)
-      val df = ci.v2Uuid match {
-        case None =>
-          spark.read.schema(statsExtendedSchema(ckFiles.head))
-            .parquet(ckFiles.map(_.toString): _*)
-        case Some(_) =>
-          // v2: the manifest carries the non-file actions plus sidecar
-          // references; the file actions live in the referenced sidecars
-          val base = spark.read.schema(saSchema)
-            .parquet(ckFiles.map(_.toString): _*)
-          val names = base.where($"sidecar".isNotNull)
-            .select($"sidecar.path").as[String].collect()
-          if (names.isEmpty) base.where($"sidecar".isNull && $"checkpointMetadata".isNull)
-          else {
-            val scPaths = names
-              .map(n => new Path(FileNames.sidecarDir(logPath), n)).toIndexedSeq
-            // one read schema for manifest AND sidecars, so the union is
-            // exact (a missing nested field just reads as null); reuse the
-            // base read when no extension was probed
-            val rs = statsExtendedSchema(scPaths.head)
-            val nonFile =
-              if (rs eq saSchema) base
-              else spark.read.schema(rs).parquet(ckFiles.map(_.toString): _*)
-            nonFile.where($"sidecar".isNull && $"checkpointMetadata".isNull)
-              .unionByName(spark.read.schema(rs).parquet(scPaths.map(_.toString): _*),
-                allowMissingColumns = true)
-          }
-      }
-      df.withColumn("version", lit(ci.version))
-    }
+  private def checkpointDF: Option[DataFrame] = checkpointState.map(_.df)
 
   private def tailDF: DataFrame =
     if (spillTail) {
       val paths = tailFiles.map(_._1.toString)
       // raw deltas replay at their version, compacted files at range END:
       // the last number before (.compacted).json is exactly that
-      spark.read.schema(saSchema).json(paths: _*)
+      spark.read.schema(CheckpointState.actionSchema).json(paths: _*)
         .withColumn("version",
           regexp_extract(input_file_name(), "(\\d+)(?:\\.compacted)?\\.json$", 1)
             .cast("long"))
@@ -226,26 +182,27 @@ class Snapshot(
       .groupBy($"path")
       .agg(max_by($"w", struct($"version", $"w.isAdd")).as("w"))
 
-  /** Files carrying deletion-vector sidecars, materialized once per
-    * Snapshot object. `DeltaLog.update()` builds a new Snapshot on every
-    * call, so the list is shared only by the reads that hold the same
-    * Snapshot (e.g. one scan and its DV resolution), not across queries.
+  /** The active adds a reader resolves on the driver (DV descriptors,
+    * legacy DV tags, read-default tags), sorted by path: derived from the
+    * checkpoint's collected adds and the tail fold with no Spark job; on
+    * the spill path, one collect over the file list.
     */
-  lazy val dvFiles: Seq[AddFile] = activeFilesDF
-    .where($"deletionVector".isNotNull ||
-      ($"tags".isNotNull &&
-        element_at($"tags", DeletionVectors.PathTag).isNotNull))
-    .as[AddFile].collect().toSeq
+  private lazy val flaggedFiles: Seq[AddFile] =
+    (if (spillTail)
+      activeFilesDF.where(ReplayState.flaggedCol(struct($"*"))).as[AddFile].collect().toSeq
+    else replayed.flaggedAdds.values.toSeq).sortBy(_.path)
+
+  /** Files carrying deletion vectors. `DeltaLog.update()` returns the
+    * same Snapshot while the log is unchanged, so successive reads of an
+    * unchanged table share this list; a new Snapshot derives it from the
+    * cached checkpoint state and the tail without a Spark job.
+    */
+  lazy val dvFiles: Seq[AddFile] = flaggedFiles.filter(ReplayState.hasDv)
 
   /** Files tagged as physically lacking an initial-defaulted column
-    * (adopted Iceberg v3 tables — see [[ReadDefaults]]). Only evaluated
-    * when the metadata declares defaulted fields, so ordinary tables pay
-    * nothing.
+    * (adopted Iceberg v3 tables — see [[ReadDefaults]]).
     */
-  lazy val defaultFillFiles: Seq[AddFile] = activeFilesDF
-    .where($"tags".isNotNull &&
-      element_at($"tags", ReadDefaults.MissingTag).isNotNull)
-    .as[AddFile].collect().toSeq
+  lazy val defaultFillFiles: Seq[AddFile] = flaggedFiles.filter(ReplayState.needsDefaults)
 
   // ------------------------------------------------------- driver-side API
 
@@ -267,67 +224,43 @@ class Snapshot(
   def tombstones: Seq[RemoveFile] = tombstonesDF.as[RemoveFile].collect().toSeq
   def numOfFiles: Long = activeFilesDF.count()
 
-  /** Protocol + Metadata + SetTransactions from the newest occurrence in
-    * tail (preferred) or checkpoint (cf. reference
-    * `snapshot.go:182` loadTableProtoclAndMetadata).
+  /** Protocol, metadata, SetTransactions, live domains and flagged adds
+    * of this version (cf. reference `snapshot.go:182`
+    * loadTableProtoclAndMetadata): the checkpoint's collected state with
+    * the driver-parsed tail folded on top, once. A spilled tail
+    * aggregates its few non-file rows in Spark instead of replaying
+    * millions of lines on the driver (latest version wins — within one
+    * commit duplicates are prohibited by prepareCommit); its flagged adds
+    * come from [[flaggedFiles]].
     */
-  private lazy val replayedMeta: (Option[Protocol], Option[Metadata], Map[String, SetTransaction]) = {
-    var proto: Option[Protocol] = None
-    var meta: Option[Metadata] = None
-    var txns = Map.empty[String, SetTransaction]
-    if (spillTail) {
-      // huge tail: aggregate the few metadata-ish rows in Spark instead of
-      // replaying millions of lines on the driver (latest version wins —
-      // within one commit duplicates are prohibited by prepareCommit)
+  private lazy val replayed: ReplayState = {
+    val base = checkpointState.map(_.state).getOrElse(ReplayState.empty)
+    if (!spillTail) base.replay(tailActions)
+    else {
       val t = tailDF
-      meta = t.where($"metaData".isNotNull).orderBy($"version".desc).limit(1)
+      val meta = t.where($"metaData".isNotNull).orderBy($"version".desc).limit(1)
         .select($"metaData.*").as[Metadata].collect().headOption
-      proto = t.where($"protocol".isNotNull).orderBy($"version".desc).limit(1)
+      val proto = t.where($"protocol".isNotNull).orderBy($"version".desc).limit(1)
         .select($"protocol.*").as[Protocol].collect().headOption
-      txns = t.where($"txn".isNotNull)
+      val txns = t.where($"txn".isNotNull)
         .groupBy($"txn.appId").agg(max_by($"txn", $"version").as("t"))
         .select($"t.*").as[SetTransaction].collect()
         .map(st => st.appId -> st).toMap
-    } else tailActions.foreach {
-      case (_, p: Protocol) => proto = Some(p)
-      case (_, m: Metadata) => meta = Some(m)
-      case (_, t: SetTransaction) => txns += (t.appId -> t)
-      case _ =>
-    }
-    // the checkpoint's protocol, metadata and SetTransactions in ONE
-    // collect; the tail's newer protocol/metadata win
-    val ckpt = checkpointDF.toSeq.flatMap(_
-      .where($"metaData".isNotNull || $"protocol".isNotNull || $"txn".isNotNull)
-      .select($"metaData", $"protocol", $"txn")
-      .as[(Option[Metadata], Option[Protocol], Option[SetTransaction])].collect())
-    val ckptTxns = ckpt.flatMap(_._3).map(t => t.appId -> t).toMap
-    (proto.orElse(ckpt.flatMap(_._2).headOption),
-      meta.orElse(ckpt.flatMap(_._1).headOption), ckptTxns ++ txns)
-  }
-
-  /** Live domain metadata (latest action per domain; removed domains
-    * dropped). Lazy — only tables that use domains (e.g. row tracking)
-    * pay the checkpoint read.
-    */
-  lazy val domainMetadataMap: Map[String, DomainMetadata] = {
-    var live = Map.empty[String, DomainMetadata]
-    checkpointDF.foreach { c =>
-      live = c.where($"domainMetadata".isNotNull).select($"domainMetadata.*")
-        .as[DomainMetadata].collect().map(d => d.domain -> d).toMap
-    }
-    if (spillTail) {
-      tailDF.where($"domainMetadata".isNotNull)
+      val domains = t.where($"domainMetadata".isNotNull)
         .groupBy($"domainMetadata.domain")
         .agg(max_by($"domainMetadata", $"version").as("d"))
         .select($"d.*").as[DomainMetadata].collect()
-        .foreach(d => live = if (d.removed) live - d.domain else live + (d.domain -> d))
-    } else tailActions.foreach {
-      case (_, d: DomainMetadata) =>
-        live = if (d.removed) live - d.domain else live + (d.domain -> d)
-      case _ =>
+        .foldLeft(base.domains)((live, d) =>
+          if (d.removed) live - d.domain else live + (d.domain -> d))
+      ReplayState(proto.orElse(base.protocol), meta.orElse(base.metadata),
+        base.txns ++ txns, domains, Map.empty)
     }
-    live
   }
+
+  /** Live domain metadata (latest action per domain; removed domains
+    * dropped).
+    */
+  def domainMetadataMap: Map[String, DomainMetadata] = replayed.domains
 
   /** domain -> configuration string for live domains. */
   def domainMetadata: Map[String, String] =
@@ -373,34 +306,41 @@ class Snapshot(
   }
 
   /** cf. reference `snapshot.go:126` Metadata. */
-  def metadata: Metadata = replayedMeta._2.getOrElse(
+  def metadata: Metadata = replayed.metadata.getOrElse(
     throw new IllegalStateException(s"no metadata found for version $version of ${deltaLog.dataPath}"))
-  def metadataOpt: Option[Metadata] = replayedMeta._2
-  def protocol: Protocol = replayedMeta._1.getOrElse(Protocol())
-  def setTransactions: Seq[SetTransaction] = replayedMeta._3.values.toSeq
+  def metadataOpt: Option[Metadata] = replayed.metadata
+  def protocol: Protocol = replayed.protocol.getOrElse(Protocol())
+  def setTransactions: Seq[SetTransaction] = replayed.txns.values.toSeq
   /** cf. reference `snapshot.go:152` transactions. */
-  def transactions: Map[String, Long] = replayedMeta._3.view.mapValues(_.version).toMap
+  def transactions: Map[String, Long] = replayed.txns.view.mapValues(_.version).toMap
 
-  /** All SingleActions of this snapshot's state (checkpoint content). */
-  def checkpointActionsDF: DataFrame = {
-    val meta = replayedMeta
-    // delta.setTransactionRetentionDuration: expire idempotent-writer
-    // entries past the horizon AT CHECKPOINT TIME (the spec's expiry
-    // point — replay of the json tail keeps everything); entries with
-    // no lastUpdated never expire
+  /** The small state a checkpoint of this snapshot holds: this state with
+    * delta.setTransactionRetentionDuration applied — idempotent-writer
+    * entries past the horizon expire AT CHECKPOINT TIME (the spec's
+    * expiry point — replay of the json tail keeps everything); entries
+    * with no lastUpdated never expire.
+    */
+  private[delta] def checkpointContent: ReplayState = {
     val txnCutoff: Option[Long] = metadataOpt
       .flatMap(DeltaConfig.TxnRetention.fromMetadata)
       .map(r => deltaLog.clock.nowMillis - r)
     val liveTxns = txnCutoff match {
-      case None => meta._3.values.toSeq
-      case Some(cut) => meta._3.values.toSeq
-        .filter(t => t.lastUpdated.forall(_ >= cut))
+      case None => replayed.txns
+      case Some(cut) => replayed.txns.filter(_._2.lastUpdated.forall(_ >= cut))
     }
+    replayed.copy(txns = liveTxns,
+      flaggedAdds = flaggedFiles.map(a => a.path -> a).toMap)
+  }
+
+  /** The checkpoint rows: `content` (see [[checkpointContent]]) for the
+    * non-file actions, then the file list and tombstones.
+    */
+  private[delta] def checkpointActionsDF(content: ReplayState): DataFrame = {
     val extras =
-      meta._1.map(_.wrap).toSeq ++ meta._2.map(_.wrap).toSeq ++
-        liveTxns.map(_.wrap) ++
-        domainMetadataMap.values.map(_.wrap).toSeq
-    val extrasDF = spark.createDataset(extras)(Encoders.product[SingleAction])
+      content.protocol.map(_.wrap).toSeq ++ content.metadata.map(_.wrap).toSeq ++
+        content.txns.values.map(_.wrap) ++
+        content.domains.values.map(_.wrap)
+    val extrasDF = spark.createDataset(extras.toSeq)(Encoders.product[SingleAction])
     // stats_parsed (if this snapshot read one) is derived, not state: the
     // checkpoint writer re-materializes it from the stats JSON
     val files = activeFilesDF.drop("stats_parsed").select(struct($"*").as("add"))
@@ -412,7 +352,7 @@ class Snapshot(
 
   /** Shape a single nested struct column into the full SingleAction row. */
   private def to_single_action(c: org.apache.spark.sql.Column, field: String) = {
-    saSchema.fields.map { f =>
+    CheckpointState.actionSchema.fields.map { f =>
       if (f.name == field) c.cast(f.dataType).as(f.name)
       else lit(null).cast(f.dataType).as(f.name)
     }.toSeq
