@@ -1,11 +1,15 @@
 #!/usr/bin/env bash
 # Size of the shipped engine: the line count of the Scala sources under
-# src/main, then every `spark.graft.*` Spark conf key they read, sorted.
+# src/main, the `SparkSession.builder()` call sites in src/main and
+# src/test, then every `spark.graft.*` Spark conf key src/main reads, sorted.
 # Usage: scripts/loc.sh [repo-root]   (default: the checkout holding this script)
 set -euo pipefail
 root="${1:-$(cd "$(dirname "$0")/.." && pwd)}"
 cd "$root"
 echo "src/main scala lines: $(find src/main -name '*.scala' -print0 | xargs -0 cat | wc -l)"
+for tree in src/main src/test; do
+  echo "SparkSession.builder() sites in $tree: $(grep -rho 'SparkSession\.builder()' "$tree" --include='*.scala' | wc -l)"
+done
 keys=$(grep -rhoE '"spark\.graft\.[A-Za-z0-9_.]*[A-Za-z0-9_]"' src/main --include='*.scala' \
   | tr -d '"' | sort -u)
 echo "spark.graft.* keys read: $(printf '%s\n' "$keys" | grep -c .)"

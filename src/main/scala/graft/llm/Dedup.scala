@@ -96,7 +96,7 @@ object Dedup {
     * of one representative per distinct content; members = (doc_id,
     * rep_id, gsize) mapping every input doc to its representative.
     */
-  private[graft] def collapsedBands(docs: DataFrame, numBands: Int,
+  private[llm] def collapsedBands(docs: DataFrame, numBands: Int,
       rowsPer: Int): (DataFrame, DataFrame) = {
     val s = docs.sparkSession
     import s.implicits._
@@ -167,7 +167,7 @@ object Dedup {
     * representative IS a real document). Output (doc_a, doc_b, jaccard)
     * with doc_a < doc_b, jaccard >= threshold.
     */
-  private[graft] def verifiedRepPairs(docs: DataFrame, repBands: DataFrame,
+  private[llm] def verifiedRepPairs(docs: DataFrame, repBands: DataFrame,
       threshold: Double): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
@@ -190,7 +190,7 @@ object Dedup {
     * n/(2n - n) = 1.0 in IEEE double. The expansion joins are
     * output-bounded: every joined row IS an output row.
     */
-  private[graft] def expandPairs(repPairs: DataFrame,
+  private[llm] def expandPairs(repPairs: DataFrame,
       members: DataFrame): DataFrame = {
     val s = repPairs.sparkSession
     import s.implicits._

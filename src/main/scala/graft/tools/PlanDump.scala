@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-shape auditor: prints the formatted physical plan of named
   * registry queries against a given data directory. Used by the scale
   * sweep to diff plan SHAPES between sf0.1 and the 10× synthetic corpus
@@ -18,15 +16,7 @@ object PlanDump {
     val sfDir = args(0)
     val names = if (args.length > 1) args.drop(1).toSeq
       else graft.SparkEntry.benchQueries
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.sql.GraftSparkExtension")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       println(s"\n===== $name @ $sfDir =====")

@@ -2,9 +2,11 @@ package graft.delta
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.testutil.SharedSpark
 
 /** A42: optimized writes (`delta.autoOptimize.optimizeWrite`) and auto
   * compaction (`delta.autoOptimize.autoCompact`) — the write-side file
@@ -12,15 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * partition per commit), the minNumFiles trigger threshold, the
   * touched-partitions-only scope, and the streaming-batch interplay.
   */
-class AutoOptimizeSuite extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-      .config("spark.sql.extensions", "graft.sql.GraftSparkExtension")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class AutoOptimizeSuite extends AnyFunSuite with SharedSpark {
 
   private def tmp(): String = Files.createTempDirectory("graft-autoopt").toString
 

@@ -2,8 +2,9 @@ package graft.delta
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.testutil.SharedSpark
 
 /** checkpointProtection table feature (public Delta spec): writers must
   * not create checkpoints below `delta.requireCheckpointProtectionBeforeVersion`,
@@ -12,15 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * none of it. This is what makes DROP FEATURE ... TRUNCATE HISTORY
   * sound against concurrent writers.
   */
-class CheckpointProtectionSuite extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.sql.GraftSparkExtension")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CheckpointProtectionSuite extends AnyFunSuite with SharedSpark {
 
   private def tmp(): String = Files.createTempDirectory("graft-ckptprot").toString
 

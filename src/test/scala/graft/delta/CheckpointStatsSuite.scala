@@ -2,23 +2,17 @@ package graft.delta
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.testutil.SharedSpark
 
 /** `delta.checkpoint.writeStatsAsStruct`: checkpoints materialize
   * `add.stats_parsed`; scans skip on the struct without JSON-parsing,
   * and tail files fall back to the stats string.
   */
-class CheckpointStatsSuite extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.sql.GraftSparkExtension")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CheckpointStatsSuite extends AnyFunSuite with SharedSpark {
 
   private def tmp(): String = Files.createTempDirectory("graft-ckstats").toString
 

@@ -5,21 +5,15 @@ import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.testutil.SharedSpark
+
 /** Coordinated commits (public Delta `coordinatedCommits` writer
   * feature): commit atomicity moves from filesystem put-if-absent to an
   * external coordinator — staged commit files under
   * `_delta_log/_commits/`, reads merging ratified-but-unbackfilled
   * commits, the protocol gate round-tripping the feature name.
   */
-class CoordinatedCommitsSuite extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.sql.GraftSparkExtension")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CoordinatedCommitsSuite extends AnyFunSuite with SharedSpark {
 
   private def tmp(): String = Files.createTempDirectory("graft-cc").toString
 

@@ -2,24 +2,17 @@ package graft.delta
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.testutil.SharedSpark
 
 /** COPY INTO: idempotent bulk file ingestion. Re-runs skip loaded files
   * (tracked in the `_copy_into` sidecar + main-log batch markers),
   * idempotency survives OPTIMIZE, a crashed intent (write-ahead rows
   * with no main commit) does NOT count as loaded, force reloads.
   */
-class CopyIntoSuite extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.sql.GraftSparkExtension")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CopyIntoSuite extends AnyFunSuite with SharedSpark {
 
   private def tmp(): String = Files.createTempDirectory("graft-copyinto").toString
 

@@ -2,24 +2,18 @@ package graft.delta
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.testutil.SharedSpark
 
 /** DML operationMetrics: exact-or-absent row counts derived from file
   * stats (rewrite DELETE), DV cardinality growth (merge-on-read
   * DELETE), and the auto-derived file/byte/change-file counts every
   * commit records — the audit surface history() consumers read.
   */
-class DmlMetricsSuite extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.sql.GraftSparkExtension")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DmlMetricsSuite extends AnyFunSuite with SharedSpark {
 
   private def tmp(): String = Files.createTempDirectory("graft-dmlmetrics").toString
 

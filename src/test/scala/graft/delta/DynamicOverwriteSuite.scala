@@ -2,9 +2,11 @@ package graft.delta
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.testutil.SharedSpark
 
 /** Dynamic partition overwrite (partitionOverwriteMode=dynamic):
   * overwrite replaces EXACTLY the partitions the batch wrote into,
@@ -13,15 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * reject the mode; the replaced set derives from the WRITTEN files so
   * the input is never executed twice.
   */
-class DynamicOverwriteSuite extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.sql.GraftSparkExtension")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DynamicOverwriteSuite extends AnyFunSuite with SharedSpark {
 
   private def tmp(): String = Files.createTempDirectory("graft-dynover").toString
 

@@ -2,23 +2,17 @@ package graft.delta
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.testutil.SharedSpark
 
 /** FSCK REPAIR TABLE: scans fail with FileNotFound when a data file is
   * deleted out from under the log; the repair drops exactly the missing
   * references (dataChange removes in one commit) so the surviving rows
   * read again. DRY RUN reports without committing.
   */
-class FsckSuite extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.sql.GraftSparkExtension")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class FsckSuite extends AnyFunSuite with SharedSpark {
 
   private def tmp(): String = Files.createTempDirectory("graft-fsck").toString
 

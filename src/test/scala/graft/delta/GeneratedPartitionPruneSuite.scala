@@ -2,9 +2,11 @@ package graft.delta
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.testutil.SharedSpark
 
 /** Generated-column partition-filter derivation: a filter on the BASE
   * column of a monotone generated partition column must prune
@@ -12,15 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * IDENTICAL to the unpruned scan, and non-monotone shapes must derive
   * nothing (correctness by construction: derivation is extra-only).
   */
-class GeneratedPartitionPruneSuite extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.sql.GraftSparkExtension")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GeneratedPartitionPruneSuite extends AnyFunSuite with SharedSpark {
 
   private def tmp(): String = Files.createTempDirectory("graft-gpp").toString
 

@@ -1,8 +1,9 @@
 package graft.delta
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.testutil.SharedSpark
 
 /** Protocol compatibility against the delta-standalone golden tables the
   * reference ships (reference `tests/golden/...`, consumed by its own
@@ -11,15 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * wire-format compatibility of the action codec, checkpoint reader,
   * state reconstruction and time travel.
   */
-class GoldenTablesSuite extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-      .config("spark.sql.extensions", "graft.sql.GraftSparkExtension")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GoldenTablesSuite extends AnyFunSuite with SharedSpark {
 
   private val golden = "/root/reference/tests/golden"
   private def log(name: String): DeltaLog =

@@ -8,11 +8,13 @@ import scala.jdk.CollectionConverters._
 import org.apache.avro.file.DataFileReader
 import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.testutil.SharedSpark
 
 /** UniForm's incremental generation path (IcebergMetadata.generate with a
   * change set read from the Delta log), pinned against the general path:
@@ -33,15 +35,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * Each generation records its path in the snapshot summary
   * (`graft.gen-path`); the tests read it there.
   */
-class IcebergFastAppendSuite extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.sql.GraftSparkExtension")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class IcebergFastAppendSuite extends AnyFunSuite with SharedSpark {
 
   private def tmp(): String = Files.createTempDirectory("graft-fastapp").toString
 

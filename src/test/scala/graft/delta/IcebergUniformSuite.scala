@@ -6,24 +6,18 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.avro.file.DataFileReader
 import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.testutil.SharedSpark
 
 /** UniForm Iceberg metadata generation: spec-structural conformance —
   * the metadata JSON, manifest list, and data manifests are re-read
   * with Jackson/Avro and checked against the Delta snapshot (no Iceberg
   * reader exists in this sandbox; see IcebergMetadata's scaladoc).
   */
-class IcebergUniformSuite extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.sql.GraftSparkExtension")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class IcebergUniformSuite extends AnyFunSuite with SharedSpark {
 
   private def tmp(): String = Files.createTempDirectory("graft-uniform").toString
 

@@ -2,9 +2,10 @@ package graft.delta
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.testutil.SharedSpark
 
 /** Incremental (ZCube-style) clustering: plain OPTIMIZE on a clustered
   * table must NOT re-cluster the whole scope every run — at 100 TB that
@@ -16,15 +17,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * with no new data commits NOTHING. `OPTIMIZE ... FULL` stays the
   * explicit whole-table rewrite.
   */
-class IncrementalClusteringSuite extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.sql.GraftSparkExtension")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class IncrementalClusteringSuite extends AnyFunSuite with SharedSpark {
 
   private def tmp(): String = Files.createTempDirectory("graft-zcube").toString
 

@@ -2,9 +2,11 @@ package graft.delta
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.testutil.SharedSpark
 
 /** MERGE schema evolution (delta-spark's `withSchemaEvolution` / SQL
   * `MERGE WITH SCHEMA EVOLUTION INTO`): source-only top-level columns
@@ -12,15 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * target values for columns the source lacks, InsertAll fills them
   * null, and pre-merge files read the new columns as null.
   */
-class MergeSchemaEvolutionSuite extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.sql.GraftSparkExtension")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MergeSchemaEvolutionSuite extends AnyFunSuite with SharedSpark {
 
   private def tmp(): String =
     Files.createTempDirectory("graft-mevo").toString

@@ -2,9 +2,11 @@ package graft.delta
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.testutil.SharedSpark
 
 /** Metadata-only COUNT(*): an unfiltered count over a graft-delta
   * relation must come from log stats (LocalRelation in the optimized
@@ -12,15 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (numRecords − DV cardinality), and must fall back to a real scan the
   * moment a filter is present or the config disables it.
   */
-class MetadataOnlyCountSuite extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.sql.GraftSparkExtension")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MetadataOnlyCountSuite extends AnyFunSuite with SharedSpark {
 
   private def tmp(): String = Files.createTempDirectory("graft-metacount").toString
 

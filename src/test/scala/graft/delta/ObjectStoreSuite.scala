@@ -6,7 +6,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.testutil.ObjectStoreFileSystem
+import graft.testutil.{ObjectStoreFileSystem, SharedSpark}
 
 /** Transaction-log protocol over OBJECT-STORE semantics.
   *
@@ -22,21 +22,12 @@ import graft.testutil.ObjectStoreFileSystem
   * checkpoint + time travel) against a store that offers none of the
   * filesystem atomicity the local-disk suites get for free.
   */
-class ObjectStoreSuite extends AnyFunSuite {
+class ObjectStoreSuite extends AnyFunSuite with SharedSpark {
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.extensions", "graft.sql.GraftSparkExtension")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.fs.s3a.impl", classOf[ObjectStoreFileSystem].getName)
-      .getOrCreate()
-    // getOrCreate may have returned another suite's session, whose
-    // SparkConf (and thus every newHadoopConf()) predates the builder
-    // config above: bind the scheme on the context's base hadoop conf,
-    // which all sessions clone
+  override lazy val spark: SparkSession = {
+    val s = SharedSpark.session
+    // bind the scheme on the context's base hadoop conf, which every
+    // newHadoopConf() clones
     s.sparkContext.hadoopConfiguration
       .set("fs.s3a.impl", classOf[ObjectStoreFileSystem].getName)
     s

@@ -1,58 +1,20 @@
 package graft.delta
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions.col
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.testutil.SharedSpark
+
 /** Spark-job budgets: log replay on a checkpointed table, and the
   * Dataset-bodied commits of small tables; and the equivalence of the
   * driver-derived replay state with the spill path and a cold log.
   */
-class SnapshotReplaySuite extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.sql.GraftSparkExtension")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  /** Jobs `f` submits, counted by a listener on its own job group. A
-    * marker job in another group, submitted after `f`, is the barrier:
-    * the listener bus delivers events in order, so once the marker is
-    * seen every job of `f` has been counted.
-    */
-  private def jobsOf(f: => Unit): Int = {
-    val group = s"replay-${java.util.UUID.randomUUID()}"
-    val marker = s"$group-marker"
-    val jobs = new AtomicInteger(0)
-    val markerSeen = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.incrementAndGet()
-          case Some(`marker`) => markerSeen.countDown()
-          case _ =>
-        }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      try f finally sc.clearJobGroup()
-      sc.setJobGroup(marker, "barrier")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      jobs.get()
-    } finally sc.removeSparkListener(listener)
-  }
+class SnapshotReplaySuite extends AnyFunSuite with SharedSpark {
 
   test("a checkpointed snapshot probes its checkpoint once and reads protocol, metadata and txns in one job") {
     import spark.implicits._

@@ -2,20 +2,14 @@ package graft.delta
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** CHECK constraints / NOT NULL invariants, RESTORE, and shallow CLONE. */
-class TableFeaturesSuite extends AnyFunSuite {
+import graft.testutil.SharedSpark
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-      .config("spark.sql.extensions", "graft.sql.GraftSparkExtension")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+/** CHECK constraints / NOT NULL invariants, RESTORE, and shallow CLONE. */
+class TableFeaturesSuite extends AnyFunSuite with SharedSpark {
 
   private def tmp(): String = Files.createTempDirectory("graft-feat").toString
 

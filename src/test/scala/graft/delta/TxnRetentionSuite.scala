@@ -2,8 +2,9 @@ package graft.delta
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.testutil.SharedSpark
 
 /** `delta.setTransactionRetentionDuration`: checkpoints expire
   * idempotent-writer SetTransaction entries past the horizon, bounding
@@ -11,15 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * Entries without lastUpdated never expire; with the property unset
   * everything is retained forever (the default contract).
   */
-class TxnRetentionSuite extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.sql.GraftSparkExtension")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TxnRetentionSuite extends AnyFunSuite with SharedSpark {
 
   private def tmp(): String = Files.createTempDirectory("graft-txnret").toString
 

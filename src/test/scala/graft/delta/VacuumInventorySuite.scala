@@ -2,10 +2,12 @@ package graft.delta
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Row, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.testutil.SharedSpark
 
 /** VACUUM ... USING INVENTORY: the caller-supplied candidate listing
   * (delta-spark public surface). At 10^7 objects the recursive LIST is
@@ -15,15 +17,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * outside the table root so a malformed inventory cannot reach into a
   * different table.
   */
-class VacuumInventorySuite extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.sql.GraftSparkExtension")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class VacuumInventorySuite extends AnyFunSuite with SharedSpark {
 
   private def tmp(): String = Files.createTempDirectory("graft-vinv").toString
 

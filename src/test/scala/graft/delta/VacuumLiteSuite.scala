@@ -2,9 +2,11 @@ package graft.delta
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.testutil.SharedSpark
 
 /** VACUUM LITE: the log-driven sweep. The candidate set comes from the
   * snapshot's reconciled tombstones, never a filesystem listing — so it
@@ -12,15 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * untracked orphans alone (orphans are FULL vacuum's job), and honor
   * retention and DRY RUN like the full sweep.
   */
-class VacuumLiteSuite extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.sql.GraftSparkExtension")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class VacuumLiteSuite extends AnyFunSuite with SharedSpark {
 
   private def tmp(): String =
     Files.createTempDirectory("graft-vlite").toString

@@ -2,9 +2,10 @@ package graft.delta
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.testutil.SharedSpark
 
 /** The open `variantType` table feature (Delta PROTOCOL.md): a VARIANT
   * column in the schema must stamp the reader+writer feature (its
@@ -12,15 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * surface raw), values must round-trip through the log/scan path, and
   * stats collection must skip the column rather than choke on it.
   */
-class VariantTableSuite extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.sql.GraftSparkExtension")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class VariantTableSuite extends AnyFunSuite with SharedSpark {
 
   private def tmp(): String = Files.createTempDirectory("graft-variant").toString
 

@@ -1,22 +1,16 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{GraftShims => GS}
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.testutil.SharedSpark
 
 /** Direct behavior checks of the custom Catalyst expressions against
   * their builtin (interpreted HOF) formulations — the custom versions
   * must be drop-in value-identical, only faster.
   */
-class ExpressionsSuite extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-      .config("spark.sql.extensions", "graft.sql.GraftSparkExtension")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ExpressionsSuite extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 

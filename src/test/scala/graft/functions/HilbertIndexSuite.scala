@@ -2,13 +2,15 @@ package graft.functions
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.testutil.SharedSpark
+
 /** The Hilbert encoding must be a BIJECTION over the grid and must have
   * the defining unit-step property: walking the curve in index order
   * moves exactly one grid step per increment (Manhattan distance 1) —
   * the locality Morton's Z-jumps lack, and the entire reason to prefer
   * it for multi-column clustering.
   */
-class HilbertIndexSuite extends AnyFunSuite {
+class HilbertIndexSuite extends AnyFunSuite with SharedSpark {
 
   private def grid(n: Int, b: Int): Seq[(Seq[Long], Long)] = {
     val side = 1 << b
@@ -51,13 +53,6 @@ class HilbertIndexSuite extends AnyFunSuite {
 
   test("OPTIMIZE honors delta.clusteringStrategy = hilbert") {
     import org.apache.spark.sql.functions._
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.extensions", "graft.sql.GraftSparkExtension")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-hilbert").toString
     val t = graft.delta.DeltaTable.forPath(spark, dir)

@@ -1,8 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.testutil.SharedSpark
 
 /** The HLL sketch aggregate's contract: partition-layout invariance
   * (register-wise max merges associatively, so the estimate cannot
@@ -10,15 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * standard-error envelope, and the exact hash→register arithmetic the
   * DuckDB oracle replicates.
   */
-class HllSketchSuite extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.sql.GraftSparkExtension")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class HllSketchSuite extends AnyFunSuite with SharedSpark {
 
   test("estimate is partition-invariant and within HLL error bounds") {
     import spark.implicits._

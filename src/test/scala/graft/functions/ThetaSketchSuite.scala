@@ -1,8 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.testutil.SharedSpark
 
 /** The KMV theta sketch's contract: byte-level determinism under any
   * partitioning (the k smallest distinct hashes are a pure function of
@@ -10,15 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * envelope above it, and the DataSketches compact-ordered preamble
   * structure (serial version 3 / family 3 / flags / seed hash 9001).
   */
-class ThetaSketchSuite extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.sql.GraftSparkExtension")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ThetaSketchSuite extends AnyFunSuite with SharedSpark {
 
   test("exact mode below k: estimate is the exact distinct count") {
     import spark.implicits._

@@ -1,22 +1,15 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.testutil.SharedSpark
 
 /** LongVectorSumAgg must be partitioning-invariant (element-wise integer
   * addition merges associatively across any split) and MomentVector must
   * emit exactly u ++ strict-upper-triangle products in (i,j) order.
   */
-class VectorSumSuite extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.sql.GraftSparkExtension")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class VectorSumSuite extends AnyFunSuite with SharedSpark {
 
   test("vector sum is identical at 1 and 7 partitions") {
     import spark.implicits._

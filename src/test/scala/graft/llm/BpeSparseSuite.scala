@@ -1,9 +1,9 @@
 package graft.llm
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.{BpeCoder, BpePairVector, BpeTokenCount}
+import graft.testutil.SharedSpark
 
 /** Production-vocab BPE (C68): the dict-based incremental trainer and
   * the rank-based encode expression. The load-bearing property is
@@ -15,14 +15,7 @@ import graft.functions.{BpeCoder, BpePairVector, BpeTokenCount}
   * DuckDB; here we pin it on adversarial synthetic corpora and then
   * train K=4096 — the regime no dense pair vector can reach.
   */
-class BpeSparseSuite extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BpeSparseSuite extends AnyFunSuite with SharedSpark {
 
   /** Render an int-symbol merge pair as the dense trainer's 2-char
     * string — valid while every id fits in a BMP char (K <= 1024 keeps

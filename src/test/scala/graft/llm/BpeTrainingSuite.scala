@@ -1,9 +1,9 @@
 package graft.llm
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.BpePairVector
+import graft.testutil.SharedSpark
 
 /** Iterative BPE training (C64's learn loop): each round RECOUNTS pairs
   * after the merges so far — the property a single-pass top-K cannot
@@ -12,14 +12,7 @@ import graft.functions.BpePairVector
   * contiguous BMP block from 0xC0 ('À'…, past 0xFF into 'Ā'…), capped
   * only where the dense pair-count vector stays buffer-sane (K<=1024).
   */
-class BpeTrainingSuite extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BpeTrainingSuite extends AnyFunSuite with SharedSpark {
 
   private val S0 = BpePairVector.mergeSymbol(0) // 'À'
   private val S1 = BpePairVector.mergeSymbol(1) // 'Á'

@@ -2,11 +2,11 @@ package graft.llm
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.delta.DeltaTable
+import graft.testutil.SharedSpark
 
 /** The cell-bucketed ANN layout (Similarity.writeCellIndexed plumbing):
   * the embedding corpus written as a graft-Delta table PARTITIONED BY
@@ -15,15 +15,7 @@ import graft.delta.DeltaTable
   * OPENS only the probed cells' files (log-level pruning), instead of
   * scanning everything and filtering rows.
   */
-class CellIndexedLayoutSuite extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.sql.GraftSparkExtension")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CellIndexedLayoutSuite extends AnyFunSuite with SharedSpark {
 
   private def tmp(): String = Files.createTempDirectory("graft-cell-idx").toString
 

@@ -1,21 +1,15 @@
 package graft.llm
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.testutil.SharedSpark
 
 /** Hand-computed pins for the round-11 curation selectors, independent of
   * the DuckDB oracle gate: surprisal_filter's bigram-LM arithmetic on a
   * 3-doc corpus small enough to verify on paper, and dsir_select's
   * target-share weighting separating on-target from off-target tokens.
   */
-class CurationSelectSuite extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.sql.GraftSparkExtension")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CurationSelectSuite extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 

@@ -1,8 +1,9 @@
 package graft.llm
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.testutil.SharedSpark
 
 /** Connected-components correctness under adversarial topology.
   *
@@ -14,14 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * diameter — these specs pin that down with a 64-doc chain (diameter
   * 63, triple the old cap) plus mixed-shape component sets.
   */
-class DedupClusterSuite extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.sql.GraftSparkExtension")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DedupClusterSuite extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 

@@ -1,8 +1,10 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.testutil.SharedSpark
 
 /** The degenerate-band-key guard (r18 verdict's weak mark): k exact
   * copies of one document share EVERY band, so banding them directly
@@ -15,14 +17,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * copies), and the expanded output is exactly what the uncollapsed
   * pipeline would produce.
   */
-class DedupCollapseSuite extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.sql.GraftSparkExtension")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DedupCollapseSuite extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 

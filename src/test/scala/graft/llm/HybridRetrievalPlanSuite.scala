@@ -1,7 +1,8 @@
 package graft.llm
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.testutil.SharedSpark
 
 /** Plan-shape guarantees for hybrid_retrieval's lexical leg: every join
   * that touches the full token stream must be broadcast-side (the
@@ -9,15 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * plan flip to a shuffle join on the vocab-sized df was the one
   * vocab-scale shuffle left in the query and must not reappear.
   */
-class HybridRetrievalPlanSuite extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .config("spark.sql.extensions", "graft.sql.GraftSparkExtension")
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class HybridRetrievalPlanSuite extends AnyFunSuite with SharedSpark {
 
   private val sfDir = "/root/testdata/sf0.001"
 

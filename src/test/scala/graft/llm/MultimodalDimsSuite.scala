@@ -1,22 +1,17 @@
 package graft.llm
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.testutil.SharedSpark
 
 /** C41 header parsing: the JPEG SOF0 must be found by hopping marker
   * segments via their length fields. Real files carry FFC0 byte pairs
   * inside APPn payloads (EXIF, thumbnails) — a locate()-style scan bites
   * on them and reads garbage dimensions from the middle of data.
   */
-class MultimodalDimsSuite extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .config("spark.sql.extensions", "graft.sql.GraftSparkExtension")
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MultimodalDimsSuite extends AnyFunSuite with SharedSpark {
 
   private def parse(id: Long, headerHex: String, tail: String = ""): Row = {
     import spark.implicits._

@@ -1,7 +1,8 @@
 package graft.llm
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.testutil.SharedSpark
 
 /** Value-based decile invariants for quality_deciles: the histogram-CDF
   * bucketing must behave like a deterministic ntile — buckets ordered,
@@ -9,15 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * while guaranteeing what ntile cannot: equal scores never straddle a
   * boundary, so the split is independent of row order and parallelism.
   */
-class QualityDecilesSuite extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .config("spark.sql.extensions", "graft.sql.GraftSparkExtension")
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class QualityDecilesSuite extends AnyFunSuite with SharedSpark {
 
   private val sfDir = "/root/testdata/sf0.001"
 

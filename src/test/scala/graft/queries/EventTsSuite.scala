@@ -3,9 +3,10 @@ package graft.queries
 import java.sql.Timestamp
 import java.time.LocalDateTime
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.testutil.SharedSpark
 
 /** The events table's ts physical type has flipped across driver testdata
   * generations (TIMESTAMP(NANOS) read as long via nanosAsLong, then
@@ -13,15 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * must normalize every generation to the same TimestampType instants so
   * a regeneration can never again break the timestamp-dependent queries.
   */
-class EventTsSuite extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .config("spark.sql.extensions", "graft.sql.GraftSparkExtension")
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class EventTsSuite extends AnyFunSuite with SharedSpark {
 
   // 2024-03-01T12:34:56.789012 UTC, as epoch micros
   private val micros = 1709296496789012L

@@ -1,7 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.testutil.SharedSpark
 
 /** Scale-critical plan shapes, pinned: these are the properties that
   * decide whether a plan survives 100× data — filters reaching the
@@ -10,15 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * whole-stage codegen. A green result set with the wrong plan is a
   * regression these specs catch before a benchmark does.
   */
-class PlanShapeSuite extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.sql.GraftSparkExtension")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PlanShapeSuite extends AnyFunSuite with SharedSpark {
 
   private val sfDir = "/root/testdata/sf0.001"
 

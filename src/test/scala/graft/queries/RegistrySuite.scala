@@ -2,13 +2,15 @@ package graft.queries
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.testutil.SharedSpark
+
 /** Registry integrity: `SparkEntry.queries`/`oracleSql` are built with
   * `.toMap`, where a duplicate key would silently drop the earlier
   * operator from the correctness gate (this actually happened in round
   * 12: C51 shadowed C15 under the shared key `sample_stratified`).
   * These pins make any future collision a hard test failure.
   */
-class RegistrySuite extends AnyFunSuite {
+class RegistrySuite extends AnyFunSuite with SharedSpark {
 
   test("registry names are unique (duplicate keys cannot shadow an operator)") {
     val names = graft.SparkEntry.registry.map(_.name)
@@ -25,6 +27,10 @@ class RegistrySuite extends AnyFunSuite {
     assert(graft.SparkEntry.oracleSql.contains("sample_stratum_report"))
   }
 
+  test("entry() on sf0.001 returns rows") {
+    assert(graft.SparkEntry.entry(spark).count() > 0)
+  }
+
   /** Read-side booleans a query may legitimately leave set for the whole
     * session: they gate how existing parquet is READ (ns-as-long event
     * timestamps; field-id resolution for column-mapped tables) and can
@@ -38,13 +44,6 @@ class RegistrySuite extends AnyFunSuite {
     "spark.sql.parquet.fieldId.read.enabled")
 
   test("no registry closure leaves an unrestored session-conf mutation") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .config("spark.sql.extensions", "graft.sql.GraftSparkExtension")
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     val sfDir = "/root/testdata/sf0.001"
     val leaks = scala.collection.mutable.ArrayBuffer.empty[String]
     graft.SparkEntry.registry.foreach { q =>

@@ -2,8 +2,9 @@ package graft.queries
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.testutil.SharedSpark
 
 /** stableCheckpoint: localCheckpoint by default (single-node), RELIABLE
   * checkpoint to shared storage when spark.graft.checkpointDir is set —
@@ -20,15 +21,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * else calls Dataset.checkpoint, and the localCheckpoint default path
   * never consults it.
   */
-class StableCheckpointSuite extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.sql.GraftSparkExtension")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StableCheckpointSuite extends AnyFunSuite with SharedSpark {
 
   private def withCheckpointConf(value: Option[String])(f: => Unit): Unit = {
     val prev = spark.conf.getOption("spark.graft.checkpointDir")

@@ -2,24 +2,17 @@ package graft.sources
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.delta.{DeltaTable, Metadata, Op}
+import graft.testutil.SharedSpark
 
 /** The `graft-delta` format: batch read/write, time travel options,
   * DV/column-mapping fallback relation, pushdown, streaming sink.
   */
-class GraftDeltaSourceSuite extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-      .config("spark.sql.extensions", "graft.sql.GraftSparkExtension")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GraftDeltaSourceSuite extends AnyFunSuite with SharedSpark {
 
   private def tmp(): String = Files.createTempDirectory("graft-src").toString
 

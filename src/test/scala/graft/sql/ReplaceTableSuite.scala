@@ -1,23 +1,16 @@
 package graft.sql
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.testutil.SharedSpark
 
 /** CREATE OR REPLACE TABLE ... USING graft-delta AS SELECT — one logged
   * transaction replacing schema, partitioning and data while preserving
   * the table's history (time travel to pre-replace versions keeps
   * working), on both named catalog tables and graft.`path` targets.
   */
-class ReplaceTableSuite extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.sql.GraftSparkExtension")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class ReplaceTableSuite extends AnyFunSuite with SharedSpark {
   private def tmp(): String =
     java.nio.file.Files.createTempDirectory("graft-ror").toString
 

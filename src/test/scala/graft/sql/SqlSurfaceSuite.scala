@@ -2,27 +2,18 @@ package graft.sql
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.delta.{DeltaTable, Op}
+import graft.testutil.SharedSpark
 
 /** The SQL surface (`graft.sql.GraftSparkExtension`): saveAsTable +
   * spark.table + INSERT through the metastore, SQL DELETE/UPDATE/MERGE,
   * and the OPTIMIZE / VACUUM / DESCRIBE HISTORY / RESTORE statements.
   */
-class SqlSurfaceSuite extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.sql.GraftSparkExtension")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
-      Files.createTempDirectory("graft-wh").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SqlSurfaceSuite extends AnyFunSuite with SharedSpark {
 
   private def tmp(): String = Files.createTempDirectory("graft-sql").toString
 

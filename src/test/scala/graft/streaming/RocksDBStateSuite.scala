@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.testutil.SharedSpark
 
 /** The stateful operators must run unchanged on the RocksDB state store
   * — the provider a real cluster uses at scale, where the default
@@ -10,19 +11,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * the engine's 100 TB configuration: same queries, same results, state
   * spilled to local RocksDB instances.
   */
-class RocksDBStateSuite extends AnyFunSuite {
+class RocksDBStateSuite extends AnyFunSuite with SharedSpark {
 
   private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
   private val RocksDB =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .config("spark.sql.extensions", "graft.sql.GraftSparkExtension")
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   /** Runs `body` with the RocksDB provider active, restoring the
     * session's previous provider afterwards (the JVM-shared session must

@@ -2,9 +2,10 @@ package graft.streaming
 
 import java.nio.file.{Files, StandardCopyOption}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.testutil.SharedSpark
 
 /** Pins the two-watermark model stream_late_drop depends on: since Spark
   * 3.4 the late-record FILTER runs one batch behind state EVICTION (the
@@ -19,15 +20,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the filter watermark is already set. If a Spark upgrade changes this
   * lag, this suite fails before the oracle does.
   */
-class WatermarkLagSuite extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .config("spark.sql.extensions", "graft.sql.GraftSparkExtension")
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class WatermarkLagSuite extends AnyFunSuite with SharedSpark {
 
   private val H = 3600L * 1000000 // one hour in micros
 
