@@ -1320,33 +1320,7 @@ class DeltaTable private (val spark: SparkSession, val deltaLog: DeltaLog) {
         operationMetrics = Map(
           "numDeletedFiles" -> (deletedCount + dvDeleted.size).toString))
     }
-    // UniForm: the swept files may still be referenced by OLDER Iceberg
-    // snapshots — a foreign reader's time travel would break silently.
-    // Expire every non-current Iceberg snapshot (retention 0), the
-    // Iceberg mirror of what this vacuum just did to Delta history.
-    // Gated on the table actually being UniForm: a FOREIGN metadata/
-    // dir (e.g. a table adopted via convertFromIceberg, which does not
-    // set the property) doesn't follow generate()'s naming conventions —
-    // snapshot ids are arbitrary longs, so regenerating + sweeping there
-    // would clobber the foreign view instead of trimming ours. Warn
-    // loudly instead: the foreign snapshot may now reference vacuumed
-    // files, and only its owner can expire it.
-    if (!dryRun && deletedCount > 0 && icebergMeta) {
-      val uniform = deltaLog.update().metadataOpt.exists(m =>
-        DeltaConfig.UniversalFormats.fromMetadata(m).contains("iceberg"))
-      if (uniform)
-        try IcebergMetadata.generate(spark, deltaLog, deltaLog.update(), Some(0L))
-        catch { case scala.util.control.NonFatal(e) =>
-          System.err.println(
-            s"WARN graft: post-VACUUM Iceberg snapshot expiry failed: ${e.getMessage}")
-        }
-      else System.err.println(
-        "WARN graft: VACUUM removed files under a table with a foreign " +
-          "Iceberg metadata/ dir (delta.universalFormat.enabledFormats " +
-          "does not include iceberg); its snapshots were NOT expired and " +
-          "may reference the deleted files — expire them with the engine " +
-          "that owns that metadata")
-    }
+    if (!dryRun && deletedCount > 0 && icebergMeta) expireIcebergSnapshots()
     VacuumResult(deletedCount + dvDeleted.size,
       (deletedSample ++ dvDeleted).take(reportLimit))
   }
@@ -1470,16 +1444,39 @@ class DeltaTable private (val spark: SparkSession, val deltaLog: DeltaLog) {
         operationParameters = Map("status" -> "COMPLETED"),
         operationMetrics = Map(
           "numDeletedFiles" -> (deletedCount + dvDeleted.size).toString))
-    // see vacuum(): Iceberg history must shrink with Delta history
     if (!dryRun && deletedCount > 0 && fs.exists(new Path(
         IcebergMetadata.metadataDir(deltaLog), "version-hint.text")))
+      expireIcebergSnapshots()
+    VacuumResult(deletedCount + dvDeleted.size,
+      (deletedSample ++ dvDeleted).take(reportLimit))
+  }
+
+  /** After a VACUUM deleted files under a table with a `metadata/` dir:
+    * the swept files may still be referenced by OLDER Iceberg snapshots —
+    * a foreign reader's time travel would break silently. Expire every
+    * non-current Iceberg snapshot (retention 0), the Iceberg mirror of
+    * what the vacuum just did to Delta history. Only on a UniForm table:
+    * a FOREIGN metadata/ dir (e.g. a table adopted via convertFromIceberg,
+    * which does not set the property) is not this engine's to rewrite —
+    * regenerating there would clobber the foreign view instead of
+    * trimming ours. Warn loudly instead: the foreign snapshot may now
+    * reference vacuumed files, and only its owner can expire it.
+    */
+  private def expireIcebergSnapshots(): Unit = {
+    val uniform = deltaLog.update().metadataOpt.exists(m =>
+      DeltaConfig.UniversalFormats.fromMetadata(m).contains("iceberg"))
+    if (uniform)
       try IcebergMetadata.generate(spark, deltaLog, deltaLog.update(), Some(0L))
       catch { case scala.util.control.NonFatal(e) =>
         System.err.println(
           s"WARN graft: post-VACUUM Iceberg snapshot expiry failed: ${e.getMessage}")
       }
-    VacuumResult(deletedCount + dvDeleted.size,
-      (deletedSample ++ dvDeleted).take(reportLimit))
+    else System.err.println(
+      "WARN graft: VACUUM removed files under a table with a foreign " +
+        "Iceberg metadata/ dir (delta.universalFormat.enabledFormats " +
+        "does not include iceberg); its snapshots were NOT expired and " +
+        "may reference the deleted files — expire them with the engine " +
+        "that owns that metadata")
   }
 
   /** UniForm: generate Iceberg metadata for the CURRENT snapshot (see

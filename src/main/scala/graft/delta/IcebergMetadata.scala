@@ -5,67 +5,35 @@ import java.nio.charset.StandardCharsets
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.avro.Schema
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
-import org.apache.avro.file.{DataFileReader, DataFileWriter}
+import org.apache.avro.file.{DataFileReader, DataFileWriter, FileReader}
+import org.apache.avro.mapred.FsInput
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col}
 import org.apache.spark.sql.types._
 
-/** One Iceberg manifest's summary, shipped back to the driver. Public:
-  * Spark's generated serializer code must reach the accessors (a
-  * private nested class silently drops whole-stage codegen to the
-  * interpreted path on every generation).
+/** One manifest-list record (the Iceberg spec's `manifest_file`): what a
+  * generation writes for each manifest it writes, and what it reads back
+  * from the previous list as the reuse pool — a reused manifest is
+  * carried into the new list BY REFERENCE with its original path,
+  * added_snapshot_id, sequence numbers, counts and partition summaries
+  * (Iceberg manifests are immutable and designed for exactly this reuse;
+  * incremental readers skip reused manifests wholesale by
+  * added_snapshot_id). Public: Spark's generated serializer code must
+  * reach the accessors (a private nested class silently drops whole-stage
+  * codegen to the interpreted path on every generation).
   */
-final case class IcebergManifestSummary(path: String, length: Long,
-    fileCount: Long, rowCount: Long,
-    // one triple per identity-partition column, positional:
-    // (contains_null, lower bound, upper bound) with bounds in the
-    // Iceberg single-value binary serialization
-    partSummaries: Seq[(Boolean, Option[Array[Byte]], Option[Array[Byte]])],
-    // files/rows carried forward from earlier snapshots (status
-    // EXISTING) vs newly added, and the oldest sequence number present —
-    // what Iceberg incremental consumers read from the manifest list
-    existingFileCount: Long = 0L, existingRowCount: Long = 0L,
-    minSeq: Option[Long] = None,
-    deletedFileCount: Long = 0L, deletedRowCount: Long = 0L)
-
-/** One manifest-list entry of the PREVIOUS generation, parsed in full on
-  * the driver: the reuse pool. A prev data manifest whose entries are all
-  * still live is carried into the new manifest list BY REFERENCE — same
-  * path, original added_snapshot_id / sequence numbers / counts /
-  * partition summaries (Iceberg manifests are immutable and designed for
-  * exactly this reuse; incremental readers skip reused manifests
-  * wholesale by added_snapshot_id).
-  */
-private[delta] final case class PrevManifest(path: String, length: Long,
+final case class IcebergManifestFile(path: String, length: Long,
     specId: Int, content: Int, seq: Long, minSeq: Long, addedSnapId: Long,
     addedFiles: Int, existingFiles: Int, deletedFiles: Int,
     addedRows: Long, existingRows: Long, deletedRows: Long,
+    // one triple per identity-partition column, positional:
+    // (contains_null, lower bound, upper bound) with bounds in the
+    // Iceberg single-value binary serialization
     partSummaries: Seq[(Boolean, Option[Array[Byte]], Option[Array[Byte]])])
-
-private[delta] object PrevManifest {
-  def of(r: GenericRecord): PrevManifest = {
-    def l(n: String) = Option(r.get(n)).map(_.asInstanceOf[Long]).getOrElse(0L)
-    def i(n: String) = Option(r.get(n)).map(_.asInstanceOf[Int]).getOrElse(0)
-    val parts = Option(r.get("partitions")).map(_
-      .asInstanceOf[java.util.Collection[GenericRecord]]
-      .iterator().asScala.map { p =>
-        def b(n: String) = Option(p.get(n)).map { v =>
-          val bb = v.asInstanceOf[java.nio.ByteBuffer].duplicate()
-          val a = new Array[Byte](bb.remaining()); bb.get(a); a
-        }
-        (p.get("contains_null").asInstanceOf[Boolean],
-          b("lower_bound"), b("upper_bound"))
-      }.toList).getOrElse(Nil)
-    PrevManifest(r.get("manifest_path").toString, l("manifest_length"),
-      i("partition_spec_id"), i("content"), l("sequence_number"),
-      l("min_sequence_number"), l("added_snapshot_id"),
-      i("added_files_count"), i("existing_files_count"),
-      i("deleted_files_count"), l("added_rows_count"),
-      l("existing_rows_count"), l("deleted_rows_count"), parts)
-  }
-}
 
 /** UniForm-style Iceberg metadata generation (delta-spark's
   * `delta.universalFormat.enabledFormats=iceberg` surface; public
@@ -131,8 +99,9 @@ private[delta] object PrevManifest {
   *
   * Honest simplifications vs the full UniForm implementation, each
   * loud or documented:
-  *  - when the DV set changes, ALL position-delete files regenerate
-  *    (new UUIDs, ADDED) — bounded by the DV'd-file count;
+  *  - when the DV set changes, every hash bucket holding a changed DV
+  *    rewrites ALL its position-delete files (new UUIDs, ADDED) — bounded
+  *    by the DV'd-file count of the changed buckets;
   *  - timestamp columns require the table to have been UniForm from
   *    before its first file (this engine then writes TIMESTAMP_MICROS
   *    parquet instead of Spark's INT96 default); on-demand generation
@@ -152,26 +121,40 @@ object IcebergMetadata {
     */
   private[delta] val IncrementalMaxEntries = 20000L
 
-  /** What every data manifest of one generation is written with; shipped
-    * to the executors by the general path.
+  // ---- the Iceberg manifest codec: every manifest-list and manifest
+  // read or write below goes through readList / readLive /
+  // writeManifest / writeList
+
+  /** What every manifest of one generation is written with; shipped to
+    * the executors by the general path. `content` 0 = data, 1 = deletes.
     */
   private final case class ManifestSpec(dirStr: String,
       entrySchemaJson: String, schemaJsonStr: String, schemaId: Int,
-      specFieldsJson: String, formatVersion: Int,
+      specId: Int, specFieldsJson: String, content: Int, formatVersion: Int,
       partMeta: Seq[(String, DataType)],
-      statsCols: Seq[(String, DataType, Int)], seqNum: Long)
+      statsCols: Seq[(String, DataType, Int)], snapshotId: Long, seqNum: Long)
 
-  /** One data-manifest entry: status (0 EXISTING, 1 ADDED, 2 DELETED),
-    * the snapshot id it records and its data sequence number (None for
+  /** A delete file a deletes manifest lists: a v2 position-delete parquet
+    * file, or (v3) one Puffin DV blob — `ref` the data file it applies
+    * to, `off`/`len` the blob's place in the Puffin file.
+    */
+  private final case class DeleteFile(path: String, size: Long, rows: Long,
+      ref: Option[String] = None, off: Option[Long] = None,
+      len: Option[Long] = None)
+
+  /** One manifest entry: status (0 EXISTING, 1 ADDED, 2 DELETED), the
+    * snapshot id it records and its data sequence number (None for
     * ADDED: inherited from the manifest list). The data_file is built from
-    * `add` at absolute path `fp`, or is `record`, copied verbatim from a
-    * previous manifest.
+    * `add` at absolute path `fp`, or from `del`, or is `record`, copied
+    * verbatim from a previous manifest.
     */
   private final case class ManifestEntry(status: Int, snapshotId: Long,
       seq: Option[Long], fp: String = null, add: AddFile = null,
-      record: GenericRecord = null) {
+      record: GenericRecord = null, del: DeleteFile = null) {
     def path: String =
-      if (record == null) fp else record.get("file_path").toString
+      if (record != null) record.get("file_path").toString
+      else if (del != null) del.path
+      else fp
     /** Typed partition tuple: the manifest clustering key. A value
       * sequence, so a null value and the string "null" stay apart.
       */
@@ -184,6 +167,274 @@ object IcebergMetadata {
       }
   }
 
+  /** A live manifest entry with its snapshot id and data sequence number
+    * resolved: a null one inherits the manifest's list entry (spec).
+    */
+  private final case class LiveEntry(snapshotId: Long, seq: Long,
+      dataFile: GenericRecord)
+
+  /** `name` of `r`; None when null or absent from the record's schema
+    * (format v1 files lack content and the sequence numbers, v1/v2 files
+    * the v3 fields).
+    */
+  private def fieldOf(r: GenericRecord, name: String): Option[AnyRef] =
+    if (r.getSchema.getField(name) == null) None else Option(r.get(name))
+
+  private def bytesOf(v: Any): Array[Byte] = {
+    val bb = v.asInstanceOf[java.nio.ByteBuffer].duplicate()
+    val a = new Array[Byte](bb.remaining()); bb.get(a); a
+  }
+
+  private def readAvro[T](path: Path, conf: Configuration)(
+      f: FileReader[GenericRecord] => T): T = {
+    val r = DataFileReader.openReader(new FsInput(path, conf),
+      new GenericDatumReader[GenericRecord]())
+    try f(r) finally r.close()
+  }
+
+  /** Every record of the manifest list at `path`, missing (v1) fields as
+    * 0.
+    */
+  private def readList(path: Path, conf: Configuration): Seq[IcebergManifestFile] =
+    readAvro(path, conf)(_.iterator().asScala.map { r =>
+      def l(n: String) = fieldOf(r, n).fold(0L)(_.asInstanceOf[Long])
+      def i(n: String) = fieldOf(r, n).fold(0)(_.asInstanceOf[Int])
+      val parts = fieldOf(r, "partitions").toList.flatMap(_
+        .asInstanceOf[java.util.Collection[GenericRecord]].asScala.map { p =>
+          (p.get("contains_null").asInstanceOf[Boolean],
+            Option(p.get("lower_bound")).map(bytesOf),
+            Option(p.get("upper_bound")).map(bytesOf))
+        })
+      IcebergManifestFile(r.get("manifest_path").toString, l("manifest_length"),
+        i("partition_spec_id"), i("content"), l("sequence_number"),
+        l("min_sequence_number"), l("added_snapshot_id"),
+        i("added_files_count"), i("existing_files_count"),
+        i("deleted_files_count"), l("added_rows_count"),
+        l("existing_rows_count"), l("deleted_rows_count"), parts)
+    }.toList)
+
+  /** `f` over manifest `m`'s entry schema and its LIVE entries (status 2,
+    * DELETED, is not live); the reader closes when `f` returns.
+    */
+  private def readLive[T](m: IcebergManifestFile, conf: Configuration)(
+      f: (Schema, Iterator[LiveEntry]) => T): T =
+    readAvro(new Path(m.path), conf) { r =>
+      f(r.getSchema, r.iterator().asScala
+        .filter(_.get("status").asInstanceOf[Int] != 2)
+        .map(e => LiveEntry(
+          fieldOf(e, "snapshot_id").fold(m.addedSnapId)(_.asInstanceOf[Long]),
+          fieldOf(e, "sequence_number").fold(m.seq)(_.asInstanceOf[Long]),
+          e.get("data_file").asInstanceOf[GenericRecord])))
+    }
+
+  private def avroWriter(path: Path, conf: Configuration, schema: Schema,
+      meta: Seq[(String, String)]): DataFileWriter[GenericRecord] = {
+    val w = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](schema))
+    meta.foreach { case (k, v) => w.setMeta(k, v) }
+    w.create(schema, path.getFileSystem(conf).create(path, true))
+  }
+
+  /** Write ONE manifest from an entry iterator — the general path's
+    * distributed rewrite (one call per shuffle partition, on executors),
+    * the incremental path (driver-side, one call per partition tuple) and
+    * the deletes manifest. Empty iterator → no file, empty result.
+    */
+  private def writeManifest(entries: Iterator[ManifestEntry],
+      conf: Configuration, ms: ManifestSpec): Iterator[IcebergManifestFile] = {
+    import ms.{partMeta, statsCols}
+    if (!entries.hasNext) return Iterator.empty
+    val entrySchema = new Schema.Parser().parse(ms.entrySchemaJson)
+    val dfSchema = entrySchema.getField("data_file").schema()
+    val pSchema = dfSchema.getField("partition").schema()
+    val statsMapper = new ObjectMapper()
+    def kvArray(field: String,
+        pairs: Seq[(Int, Any)]): GenericData.Array[GenericRecord] = {
+      val arrS = dfSchema.getField(field).schema().getTypes.asScala
+        .find(_.getType == Schema.Type.ARRAY).get
+      val arr = new GenericData.Array[GenericRecord](pairs.length, arrS)
+      pairs.foreach { case (k, v) =>
+        val r = new GenericData.Record(arrS.getElementType)
+        r.put("key", k)
+        r.put("value", v)
+        arr.add(r)
+      }
+      arr
+    }
+    def dataFileOf(fp: String, a: AddFile): GenericRecord = {
+      val df = new GenericData.Record(dfSchema)
+      df.put("content", 0)
+      df.put("file_path", fp)
+      df.put("file_format", "PARQUET")
+      // v3 row lineage: EXPLICIT per-file first_row_id = the Delta
+      // base row id (stable across generations; tombstones carry
+      // the vanished file's original id)
+      if (ms.formatVersion >= 3)
+        df.put("first_row_id",
+          a.baseRowId.map(java.lang.Long.valueOf).orNull)
+      val p = new GenericData.Record(pSchema)
+      partMeta.foreach { case (pn, dt) =>
+        p.put(pn, parsePartValue(dt, a.partitionValues.getOrElse(pn, null)))
+      }
+      df.put("partition", p)
+      // record_count is the PHYSICAL row count: deletion vectors
+      // subtract at read time through the position-delete files
+      val rc = Stats.numRecords(a.stats).getOrElse(
+        throw new IllegalStateException(
+          s"Iceberg metadata requires numRecords stats; missing on ${a.path}"))
+      df.put("record_count", rc)
+      df.put("file_size_in_bytes", a.size)
+      // per-file column stats from the Delta stats JSON: value
+      // counts (top-level = record count), null counts, and typed
+      // bounds in the single-value serialization — the inputs to
+      // Iceberg's FILE-level skipping, completing the chain
+      // manifest-list summary -> manifest entry -> data file
+      if (a.stats != null && a.stats.nonEmpty && statsCols.nonEmpty) {
+        val st = statsMapper.readTree(a.stats)
+        df.put("value_counts",
+          kvArray("value_counts", statsCols.map(c => (c._3, rc: Any))))
+        val nulls = Option(st.get("nullCount"))
+        if (nulls.nonEmpty)
+          df.put("null_value_counts", kvArray("null_value_counts",
+            statsCols.flatMap { case (nme, _, id) =>
+              Option(nulls.get.get(nme)).filter(_.isNumber)
+                .map(n => (id, n.asLong: Any))
+            }))
+        def bounds(key: String, isUpper: Boolean): Seq[(Int, Any)] =
+          Option(st.get(key)).toSeq.flatMap { b =>
+            statsCols.flatMap { case (nme, dt, id) =>
+              statBound(dt, b.get(nme), isUpper)
+                .map(bs => (id, java.nio.ByteBuffer.wrap(bs): Any))
+            }
+          }
+        val lows = bounds("minValues", isUpper = false)
+        if (lows.nonEmpty) df.put("lower_bounds", kvArray("lower_bounds", lows))
+        val highs = bounds("maxValues", isUpper = true)
+        if (highs.nonEmpty) df.put("upper_bounds", kvArray("upper_bounds", highs))
+      }
+      df
+    }
+    def deleteFileOf(d: DeleteFile): GenericRecord = {
+      val df = new GenericData.Record(dfSchema)
+      df.put("content", 1) // POSITION_DELETES (v3: a Puffin DV blob)
+      df.put("file_path", d.path)
+      df.put("file_format", if (ms.formatVersion >= 3) "PUFFIN" else "PARQUET")
+      df.put("partition", new GenericData.Record(pSchema))
+      df.put("record_count", d.rows)
+      df.put("file_size_in_bytes", d.size)
+      if (ms.formatVersion >= 3) {
+        df.put("referenced_data_file", d.ref.orNull)
+        df.put("content_offset", d.off.map(java.lang.Long.valueOf).orNull)
+        df.put("content_size_in_bytes", d.len.map(java.lang.Long.valueOf).orNull)
+      }
+      df
+    }
+    val deletes = ms.content == 1
+    val out = new Path(ms.dirStr,
+      s"${java.util.UUID.randomUUID()}-${if (deletes) "d0" else "m0"}.avro")
+    // key-value file metadata the Iceberg spec requires on every
+    // manifest — conformant readers refuse files without it
+    val w = avroWriter(out, conf, entrySchema, Seq(
+      "schema" -> ms.schemaJsonStr, "schema-id" -> ms.schemaId.toString,
+      "partition-spec" -> ms.specFieldsJson,
+      "partition-spec-id" -> ms.specId.toString,
+      "format-version" -> ms.formatVersion.toString,
+      "content" -> (if (deletes) "deletes" else "data")))
+    // per-status (files, rows)
+    val files = Array.fill(3)(0)
+    val rows = Array.fill(3)(0L)
+    var minSeq = Long.MaxValue
+    // per-partition-column field_summary state
+    val containsNull = Array.fill(partMeta.length)(false)
+    val lo = Array.fill[Any](partMeta.length)(null)
+    val hi = Array.fill[Any](partMeta.length)(null)
+    entries.foreach { en =>
+      val rec = new GenericData.Record(entrySchema)
+      // EXISTING and DELETED entries store their sequence numbers
+      // explicitly (spec: only ADDED entries inherit from the
+      // manifest list); a DELETED tombstone's snapshot_id is the
+      // deleting snapshot, its data sequence the file's own
+      rec.put("status", en.status)
+      rec.put("snapshot_id", en.snapshotId)
+      en.seq.foreach { sq =>
+        rec.put("sequence_number", sq)
+        rec.put("file_sequence_number", sq)
+      }
+      minSeq = math.min(minSeq, en.seq.getOrElse(ms.seqNum))
+      val df =
+        if (en.record != null) en.record
+        else if (en.del != null) deleteFileOf(en.del)
+        else dataFileOf(en.fp, en.add)
+      en.tuple(partMeta).zipWithIndex.foreach { case (v, i) =>
+        if (v == null) containsNull(i) = true
+        else {
+          if (lo(i) == null || less(v, lo(i))) lo(i) = v
+          if (hi(i) == null || less(hi(i), v)) hi(i) = v
+        }
+      }
+      rec.put("data_file", df)
+      w.append(rec)
+      files(en.status) += 1
+      rows(en.status) += df.get("record_count").asInstanceOf[Long]
+    }
+    w.close()
+    val sums = partMeta.indices.map { i =>
+      (containsNull(i),
+        Option(lo(i)).map(v => boundBytes(partMeta(i)._2, v)),
+        Option(hi(i)).map(v => boundBytes(partMeta(i)._2, v)))
+    }
+    Iterator(IcebergManifestFile(out.toString,
+      out.getFileSystem(conf).getFileStatus(out).getLen, ms.specId,
+      ms.content, ms.seqNum, minSeq, ms.snapshotId, files(1), files(0),
+      files(2), rows(1), rows(0), rows(2), sums))
+  }
+
+  /** Write the manifest list of `ms`'s snapshot: one record per manifest,
+    * reused and freshly written alike.
+    */
+  private def writeList(listPath: Path, conf: Configuration, ms: ManifestSpec,
+      parentId: Option[Long], manifests: Seq[IcebergManifestFile]): Unit = {
+    val schema = new Schema.Parser().parse(manifestListSchemaFor(ms.formatVersion))
+    val partsSchema = schema.getField("partitions").schema().getTypes.asScala
+      .find(_.getType == Schema.Type.ARRAY).get
+    val w = avroWriter(listPath, conf, schema, Seq(
+      "format-version" -> ms.formatVersion.toString,
+      "snapshot-id" -> ms.snapshotId.toString,
+      "sequence-number" -> ms.seqNum.toString) ++
+      parentId.map(p => "parent-snapshot-id" -> p.toString))
+    manifests.foreach { m =>
+      val rec = new GenericData.Record(schema)
+      rec.put("manifest_path", m.path)
+      rec.put("manifest_length", m.length)
+      rec.put("partition_spec_id", m.specId)
+      rec.put("content", m.content)
+      rec.put("sequence_number", m.seq)
+      rec.put("min_sequence_number", m.minSeq)
+      rec.put("added_snapshot_id", m.addedSnapId)
+      rec.put("added_files_count", m.addedFiles)
+      rec.put("existing_files_count", m.existingFiles)
+      rec.put("deleted_files_count", m.deletedFiles)
+      rec.put("added_rows_count", m.addedRows)
+      rec.put("existing_rows_count", m.existingRows)
+      rec.put("deleted_rows_count", m.deletedRows)
+      // field_summary per identity-partition column: planning can skip
+      // a whole manifest when a partition predicate falls outside
+      // [lower, upper] — never opening it
+      if (m.partSummaries.nonEmpty) {
+        val arr = new GenericData.Array[GenericRecord](m.partSummaries.length, partsSchema)
+        m.partSummaries.foreach { case (containsNull, lower, upper) =>
+          val r = new GenericData.Record(partsSchema.getElementType)
+          r.put("contains_null", containsNull)
+          r.put("lower_bound", lower.map(java.nio.ByteBuffer.wrap).orNull)
+          r.put("upper_bound", upper.map(java.nio.ByteBuffer.wrap).orNull)
+          arr.add(r)
+        }
+        rec.put("partitions", arr)
+      }
+      w.append(rec)
+    }
+    w.close()
+  }
+
   private def avroValue(v: Any): Any = v match {
     case u: org.apache.avro.util.Utf8 => u.toString
     case o => o
@@ -194,153 +445,6 @@ object IcebergMetadata {
     case (x: java.lang.Long, y: java.lang.Long) => x < y
     case (x: String, y: String) => x < y
     case _ => false
-  }
-
-  /** Write ONE data manifest from an entry iterator — shared by the
-    * general path's distributed rewrite (one call per shuffle partition,
-    * on executors) and the incremental path (driver-side, one call per
-    * partition tuple). Empty iterator → no file, empty result.
-    */
-  private def writeDataManifestFile(entries: Iterator[ManifestEntry],
-      conf: org.apache.hadoop.conf.Configuration,
-      ms: ManifestSpec): Iterator[IcebergManifestSummary] = {
-        import ms.{partMeta, statsCols}
-        if (!entries.hasNext) Iterator.empty
-        else {
-          val entrySchema = new org.apache.avro.Schema.Parser().parse(ms.entrySchemaJson)
-          val dfSchema = entrySchema.getField("data_file").schema()
-          val pSchema = dfSchema.getField("partition").schema()
-          val statsMapper = new ObjectMapper()
-          def mapArraySchema(field: String): org.apache.avro.Schema =
-            dfSchema.getField(field).schema().getTypes.asScala
-              .find(_.getType == org.apache.avro.Schema.Type.ARRAY).get
-          def kvArray(field: String,
-              pairs: Seq[(Int, Any)]): GenericData.Array[GenericRecord] = {
-            val arrS = mapArraySchema(field)
-            val arr = new GenericData.Array[GenericRecord](pairs.length, arrS)
-            pairs.foreach { case (k, v) =>
-              val r = new GenericData.Record(arrS.getElementType)
-              r.put("key", k)
-              r.put("value", v)
-              arr.add(r)
-            }
-            arr
-          }
-          def dataFileOf(fp: String, a: AddFile): GenericRecord = {
-            val df = new GenericData.Record(dfSchema)
-            df.put("content", 0)
-            df.put("file_path", fp)
-            df.put("file_format", "PARQUET")
-            // v3 row lineage: EXPLICIT per-file first_row_id = the Delta
-            // base row id (stable across generations; tombstones carry
-            // the vanished file's original id)
-            if (ms.formatVersion >= 3)
-              df.put("first_row_id",
-                a.baseRowId.map(java.lang.Long.valueOf).orNull)
-            val p = new GenericData.Record(pSchema)
-            partMeta.foreach { case (pn, dt) =>
-              p.put(pn, parsePartValue(dt, a.partitionValues.getOrElse(pn, null)))
-            }
-            df.put("partition", p)
-            // record_count is the PHYSICAL row count: deletion vectors
-            // subtract at read time through the position-delete files
-            val rc = Stats.numRecords(a.stats).getOrElse(
-              throw new IllegalStateException(
-                s"Iceberg metadata requires numRecords stats; missing on ${a.path}"))
-            df.put("record_count", rc)
-            df.put("file_size_in_bytes", a.size)
-            // per-file column stats from the Delta stats JSON: value
-            // counts (top-level = record count), null counts, and typed
-            // bounds in the single-value serialization — the inputs to
-            // Iceberg's FILE-level skipping, completing the chain
-            // manifest-list summary -> manifest entry -> data file
-            if (a.stats != null && a.stats.nonEmpty && statsCols.nonEmpty) {
-              val st = statsMapper.readTree(a.stats)
-              df.put("value_counts",
-                kvArray("value_counts", statsCols.map(c => (c._3, rc: Any))))
-              val nulls = Option(st.get("nullCount"))
-              if (nulls.nonEmpty)
-                df.put("null_value_counts", kvArray("null_value_counts",
-                  statsCols.flatMap { case (nme, _, id) =>
-                    Option(nulls.get.get(nme)).filter(_.isNumber)
-                      .map(n => (id, n.asLong: Any))
-                  }))
-              def bounds(key: String, isUpper: Boolean): Seq[(Int, Any)] =
-                Option(st.get(key)).toSeq.flatMap { b =>
-                  statsCols.flatMap { case (nme, dt, id) =>
-                    statBound(dt, b.get(nme), isUpper)
-                      .map(bs => (id, java.nio.ByteBuffer.wrap(bs): Any))
-                  }
-                }
-              val lows = bounds("minValues", isUpper = false)
-              if (lows.nonEmpty) df.put("lower_bounds", kvArray("lower_bounds", lows))
-              val highs = bounds("maxValues", isUpper = true)
-              if (highs.nonEmpty) df.put("upper_bounds", kvArray("upper_bounds", highs))
-            }
-            df
-          }
-          val name = f"${java.util.UUID.randomUUID()}-m0.avro"
-          val out = new Path(ms.dirStr, name)
-          val fsx = out.getFileSystem(conf)
-          val stream = fsx.create(out, true)
-          val w = new DataFileWriter[GenericRecord](
-            new GenericDatumWriter[GenericRecord](entrySchema))
-          // key-value file metadata the Iceberg spec requires on every
-          // manifest — conformant readers refuse files without it
-          w.setMeta("schema", ms.schemaJsonStr)
-          w.setMeta("schema-id", ms.schemaId.toString)
-          w.setMeta("partition-spec", ms.specFieldsJson)
-          w.setMeta("partition-spec-id", "0")
-          w.setMeta("format-version", ms.formatVersion.toString)
-          w.setMeta("content", "data")
-          w.create(entrySchema, stream)
-          // per-status (files, rows)
-          val files = Array.fill(3)(0L)
-          val rows = Array.fill(3)(0L)
-          var minSeq = Long.MaxValue
-          // per-partition-column field_summary state
-          val containsNull = Array.fill(partMeta.length)(false)
-          val lo = Array.fill[Any](partMeta.length)(null)
-          val hi = Array.fill[Any](partMeta.length)(null)
-          entries.foreach { en =>
-            val rec = new GenericData.Record(entrySchema)
-            // EXISTING and DELETED entries store their sequence numbers
-            // explicitly (spec: only ADDED entries inherit from the
-            // manifest list); a DELETED tombstone's snapshot_id is the
-            // deleting snapshot, its data sequence the file's own
-            rec.put("status", en.status)
-            rec.put("snapshot_id", en.snapshotId)
-            en.seq.foreach { sq =>
-              rec.put("sequence_number", sq)
-              rec.put("file_sequence_number", sq)
-            }
-            minSeq = math.min(minSeq, en.seq.getOrElse(ms.seqNum))
-            val df = if (en.record != null) en.record else dataFileOf(en.fp, en.add)
-            en.tuple(partMeta).zipWithIndex.foreach { case (v, i) =>
-              if (v == null) containsNull(i) = true
-              else {
-                if (lo(i) == null || less(v, lo(i))) lo(i) = v
-                if (hi(i) == null || less(hi(i), v)) hi(i) = v
-              }
-            }
-            rec.put("data_file", df)
-            w.append(rec)
-            files(en.status) += 1
-            rows(en.status) += df.get("record_count").asInstanceOf[Long]
-          }
-          w.close()
-          val len = fsx.getFileStatus(out).getLen
-          val sums = partMeta.indices.map { i =>
-            (containsNull(i),
-              Option(lo(i)).map(v => boundBytes(partMeta(i)._2, v)),
-              Option(hi(i)).map(v => boundBytes(partMeta(i)._2, v)))
-          }
-          Iterator(IcebergManifestSummary(out.toString, len, files(1), rows(1),
-            sums, files(0), rows(0),
-            if (minSeq == Long.MaxValue) None else Some(minSeq),
-            files(2), rows(2)))
-        }
-
   }
 
   def metadataDir(log: DeltaLog): Path = new Path(log.dataPath, "metadata")
@@ -748,6 +852,14 @@ object IcebergMetadata {
     case other => throw new UnsupportedOperationException(other.simpleString)
   }
 
+  /** Delta partition-value string of a manifest partition-struct value:
+    * the inverse of [[parsePartValue]].
+    */
+  private def partValueString(dt: DataType, v: Any): String =
+    if (v == null) null
+    else if (dt == DateType) java.time.LocalDate.ofEpochDay(v.asInstanceOf[Int].toLong).toString
+    else v.toString
+
   /** The incremental path's plan for one commit: its adds, the previous
     * data manifests it rewrites, and the entries of their replacements.
     */
@@ -775,9 +887,8 @@ object IcebergMetadata {
     * another entry schema; or past [[IncrementalMaxEntries]] entries.
     */
   private def planIncremental(actions: Seq[Action],
-      prevDataMs: Seq[PrevManifest], ms: ManifestSpec, root: Path,
-      conf: org.apache.hadoop.conf.Configuration,
-      snapshotId: Long): Option[IncrementalPlan] = {
+      prevDataMs: Seq[IcebergManifestFile], ms: ManifestSpec, root: Path,
+      conf: Configuration, snapshotId: Long): Option[IncrementalPlan] = {
     def hasDv(d: DeletionVectorDescriptor, tags: Map[String, String]): Boolean =
       d != null || (tags != null && tags.contains(DeletionVectors.PathTag))
     val adds = actions.collect { case a: AddFile => a }
@@ -799,37 +910,28 @@ object IcebergMetadata {
         added.exists(removed) ||
         opened.map(m => m.addedFiles.toLong + m.existingFiles + m.deletedFiles)
           .sum + adds.size > IncrementalMaxEntries) return None
-    val entrySchema = new org.apache.avro.Schema.Parser().parse(ms.entrySchemaJson)
+    val entrySchema = new Schema.Parser().parse(ms.entrySchemaJson)
     val addedSet = added.toSet
     val rewritten = Set.newBuilder[String]
     val entries = Seq.newBuilder[ManifestEntry]
     var found = 0
-    val consistent = opened.forall { m =>
-      val r = DataFileReader.openReader(
-        new org.apache.avro.mapred.FsInput(new Path(m.path), conf),
-        new GenericDatumReader[GenericRecord]())
-      try r.getSchema == entrySchema && {
-        val live = r.iterator().asScala
-          .filter(_.get("status").asInstanceOf[Int] != 2).toList
-        def dataFile(e: GenericRecord) = e.get("data_file").asInstanceOf[GenericRecord]
-        val hits = live.count(e => removed(dataFile(e).get("file_path").toString))
+    val consistent = opened.forall(m => readLive(m, conf) { (schema, it) =>
+      schema == entrySchema && {
+        val live = it.toList
+        def fp(e: LiveEntry) = e.dataFile.get("file_path").toString
+        val hits = live.count(e => removed(fp(e)))
         if (hits > 0) {
           rewritten += m.path
           found += hits
           live.foreach { e =>
-            val df = dataFile(e)
-            val seq = Some(Option(e.get("sequence_number"))
-              .map(_.asInstanceOf[Long]).getOrElse(m.seq))
-            entries += (
-              if (removed(df.get("file_path").toString))
-                ManifestEntry(2, snapshotId, seq, record = df)
-              else ManifestEntry(0, Option(e.get("snapshot_id"))
-                .map(_.asInstanceOf[Long]).getOrElse(m.addedSnapId), seq, record = df))
+            entries += ManifestEntry(if (removed(fp(e))) 2 else 0,
+              if (removed(fp(e))) snapshotId else e.snapshotId, Some(e.seq),
+              record = e.dataFile)
           }
         }
-        !live.exists(e => addedSet(dataFile(e).get("file_path").toString))
-      } finally r.close()
-    }
+        !live.exists(e => addedSet(fp(e)))
+      }
+    })
     if (!consistent || found != removed.size) None
     else Some(IncrementalPlan(adds, rewritten.result(), entries.result() ++
       adds.zip(added).map { case (a, fp) => ManifestEntry(1, snapshotId, None, fp, a) }))
@@ -839,7 +941,7 @@ object IcebergMetadata {
     * from its manifest-list partition summaries (unknown values or
     * summaries: it can).
     */
-  private def mayHold(m: PrevManifest, pv: Map[String, String],
+  private def mayHold(m: IcebergManifestFile, pv: Map[String, String],
       partMeta: Seq[(String, DataType)]): Boolean =
     pv == null || m.partSummaries.size != partMeta.size ||
       partMeta.zip(m.partSummaries).forall { case ((pn, dt), (hasNull, lo, hi)) =>
@@ -866,52 +968,34 @@ object IcebergMetadata {
     * snapshot's file set — never driver-sized.
     */
   private def generalManifests(spark: SparkSession, snapshot: Snapshot,
-      prevDataMs: Seq[PrevManifest], reuseCandidates: Boolean,
+      prevDataMs: Seq[IcebergManifestFile], reuseCandidates: Boolean,
       manifestSpec: ManifestSpec, snapshotId: Long,
-      hconf: SerializableHadoopConf): (Set[String], Seq[IcebergManifestSummary]) = {
+      hconf: SerializableHadoopConf): (Set[String], Seq[IcebergManifestFile]) = {
     import spark.implicits._
     val partMeta = manifestSpec.partMeta
     val seqNum = manifestSpec.seqNum
     val prevFileInfo: Option[DataFrame] =
       if (prevDataMs.isEmpty) None
       else Some(spark.sparkContext
-        .parallelize(prevDataMs.map(m => (m.path, m.seq)),
-          math.max(1, prevDataMs.size))
-        .flatMap { case (mp, listSeq) =>
+        .parallelize(prevDataMs, math.max(1, prevDataMs.size))
+        .flatMap { m =>
           val localPartMeta = partMeta
-          val mr = DataFileReader.openReader(
-            new org.apache.avro.mapred.FsInput(new Path(mp), hconf.value),
-            new GenericDatumReader[GenericRecord]())
-          try mr.iterator().asScala
-            .filter(_.get("status").asInstanceOf[Int] != 2)
-            .map { e =>
-              val df = e.get("data_file").asInstanceOf[GenericRecord]
-              // partition values + counts ride along so a file that
-              // VANISHES this generation can be written as a DELETED
-              // tombstone entry without re-opening anything
-              val struct = df.get("partition").asInstanceOf[GenericRecord]
-              val pvs: Map[String, String] = localPartMeta.map { case (pn, dt) =>
-                val v = struct.get(pn)
-                pn -> (if (v == null) null else dt match {
-                  case DateType => java.time.LocalDate
-                    .ofEpochDay(v.asInstanceOf[Int].toLong).toString
-                  case _ => v.toString
-                })
-              }.toMap
-              (mp, df.get("file_path").toString,
-                Option(e.get("snapshot_id")).map(_.asInstanceOf[Long])
-                  .getOrElse(0L),
-                Option(e.get("sequence_number")).map(_.asInstanceOf[Long])
-                  .getOrElse(listSeq),
-                pvs,
-                df.get("record_count").asInstanceOf[Long],
-                df.get("file_size_in_bytes").asInstanceOf[Long],
-                // v3 row lineage rides along so a DELETED tombstone can
-                // preserve the vanished file's first_row_id
-                (if (df.getSchema.getField("first_row_id") == null) None
-                 else Option(df.get("first_row_id")).map(_.asInstanceOf[Long])))
-            }.toList
-          finally mr.close()
+          readLive(m, hconf.value)((_, live) => live.map { e =>
+            val df = e.dataFile
+            // partition values + counts ride along so a file that
+            // VANISHES this generation can be written as a DELETED
+            // tombstone entry without re-opening anything
+            val struct = df.get("partition").asInstanceOf[GenericRecord]
+            val pvs: Map[String, String] = localPartMeta.map { case (pn, dt) =>
+              pn -> partValueString(dt, struct.get(pn))
+            }.toMap
+            (m.path, df.get("file_path").toString, e.snapshotId, e.seq, pvs,
+              df.get("record_count").asInstanceOf[Long],
+              df.get("file_size_in_bytes").asInstanceOf[Long],
+              // v3 row lineage rides along so a DELETED tombstone can
+              // preserve the vanished file's first_row_id
+              fieldOf(df, "first_row_id").map(_.asInstanceOf[Long]))
+          }.toList)
         }.toDF("mp", "fp", "prev_snap", "prev_seq", "pvs", "rc", "fsize", "frid")
         // read three times below (reuse vote, lineage join, tombstone
         // anti-join) — cache so the Avro manifests are opened once
@@ -1016,7 +1100,7 @@ object IcebergMetadata {
     // genuinely new files — and a same-version regeneration's own
     // files — are ADDED by this snapshot
     val written = clusteredFiles.mapPartitions(files =>
-        writeDataManifestFile(files.map {
+        writeManifest(files.map {
           case (fp, a, _, prevSeq, true) =>
             ManifestEntry(2, snapshotId, Some(prevSeq.getOrElse(seqNum)), fp, a)
           case (fp, a, Some(ps), prevSeq, _) if ps != snapshotId =>
@@ -1225,35 +1309,27 @@ object IcebergMetadata {
     }
     val manifestSpec = ManifestSpec(dirStr,
       manifestEntrySchemaJson(partitionStructSchemaJson(partCols), formatVersion),
-      schemaJsonStr, schemaId, specFieldsJson, formatVersion, partMeta,
+      schemaJsonStr, schemaId, 0, specFieldsJson, 0, formatVersion, partMeta,
       schema.fields.toSeq.filter(f => statsSupported(f.dataType))
         .map(f => (f.name, f.dataType, fieldIds(f.name))),
-      seqNum)
+      snapshotId, seqNum)
     import spark.implicits._
     // previous generation's manifest-list entries, parsed in full on the
     // driver (O(#manifests)): both the lineage source and the REUSE pool.
     // None when unreadable: no reuse and no incremental path, every live
     // file enters as ADDED (full-scan readers unaffected; incremental
     // ones re-see old files once)
-    val prevListRead: Option[Seq[PrevManifest]] = prev.flatMap { p =>
+    val prevCurSnap: Option[JsonNode] = prev.flatMap(p =>
       p.get("snapshots").elements().asScala
-        .find(_.get("snapshot-id").asLong == p.get("current-snapshot-id").asLong)
-        .flatMap { sn =>
-          try {
-            val r = DataFileReader.openReader(new org.apache.avro.mapred.FsInput(
-              new Path(sn.get("manifest-list").asText), fs.getConf),
-              new GenericDatumReader[GenericRecord]())
-            try Some(r.iterator().asScala.map(PrevManifest.of).toList)
-            finally r.close()
-          } catch { case scala.util.control.NonFatal(_) => None }
-        }
+        .find(_.get("snapshot-id").asLong == p.get("current-snapshot-id").asLong))
+    val prevListRead: Option[Seq[IcebergManifestFile]] = prevCurSnap.flatMap { sn =>
+      try Some(readList(new Path(sn.get("manifest-list").asText), fs.getConf))
+      catch { case scala.util.control.NonFatal(_) => None }
     }
     val prevList = prevListRead.getOrElse(Nil)
     val prevDataMs = prevList.filter(_.content == 0)
-    val prevCurSummary: Option[JsonNode] = prev.flatMap(p =>
-      p.get("snapshots").elements().asScala
-        .find(_.get("snapshot-id").asLong == p.get("current-snapshot-id").asLong)
-        .flatMap(sn => Option(sn.get("summary"))))
+    val prevCurSummary: Option[JsonNode] =
+      prevCurSnap.flatMap(sn => Option(sn.get("summary")))
     val prevDvFp: Option[String] = prevCurSummary
       .flatMap(su => Option(su.get("graft.dv-fingerprint")).map(_.asText))
     val prevBucketFps: Map[Int, String] = prevCurSummary
@@ -1300,7 +1376,7 @@ object IcebergMetadata {
             .flatMap(_.baseRowId).minOption
         case None => firstRowIdGeneral()
       }
-    val (reusableMps, summaries): (Set[String], Seq[IcebergManifestSummary]) =
+    val (reusableMps, written): (Set[String], Seq[IcebergManifestFile]) =
       incr match {
         case Some(plan) =>
           // one manifest per partition tuple (tight field_summary bounds,
@@ -1309,7 +1385,7 @@ object IcebergMetadata {
           (prevDataMs.map(_.path).toSet -- plan.rewritten,
             plan.entries.groupBy(_.tuple(partMeta)).values.toSeq
               .sortBy(_.map(_.path).min)
-              .flatMap(g => writeDataManifestFile(g.sortBy(_.path).iterator,
+              .flatMap(g => writeManifest(g.sortBy(_.path).iterator,
                 fs.getConf, manifestSpec)))
         case None => generalManifests(spark, snapshot, prevDataMs,
           reuseCandidates, manifestSpec, snapshotId, hconf)
@@ -1380,56 +1456,40 @@ object IcebergMetadata {
     // files)): the per-bucket reuse pool. Files from pre-bucketing
     // generations carry no __bucket= path segment -> bucket None ->
     // never partially reused (one full rewrite migrates the layout).
-    case class PrevDelFile(path: String, len: Long, rc: Long,
-        snap: Long, seq: Long, bucket: Option[Int],
-        // v3 Puffin DV entries re-emit their blob coordinates verbatim
-        ref: Option[String] = None, blobOff: Option[Long] = None,
-        blobLen: Option[Long] = None)
+    // Each re-enters the new deletes manifest as EXISTING with its
+    // original snapshot and sequence (v3 Puffin DV entries re-emit their
+    // blob coordinates verbatim).
     val BucketDirRe = ".*/__bucket=(\\d+)/[^/]+$".r
-    val prevDelFiles: Seq[PrevDelFile] =
+    def bucketOf(e: ManifestEntry): Option[Int] =
+      e.path match { case BucketDirRe(b) => Some(b.toInt); case _ => None }
+    val prevDelFiles: Seq[ManifestEntry] =
       if (reuseDeletes || dvFiles.isEmpty || !specUnchanged || prevDeleteMs.isEmpty) Nil
       else prevDeleteMs.flatMap { m =>
-        try {
-          val r = DataFileReader.openReader(
-            new org.apache.avro.mapred.FsInput(new Path(m.path), fs.getConf),
-            new GenericDatumReader[GenericRecord]())
-          try r.iterator().asScala
-            .filter(_.get("status").asInstanceOf[Int] != 2)
-            .map { e =>
-              val df = e.get("data_file").asInstanceOf[GenericRecord]
-              val p = df.get("file_path").toString
-              def opt(field: String): Option[Any] =
-                if (df.getSchema.getField(field) == null) None
-                else Option(df.get(field))
-              PrevDelFile(p,
-                df.get("file_size_in_bytes").asInstanceOf[Long],
-                df.get("record_count").asInstanceOf[Long],
-                Option(e.get("snapshot_id")).map(_.asInstanceOf[Long])
-                  .getOrElse(m.addedSnapId),
-                Option(e.get("sequence_number")).map(_.asInstanceOf[Long])
-                  .getOrElse(m.seq),
-                p match { case BucketDirRe(b) => Some(b.toInt); case _ => None },
-                opt("referenced_data_file").map(_.toString),
-                opt("content_offset").map(_.asInstanceOf[Long]),
-                opt("content_size_in_bytes").map(_.asInstanceOf[Long]))
-            }.toList
-          finally r.close()
-        } catch { case scala.util.control.NonFatal(_) => Nil }
+        try readLive(m, fs.getConf)((_, live) => live.map { e =>
+          val df = e.dataFile
+          ManifestEntry(0, e.snapshotId, Some(e.seq), del = DeleteFile(
+            df.get("file_path").toString,
+            df.get("file_size_in_bytes").asInstanceOf[Long],
+            df.get("record_count").asInstanceOf[Long],
+            fieldOf(df, "referenced_data_file").map(_.toString),
+            fieldOf(df, "content_offset").map(_.asInstanceOf[Long]),
+            fieldOf(df, "content_size_in_bytes").map(_.asInstanceOf[Long])))
+        }.toList)
+        catch { case scala.util.control.NonFatal(_) => Nil }
       }
     val reusableDelBuckets: Set[Int] = bucketFps.keySet.filter(b =>
       prevBucketFps.get(b).contains(bucketFps(b)) &&
-        prevDelFiles.exists(_.bucket.contains(b)))
-    val reusedDelFiles: Seq[PrevDelFile] =
-      prevDelFiles.filter(_.bucket.exists(reusableDelBuckets))
+        prevDelFiles.exists(bucketOf(_).contains(b)))
+    val reusedDelFiles: Seq[ManifestEntry] =
+      prevDelFiles.filter(bucketOf(_).exists(reusableDelBuckets))
     // only the CHANGED buckets' DVs are decoded and rewritten
     val dvToWrite: Seq[AddFile] =
       if (dvFiles.isEmpty || reuseDeletes) Nil
       else dvByBucket.filterNot { case (b, _) => reusableDelBuckets(b) }
         .values.flatten.toSeq
     // one output row per delete FILE (v2 parquet) or per DV BLOB (v3
-    // puffin): (path, fileLen, rowCount, referencedDataFile, blobOff,
-    // blobLen) — the v3 triplet None for v2
-    val deleteFiles: Seq[(String, Long, Long, Option[String], Option[Long], Option[Long])] =
+    // puffin)
+    val deleteFiles: Seq[DeleteFile] =
       if (dvToWrite.isEmpty) Nil
       else if (formatVersion >= 3) {
         // v3: the Delta DV payloads ARE the blob bodies (same framing,
@@ -1461,7 +1521,7 @@ object IcebergMetadata {
             }
             val (locs, flen) = IcebergPuffin.writeDvFile(
               out, conf, snapIdLocal, seqLocal, blobs)
-            locs.map(l => (out.toString, flen, l.cardinality,
+            locs.map(l => DeleteFile(out.toString, flen, l.cardinality,
               Option(l.referencedDataFile), Option(l.offset), Option(l.length)))
           }.collect().toSeq
       } else {
@@ -1501,175 +1561,31 @@ object IcebergMetadata {
             val st = p.getFileSystem(c).getFileStatus(p)
             val rc = Stats.numRecords(
               Stats.fromFooter(c, p, delSchema, Nil, 0)).getOrElse(0L)
-            (p.toString, st.getLen, rc,
-              None: Option[String], None: Option[Long], None: Option[Long])
+            DeleteFile(p.toString, st.getLen, rc)
           }.collect().toSeq
       }
     // one deletes manifest referencing the delete files (driver-side:
     // O(#delete files) entries): freshly written buckets as ADDED,
     // unchanged buckets' files as EXISTING with original lineage
-    val deleteManifest: Option[(String, Long, Long, Long, Long, Long, Option[Long])] =
-      // (path, len, addedFiles, addedRows, existingFiles, existingRows, minSeq)
-      if (deleteFiles.isEmpty && reusedDelFiles.isEmpty) None
-      else {
-        val delEntrySchema = new org.apache.avro.Schema.Parser()
-          .parse(manifestEntrySchemaJson(partitionStructSchemaJson(Nil),
-            formatVersion))
-        val dfSchema = delEntrySchema.getField("data_file").schema()
-        val pSchema = dfSchema.getField("partition").schema()
-        val name = f"${java.util.UUID.randomUUID()}-d0.avro"
-        val out = new Path(dir, name)
-        val w = new DataFileWriter[GenericRecord](
-          new GenericDatumWriter[GenericRecord](delEntrySchema))
-        w.setMeta("schema", schemaJsonStr)
-        w.setMeta("schema-id", schemaId.toString)
-        w.setMeta("partition-spec", "[]")
-        w.setMeta("partition-spec-id", deleteSpecId.toString)
-        w.setMeta("format-version", formatVersion.toString)
-        w.setMeta("content", "deletes")
-        w.create(delEntrySchema, fs.create(out, true))
-        val delFormat = if (formatVersion >= 3) "PUFFIN" else "PARQUET"
-        def putV3(df: GenericData.Record, ref: Option[String],
-            off: Option[Long], blen: Option[Long]): Unit =
-          if (formatVersion >= 3) {
-            df.put("referenced_data_file", ref.orNull)
-            df.put("content_offset", off.map(java.lang.Long.valueOf).orNull)
-            df.put("content_size_in_bytes",
-              blen.map(java.lang.Long.valueOf).orNull)
-          }
-        var minSeq: Option[Long] = None
-        reusedDelFiles.foreach { f =>
-          val rec = new GenericData.Record(delEntrySchema)
-          rec.put("status", 0) // EXISTING: original snapshot + sequence
-          rec.put("snapshot_id", f.snap)
-          rec.put("sequence_number", f.seq)
-          rec.put("file_sequence_number", f.seq)
-          if (minSeq.forall(_ > f.seq)) minSeq = Some(f.seq)
-          val df = new GenericData.Record(dfSchema)
-          df.put("content", 1)
-          df.put("file_path", f.path)
-          df.put("file_format", delFormat)
-          df.put("partition", new GenericData.Record(pSchema))
-          df.put("record_count", f.rc)
-          df.put("file_size_in_bytes", f.len)
-          putV3(df, f.ref, f.blobOff, f.blobLen)
-          rec.put("data_file", df)
-          w.append(rec)
-        }
-        deleteFiles.foreach { case (p, len, rc, ref, off, blen) =>
-          val rec = new GenericData.Record(delEntrySchema)
-          rec.put("status", 1)
-          rec.put("snapshot_id", snapshotId)
-          val df = new GenericData.Record(dfSchema)
-          df.put("content", 1) // POSITION_DELETES (v3: a Puffin DV blob)
-          df.put("file_path", p)
-          df.put("file_format", delFormat)
-          df.put("partition", new GenericData.Record(pSchema))
-          df.put("record_count", rc)
-          df.put("file_size_in_bytes", len)
-          putV3(df, ref, off, blen)
-          rec.put("data_file", df)
-          w.append(rec)
-        }
-        w.close()
-        Some((out.toString, fs.getFileStatus(out).getLen,
-          deleteFiles.size.toLong, deleteFiles.map(_._3).sum,
-          reusedDelFiles.size.toLong, reusedDelFiles.map(_.rc).sum,
-          minSeq))
-      }
+    val deleteManifest: Seq[IcebergManifestFile] = writeManifest(
+      (reusedDelFiles ++ deleteFiles.map(d => ManifestEntry(1, snapshotId, None, del = d))).iterator,
+      fs.getConf, manifestSpec.copy(
+        entrySchemaJson = manifestEntrySchemaJson(partitionStructSchemaJson(Nil), formatVersion),
+        specId = deleteSpecId, specFieldsJson = "[]", content = 1, partMeta = Nil)).toList
 
-    // ---- manifest list (driver: O(#manifests) rows)
-    fs.mkdirs(dir)
-    val listName = f"snap-$snapshotId-1-${java.util.UUID.randomUUID()}.avro"
-    val listPath = new Path(dir, listName)
-    val listSchema = new org.apache.avro.Schema.Parser().parse(
-      manifestListSchemaFor(formatVersion))
-    val lw = new DataFileWriter[GenericRecord](
-      new GenericDatumWriter[GenericRecord](listSchema))
-    lw.setMeta("format-version", formatVersion.toString)
-    lw.setMeta("snapshot-id", snapshotId.toString)
-    lw.setMeta("sequence-number", seqNum.toString)
-    prev.foreach(p => lw.setMeta("parent-snapshot-id",
-      p.get("current-snapshot-id").asLong.toString))
-    lw.create(listSchema, fs.create(listPath, true))
-    def listEntry(path: String, length: Long, content: Int, specId: Int,
-        nFiles: Long, nRows: Long, existingFiles: Long = 0L,
-        existingRows: Long = 0L, minSeq: Option[Long] = None,
-        deletedFiles: Long = 0L, deletedRows: Long = 0L): GenericRecord = {
-      val rec = new GenericData.Record(listSchema)
-      rec.put("manifest_path", path)
-      rec.put("manifest_length", length)
-      rec.put("partition_spec_id", specId)
-      rec.put("content", content)
-      rec.put("sequence_number", seqNum)
-      rec.put("min_sequence_number", minSeq.getOrElse(seqNum))
-      rec.put("added_snapshot_id", snapshotId)
-      rec.put("added_files_count", nFiles.toInt)
-      rec.put("existing_files_count", existingFiles.toInt)
-      rec.put("deleted_files_count", deletedFiles.toInt)
-      rec.put("added_rows_count", nRows)
-      rec.put("existing_rows_count", existingRows)
-      rec.put("deleted_rows_count", deletedRows)
-      rec
-    }
-    def partArray(ps: Seq[(Boolean, Option[Array[Byte]], Option[Array[Byte]])]):
-        GenericData.Array[GenericRecord] = {
-      val arrSchema = listSchema.getField("partitions").schema()
-        .getTypes.asScala
-        .find(_.getType == org.apache.avro.Schema.Type.ARRAY).get
-      val elemSchema = arrSchema.getElementType
-      val arr = new GenericData.Array[GenericRecord](ps.length, arrSchema)
-      ps.foreach { case (cn, lob, hib) =>
-        val r = new GenericData.Record(elemSchema)
-        r.put("contains_null", cn)
-        r.put("lower_bound", lob.map(java.nio.ByteBuffer.wrap).orNull)
-        r.put("upper_bound", hib.map(java.nio.ByteBuffer.wrap).orNull)
-        arr.add(r)
-      }
-      arr
-    }
-    // reused manifests (data manifests whose entries are all still live;
-    // the delete manifest when the DV set is unchanged): referenced by
-    // their ORIGINAL path with original snapshot/sequence/counts — the
+    // ---- manifest list (driver: O(#manifests) rows). Reused manifests
+    // (data manifests whose entries are all still live; the delete
+    // manifest when the DV set is unchanged) are referenced by their
+    // ORIGINAL path with original snapshot/sequence/counts — the
     // incremental-generation core. Iceberg readers treat the list as the
     // complete truth of the snapshot; reused entries resolve exactly as
     // they did in the generation that wrote them.
-    prevList.filter(m => (m.content == 0 && reusableMps.contains(m.path)) ||
-        (m.content == 1 && reuseDeletes))
-      .foreach { m =>
-        val rec = new GenericData.Record(listSchema)
-        rec.put("manifest_path", m.path)
-        rec.put("manifest_length", m.length)
-        rec.put("partition_spec_id", m.specId)
-        rec.put("content", m.content)
-        rec.put("sequence_number", m.seq)
-        rec.put("min_sequence_number", m.minSeq)
-        rec.put("added_snapshot_id", m.addedSnapId)
-        rec.put("added_files_count", m.addedFiles)
-        rec.put("existing_files_count", m.existingFiles)
-        rec.put("deleted_files_count", m.deletedFiles)
-        rec.put("added_rows_count", m.addedRows)
-        rec.put("existing_rows_count", m.existingRows)
-        rec.put("deleted_rows_count", m.deletedRows)
-        if (m.partSummaries.nonEmpty) rec.put("partitions", partArray(m.partSummaries))
-        lw.append(rec)
-      }
-    summaries.foreach { m =>
-      val rec = listEntry(m.path, m.length, 0, 0, m.fileCount, m.rowCount,
-        m.existingFileCount, m.existingRowCount, m.minSeq,
-        m.deletedFileCount, m.deletedRowCount)
-      // field_summary per identity-partition column: planning can skip
-      // this whole manifest when a partition predicate falls outside
-      // [lower, upper] — never opening it
-      if (partCols.nonEmpty) rec.put("partitions", partArray(m.partSummaries))
-      lw.append(rec)
-    }
-    deleteManifest.foreach {
-      case (p, len, nFiles, nRows, exFiles, exRows, minSeq) =>
-        lw.append(listEntry(p, len, 1, deleteSpecId, nFiles, nRows,
-          exFiles, exRows, minSeq))
-    }
-    lw.close()
+    fs.mkdirs(dir)
+    val listPath = new Path(dir, f"snap-$snapshotId-1-${java.util.UUID.randomUUID()}.avro")
+    writeList(listPath, fs.getConf, manifestSpec,
+      prev.map(_.get("current-snapshot-id").asLong),
+      prevList.filter(m => (m.content == 0 && reusableMps.contains(m.path)) ||
+        (m.content == 1 && reuseDeletes)) ++ written ++ deleteManifest)
 
     // ---- table metadata JSON (v2), accumulating the snapshot log of a
     // previous generation when one exists, expiring entries past the
@@ -1971,32 +1887,17 @@ object IcebergMetadata {
       keep += s"v${sn.get("snapshot-id").asLong}.metadata.json"
       val mlPath = new Path(sn.get("manifest-list").asText)
       keep += mlPath.getName
-      val entries =
-        try {
-          val r = DataFileReader.openReader(
-            new org.apache.avro.mapred.FsInput(mlPath, fs.getConf),
-            new GenericDatumReader[GenericRecord]())
-          try r.iterator().asScala.map(e =>
-            (e.get("manifest_path").toString,
-              e.get("content").asInstanceOf[Int])).toList
-          finally r.close()
-        } catch { case scala.util.control.NonFatal(_) => Nil }
-      entries.foreach { case (mp, content) =>
-        val p = new Path(mp)
-        keep += p.getName
-        if (content == 1) {
-          // deletes manifest: its entries name position-delete parquet
-          // files that also live under metadata/
-          try {
-            val r = DataFileReader.openReader(
-              new org.apache.avro.mapred.FsInput(p, fs.getConf),
-              new GenericDatumReader[GenericRecord]())
-            try r.iterator().asScala.foreach { e =>
-              val df = e.get("data_file").asInstanceOf[GenericRecord]
-              keep += new Path(df.get("file_path").toString).getName
-            } finally r.close()
-          } catch { case scala.util.control.NonFatal(_) => () }
-        }
+      val manifests =
+        try readList(mlPath, fs.getConf)
+        catch { case scala.util.control.NonFatal(_) => Nil }
+      manifests.foreach { m =>
+        keep += new Path(m.path).getName
+        // deletes manifest: its entries name position-delete files that
+        // also live under metadata/
+        if (m.content == 1)
+          try readLive(m, fs.getConf)((_, live) => live.foreach(e =>
+            keep += new Path(e.dataFile.get("file_path").toString).getName))
+          catch { case scala.util.control.NonFatal(_) => () }
       }
     }
     // recursive: position-delete parquet lives under __bucket=K subdirs
@@ -2382,19 +2283,8 @@ object IcebergMetadata {
           meta.get("last-column-id").asInt.toString)
 
     // ---- manifests of the current snapshot
-    val listPath = snap.get("manifest-list").asText
-    val manifests: Seq[(String, Int, Int, Long)] = {
-      val r = DataFileReader.openReader(
-        new org.apache.avro.mapred.FsInput(new Path(listPath), hconfRaw),
-        new GenericDatumReader[GenericRecord]())
-      try r.iterator().asScala.map(m => (
-        m.get("manifest_path").toString,
-        Option(m.get("content")).map(_.asInstanceOf[Int]).getOrElse(0),
-        Option(m.get("partition_spec_id")).map(_.asInstanceOf[Int]).getOrElse(0),
-        Option(m.get("sequence_number")).map(_.asInstanceOf[Long]).getOrElse(0L)))
-        .toList
-      finally r.close()
-    }
+    val manifests = readList(new Path(snap.get("manifest-list").asText), hconfRaw)
+    val dataManifests = manifests.filter(_.content == 0)
 
     // ---- partition specs: identity transforms become Delta partition
     // columns. NON-identity transforms (bucket/truncate/days/… — the
@@ -2417,8 +2307,7 @@ object IcebergMetadata {
         .orElse(Option(meta.get("partition-spec"))
           .map(fs0 => Map(specId -> fs0.elements().asScala.toSeq))) // v1 legacy
         .getOrElse(Map(specId -> Nil))
-    val usedSpecIds: Set[Int] =
-      manifests.collect { case (_, 0, sid, _) => sid }.toSet + specId
+    val usedSpecIds: Set[Int] = dataManifests.map(_.specId).toSet + specId
     usedSpecIds.find(!specsById.contains(_)).foreach(sid =>
       throw new IllegalStateException(
         s"data manifest references partition spec $sid, absent from " +
@@ -2504,6 +2393,20 @@ object IcebergMetadata {
         "0x" + f.bytes().map("%02x".format(_)).mkString
       case other => other.toString
     }
+    // RAW partition tuple of `df` under its spec's `fields` (identity AND
+    // transform fields, stringified verbatim) — the identity the
+    // equality-delete scope rule compares
+    def rawTupleOf(fields: Seq[(String, String)], df: GenericRecord): Map[String, String] = {
+      val struct = df.get("partition").asInstanceOf[GenericRecord]
+      fields.map { case (nm, colNm) =>
+        val v =
+          if (struct.getSchema.getField(nm) != null) struct.get(nm)
+          else if (struct.getSchema.getField(colNm) != null)
+            struct.get(colNm) // older writers key by column
+          else null
+        nm -> (if (v == null) null else canonPartValue(v))
+      }.toMap
+    }
     val assumeDroppedPresent = spark.conf.get(
       "spark.graft.convert.assumeDroppedIdentityPresent", "false").toBoolean
     // For files under a spec that identity-partitions a DROPPED column,
@@ -2517,7 +2420,7 @@ object IcebergMetadata {
     // (true for Iceberg-native writers, which derive the tuple FROM the
     // data), and synthesis below then restores pruning-equivalent stats.
     if (!assumeDroppedPresent) {
-      val offending = manifests.collect { case (_, 0, sid, _) => sid }
+      val offending = dataManifests.map(_.specId)
         .distinct.filter(sid => droppedBySpec(sid).nonEmpty)
       if (offending.nonEmpty) throw new UnsupportedOperationException(
         s"spec evolution drops identity partition column(s) " +
@@ -2553,173 +2456,140 @@ object IcebergMetadata {
     // 10^7-file adoption never materializes
     // O(#files) stats JSON on the driver. The trailing element is the
     // ReadDefaults missing-columns JSON (null when none).
-    val dataManifests = manifests.collect { case (p, 0, sid, sq) => (p, sid, sq) }
     val fileRows: org.apache.spark.rdd.RDD[(String, Map[String, String], Long, Long, String, Long, Option[Long], Int, Map[String, String], String)] =
       spark.sparkContext
         .parallelize(dataManifests, math.max(1, dataManifests.size))
-        .flatMap { case (p, manSpecId, listSeq) =>
+        .flatMap { m =>
+          val manSpecId = m.specId
           val partMeta = partMetaBySpec(manSpecId)
           val statsMapper = new ObjectMapper()
-          val r = DataFileReader.openReader(
-            new org.apache.avro.mapred.FsInput(new Path(p), serConf.value),
-            new GenericDatumReader[GenericRecord]())
-          try r.iterator().asScala.flatMap { e =>
-            val status = e.get("status").asInstanceOf[Int]
-            if (status == 2) None // DELETED entries are not live
-            else {
-              val df = e.get("data_file").asInstanceOf[GenericRecord]
-              require(Option(df.get("content"))
-                .forall(_.asInstanceOf[Int] == 0), s"non-data file in data manifest $p")
-              val pvs: Map[String, String] = {
-                val struct = df.get("partition").asInstanceOf[GenericRecord]
-                partMeta.map { case (structNm, colNm, dt) =>
+          readLive(m, serConf.value)((_, live) => live.map { e =>
+            val df = e.dataFile
+            require(fieldOf(df, "content").forall(_.asInstanceOf[Int] == 0),
+              s"non-data file in data manifest ${m.path}")
+            val pvs: Map[String, String] = {
+              val struct = df.get("partition").asInstanceOf[GenericRecord]
+              partMeta.map { case (structNm, colNm, dt) =>
+                val v =
+                  if (struct.getSchema.getField(structNm) != null)
+                    struct.get(structNm)
+                  else struct.get(colNm) // older writers key by column
+                colNm -> partValueString(dt, v)
+              }.toMap
+            }
+            def kv(field: String): Map[Int, Any] =
+              Option(df.get(field)).map(_
+                .asInstanceOf[java.util.Collection[GenericRecord]]
+                .iterator().asScala.map(r2 =>
+                  r2.get("key").asInstanceOf[Int] -> r2.get("value")).toMap)
+                .getOrElse(Map.empty)
+            // rebuild the Delta stats JSON from the manifest's column
+            // stats — data skipping survives the conversion without
+            // opening a single footer
+            val st = statsMapper.createObjectNode()
+            st.put("numRecords", df.get("record_count").asInstanceOf[Long])
+            val lows = kv("lower_bounds"); val highs = kv("upper_bounds")
+            val nulls = kv("null_value_counts")
+            if (lows.nonEmpty) {
+              val o = st.putObject("minValues")
+              statsFields.foreach { case (id, nm, dt) =>
+                lows.get(id).foreach(b => putBound(o, nm, dt, bytesOf(b))) }
+            }
+            if (highs.nonEmpty) {
+              val o = st.putObject("maxValues")
+              statsFields.foreach { case (id, nm, dt) =>
+                highs.get(id).foreach(b => putBound(o, nm, dt, bytesOf(b))) }
+            }
+            if (nulls.nonEmpty) {
+              val o = st.putObject("nullCount")
+              statsFields.foreach { case (id, nm, _) =>
+                nulls.get(id).foreach(v =>
+                  o.put(nm, v.asInstanceOf[Long])) }
+            }
+            // spec-evolved adoption (under the documented override):
+            // identity fields dropped from the common partition set
+            // keep PRUNING-EQUIVALENT skipping — an identity-
+            // partitioned file holds exactly one value of the source
+            // column, so when the writer recorded no bounds min=max is
+            // synthesized from the partition struct.
+            val dropped = droppedBySpec(manSpecId)
+            if (dropped.nonEmpty) {
+              val struct = df.get("partition").asInstanceOf[GenericRecord]
+              def node(name: String) = Option(st.get(name))
+                .map(_.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode])
+                .getOrElse(st.putObject(name))
+              def putVal(o: com.fasterxml.jackson.databind.node.ObjectNode,
+                  nm: String, dt: DataType, v: Any): Unit = dt match {
+                case ByteType | ShortType | IntegerType =>
+                  o.put(nm, v.asInstanceOf[Int])
+                case LongType => o.put(nm, v.asInstanceOf[Long])
+                case FloatType => o.put(nm, v.asInstanceOf[Float].toDouble)
+                case DoubleType => o.put(nm, v.asInstanceOf[Double])
+                case StringType => o.put(nm, v.toString)
+                case DateType => o.put(nm, java.time.LocalDate
+                  .ofEpochDay(v.asInstanceOf[Int].toLong).toString)
+                case _ => ()
+              }
+              dropped.foreach { case (structNm, colNm, dt, fid) =>
+                if (!lows.contains(fid)) {
                   val v =
                     if (struct.getSchema.getField(structNm) != null)
                       struct.get(structNm)
-                    else struct.get(colNm) // older writers key by column
-                  colNm -> (if (v == null) null else dt match {
-                    case DateType => java.time.LocalDate
-                      .ofEpochDay(v.asInstanceOf[Int].toLong).toString
-                    case _ => v.toString
-                  })
-                }.toMap
-              }
-              def kv(field: String): Map[Int, Any] =
-                Option(df.get(field)).map(_
-                  .asInstanceOf[java.util.Collection[GenericRecord]]
-                  .iterator().asScala.map(r2 =>
-                    r2.get("key").asInstanceOf[Int] -> r2.get("value")).toMap)
-                  .getOrElse(Map.empty)
-              def bytesOf(v: Any): Array[Byte] = {
-                val bb = v.asInstanceOf[java.nio.ByteBuffer].duplicate()
-                val a = new Array[Byte](bb.remaining()); bb.get(a); a
-              }
-              // rebuild the Delta stats JSON from the manifest's column
-              // stats — data skipping survives the conversion without
-              // opening a single footer
-              val st = statsMapper.createObjectNode()
-              st.put("numRecords", df.get("record_count").asInstanceOf[Long])
-              val lows = kv("lower_bounds"); val highs = kv("upper_bounds")
-              val nulls = kv("null_value_counts")
-              if (lows.nonEmpty) {
-                val o = st.putObject("minValues")
-                statsFields.foreach { case (id, nm, dt) =>
-                  lows.get(id).foreach(b => putBound(o, nm, dt, bytesOf(b))) }
-              }
-              if (highs.nonEmpty) {
-                val o = st.putObject("maxValues")
-                statsFields.foreach { case (id, nm, dt) =>
-                  highs.get(id).foreach(b => putBound(o, nm, dt, bytesOf(b))) }
-              }
-              if (nulls.nonEmpty) {
-                val o = st.putObject("nullCount")
-                statsFields.foreach { case (id, nm, _) =>
-                  nulls.get(id).foreach(v =>
-                    o.put(nm, v.asInstanceOf[Long])) }
-              }
-              // spec-evolved adoption (under the documented override):
-              // identity fields dropped from the common partition set
-              // keep PRUNING-EQUIVALENT skipping — an identity-
-              // partitioned file holds exactly one value of the source
-              // column, so when the writer recorded no bounds min=max is
-              // synthesized from the partition struct.
-              val dropped = droppedBySpec(manSpecId)
-              if (dropped.nonEmpty) {
-                val struct = df.get("partition").asInstanceOf[GenericRecord]
-                def node(name: String) = Option(st.get(name))
-                  .map(_.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode])
-                  .getOrElse(st.putObject(name))
-                def putVal(o: com.fasterxml.jackson.databind.node.ObjectNode,
-                    nm: String, dt: DataType, v: Any): Unit = dt match {
-                  case ByteType | ShortType | IntegerType =>
-                    o.put(nm, v.asInstanceOf[Int])
-                  case LongType => o.put(nm, v.asInstanceOf[Long])
-                  case FloatType => o.put(nm, v.asInstanceOf[Float].toDouble)
-                  case DoubleType => o.put(nm, v.asInstanceOf[Double])
-                  case StringType => o.put(nm, v.toString)
-                  case DateType => o.put(nm, java.time.LocalDate
-                    .ofEpochDay(v.asInstanceOf[Int].toLong).toString)
-                  case _ => ()
-                }
-                dropped.foreach { case (structNm, colNm, dt, fid) =>
-                  if (!lows.contains(fid)) {
-                    val v =
-                      if (struct.getSchema.getField(structNm) != null)
-                        struct.get(structNm)
-                      else struct.get(colNm)
-                    if (v != null) {
-                      putVal(node("minValues"), colNm, dt, v)
-                      putVal(node("maxValues"), colNm, dt, v)
-                      if (!nulls.contains(fid)) node("nullCount").put(colNm, 0L)
-                    } else node("nullCount").put(colNm,
-                      df.get("record_count").asInstanceOf[Long])
-                  }
+                    else struct.get(colNm)
+                  if (v != null) {
+                    putVal(node("minValues"), colNm, dt, v)
+                    putVal(node("maxValues"), colNm, dt, v)
+                    if (!nulls.contains(fid)) node("nullCount").put(colNm, 0L)
+                  } else node("nullCount").put(colNm,
+                    df.get("record_count").asInstanceOf[Long])
                 }
               }
-              // RAW partition tuple under the file's own spec (identity
-              // AND transform fields, stringified verbatim) — the
-              // identity the equality-delete scope rule compares
-              val rawTuple: Map[String, String] = {
-                val struct = df.get("partition").asInstanceOf[GenericRecord]
-                specFieldNames.getOrElse(manSpecId, Nil).map { case (nm, colNm) =>
-                  val v =
-                    if (struct.getSchema.getField(nm) != null) struct.get(nm)
-                    else if (struct.getSchema.getField(colNm) != null)
-                      struct.get(colNm) // older writers key by column
-                    else null
-                  nm -> (if (v == null) null else canonPartValue(v))
-                }.toMap
-              }
-              // initial-defaults: which defaulted columns does this file
-              // physically lack? Decided from the parquet FOOTER (field
-              // id first, writer name fallback) — the authoritative
-              // per-file rule Iceberg readers apply
-              val missingJson: String =
-                if (initialDefaulted.isEmpty) null
-                else {
-                  val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
-                    org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-                      new Path(df.get("file_path").toString), serConf.value))
-                  val absent =
-                    try {
-                      val sch = rdr.getFooter.getFileMetaData.getSchema
-                      val fs0 = sch.getFields.asScala
-                      // name fallback ONLY for footers without field ids
-                      // (legacy writers): when ids are present, a name
-                      // match with a DIFFERENT id is a dropped-and-
-                      // re-added column whose old values must NOT
-                      // resurrect over the new field's default
-                      val footerHasIds = fs0.exists(t => t.getId != null)
-                      initialDefaulted.filterNot { case (fid, _, footerNm) =>
-                        if (footerHasIds)
-                          fs0.exists(t =>
-                            Option(t.getId).exists(_.intValue == fid))
-                        else fs0.exists(_.getName == footerNm)
-                      }.map(_._3) // PHYSICAL name: stable across renames
-                    } finally rdr.close()
-                  if (absent.isEmpty) null
-                  else {
-                    val arr = statsMapper.createArrayNode()
-                    absent.foreach(arr.add)
-                    statsMapper.writeValueAsString(arr)
-                  }
-                }
-              Some((df.get("file_path").toString, pvs,
-                df.get("file_size_in_bytes").asInstanceOf[Long],
-                df.get("record_count").asInstanceOf[Long],
-                statsMapper.writeValueAsString(st),
-                Option(e.get("sequence_number")).map(_.asInstanceOf[Long])
-                  .getOrElse(listSeq),
-                // v3 row lineage: the file's explicit first_row_id (null
-                // on v1/v2 manifests, or when the writer relied on
-                // inherited assignment)
-                (if (df.getSchema.getField("first_row_id") == null) None
-                 else Option(df.get("first_row_id"))
-                   .map(_.asInstanceOf[Long])),
-                manSpecId, rawTuple, missingJson))
             }
-          }.toList
-          finally r.close()
+            val rawTuple = rawTupleOf(specFieldNames.getOrElse(manSpecId, Nil), df)
+            // initial-defaults: which defaulted columns does this file
+            // physically lack? Decided from the parquet FOOTER (field
+            // id first, writer name fallback) — the authoritative
+            // per-file rule Iceberg readers apply
+            val missingJson: String =
+              if (initialDefaulted.isEmpty) null
+              else {
+                val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
+                  org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+                    new Path(df.get("file_path").toString), serConf.value))
+                val absent =
+                  try {
+                    val sch = rdr.getFooter.getFileMetaData.getSchema
+                    val fs0 = sch.getFields.asScala
+                    // name fallback ONLY for footers without field ids
+                    // (legacy writers): when ids are present, a name
+                    // match with a DIFFERENT id is a dropped-and-
+                    // re-added column whose old values must NOT
+                    // resurrect over the new field's default
+                    val footerHasIds = fs0.exists(t => t.getId != null)
+                    initialDefaulted.filterNot { case (fid, _, footerNm) =>
+                      if (footerHasIds)
+                        fs0.exists(t =>
+                          Option(t.getId).exists(_.intValue == fid))
+                      else fs0.exists(_.getName == footerNm)
+                    }.map(_._3) // PHYSICAL name: stable across renames
+                  } finally rdr.close()
+                if (absent.isEmpty) null
+                else {
+                  val arr = statsMapper.createArrayNode()
+                  absent.foreach(arr.add)
+                  statsMapper.writeValueAsString(arr)
+                }
+              }
+            (df.get("file_path").toString, pvs,
+              df.get("file_size_in_bytes").asInstanceOf[Long],
+              df.get("record_count").asInstanceOf[Long],
+              statsMapper.writeValueAsString(st), e.seq,
+              // v3 row lineage: the file's explicit first_row_id (null
+              // on v1/v2 manifests, or when the writer relied on
+              // inherited assignment)
+              fieldOf(df, "first_row_id").map(_.asInstanceOf[Long]),
+              manSpecId, rawTuple, missingJson)
+          }.toList)
         }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val fileCount = fileRows.count()
     require(fileCount > 0, s"Iceberg snapshot $curId lists no data files")
@@ -2775,17 +2645,7 @@ object IcebergMetadata {
           s"delete manifest references partition spec $sid, absent from " +
             "the metadata's partition-specs"))
       if (fields.isEmpty) None // unpartitioned delete spec = global
-      else {
-        val struct = df.get("partition").asInstanceOf[GenericRecord]
-        Some(fields.map { case (nm, colNm) =>
-          val v =
-            if (struct.getSchema.getField(nm) != null) struct.get(nm)
-            else if (struct.getSchema.getField(colNm) != null)
-              struct.get(colNm) // older writers key by column
-            else null
-          nm -> (if (v == null) null else canonPartValue(v))
-        }.toMap)
-      }
+      else Some(rawTupleOf(fields, df))
     }
     case class DelEntry(path: String, content: Int, eqIds: Seq[Int],
         seq: Long, bytes: Long, specId: Int,
@@ -2793,40 +2653,25 @@ object IcebergMetadata {
         refFile: Option[String], blobOff: Option[Long], blobLen: Option[Long],
         cardinality: Long)
     val deleteEntries: Seq[DelEntry] =
-      manifests.collect { case (p, 1, sid, listSeq) => (p, sid, listSeq) }
-        .flatMap { case (p, sid, listSeq) =>
-          val r = DataFileReader.openReader(
-            new org.apache.avro.mapred.FsInput(new Path(p), hconfRaw),
-            new GenericDatumReader[GenericRecord]())
-          try r.iterator().asScala
-            .filter(_.get("status").asInstanceOf[Int] != 2)
-            .map { e =>
-              val df = e.get("data_file").asInstanceOf[GenericRecord]
-              val content = df.get("content").asInstanceOf[Int]
-              val eqIds = Option(df.get("equality_ids"))
-                .map(_.asInstanceOf[java.util.Collection[Any]]
-                  .iterator().asScala.map(_.asInstanceOf[Int]).toSeq)
-                .getOrElse(Nil)
-              // v3 deletion vectors ride a position-delete entry with
-              // referenced_data_file/content_offset/content_size_in_bytes
-              // (field ids 143/144/145) pointing into a Puffin file
-              def opt(field: String): Option[Any] =
-                if (df.getSchema.getField(field) == null) None
-                else Option(df.get(field))
-              DelEntry(df.get("file_path").toString,
-                content, eqIds,
-                Option(e.get("sequence_number")).map(_.asInstanceOf[Long])
-                  .getOrElse(listSeq),
-                df.get("file_size_in_bytes").asInstanceOf[Long],
-                sid,
-                if (content == 2) deleteScope(sid, df) else None,
-                opt("referenced_data_file").map(_.toString),
-                opt("content_offset").map(_.asInstanceOf[Long]),
-                opt("content_size_in_bytes").map(_.asInstanceOf[Long]),
-                df.get("record_count").asInstanceOf[Long])
-            }.toList
-          finally r.close()
-        }
+      manifests.filter(_.content == 1).flatMap(m => readLive(m, hconfRaw)((_, live) =>
+        live.map { e =>
+          val df = e.dataFile
+          val content = df.get("content").asInstanceOf[Int]
+          val eqIds = fieldOf(df, "equality_ids")
+            .map(_.asInstanceOf[java.util.Collection[Any]]
+              .iterator().asScala.map(_.asInstanceOf[Int]).toSeq)
+            .getOrElse(Nil)
+          // v3 deletion vectors ride a position-delete entry with
+          // referenced_data_file/content_offset/content_size_in_bytes
+          // (field ids 143/144/145) pointing into a Puffin file
+          DelEntry(df.get("file_path").toString, content, eqIds, e.seq,
+            df.get("file_size_in_bytes").asInstanceOf[Long], m.specId,
+            if (content == 2) deleteScope(m.specId, df) else None,
+            fieldOf(df, "referenced_data_file").map(_.toString),
+            fieldOf(df, "content_offset").map(_.asInstanceOf[Long]),
+            fieldOf(df, "content_size_in_bytes").map(_.asInstanceOf[Long]),
+            df.get("record_count").asInstanceOf[Long])
+        }.toList))
     val posDeleteFiles = deleteEntries
       .collect { case d if d.content == 1 && d.refFile.isEmpty => d.path }
     val eqDeleteFiles = deleteEntries

@@ -316,6 +316,20 @@ class IcebergFastAppendSuite extends AnyFunSuite with SharedSpark {
       s"v3 incremental manifests must carry first_row_id, got $frids")
   }
 
+  test("job budget: an incremental generation submits no Spark job") {
+    // no checkpoint inside the measured commit
+    val t = mkUniform(tmp(), Map("delta.checkpointInterval" -> "1000"))
+    t.write(df((1L, "a", "p1"), (2L, "b", "p2")), SaveMode.Append, Seq("part"))
+    // prebuilt adds carrying numRecords stats: the commit and its
+    // post-commit generation read nothing through Spark
+    val adds = Seq("p1", "p3").map(p => AddFile(s"part=$p/prebuilt-$p.parquet",
+      Map("part" -> p), size = 100L, modificationTime = 1L,
+      stats = """{"numRecords":1}"""))
+    val jobs = jobsOf { t.deltaLog.startTransaction().commit(adds, Op.Write) }
+    assert(genPath(t) == "incremental")
+    assert(jobs == 0, s"incremental generation ran $jobs Spark job(s)")
+  }
+
   // ------------------------------------------------ random commit sequences
 
   private sealed trait Step

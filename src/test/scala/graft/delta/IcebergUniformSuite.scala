@@ -1845,6 +1845,120 @@ class IcebergUniformSuite extends AnyFunSuite with SharedSpark {
     assert(dvs.map(_.cardinality).sum == 1L, dvs.toString)
   }
 
+  test("CONVERT FROM ICEBERG adopts a format-version 1 table") {
+    import spark.implicits._
+    import org.apache.avro.generic.{GenericData, GenericDatumWriter}
+    import org.apache.avro.file.DataFileWriter
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    // format v1: the list has no content / sequence_number /
+    // min_sequence_number, entries no sequence numbers, data files no
+    // content; the metadata has a single `schema` and `partition-spec`
+    def withoutFields(schemaJson: String, drop: Set[String],
+        dropInDataFile: Set[String] = Set.empty): org.apache.avro.Schema = {
+      val root = mapper.readTree(schemaJson)
+      def prune(fields: com.fasterxml.jackson.databind.JsonNode, names: Set[String]): Unit = {
+        val it = fields.elements()
+        while (it.hasNext) if (names(it.next().get("name").asText)) it.remove()
+      }
+      prune(root.get("fields"), drop)
+      root.get("fields").elements().asScala.find(_.get("name").asText == "data_file")
+        .foreach(f => prune(f.get("type").get("fields"), dropInDataFile))
+      new org.apache.avro.Schema.Parser().parse(mapper.writeValueAsString(root))
+    }
+    val dir = tmp()
+    val metaDir = new java.io.File(dir, "metadata")
+    metaDir.mkdirs()
+    def onePq(rows: Seq[(Long, String)]): (String, Long) = {
+      val d = java.nio.file.Files.createTempDirectory("graft-v1")
+      rows.toDF("id", "v").coalesce(1).write.mode("overwrite").parquet(d.toString)
+      val f = new java.io.File(d.toString).listFiles()
+        .find(_.getName.endsWith(".parquet")).get
+      (f.getAbsolutePath, f.length())
+    }
+    val files = Seq("x" -> onePq(Seq((1L, "a"), (2L, "b"))), "y" -> onePq(Seq((3L, "c"))))
+    val entrySchema = withoutFields(IcebergMetadata.manifestEntrySchemaJson(
+      IcebergMetadata.partitionStructSchemaJson(Seq(
+        ("part", org.apache.spark.sql.types.StringType, 3)))),
+      Set("sequence_number", "file_sequence_number"), Set("content"))
+    val dfSchema = entrySchema.getField("data_file").schema()
+    val manifest = new java.io.File(metaDir, "v1-m0.avro")
+    locally {
+      val w = new DataFileWriter[GenericRecord](
+        new GenericDatumWriter[GenericRecord](entrySchema))
+      w.create(entrySchema, manifest)
+      files.foreach { case (part, (path, len)) =>
+        val rec = new GenericData.Record(entrySchema)
+        rec.put("status", 1); rec.put("snapshot_id", 1L)
+        val dfr = new GenericData.Record(dfSchema)
+        dfr.put("file_path", path)
+        dfr.put("file_format", "PARQUET")
+        val ps = new GenericData.Record(dfSchema.getField("partition").schema())
+        ps.put("part", part)
+        dfr.put("partition", ps)
+        dfr.put("record_count", if (part == "x") 2L else 1L)
+        dfr.put("file_size_in_bytes", len)
+        rec.put("data_file", dfr)
+        w.append(rec)
+      }
+      w.close()
+    }
+    val listSchema = withoutFields(IcebergMetadata.manifestListSchemaJson,
+      Set("content", "sequence_number", "min_sequence_number"))
+    val listFile = new java.io.File(metaDir, "snap-1-v1.avro")
+    locally {
+      val lw = new DataFileWriter[GenericRecord](
+        new GenericDatumWriter[GenericRecord](listSchema))
+      lw.create(listSchema, listFile)
+      val lrec = new GenericData.Record(listSchema)
+      lrec.put("manifest_path", manifest.getAbsolutePath)
+      lrec.put("manifest_length", manifest.length())
+      lrec.put("partition_spec_id", 0)
+      lrec.put("added_snapshot_id", 1L)
+      lrec.put("added_files_count", 2)
+      lrec.put("existing_files_count", 0)
+      lrec.put("deleted_files_count", 0)
+      lrec.put("added_rows_count", 3L)
+      lrec.put("existing_rows_count", 0L)
+      lrec.put("deleted_rows_count", 0L)
+      lw.append(lrec)
+      lw.close()
+    }
+    val root = mapper.createObjectNode()
+    root.put("format-version", 1)
+    root.put("table-uuid", java.util.UUID.randomUUID().toString)
+    root.put("location", dir)
+    root.put("last-updated-ms", System.currentTimeMillis())
+    root.put("last-column-id", 3)
+    val sch = root.putObject("schema")
+    sch.put("type", "struct")
+    val fs0 = sch.putArray("fields")
+    Seq((1, "id", "long"), (2, "v", "string"), (3, "part", "string")).foreach {
+      case (i, n, tp) =>
+        val f = fs0.addObject()
+        f.put("id", i); f.put("name", n); f.put("required", false); f.put("type", tp)
+    }
+    val pf = root.putArray("partition-spec").addObject()
+    pf.put("name", "part"); pf.put("transform", "identity")
+    pf.put("source-id", 3); pf.put("field-id", 1000)
+    val sn = root.putArray("snapshots").addObject()
+    sn.put("snapshot-id", 1L)
+    sn.put("timestamp-ms", System.currentTimeMillis())
+    sn.putObject("summary").put("operation", "append")
+    sn.put("manifest-list", listFile.getAbsolutePath)
+    root.put("current-snapshot-id", 1L)
+    java.nio.file.Files.write(metaDir.toPath.resolve("v1.metadata.json"),
+      mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root))
+    java.nio.file.Files.write(metaDir.toPath.resolve("version-hint.text"),
+      "1".getBytes("UTF-8"))
+    val back = DeltaTable.convertFromIceberg(spark, dir)
+    val snap = back.deltaLog.update()
+    assert(snap.metadata.partitionColumns == Seq("part"))
+    assert(snap.allFiles.map(a => (a.partitionValues("part"), Stats.numRecords(a.stats)))
+      .toSet == Set(("x", Some(2L)), ("y", Some(1L))))
+    assert(back.toDF.select("id", "v", "part").as[(Long, String, String)]
+      .collect().toSet == Set((1L, "a", "x"), (2L, "b", "x"), (3L, "c", "y")))
+  }
+
   test("BUCKET-scoped equality deletes restrict to the bucket's files") {
     import spark.implicits._
     import org.apache.avro.generic.{GenericData, GenericDatumWriter}

@@ -175,4 +175,33 @@ class VacuumLiteSuite extends AnyFunSuite with SharedSpark {
       en3.operationMetrics.get("numDeletedFiles"),
       (st3.operationMetrics, en3.operationMetrics).toString)
   }
+
+  test("LITE leaves a foreign Iceberg metadata dir (adopted in place) untouched") {
+    val dir = tmp()
+    val uni = DeltaTable.forPath(spark, dir)
+    val txn = uni.deltaLog.startTransaction()
+    txn.updateMetadata(Metadata(schemaString = sampleDF.schema.json,
+      configuration = Map("delta.universalFormat.enabledFormats" -> "iceberg")))
+    txn.commit(Nil, Op.CreateTable)
+    uni.write(sampleDF.filter(col("id") <= 2), SaveMode.Append)
+    uni.write(sampleDF.filter(col("id") > 2), SaveMode.Append)
+    // drop the Delta log: metadata/ is now a foreign Iceberg table that
+    // the in-place adoption does not mark UniForm
+    val logDir = new java.io.File(dir, "_delta_log")
+    Option(logDir.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(_.delete())
+    assert(logDir.delete())
+    val t = DeltaTable.convertFromIceberg(spark, dir)
+    val metaDir = new java.io.File(dir, "metadata")
+    def icebergView(): Map[String, String] =
+      metaDir.listFiles().filter(f => f.getName == "version-hint.text" ||
+          f.getName.matches("v\\d+\\.metadata\\.json"))
+        .map(f => f.getName -> Files.readString(f.toPath)).toMap
+    val before = icebergView()
+    assert(before.contains("version-hint.text"), before.keySet)
+    t.delete(col("id") <= 2) // the first append's file goes away whole
+    assert(t.vacuumLite(Some(0L)).deletedCount > 0)
+    assert(icebergView() == before,
+      "a post-VACUUM regeneration must never rewrite a foreign metadata/ dir")
+    assert(t.toDF.count() == 3)
+  }
 }
