@@ -535,47 +535,12 @@ class DeltaTable private (val spark: SparkSession, val deltaLog: DeltaLog) {
     val actions: Seq[Action] = mode match {
       case SaveMode.Append => adds
       case SaveMode.Overwrite if replaceWhere.isDefined && exists =>
-        // selective overwrite: replace ONLY the region the predicate
-        // covers, atomically with the new data. Partition-granular
-        // predicates remove whole files metadata-only; arbitrary
-        // predicates rewrite just the files that hold matching rows,
-        // carrying the non-matching survivors. Reading only the
-        // predicate (markFilesAsRead) instead of the whole table keeps
-        // concurrent writers to OTHER regions conflict-free.
-        import org.apache.spark.sql.functions.{coalesce, lit, not, col}
-        val md = txn.metadata
-        val cond = replaceWhere.get
-        val condTrue = coalesce(cond, lit(false))
-        val candidates = txn.markFilesAsRead(cond)
-        val now = deltaLog.clock.nowMillis
-        val partitionGranular =
-          DeltaScan(txn.snapshot, Some(cond)).residualPredicates.isEmpty
-        val schemaCols = md.schema.fieldNames.map(col).toSeq
-        val (touched, survivorAdds) =
-          if (partitionGranular) (candidates, Nil)
-          else {
-            val t = filesWithMatches(candidates, md, condTrue)
-            val rt = RowTracking.enabled(md)
-            // survivors are content-identical rows: under row tracking
-            // their ids and commit versions ride into the rewrite
-            val touchedDF = if (rt) rowIdResolved(t, md) else readFilesDF(t, md)
-            val survivors = touchedDF.filter(not(condTrue)).select(
-              (if (rt) schemaCols :+
-                col("__rt_row_id").as(RowTracking.MatRowId) :+
-                col("__rt_rcv").as(RowTracking.MatRowCommitVersion)
-              else schemaCols): _*)
-            (t, DeltaTable.writeFiles(spark, deltaLog.dataPath, survivors,
-              md.partitionColumns, md))
-          }
-        val cdc =
-          if (DeltaConfig.EnableChangeDataFeed.fromMetadata(md) && touched.nonEmpty)
-            DeltaTable.writeCdcFiles(spark, deltaLog.dataPath,
-              readFilesDF(touched, md).filter(condTrue)
-                .withColumn("_change_type", lit("delete"))
-                .unionByName(data.select(schemaCols: _*)
-                  .withColumn("_change_type", lit("insert"))), md)
-          else Nil
-        touched.map(_.remove(now)) ++ survivorAdds ++ adds ++ cdc
+        // selective overwrite: the DELETE rewrite of ONLY the region the
+        // predicate covers, atomically with the new data. Reading only
+        // the predicate (markFilesAsRead) instead of the whole table
+        // keeps concurrent writers to OTHER regions conflict-free. The
+        // rewrite's parameters are not recorded: "mode" is the save mode.
+        rewriteWhere(txn, replaceWhere.get, None, inserted = Some(data)).actions ++ adds
       case SaveMode.Overwrite if dynamicPartitionOverwrite && exists =>
         // dynamic partition overwrite (delta-spark's
         // partitionOverwriteMode=dynamic): replace EXACTLY the
@@ -749,16 +714,21 @@ class DeltaTable private (val spark: SparkSession, val deltaLog: DeltaLog) {
       else df
     val adds = DeltaTable.writeFiles(spark, deltaLog.dataPath, toWrite, partCols,
       txn.metadata)
-    // Complete output mode: each batch replaces the table contents
-    val removes: Seq[Action] =
-      if (overwrite && exists)
-        txn.snapshot.allFiles.map(_.remove(deltaLog.clock.nowMillis))
-      else Nil
-    txn.commit(removes ++ adds :+ SetTransaction(appId, batchId, Some(deltaLog.clock.nowMillis)),
-      Op.StreamingUpdate,
-      operationParameters = Map(
-        "outputMode" -> (if (overwrite) "Complete" else "Append"),
-        "queryId" -> appId, "epochId" -> batchId.toString))
+    val head = adds :+ SetTransaction(appId, batchId, Some(deltaLog.clock.nowMillis))
+    val params = Map(
+      "outputMode" -> (if (overwrite) "Complete" else "Append"),
+      "queryId" -> appId, "epochId" -> batchId.toString)
+    if (overwrite && exists) {
+      // Complete output mode: each batch replaces the table contents, so
+      // it reads the whole table (a concurrent append conflicts instead
+      // of surviving the replacement) and streams the remove list as the
+      // commit's Dataset body, like write(Overwrite)
+      txn.readWholeTable()
+      val now = deltaLog.clock.nowMillis
+      import spark.implicits._
+      txn.commit(head, txn.snapshot.allFilesDS.map(_.remove(now).wrap),
+        Op.StreamingUpdate, params)
+    } else txn.commit(head, Op.StreamingUpdate, operationParameters = params)
     autoCompactAfter(adds)
     true
   }
@@ -1008,10 +978,8 @@ class DeltaTable private (val spark: SparkSession, val deltaLog: DeltaLog) {
     // the rewritten files, where they override the fresh baseRowId ids
     val df0 =
       if (RowTracking.enabled(md))
-        rowIdResolved(files, md).select(
-          (md.schema.fieldNames.map(col).toSeq :+
-            col("__rt_row_id").as(RowTracking.MatRowId) :+
-            col("__rt_rcv").as(RowTracking.MatRowCommitVersion)): _*)
+        rowIdResolved(files, md).select(md.schema.fieldNames.map(col).toSeq ++
+          DeltaTable.lineage(col("__rt_row_id"), col("__rt_rcv")): _*)
       else readFilesDF(files, md)
     val dataCols = md.schema.fieldNames.filterNot(partCols.contains).map(col).toSeq
     // zero-arg hash() fails analysis when every column is a partition column
@@ -1927,7 +1895,7 @@ class DeltaTable private (val spark: SparkSession, val deltaLog: DeltaLog) {
         keepKeys = true)
       if (partCols.nonEmpty) {
         // keys use the same normalized form __fp carries (scheme-collapsed
-        // decoded path — see DeletionVectors.normFp / filesWithMatches)
+        // decoded path — see DeletionVectors.normFp / filesOf)
         val pvRows = files.map { f =>
           Row.fromSeq(
             normPath(FileNames.absolutePathString(deltaLog.dataPath, f.path)) +:
@@ -1968,139 +1936,165 @@ class DeltaTable private (val spark: SparkSession, val deltaLog: DeltaLog) {
   private[delta] def normPath(s: String): String =
     new Path(new java.net.URI(s)).toUri.getPath
 
-  /** Files that actually contain rows matching `cond`, found with ONE
-    * metadata-column scan over the already-pruned candidates: Catalyst
-    * prunes the read down to the predicate's columns, and only distinct
-    * file paths come back to the driver — never rows.
+  /** The candidates holding a row of `keyed` (a filtered
+    * [[readFilesKeyed]] scan): only distinct file paths come back to the
+    * driver, never rows, and Catalyst prunes the read to the filter's
+    * columns.
     */
-  private def filesWithMatches(candidates: Seq[AddFile], md: Metadata,
-      cond: Column): Seq[AddFile] = {
-    import org.apache.spark.sql.functions.col
-    if (candidates.isEmpty) return Nil
-    val hit = readFilesKeyed(candidates, md)
-      .filter(cond)
-      .select(col("__fp")).distinct()
+  private def filesOf(keyed: DataFrame, candidates: Seq[AddFile]): Seq[AddFile] = {
+    val hit = keyed.select(org.apache.spark.sql.functions.col("__fp")).distinct()
       .collect().map(r => normPath(r.getString(0))).toSet
     candidates.filter(f =>
       hit(normPath(FileNames.absolutePathString(deltaLog.dataPath, f.path))))
   }
 
-  /** Row-level DELETE: rewrites only the files that contain matching rows
-    * (found via partition pruning + stats skipping + one match scan);
-    * rows where the predicate is NULL are kept, per SQL DELETE semantics.
-    * With `delta.enableChangeDataFeed` the deleted rows are captured as
-    * CDC files. Use [[deleteWhere]] for the metadata-only fast path when
-    * the predicate is partition-granular.
-    */
-  /** Σ numRecords over `files` from their stats; None when any file
-    * lacks them (metrics must be exact or absent, never guessed).
+  /** Σ live rows over `files` from their stats (`numRecords` less the
+    * deletion vector's cardinality); None when any file lacks them
+    * (metrics must be exact or absent, never guessed).
     */
   private[delta] def rowsFromStats(files: Seq[AddFile]): Option[Long] = {
-    val counts = files.map(f => Stats.numRecords(f.stats))
+    val counts = files.map(f => Stats.numRecords(f.stats)
+      .map(_ - DeletionVectors.descriptor(f).map(_.cardinality).getOrElse(0L)))
     if (counts.forall(_.isDefined)) Some(counts.flatten.sum) else None
   }
 
-  def delete(condition: Column): Long = {
-    import org.apache.spark.sql.functions.{coalesce, lit, not}
-    val txn = deltaLog.startTransaction()
-    if (txn.snapshot.metadataOpt.isEmpty) return txn.readVersion
+  /** What [[rewriteWhere]] hands its caller to commit: the file actions,
+    * extra operation parameters and DELETE's row metrics.
+    */
+  private case class RowRewrite(actions: Seq[Action],
+      params: Map[String, String] = Map.empty, metrics: Map[String, String] = Map.empty)
+
+  /** The row-level rewrite behind DELETE, UPDATE and replaceWhere. Rows
+    * matching `condition` are deleted (`set = None`) or replaced by their
+    * updated image (every SET expression sees the OLD row); rows where
+    * the condition is NULL are kept, per SQL. The caller commits the
+    * result under its own operation.
+    *
+    *  - Candidates come from `txn.markFilesAsRead`, so the commit records
+    *    the condition as its conflict read.
+    *  - A delete whose condition is partition-only removes the candidates
+    *    whole, without a match scan.
+    *  - Copy-on-write: one scan finds the files holding matches and one
+    *    projection rewrites them — matched rows dropped or updated, the
+    *    rest copied. Under row tracking every row keeps its id, and an
+    *    unchanged row its commit version, materialized in the new files.
+    *  - Deletion vectors (`delta.enableDeletionVectors`): one keyed scan
+    *    of the matched rows masks their positions ([[dvMask]]); an update
+    *    appends only the new images, each keeping its row id.
+    *  - Change data feed: `delete` rows, or `update_preimage` and
+    *    `update_postimage` rows, plus `inserted` as `insert` rows, in one
+    *    set of change files.
+    */
+  private def rewriteWhere(txn: OptimisticTransaction, condition: Column,
+      set: Option[Map[String, Column]], inserted: Option[DataFrame] = None): RowRewrite = {
+    import org.apache.spark.sql.functions.{coalesce, col, lit, not, when}
     val md = txn.metadata
     val candidates = txn.markFilesAsRead(condition)
     val condTrue = coalesce(condition, lit(false))
-    if (DeltaConfig.EnableDeletionVectors.fromMetadata(md))
-      return dvDelete(txn, md, condition, condTrue, candidates)
-    val touched = filesWithMatches(candidates, md, condTrue)
-    if (touched.isEmpty) return txn.readVersion
-    val rt = RowTracking.enabled(md)
-    import org.apache.spark.sql.functions.col
-    val schemaCols = md.schema.fieldNames.map(col).toSeq
-    // row tracking: surviving rows are content-identical, so both their id
-    // and their commit version ride into the rewritten file as
-    // materialized columns
-    val touchedDF =
-      if (rt) rowIdResolved(touched, md) else readFilesDF(touched, md)
-    val survivors = touchedDF.filter(not(condTrue)).select(
-      (if (rt) schemaCols :+
-        col("__rt_row_id").as(RowTracking.MatRowId) :+
-        col("__rt_rcv").as(RowTracking.MatRowCommitVersion)
-      else schemaCols): _*)
-    val adds = DeltaTable.writeFiles(spark, deltaLog.dataPath, survivors,
-      md.partitionColumns, md)
     val now = deltaLog.clock.nowMillis
-    val removes = touched.map(_.remove(now))
-    val cdc =
-      if (DeltaConfig.EnableChangeDataFeed.fromMetadata(md))
-        DeltaTable.writeCdcFiles(spark, deltaLog.dataPath,
-          touchedDF.filter(condTrue).select(schemaCols: _*)
-            .withColumn("_change_type", lit("delete")), md)
-      else Nil
-    // exact row metrics from file stats (delta-spark observability
-    // parity): deleted = removed-file rows − surviving rewritten rows
-    val rowMetrics = (rowsFromStats(touched), rowsFromStats(adds)) match {
-      case (Some(rm), Some(ad)) =>
-        Map("numDeletedRows" -> (rm - ad).toString,
-          "numCopiedRows" -> ad.toString)
-      case _ => Map.empty[String, String]
+    val fields = md.schema.fields.toSeq
+    val schemaCols = fields.map(f => col(f.name))
+    // a matched row's new image: SET columns replaced, the rest as-is
+    def image(f: org.apache.spark.sql.types.StructField): Column =
+      set.flatMap(_.get(f.name)).fold(col(f.name))(_.cast(f.dataType))
+    // change rows for the matched rows `old`, plus the inserted data
+    def cdc(old: => DataFrame): Seq[Action] =
+      if (!DeltaConfig.EnableChangeDataFeed.fromMetadata(md)) Nil
+      else {
+        val pre = old.select(schemaCols: _*)
+        val changes = set match {
+          case None => pre.withColumn("_change_type", lit("delete"))
+          case Some(_) => pre.withColumn("_change_type", lit("update_preimage"))
+            .unionByName(old.select(fields.map(f => image(f).as(f.name)): _*)
+              .withColumn("_change_type", lit("update_postimage")))
+        }
+        DeltaTable.writeCdcFiles(spark, deltaLog.dataPath, inserted.fold(changes)(d =>
+          changes.unionByName(d.select(schemaCols: _*)
+            .withColumn("_change_type", lit("insert")))), md)
+      }
+    // DELETE's exact row metrics from file stats: the removed files' rows
+    // less those copied into `copies`
+    def deleted(removed: Seq[AddFile], copies: Seq[AddFile]): Map[String, String] =
+      (rowsFromStats(removed), rowsFromStats(copies)) match {
+        case (Some(rm), Some(cp)) if set.isEmpty =>
+          Map("numDeletedRows" -> (rm - cp).toString, "numCopiedRows" -> cp.toString)
+        case _ => Map.empty
+      }
+
+    if (set.isEmpty && DeltaScan(txn.snapshot, Some(condition)).residualPredicates.isEmpty)
+      return RowRewrite(candidates.map(_.remove(now)) ++
+        (if (candidates.isEmpty) Nil else cdc(readFilesDF(candidates, md))),
+        metrics = deleted(candidates, Nil))
+    if (candidates.isEmpty) return RowRewrite(Nil)
+
+    if (DeltaConfig.EnableDeletionVectors.fromMetadata(md)) {
+      // row ids are resolved only for the new images of an update
+      val rt = set.isDefined && RowTracking.enabled(md)
+      val matched = (if (rt) rowIdResolved(candidates, md)
+        else readFilesKeyed(candidates, md)).filter(condTrue).persist()
+      try {
+        val (masks, deletedRows) = dvMask(txn, matched, candidates)
+        if (masks.isEmpty) return RowRewrite(Nil)
+        // the new image keeps the old row's id; its commit version comes
+        // from the new file's default (this commit)
+        val images =
+          if (set.isEmpty) Nil
+          else DeltaTable.writeFiles(spark, deltaLog.dataPath,
+            matched.select(fields.map(f => image(f).as(f.name)) ++
+              (if (rt) DeltaTable.lineage(col("__rt_row_id"), lit(null)) else Nil): _*),
+            md.partitionColumns, md)
+        // every file dvMask re-adds carries its new DV
+        RowRewrite(masks ++ images ++ cdc(matched), Map("mode" -> "deletion-vectors"),
+          if (set.isDefined) Map.empty
+          else Map("numDeletedRows" -> deletedRows.toString,
+            "numDeletionVectorsAdded" -> masks.count(_.isInstanceOf[AddFile]).toString))
+      } finally matched.unpersist()
+    } else {
+      val touched = filesOf(readFilesKeyed(candidates, md).filter(condTrue), candidates)
+      if (touched.isEmpty) return RowRewrite(Nil)
+      val rt = RowTracking.enabled(md)
+      val old = if (rt) rowIdResolved(touched, md) else readFilesDF(touched, md)
+      // one projection over the old row: the image where matched, else
+      // as-is; an updated row keeps its id, and its commit version falls
+      // back to the new file's default (this commit)
+      val rewritten = (if (set.isEmpty) old.filter(not(condTrue)) else old).select(
+        fields.map(f => when(condTrue, image(f)).otherwise(col(f.name)).as(f.name)) ++
+          (if (rt) DeltaTable.lineage(col("__rt_row_id"),
+            when(condTrue, lit(null)).otherwise(col("__rt_rcv")))
+          else Nil): _*)
+      val adds = DeltaTable.writeFiles(spark, deltaLog.dataPath, rewritten,
+        md.partitionColumns, md)
+      RowRewrite(touched.map(_.remove(now)) ++ adds ++ cdc(old.filter(condTrue)),
+        metrics = deleted(touched, adds))
     }
-    txn.commit(removes ++ adds ++ cdc, Op.Delete,
-      operationParameters = Map("predicate" -> condition.toString),
-      operationMetrics = rowMetrics)
   }
 
-  /** Merge-on-read DELETE (delta.enableDeletionVectors): instead of
-    * rewriting files, record the matching LIVE rows (prior DVs already
-    * excluded by the keyed scan) in per-file deletion vectors and commit
-    * remove+re-add of the same data files with descriptors attached — a
-    * DELETE touching 10^5 wide files writes kilobytes of row ids, not
-    * terabytes of parquet. OPTIMIZE materializes and drops the DVs.
+  /** Row-level DELETE of the rows matching `condition` (NULL keeps the
+    * row); see [[rewriteWhere]]. Use [[deleteWhere]] to insist that the
+    * predicate is partition-only.
     */
-  private def dvDelete(txn: OptimisticTransaction, md: Metadata,
-      condition: Column, condTrue: Column, candidates: Seq[AddFile]): Long = {
-    import org.apache.spark.sql.functions.{col, lit}
-    if (candidates.isEmpty) return txn.readVersion
-    val matched = readFilesKeyed(candidates, md).filter(condTrue).persist()
-    try {
-      val (_, actions) = dvMask(txn, matched, candidates)
-      if (actions.isEmpty) return txn.readVersion
-      val cdc =
-        if (DeltaConfig.EnableChangeDataFeed.fromMetadata(md))
-          DeltaTable.writeCdcFiles(spark, deltaLog.dataPath,
-            matched.select(md.schema.fieldNames.map(col).toSeq: _*)
-              .withColumn("_change_type", lit("delete")), md)
-        else Nil
-      // deleted rows = growth of the DV cardinalities across the commit
-      val newCard = actions.collect {
-        case a: AddFile =>
-          DeletionVectors.descriptor(a).map(_.cardinality).getOrElse(0L)
-      }.sum
-      val oldCard = candidates.flatMap(f =>
-        DeletionVectors.descriptor(f).map(_.cardinality)).sum
-      val nDvFiles = actions.count {
-        case a: AddFile => DeletionVectors.descriptor(a).isDefined
-        case _ => false
-      }
-      txn.commit(actions ++ cdc, Op.Delete,
-        operationParameters = Map(
-          "predicate" -> condition.toString, "mode" -> "deletion-vectors"),
-        operationMetrics = Map(
-          "numDeletedRows" -> (newCard - oldCard).toString,
-          "numDeletionVectorsAdded" -> nDvFiles.toString))
-    } finally matched.unpersist()
+  def delete(condition: Column): Long = {
+    val txn = deltaLog.startTransaction()
+    if (txn.snapshot.metadataOpt.isEmpty) return txn.readVersion
+    val rw = rewriteWhere(txn, condition, None)
+    if (rw.actions.isEmpty) return txn.readVersion
+    txn.commit(rw.actions, Op.Delete,
+      operationParameters = Map("predicate" -> condition.toString) ++ rw.params,
+      operationMetrics = rw.metrics)
   }
 
   /** Shared DV masking: write merged per-file deletion vectors covering
     * the LIVE matched rows of a keyed scan (`__fp`/`__ri` columns, prior
-    * DVs already excluded) and return (touched files, protocol-upgrade +
-    * remove/re-add actions). Empty when nothing matched.
+    * DVs already excluded) and return the protocol-upgrade +
+    * remove/re-add actions with the number of rows newly deleted. A
+    * file whose new DV covers every row its stats count is removed, not
+    * re-added. Empty when nothing matched.
     */
   private[delta] def dvMask(txn: OptimisticTransaction, matched: DataFrame,
-      candidates: Seq[AddFile]): (Seq[AddFile], Seq[Action]) = {
+      candidates: Seq[AddFile]): (Seq[Action], Long) = {
     import org.apache.spark.sql.functions.col
-    val touchedFps = matched.select(col("__fp")).distinct()
-      .collect().map(r => normPath(r.getString(0))).toSet
-    if (touchedFps.isEmpty) return (Nil, Nil)
-    val touched = candidates.filter(f =>
-      touchedFps(normPath(FileNames.absolutePathString(deltaLog.dataPath, f.path))))
+    val touched = filesOf(matched, candidates)
+    if (touched.isEmpty) return (Nil, 0L)
     // new DV per touched file = fresh matches + its prior DV rows
     val fresh = matched.select(col("__fp").as("fp"), col("__ri").as("ri"))
     val allRows = DeletionVectors.rowsDF(spark, deltaLog.dataPath, touched)
@@ -2108,121 +2102,41 @@ class DeltaTable private (val spark: SparkSession, val deltaLog: DeltaLog) {
     val descByFp = DeletionVectors.write(spark, deltaLog.dataPath, allRows)
       .map { case (fp, d) => normPath(fp) -> d }
     val now = deltaLog.clock.nowMillis
+    val masked = touched.map(f =>
+      f -> descByFp(normPath(FileNames.absolutePathString(deltaLog.dataPath, f.path))))
+    val deletedRows = masked.map { case (f, d) =>
+      d.cardinality - DeletionVectors.descriptor(f).map(_.cardinality).getOrElse(0L)
+    }.sum
+    val actions = masked.flatMap { case (f, d) =>
+      if (Stats.numRecords(f.stats).contains(d.cardinality)) Seq(f.remove(now))
+      else Seq(f.remove(now), DeletionVectors.withDescriptor(f, d))
+    }
     // first DV on the table upgrades to reader 3 / writer 7 + feature,
     // per the protocol — stock readers gate on it before trusting DVs
-    val protoUp: Seq[Action] = Protocol
-      .requireReaderWriterFeature(txn.snapshot.protocol, "deletionVectors").toSeq
-    (touched, protoUp ++ touched.flatMap { f =>
-      val fp = normPath(FileNames.absolutePathString(deltaLog.dataPath, f.path))
-      Seq(f.remove(now), DeletionVectors.withDescriptor(f, descByFp(fp)))
-    })
+    val protoUp: Seq[Action] =
+      if (!actions.exists(_.isInstanceOf[AddFile])) Nil
+      else Protocol.requireReaderWriterFeature(txn.snapshot.protocol, "deletionVectors").toSeq
+    (protoUp ++ actions, deletedRows)
   }
 
   /** Row-level UPDATE: `set` maps column name -> new-value expression,
     * all evaluated against the OLD row (standard UPDATE semantics — set
-    * expressions never see each other's results). Only files containing
-    * matching rows are rewritten; partition-column updates move rows
-    * between partitions naturally through the partitioned rewrite. With
-    * `delta.enableChangeDataFeed`, update_preimage/update_postimage rows
-    * are captured as CDC files.
+    * expressions never see each other's results); see [[rewriteWhere]].
+    * Partition-column updates move rows between partitions naturally
+    * through the partitioned write.
     */
   def update(condition: Column, set: Map[String, Column]): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, when}
     require(set.nonEmpty, "UPDATE needs at least one SET column")
     val txn = deltaLog.startTransaction()
     if (txn.snapshot.metadataOpt.isEmpty) return txn.readVersion
-    val md = txn.metadata
-    val unknown = set.keySet -- md.schema.fieldNames
+    val unknown = set.keySet -- txn.metadata.schema.fieldNames
     require(unknown.isEmpty, s"SET references unknown columns: ${unknown.mkString(", ")}")
-    val candidates = txn.markFilesAsRead(condition)
-    val condTrue = coalesce(condition, lit(false))
-    if (DeltaConfig.EnableDeletionVectors.fromMetadata(md))
-      return dvUpdate(txn, md, condition, condTrue, candidates, set)
-    val touched = filesWithMatches(candidates, md, condTrue)
-    if (touched.isEmpty) return txn.readVersion
-    val rt = RowTracking.enabled(md)
-    val touchedDF =
-      if (rt) rowIdResolved(touched, md) else readFilesDF(touched, md)
-    // one projection over the old row: updated where matched, else as-is
-    val rewriteProj = md.schema.fields.map { f =>
-      set.get(f.name) match {
-        case Some(e) => when(condTrue, e.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
-        case None => col(f.name)
-      }
-    }.toSeq
-    // row tracking: every row keeps its id; only UNCHANGED rows keep their
-    // commit version — updated rows materialize null there, so the read
-    // falls back to the new file's defaultRowCommitVersion (this commit)
-    val rewritten = touchedDF.select(rewriteProj ++ (if (rt) Seq(
-      col("__rt_row_id").as(RowTracking.MatRowId),
-      when(condTrue, lit(null)).otherwise(col("__rt_rcv"))
-        .as(RowTracking.MatRowCommitVersion)) else Nil): _*)
-    val adds = DeltaTable.writeFiles(spark, deltaLog.dataPath, rewritten,
-      md.partitionColumns, md)
-    val now = deltaLog.clock.nowMillis
-    val removes = touched.map(_.remove(now))
-    val cdc =
-      if (DeltaConfig.EnableChangeDataFeed.fromMetadata(md)) {
-        val matched = touchedDF.filter(condTrue)
-        val postProj = md.schema.fields.map { f =>
-          set.get(f.name).map(_.cast(f.dataType).as(f.name)).getOrElse(col(f.name))
-        }.toSeq
-        DeltaTable.writeCdcFiles(spark, deltaLog.dataPath,
-          matched.withColumn("_change_type", lit("update_preimage"))
-            .unionByName(matched.select(postProj: _*)
-              .withColumn("_change_type", lit("update_postimage"))), md)
-      } else Nil
-    txn.commit(removes ++ adds ++ cdc, Op.Update,
+    val rw = rewriteWhere(txn, condition, Some(set))
+    if (rw.actions.isEmpty) return txn.readVersion
+    txn.commit(rw.actions, Op.Update,
       operationParameters = Map(
         "predicate" -> condition.toString,
-        "setColumns" -> set.keys.toSeq.sorted.mkString(",")))
-  }
-
-  /** Merge-on-read UPDATE (delta.enableDeletionVectors): the matched
-    * rows' OLD positions are masked with deletion vectors and only the
-    * NEW row images are written as appended files — an UPDATE touching
-    * 0.1% of the rows in 10^5 wide files writes kilobytes of bitmaps
-    * plus the changed rows, instead of rewriting every touched file.
-    * Partition-column updates still move rows between partitions through
-    * the partitioned append. OPTIMIZE materializes the masks later.
-    */
-  private def dvUpdate(txn: OptimisticTransaction, md: Metadata,
-      condition: Column, condTrue: Column, candidates: Seq[AddFile],
-      set: Map[String, Column]): Long = {
-    import org.apache.spark.sql.functions.{col, lit}
-    if (candidates.isEmpty) return txn.readVersion
-    val rt = RowTracking.enabled(md)
-    val matched = (if (rt) rowIdResolved(candidates, md)
-      else readFilesKeyed(candidates, md)).filter(condTrue).persist()
-    try {
-      val (_, maskActions) = dvMask(txn, matched, candidates)
-      if (maskActions.isEmpty) return txn.readVersion
-      val postProj = md.schema.fields.map { f =>
-        set.get(f.name).map(_.cast(f.dataType).as(f.name)).getOrElse(col(f.name))
-      }.toSeq
-      val newImages = matched.select(postProj: _*)
-      // row tracking: the appended image keeps the old row's id; its
-      // commit version comes from the new file's default (this commit)
-      val updatedRows =
-        if (rt) matched.select(postProj :+
-          col("__rt_row_id").as(RowTracking.MatRowId): _*)
-        else newImages
-      val adds = DeltaTable.writeFiles(spark, deltaLog.dataPath, updatedRows,
-        md.partitionColumns, md)
-      val cdc =
-        if (DeltaConfig.EnableChangeDataFeed.fromMetadata(md))
-          DeltaTable.writeCdcFiles(spark, deltaLog.dataPath,
-            matched.select(md.schema.fieldNames.map(col).toSeq: _*)
-              .withColumn("_change_type", lit("update_preimage"))
-              .unionByName(newImages
-                .withColumn("_change_type", lit("update_postimage"))), md)
-        else Nil
-      txn.commit(maskActions ++ adds ++ cdc, Op.Update,
-        operationParameters = Map(
-          "predicate" -> condition.toString,
-          "setColumns" -> set.keys.toSeq.sorted.mkString(","),
-          "mode" -> "deletion-vectors"))
-    } finally matched.unpersist()
+        "setColumns" -> set.keys.toSeq.sorted.mkString(",")) ++ rw.params)
   }
 
   /** MERGE INTO builder: the target is addressable as `t.<col>` and the
@@ -2835,16 +2749,22 @@ class DeltaTable private (val spark: SparkSession, val deltaLog: DeltaLog) {
       throw new IllegalArgumentException(
         "deleteWhere only supports partition-column predicates; " +
           s"residual: ${scan.residualPredicates.mkString(", ")}")
-    val files = txn.markFilesAsRead(partitionPredicate)
-    val now = deltaLog.clock.nowMillis
-    txn.commit(files.map(_.remove(now)), Op.Delete,
+    val rw = rewriteWhere(txn, partitionPredicate, None)
+    txn.commit(rw.actions, Op.Delete,
       operationParameters = Map("predicate" -> partitionPredicate.toString),
-      operationMetrics = rowsFromStats(files)
-        .map(n => Map("numDeletedRows" -> n.toString)).getOrElse(Map.empty))
+      operationMetrics = rw.metrics)
   }
 }
 
 object DeltaTable {
+
+  /** Row-tracking lineage for rewritten rows: the row id and commit
+    * version a new file materializes, overriding its own defaults. A
+    * null commit version reads as the new file's (the rewrite's commit).
+    */
+  private[delta] def lineage(id: Column, rcv: Column): Seq[Column] =
+    Seq(id.cast("long").as(RowTracking.MatRowId),
+      rcv.cast("long").as(RowTracking.MatRowCommitVersion))
 
   /** `f` as a shallow clone references it: by absolute URI under the
     * source's qualified `root`. DV payloads stay in the SOURCE table's

@@ -377,9 +377,7 @@ final class MergeBuilder private[delta] (
     // file's default), inserts materialize nothing (fresh ids)
     val rt = RowTracking.enabled(md)
     def rtCols(id: Column, rcv: Column): Seq[Column] =
-      if (!rt) Nil
-      else Seq(id.cast("long").as(RowTracking.MatRowId),
-        rcv.cast("long").as(RowTracking.MatRowCommitVersion))
+      if (rt) DeltaTable.lineage(id, rcv) else Nil
     val tgt = (if (rt) t.rowIdResolved(touched, md0) else t.readFilesKeyed(touched, md0))
       .withColumn("__tid", concat_ws(":", col("__fp"), col("__ri")))
       .withColumn("__t_present", lit(true))
@@ -451,7 +449,7 @@ final class MergeBuilder private[delta] (
       val removes: Seq[Action] =
         if (dvOn) {
           val modified = joined.filter(col("__mc") >= 0 || col("__bc") >= 0)
-          t.dvMask(txn, modified, touched)._2
+          t.dvMask(txn, modified, touched)._1
         } else touched.map(_.remove(now))
       val cdc =
         if (cdfOn) {

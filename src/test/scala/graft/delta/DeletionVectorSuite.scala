@@ -52,7 +52,7 @@ class DeletionVectorSuite extends AnyFunSuite with SharedSpark {
     import spark.implicits._
     val t = dvTable()
     val before = t.snapshot.allFiles.map(_.path).toSet
-    val v = t.delete(col("score") >= 30 && col("part") === "y")
+    val v = t.delete(col("score") >= 40 && col("part") === "y")
     assert(v > 0)
     // same physical files: no rewrite happened
     assert(t.snapshot.allFiles.map(_.path).toSet == before)
@@ -61,20 +61,18 @@ class DeletionVectorSuite extends AnyFunSuite with SharedSpark {
     assert(dvd.forall(_.partitionValues("part") == "y"))
     assert(DeletionVectors.descriptor(dvd.head).get.cardinality > 0)
     // reads apply the DV
-    assert(t.toDF.select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 5L))
-    assert(t.read(col("part") === "y").count() == 0)
+    assert(t.toDF.select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L, 5L))
+    assert(t.read(col("part") === "y").count() == 1)
     // time travel before the delete still sees all rows
     assert(t.toDF(v - 1).count() == 5)
   }
 
   test("second DV delete on the same file merges row sets") {
-    import spark.implicits._
-    val t = dvTable()
-    t.delete(col("id") === 3) // part=y file
+    val t = dvBigTable()
+    t.delete(col("id") === 3)
     t.delete(col("id") === 4) // same file
-    assert(t.toDF.select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 5L))
-    val d = DeletionVectors.descriptor(
-      dvFiles(t).find(_.partitionValues("part") == "y").get).get
+    assert(t.toDF.count() == 998 && t.toDF.filter(col("id").isin(3L, 4L)).count() == 0)
+    val d = DeletionVectors.descriptor(dvFiles(t).head).get
     assert(d.cardinality == 2, "merged DV must carry both deleted rows")
   }
 
@@ -86,25 +84,25 @@ class DeletionVectorSuite extends AnyFunSuite with SharedSpark {
   }
 
   test("UPDATE on a DV'd table masks old rows and appends new images") {
-    import spark.implicits._
-    val t = dvTable()
-    t.delete(col("id") === 3) // DV on the part=y file
+    val t = dvBigTable()
+    t.delete(col("id") === 3) // DV on the one data file
     val before = t.snapshot.allFiles.map(_.path).toSet
-    t.update(col("id") === 4, Map("score" -> lit(44)))
-    assert(t.toDF.select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 4L, 5L))
-    assert(t.toDF.filter(col("id") === 4).select("score").head().getInt(0) == 44)
+    t.update(col("id") === 4, Map("v" -> lit("v44")))
+    def check(): Unit = {
+      assert(t.toDF.count() == 999 && t.toDF.filter(col("id") === 3).count() == 0)
+      assert(t.toDF.filter(col("id") === 4).select("v").head().getString(0) == "v44")
+    }
+    check()
     // merge-on-read: the old file stays in place, its DV now masks the
     // deleted id=3 AND the pre-update image of id=4; the new image is a
     // fresh appended file
     assert(before.subsetOf(t.snapshot.allFiles.map(_.path).toSet))
-    val d = DeletionVectors.descriptor(
-      dvFiles(t).find(_.partitionValues("part") == "y").get).get
+    val d = DeletionVectors.descriptor(dvFiles(t).head).get
     assert(d.cardinality == 2)
     // updates must not resurrect deleted rows, before or after compaction
     t.compact()
     assert(dvFiles(t).isEmpty)
-    assert(t.toDF.select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 4L, 5L))
-    assert(t.toDF.filter(col("id") === 4).select("score").head().getInt(0) == 44)
+    check()
   }
 
   test("MERGE on a DV'd table neither matches nor resurrects deleted rows") {
@@ -155,8 +153,11 @@ class DeletionVectorSuite extends AnyFunSuite with SharedSpark {
       .whenNotMatchedBySourceDelete(col("t.score") >= 40)
       .execute()
     // target-only rows with score>=40 (ids 4,5) were deleted by masking;
-    // every original file is still present (no table-wide rewrite)
-    assert(before.subsetOf(t.snapshot.allFiles.map(_.path).toSet))
+    // every original file keeping a live row is still present (no
+    // table-wide rewrite); part=z lost its only row, so its file is removed
+    val after = t.snapshot.allFiles.map(_.path).toSet
+    val z = before.filter(_.startsWith("part=z/"))
+    assert(z.size == 1 && (before -- z).subsetOf(after) && (z & after).isEmpty)
     assert(t.toDF.select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
   }
 
@@ -209,9 +210,8 @@ class DeletionVectorSuite extends AnyFunSuite with SharedSpark {
   }
 
   test("small DVs inline into the descriptor (storageType i, Z85 bitmap)") {
-    import spark.implicits._
-    val t = dvTable()
-    t.delete(col("id") === 3 || col("id") === 4) // both rows of the part=y file
+    val t = dvBigTable()
+    t.delete(col("id") === 3 || col("id") === 4) // two rows of the one file
     val f = dvFiles(t).head
     val d = DeletionVectors.descriptor(f).get
     assert(f.deletionVector != null, "descriptor must be the protocol struct, not tags")
@@ -219,7 +219,7 @@ class DeletionVectorSuite extends AnyFunSuite with SharedSpark {
     assert(d.cardinality == 2 && d.offset.isEmpty)
     // the inline payload IS the bitmap: decode and check the row indexes
     val bm = RoaringBitmapArray.deserialize(Z85.decode(d.pathOrInlineDv).take(d.sizeInBytes))
-    assert(bm.values.toSeq == Seq(0L, 1L)) // ids 3,4 = row indexes 0,1
+    assert(bm.values.toSeq == Seq(3L, 4L)) // ids 3,4 = row indexes 3,4
     // no payload file was written for an all-inline delete
     val dvDir = new org.apache.hadoop.fs.Path(t.deltaLog.dataPath, "_deletion_vectors")
     val fs = dvDir.getFileSystem(spark.sessionState.newHadoopConf())
@@ -260,9 +260,9 @@ class DeletionVectorSuite extends AnyFunSuite with SharedSpark {
 
   test("legacy tag-based DV tables read, and the next DELETE migrates them") {
     import spark.implicits._
-    val t = dvTable()
+    val t = dvBigTable()
     // hand-build a legacy DV: parquet sidecar of (fp, ri) + tags
-    val yFile = t.snapshot.allFiles.find(_.partitionValues("part") == "y").get
+    val yFile = t.snapshot.allFiles.head
     val abs = FileNames.absolutePath(t.deltaLog.dataPath, yFile.path).toString
     val fp = abs.replaceFirst("^file:/+", "/")
     val rel = s"_deletion_vectors/dv-legacy-${java.util.UUID.randomUUID}.parquet"
@@ -278,16 +278,16 @@ class DeletionVectorSuite extends AnyFunSuite with SharedSpark {
       yFile.copy(tags = Map(
         DeletionVectors.PathTag -> rel,
         DeletionVectors.CardinalityTag -> "1"))), "DELETE")
-    // legacy DV applies: id=3 (row 0 of the y file) is gone
-    assert(t.toDF.select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 4L, 5L))
+    // legacy DV applies: id=0 (row 0 of the file) is gone
+    assert(t.toDF.count() == 999 && t.toDF.filter(col("id") === 0).count() == 0)
     // next DELETE on the same file merges into a protocol-format DV
-    t.delete(col("id") === 4)
-    val merged = t.snapshot.allFiles.find(_.partitionValues("part") == "y").get
+    t.delete(col("id") === 1)
+    val merged = t.snapshot.allFiles.head
     assert(merged.deletionVector != null, "migration must produce a protocol descriptor")
     assert(merged.deletionVector.cardinality == 2, "legacy rows must merge in")
     assert(Option(merged.tags).forall(ts => !ts.contains(DeletionVectors.PathTag)),
       "legacy tags must be stripped on migration")
-    assert(t.toDF.select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 5L))
+    assert(t.toDF.count() == 998 && t.toDF.filter(col("id") <= 1).count() == 0)
   }
 
   test("shallow clone rewrites u-descriptors to absolute p; inline descriptors travel as-is") {
@@ -313,8 +313,7 @@ class DeletionVectorSuite extends AnyFunSuite with SharedSpark {
   }
 
   test("DV descriptors survive checkpointing and the spill replay path") {
-    import spark.implicits._
-    val t = dvTable()
+    val t = dvBigTable()
     t.delete(col("id") === 3)
     t.deltaLog.checkpoint(t.snapshot)
     // force the NEXT snapshot to rebuild through the checkpoint parquet
@@ -322,14 +321,14 @@ class DeletionVectorSuite extends AnyFunSuite with SharedSpark {
     // both schema-on-read paths, not the driver Jackson parse
     spark.conf.set("spark.graft.snapshot.spillThresholdBytes", "1")
     try {
-      t.delete(col("id") === 4) // same y file: must merge the prior DV
+      t.delete(col("id") === 4) // same file: must merge the prior DV
       val s = t.snapshot
       assert(s.segment.checkpoint.isDefined, "snapshot must read through the checkpoint")
-      val f = s.allFiles.find(_.partitionValues("part") == "y").get
+      val f = s.allFiles.head
       assert(f.deletionVector != null)
       assert(f.deletionVector.cardinality == 2,
         "checkpoint-carried DV must merge with the new delete")
-      assert(t.toDF.select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 5L))
+      assert(t.toDF.count() == 998 && t.toDF.filter(col("id").isin(3L, 4L)).count() == 0)
     } finally spark.conf.unset("spark.graft.snapshot.spillThresholdBytes")
   }
 

@@ -399,7 +399,8 @@ class IcebergUniformSuite extends AnyFunSuite with SharedSpark {
         "delta.enableDeletionVectors" -> "true",
         "delta.universalFormat.enabledFormats" -> "iceberg")))
     txn.commit(Nil, Op.CreateTable)
-    t.write(df((1L, "a", "x"), (2L, "b", "x"), (3L, "c", "y")),
+    // one file per partition, so the delete leaves live rows to mask
+    t.write(df((1L, "a", "x"), (2L, "b", "x"), (3L, "c", "y")).coalesce(1),
       partitionBy = Seq("part"))
     t.delete(col("id") === 1L) // merge-on-read: DV masks the row
     val snap = t.deltaLog.update()
@@ -456,7 +457,8 @@ class IcebergUniformSuite extends AnyFunSuite with SharedSpark {
         "delta.enableDeletionVectors" -> "true",
         "delta.universalFormat.enabledFormats" -> "iceberg")))
     txn.commit(Nil, Op.CreateTable)
-    t.write(df((1L, "a", "x"), (2L, "b", "x"), (3L, "c", "y")),
+    // one file per partition, so both deletes leave live rows to mask
+    t.write(df((1L, "a", "x"), (2L, "b", "x"), (5L, "e", "x"), (3L, "c", "y")).coalesce(1),
       partitionBy = Seq("part"))
     t.delete(col("id") === 1L) // DV — generation writes position deletes
     def delSide(): (Set[String], Set[String]) = {
@@ -486,7 +488,7 @@ class IcebergUniformSuite extends AnyFunSuite with SharedSpark {
     assert(delM3.nonEmpty && (delM3 & delM1).isEmpty, s"$delM3 vs $delM1")
     assert((delF3 -- delF1).nonEmpty, s"$delF3 vs $delF1")
     // and the logical content is right throughout
-    assert(t.toDF.collect().map(_.getLong(0)).toSet == Set(3L, 4L))
+    assert(t.toDF.collect().map(_.getLong(0)).toSet == Set(3L, 4L, 5L))
   }
 
   test("TRUNCATE generates a tombstone-only snapshot (empty live set)") {
@@ -554,7 +556,8 @@ class IcebergUniformSuite extends AnyFunSuite with SharedSpark {
         "delta.enableDeletionVectors" -> "true",
         "delta.universalFormat.enabledFormats" -> "iceberg")))
     txn.commit(Nil, Op.CreateTable)
-    t.write(df((1L, "a", "x"), (2L, "b", "x"), (3L, "c", "y"), (4L, "d", "y")),
+    // one file per partition, so the delete leaves live rows to mask
+    t.write(df((1L, "a", "x"), (2L, "b", "x"), (3L, "c", "y"), (4L, "d", "y")).coalesce(1),
       partitionBy = Seq("part"))
     t.delete(col("id").isin(1L, 3L)) // merge-on-read DVs in two partitions
     val expected = t.toDF.select("id", "v", "part").collect()
@@ -769,7 +772,8 @@ class IcebergUniformSuite extends AnyFunSuite with SharedSpark {
         "delta.enableDeletionVectors" -> "true",
         "delta.universalFormat.enabledFormats" -> "iceberg")))
     txn.commit(Nil, Op.CreateTable)
-    t.write(df((1L, "a", "x"), (2L, "b", "x"), (3L, "c", "y")),
+    // one file per partition, so the delete leaves live rows to mask
+    t.write(df((1L, "a", "x"), (2L, "b", "x"), (3L, "c", "y")).coalesce(1),
       partitionBy = Seq("part"))
     t.delete(col("id") === 1L) // DV
     val logDir = new java.io.File(dir, "_delta_log")
@@ -2783,7 +2787,8 @@ class IcebergUniformSuite extends AnyFunSuite with SharedSpark {
   test("format v3: DVs export as Puffin blobs; row lineage from row tracking") {
     val dir = tmp()
     val t = mkV3(dir)
-    t.write(df((1L, "a", "x"), (2L, "b", "x"), (3L, "c", "y")),
+    // one file per partition, so the delete leaves live rows to mask
+    t.write(df((1L, "a", "x"), (2L, "b", "x"), (3L, "c", "y")).coalesce(1),
       partitionBy = Seq("part"))
     t.delete(col("id") === 1L) // merge-on-read DV
     val log = t.deltaLog
@@ -2859,7 +2864,8 @@ class IcebergUniformSuite extends AnyFunSuite with SharedSpark {
   test("format v3: appends reuse data manifests AND the Puffin delete set by reference") {
     val dir = tmp()
     val t = mkV3(dir)
-    t.write(df((1L, "a", "x"), (2L, "b", "x"), (3L, "c", "y")),
+    // one file per partition, so both deletes leave live rows to mask
+    t.write(df((1L, "a", "x"), (2L, "b", "x"), (5L, "e", "x"), (3L, "c", "y")).coalesce(1),
       partitionBy = Seq("part"))
     t.delete(col("id") === 1L)
     def manifestPaths(content: Int): Set[String] =
@@ -2894,7 +2900,7 @@ class IcebergUniformSuite extends AnyFunSuite with SharedSpark {
     }.sum
     assert(decoded == 2L, s"two deleted rows total, got $decoded")
     assert(t.toDF.select("id").collect().map(_.getLong(0)).toSet ==
-      Set(3L, 4L))
+      Set(3L, 4L, 5L))
   }
 
   test("format v3 flip from v2 rewrites the manifest set once, with lineage") {
@@ -2964,7 +2970,8 @@ class IcebergUniformSuite extends AnyFunSuite with SharedSpark {
   test("CONVERT FROM ICEBERG v3: zero-copy — descriptors point into the Puffin file") {
     val dir = tmp()
     val t = mkV3(dir)
-    t.write(df((1L, "a", "x"), (2L, "b", "x"), (3L, "c", "y")),
+    // one file per partition, so the delete leaves live rows to mask
+    t.write(df((1L, "a", "x"), (2L, "b", "x"), (3L, "c", "y")).coalesce(1),
       partitionBy = Seq("part"))
     t.delete(col("id") === 1L)
     t.write(df((4L, "d", "y")), partitionBy = Seq("part"))
@@ -3001,7 +3008,8 @@ class IcebergUniformSuite extends AnyFunSuite with SharedSpark {
   test("re-sync v3: DV changes re-attach zero-copy Puffin descriptors") {
     val dir = tmp()
     val t = mkV3(dir)
-    t.write(df((1L, "a", "x"), (2L, "b", "x"), (3L, "c", "y")),
+    // one file per partition, so the delete leaves live rows to mask
+    t.write(df((1L, "a", "x"), (2L, "b", "x"), (3L, "c", "y")).coalesce(1),
       partitionBy = Seq("part")) // Iceberg snapshot 2 (create was 1)
     t.delete(col("id") === 1L) // snapshot 3: DV appears
     t.write(df((4L, "d", "y")), partitionBy = Seq("part")) // snapshot 4
@@ -3083,7 +3091,8 @@ class IcebergUniformSuite extends AnyFunSuite with SharedSpark {
   test("re-sync v3 carries foreign row lineage; changed files keep their ids") {
     val dir = tmp()
     val t = mkV3(dir)
-    t.write(df((1L, "a", "x"), (2L, "b", "x"), (3L, "c", "y")),
+    // one file per partition, so the delete leaves live rows to mask
+    t.write(df((1L, "a", "x"), (2L, "b", "x"), (3L, "c", "y")).coalesce(1),
       partitionBy = Seq("part")) // Iceberg snapshot 2
     t.delete(col("id") === 1L) // snapshot 3: DV on x's file
     t.write(df((4L, "d", "y")), partitionBy = Seq("part")) // snapshot 4
@@ -3195,7 +3204,8 @@ class IcebergUniformSuite extends AnyFunSuite with SharedSpark {
     val src = tmp()
     val tgt = tmp()
     val t = mkV3(src)
-    t.write(df((1L, "a", "x"), (2L, "b", "x"), (3L, "c", "y")),
+    // one file per partition, so the delete leaves live rows to mask
+    t.write(df((1L, "a", "x"), (2L, "b", "x"), (3L, "c", "y")).coalesce(1),
       partitionBy = Seq("part")) // Iceberg snapshot 2
     t.delete(col("id") === 1L) // snapshot 3: DV
     t.write(df((4L, "d", "y")), partitionBy = Seq("part")) // snapshot 4

@@ -253,10 +253,19 @@ class SnapshotReplaySuite extends AnyFunSuite with SharedSpark {
     def pick(): Option[Long] = Some(liveIds).filter(_.nonEmpty).map(ids => ids(rnd.nextInt(ids.size)))
     step match {
       case Append =>
-        t.write(rows(Seq(next(), next()), s"p${rnd.nextInt(3)}"), SaveMode.Append, Seq("part"))
+        t.write(rows(Seq(next(), next()), s"p${rnd.nextInt(3)}").coalesce(1),
+          SaveMode.Append, Seq("part"))
       case DvDelete =>
         setDv(t, on = true)
-        pick().foreach(id => t.delete(col("id") === id))
+        // deleting a file's last live row removes the file, so the row
+        // comes from a file that keeps another one and thus gets a DV
+        val s = t.deltaLog.update()
+        val shared = s.allFiles.sortBy(_.path).filter(f => t.rowsFromStats(Seq(f)).exists(_ > 1))
+        if (shared.nonEmpty) {
+          val ids = t.readFilesDF(Seq(shared(rnd.nextInt(shared.size))), s.metadata)
+            .select("id").as[Long].collect().sorted
+          t.delete(col("id") === ids(rnd.nextInt(ids.size)))
+        }
       case PlainDelete =>
         setDv(t, on = false)
         pick().foreach(id => t.delete(col("id") === id))

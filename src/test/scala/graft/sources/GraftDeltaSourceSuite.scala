@@ -93,7 +93,8 @@ class GraftDeltaSourceSuite extends AnyFunSuite with SharedSpark {
       schemaString = df.schema.json,
       configuration = Map("delta.enableDeletionVectors" -> "true")))
     txn.commit(Nil, Op.CreateTable)
-    t.write(df, SaveMode.Append)
+    // one file, which keeps live rows, so the delete masks rather than removes it
+    t.write(df.coalesce(1), SaveMode.Append)
     t.delete(col("score") >= 40) // merge-on-read: files keep the rows, DVs hide them
     assert(t.snapshot.dvFiles.nonEmpty, "expected deletion vectors")
     val back = spark.read.format("graft-delta").load(dir)

@@ -192,7 +192,9 @@ class SqlSurfaceSuite extends AnyFunSuite with SharedSpark {
   test("SET/UNSET/SHOW TBLPROPERTIES live in the transaction log") {
     import spark.implicits._
     val dir = tmp()
-    Seq((1L, "a")).toDF("id", "v").write.format("graft-delta").save(dir)
+    // one file with a row the DELETE below keeps, so it is masked, not removed
+    Seq((1L, "a"), (2L, "b")).toDF("id", "v").coalesce(1)
+      .write.format("graft-delta").save(dir)
     spark.sql(s"ALTER TABLE graft.`$dir` SET TBLPROPERTIES (" +
       "'delta.enableDeletionVectors' = 'true', 'delta.clusteringColumns' = 'id')")
     val t = DeltaTable.forPath(spark, dir)

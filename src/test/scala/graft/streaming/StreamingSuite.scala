@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.delta.{DeltaTable, Metadata, Op}
+import graft.delta.{DeltaErrors, DeltaTable, Metadata, Op}
 import graft.testutil.SharedSpark
 
 class StreamingSuite extends AnyFunSuite with SharedSpark {
@@ -533,4 +533,39 @@ class StreamingSuite extends AnyFunSuite with SharedSpark {
       if (e == null) Nil else Option(e.getMessage).toList ++ msgs(e.getCause)
     assert(msgs(ex).exists(_.contains("timestamp or date")), ex.toString)
   }
+
+  test("Complete-mode batch conflicts with an append that lands while it writes") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    import spark.implicits._
+    val dir = Files.createTempDirectory("complete-race").toString
+    val t = DeltaTable.forPath(spark, dir)
+    t.write((0L until 10L).toDF("id"))
+    CompleteModeGate.started = new CountDownLatch(1)
+    CompleteModeGate.release = new CountDownLatch(1)
+    // the batch's one write task parks until the append below has landed
+    val gate = udf { (x: Long) =>
+      CompleteModeGate.started.countDown()
+      CompleteModeGate.release.await(60, TimeUnit.SECONDS)
+      x
+    }.asNondeterministic()
+    val batch = spark.range(100L, 105L, 1L, 1).select(gate(col("id")).as("id"))
+    val replace = Future(t.writeStreamBatch(batch, "complete-app", 0L, overwrite = true))(
+      ExecutionContext.global)
+    try {
+      assert(CompleteModeGate.started.await(60, TimeUnit.SECONDS), "batch write never started")
+      t.write(Seq(42L).toDF("id")) // a blind append, committed mid-batch
+    } finally CompleteModeGate.release.countDown()
+    // the replacement read the whole table, so the append conflicts
+    // instead of surviving a "complete" output
+    intercept[DeltaErrors.ConcurrentAppendException](Await.result(replace, 120.seconds))
+    assert(t.toDF.as[Long].collect().sorted.toSeq == (0L until 10L) :+ 42L)
+  }
+}
+
+/** Latches the Complete-mode race test's UDF reads from its task thread. */
+object CompleteModeGate {
+  @volatile var started = new java.util.concurrent.CountDownLatch(1)
+  @volatile var release = new java.util.concurrent.CountDownLatch(1)
 }
