@@ -66,8 +66,13 @@ object DeletionVectors {
   private val InlineLimit = 256
 
   def descriptor(f: AddFile): Option[DeletionVectorDescriptor] =
-    Option(f.deletionVector).orElse(
-      Option(f.tags).flatMap(t => t.get(PathTag).map(p =>
+    descriptor(f.deletionVector, f.tags)
+
+  /** The descriptor of a file action's `deletionVector` and `tags`. */
+  def descriptor(dv: DeletionVectorDescriptor,
+      tags: Map[String, String]): Option[DeletionVectorDescriptor] =
+    Option(dv).orElse(
+      Option(tags).flatMap(t => t.get(PathTag).map(p =>
         DeletionVectorDescriptor(LegacyParquet, p,
           cardinality = t.getOrElse(CardinalityTag, "0").toLong))))
 

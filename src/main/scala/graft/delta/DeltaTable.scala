@@ -1070,20 +1070,6 @@ class DeltaTable private (val spark: SparkSession, val deltaLog: DeltaLog) {
       operationMetrics = sizeMetrics)
   }
 
-  /** VACUUM: physically delete data files no longer referenced by the
-    * current snapshot and older than the retention window (default from
-    * `delta.deletedFileRetentionDuration` table config). Listing,
-    * reference anti-join and deletion all run on executors — the driver
-    * never holds the file set, so 10^7-file tables don't walk or heap on
-    * the driver (round 1 did both). The report is BOUNDED: an exact
-    * deleted count plus at most `reportLimit` sample paths — a 100-TB
-    * retention sweep can remove 10^7 files, and materializing every path
-    * on the driver (the pre-r9 behavior) is a multi-GB Seq. DRY RUN
-    * deletes nothing and lists what a real run would remove, still
-    * capped at `reportLimit` — pass a larger limit explicitly when a
-    * full audit listing is actually wanted. Time travel before the
-    * vacuumed versions stops working, as in any Delta implementation.
-    */
   /** vacuumProtocolCheck (public table-features spec): a table that
     * lists the feature demands the FULL writer protocol gate before any
     * vacuum touches files — so a legacy client that can't interpret a
@@ -1101,11 +1087,60 @@ class DeltaTable private (val spark: SparkSession, val deltaLog: DeltaLog) {
     if (listed) s.assertProtocolWrite()
   }
 
+  /** VACUUM: physically delete files no version inside the retention
+    * window still needs; see [[sweep]]. Candidates are the table's
+    * `.parquet` files whose mtime is past retention plus the
+    * `_deletion_vectors` sidecars past retention. They come from a
+    * recursive listing run on executors or, given `inventory` (VACUUM
+    * ... USING INVENTORY; columns path, modificationTime, optional
+    * isDir/length), from that table instead: at 10^7 objects the
+    * listing IS the cost of a full vacuum. Inventory entries outside the
+    * table root are dropped, so a malformed inventory cannot reach into
+    * another table. Empty partition directories go too.
+    */
   def vacuum(retentionMillis: Option[Long] = None,
       dryRun: Boolean = false,
       reportLimit: Int = 1000,
-      inventory: Option[DataFrame] = None): VacuumResult = {
+      inventory: Option[DataFrame] = None): VacuumResult =
+    sweep(retentionMillis, dryRun, reportLimit, inventory, lite = false)
+
+  /** VACUUM LITE: the candidates are the files of the snapshot's
+    * tombstones past retention (data files and DV sidecars), each probed
+    * for existence, never a filesystem listing — the tombstone set is
+    * O(removes retained in the log) and ships straight out of the
+    * checkpoint. Untracked orphans from crashed writers still need a
+    * periodic FULL [[vacuum]], the standard LITE trade.
+    */
+  def vacuumLite(retentionMillis: Option[Long] = None,
+      dryRun: Boolean = false,
+      reportLimit: Int = 1000): VacuumResult =
+    sweep(retentionMillis, dryRun, reportLimit, None, lite = true)
+
+  /** The one VACUUM sweep behind [[vacuum]] and [[vacuumLite]], which
+    * differ only in where the `(path, len)` candidates come from.
+    *
+    * Retention (explicit, else `delta.deletedFileRetentionDuration`)
+    * protects every file that a version inside the window can read: the
+    * data files and DV sidecars of live adds and of tombstones whose
+    * `deletionTimestamp` is after the cutoff. A tombstone without a
+    * timestamp protects nothing and never expires. Candidates minus the
+    * protected set are the files to delete; shallow-clone references
+    * outside the table root are never candidates.
+    *
+    * Listing, protection anti-join and deletes all run on executors, so
+    * the driver never holds the file set. A real run persists the
+    * candidates, writes a VACUUM START commit with their exact count
+    * and size, deletes them in one pass and writes a VACUUM END commit
+    * with the deleted count (delta-spark's vacuum audit trail). DRY RUN
+    * runs the same pass without deleting and commits nothing. The
+    * report is bounded: the exact count plus at most `reportLimit`
+    * sample paths. On a table with Iceberg metadata, a run that deleted
+    * files expires the non-current Iceberg snapshots.
+    */
+  private def sweep(retentionMillis: Option[Long], dryRun: Boolean,
+      reportLimit: Int, inventory: Option[DataFrame], lite: Boolean): VacuumResult = {
     import spark.implicits._
+    import org.apache.spark.sql.functions.{coalesce, count, lit, sum}
     val hadoopConf = spark.sessionState.newHadoopConf()
     val fs = deltaLog.dataPath.getFileSystem(hadoopConf)
     val s = snapshot
@@ -1114,309 +1149,130 @@ class DeltaTable private (val spark: SparkSession, val deltaLog: DeltaLog) {
       DeltaConfig.TombstoneRetention.fromMetadata(s.metadata))
     val cutoff = deltaLog.clock.nowMillis - retention
     val rootStr = fs.makeQualified(deltaLog.dataPath).toString
+    val rootPath = new Path(rootStr).toUri.getPath.stripSuffix("/")
     val serConf = new SerializableHadoopConf(hadoopConf)
-    // a UniForm table's Iceberg metadata dir holds position-delete
-    // PARQUET files that no AddFile references — the listing must skip
-    // it or vacuum would destroy the Iceberg view of the table
     val icebergMeta = fs.exists(new Path(
       IcebergMetadata.metadataDir(deltaLog), "version-hint.text"))
+    def referenced(files: DataFrame): Dataset[String] =
+      files.select($"path", $"deletionVector", $"tags")
+        .as[(String, DeletionVectorDescriptor, Map[String, String])]
+        .flatMap { case (p, dv, tags) =>
+          DeltaTable.referencedFiles(rootStr, p, DeletionVectors.descriptor(dv, tags))
+        }
+    val tombstones = s.tombstonesDF
+    val kept = referenced(s.activeFilesDF)
+      .union(referenced(tombstones.where($"deletionTimestamp" > cutoff)))
+      .toDF("p")
 
-    val listed = inventory match {
-      case Some(inv) =>
-        // VACUUM ... USING INVENTORY (delta-spark public surface): the
-        // caller supplies the candidate file listing — typically an
-        // object-store inventory report — instead of a recursive LIST.
-        // At 10^7 objects the listing IS the cost of a full vacuum; an
-        // inventory turns it into a scan of an already-materialized
-        // table. Normalization mirrors the listing path exactly (same
-        // .parquet/hidden-segment filters), plus the LITE containment
-        // guard: entries outside the table root are DROPPED, so a
-        // malformed inventory cannot make vacuum reach into another
-        // table. Expected columns per delta-spark: path,
-        // modificationTime, optional isDir/length.
-        val names = inv.columns.map(_.toLowerCase).toSet
-        require(names.contains("path") && names.contains("modificationtime"),
-          s"inventory must provide path and modificationTime columns, " +
-            s"got ${inv.columns.mkString(", ")}")
-        val files =
-          if (names.contains("isdir")) inv.filter(!inv("isDir")) else inv
-        val rootPathLen = new Path(rootStr).toUri.getPath.stripSuffix("/").length
-        val lenCol =
-          if (names.contains("length")) files("length").cast("long")
-          else org.apache.spark.sql.functions.lit(0L)
-        files
-          .select(files("path").cast("string"),
-            files("modificationTime").cast("long"), lenCol)
-          .as[(String, Long, Long)]
+    val listed: Dataset[(String, Long)] =
+      if (lite)
+        referenced(tombstones.where($"deletionTimestamp" <= cutoff)).distinct()
           .mapPartitions { it =>
-            val root = new Path(rootStr)
-            it.flatMap { case (raw, m, len) =>
-              FileNames.underTableRoot(root, raw).flatMap { abs =>
-                val segs = abs
-                  .substring(math.min(rootPathLen + 1, abs.length)).split("/")
-                if (abs.endsWith(".parquet") &&
-                    !segs.exists(seg =>
-                      seg.startsWith("_") || seg.startsWith(".")) &&
-                    !(icebergMeta && segs.headOption.contains("metadata")))
-                  Some((abs, m, len))
-                else None
-              }
-            }
-          }.toDF("p", "mtime", "len")
-      case None =>
-        // seed tasks with the top-level entries (partition dirs / root
-        // files); recursion happens in parallel on executors
-        val seeds = fs.listStatus(deltaLog.dataPath)
-          .map(_.getPath.getName)
-          .filter(n => !n.startsWith("_") && !n.startsWith(".") &&
-            !(icebergMeta && n == "metadata"))
-          .toSeq
-        if (seeds.isEmpty) return VacuumResult(0L, Nil)
-        spark.createDataset(seeds)
-          .repartition(math.min(seeds.size, 32))
-          .mapPartitions { dirs =>
+            // a tombstone can outlive its file (an earlier full vacuum)
             val f = new Path(rootStr).getFileSystem(serConf.value)
-            dirs.flatMap { d =>
-              val out = Seq.newBuilder[(String, Long, Long)]
-              def walk(p: Path): Unit = f.listStatus(p).foreach { st =>
-                val name = st.getPath.getName
-                if (!name.startsWith("_") && !name.startsWith(".")) {
-                  if (st.isDirectory) walk(st.getPath)
-                  else if (name.endsWith(".parquet"))
-                    out += ((st.getPath.toUri.getPath, st.getModificationTime,
-                      st.getLen))
+            it.flatMap { p =>
+              try Iterator.single((p, f.getFileStatus(new Path(p)).getLen))
+              catch { case _: java.io.FileNotFoundException => Iterator.empty }
+            }
+          }
+      else {
+        val files: Dataset[(String, Long, Long)] = inventory match {
+          case Some(inv) =>
+            val names = inv.columns.map(_.toLowerCase).toSet
+            require(names.contains("path") && names.contains("modificationtime"),
+              s"inventory must provide path and modificationTime columns, " +
+                s"got ${inv.columns.mkString(", ")}")
+            val rows = if (names.contains("isdir")) inv.filter(!inv("isDir")) else inv
+            val len = if (names.contains("length")) rows("length").cast("long") else lit(0L)
+            rows.select(rows("path").cast("string"),
+                rows("modificationTime").cast("long"), len)
+              .as[(String, Long, Long)]
+              .mapPartitions { it =>
+                val root = new Path(rootStr)
+                it.flatMap { case (raw, m, n) =>
+                  FileNames.underTableRoot(root, raw).map(p => (p, m, n))
                 }
               }
-              walk(new Path(rootStr, d))
-              out.result()
-            }
-          }.toDF("p", "mtime", "len")
-    }
-    val active = s.allFilesDS
-      .map(f => FileNames.absolutePath(new Path(rootStr), f.path).toUri.getPath)
-      .toDF("p")
-    val candidates = listed
-      .where($"mtime" <= cutoff)
-      .join(active, Seq("p"), "left_anti")
-      .select($"p", $"len")
-    // orphaned deletion-vector sidecar CANDIDATES, discovered up front
-    // so the START audit commit can account for them — START's
-    // numFilesToDelete and END's numDeletedFiles must agree on a clean
-    // run, and DV sidecars are deleted by this vacuum too. Compaction
-    // materializes DVs and drops their descriptors, leaving the sidecar
-    // files behind; the referenced set comes from the active files'
-    // descriptors, the sweep is a driver listing of one flat dir,
-    // O(deletes since compaction).
-    val dvDir = new Path(deltaLog.dataPath, "_deletion_vectors")
-    val dvCandidates: Seq[org.apache.hadoop.fs.FileStatus] =
-      if (!fs.exists(dvDir)) Nil
-      else {
-        val referenced = s.allFilesDS
-          .flatMap(f => DeletionVectors.descriptor(f).toSeq.map(DeletionVectors.fileName))
-          .collect().toSet
-        fs.listStatus(dvDir).toSeq.filter { st =>
-          st.getModificationTime <= cutoff && !referenced(st.getPath.getName)
+          case None =>
+            // one task per top-level entry, recursing on executors; hidden
+            // dirs are skipped, as nothing under them is sweepable
+            val seeds = fs.listStatus(deltaLog.dataPath).map(_.getPath.getName)
+              .filterNot(DeltaTable.hidden).toSeq
+            spark.createDataset(seeds)
+              .repartition(math.max(1, math.min(seeds.size, 32)))
+              .mapPartitions { dirs =>
+                val f = new Path(rootStr).getFileSystem(serConf.value)
+                dirs.flatMap { d =>
+                  val out = Seq.newBuilder[(String, Long, Long)]
+                  def walk(p: Path): Unit = f.listStatus(p).foreach { st =>
+                    if (!st.isDirectory)
+                      out += ((st.getPath.toUri.getPath, st.getModificationTime, st.getLen))
+                    else if (!DeltaTable.hidden(st.getPath.getName)) walk(st.getPath)
+                  }
+                  walk(new Path(rootStr, d))
+                  out.result()
+                }
+              }
         }
+        // DV sidecars: one flat dir, O(deletes since compaction)
+        val dvDir = new Path(deltaLog.dataPath, DeletionVectors.DvPrefix)
+        val sidecars = if (!fs.exists(dvDir)) Nil else fs.listStatus(dvDir).toSeq
+          .filter(_.getModificationTime <= cutoff)
+          .map(st => (st.getPath.toUri.getPath, st.getLen))
+        files
+          .filter { case (p, m, _) =>
+            m <= cutoff && DeltaTable.sweepable(rootPath, p, icebergMeta) }
+          .map { case (p, _, n) => (p, n) }
+          .union(sidecars.toDS())
       }
-    // VACUUM audit commits (delta-spark's vacuum logging, on by
-    // default): a "VACUUM START" commit with the exact file/byte count
-    // to delete, a "VACUUM END" commit with what was deleted — the
-    // history trail that makes a 100 TB data deletion reviewable.
-    // Logging persists the candidate set (spill-safe) so the listing
-    // still runs ONCE — counted for START, then drained by the delete
-    // pass from cache; with logging off the original single-pass shape
-    // is untouched.
-    val logging = !dryRun &&
-      spark.conf.get("spark.graft.vacuum.logging", "true").toBoolean
-    if (logging) {
-      import org.apache.spark.sql.functions.{coalesce, count, lit, sum}
+    val candidates = listed.toDF("p", "len").join(kept, Seq("p"), "left_anti")
+
+    val doDelete = !dryRun
+    if (doDelete) {
       candidates.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val r = candidates.agg(count(lit(1)), coalesce(sum($"len"), lit(0L))).head()
       deltaLog.startTransaction().commit(Nil, Op.VacuumStart,
         operationParameters = Map(
           "retentionMillis" -> retention.toString,
-          "specifiedRetention" -> retentionMillis.nonEmpty.toString),
+          "specifiedRetention" -> retentionMillis.nonEmpty.toString) ++
+          (if (lite) Map("lite" -> "true") else Map.empty),
         operationMetrics = Map(
-          "numFilesToDelete" -> (r.getLong(0) + dvCandidates.size).toString,
-          "sizeOfDataToDelete" ->
-            (r.getLong(1) + dvCandidates.map(_.getLen).sum).toString))
+          "numFilesToDelete" -> r.getLong(0).toString,
+          "sizeOfDataToDelete" -> r.getLong(1).toString))
     }
-    // exact count + bounded sample in ONE listing job, never the full
-    // path set: each task returns (its count, ≤reportLimit local sample);
-    // the driver holds O(tasks × reportLimit) strings worst-case, trimmed
-    // below. DRY RUN shares the shape minus the delete — running the
-    // recursive object-store listing twice (count then take) would double
-    // the most expensive part of a dry run on a large table.
-    val doDelete = !dryRun
-    val (deletedCount, deletedSample) = {
-      val perTask = candidates.select($"p").as[String].mapPartitions { it =>
-        val f = if (doDelete) new Path(rootStr).getFileSystem(serConf.value) else null
-        var n = 0L
-        val sample = Seq.newBuilder[String]
-        var sampled = 0
-        it.foreach { p =>
-          if (!doDelete || f.delete(new Path(p), false)) {
-            n += 1
-            if (sampled < reportLimit) { sample += p; sampled += 1 }
-          }
-        }
-        Iterator.single((n, sample.result()))
-      }.collect()
-      (perTask.map(_._1).sum, perTask.iterator.flatMap(_._2).take(reportLimit).toSeq)
-    }
-
-    // delete the DV sidecar candidates discovered before START
-    val dvDeleted: Seq[String] = dvCandidates
-      .filter(st => dryRun || fs.delete(st.getPath, false))
-      .map(_.getPath.toUri.getPath)
-
-    // empty partition directories: dirs are O(partitions), not O(files) —
-    // a driver sweep is fine (object stores have no real dirs anyway)
-    def sweep(dir: Path): Unit = {
-      fs.listStatus(dir).foreach { st =>
-        if (st.isDirectory && !st.getPath.getName.startsWith("_")) {
-          sweep(st.getPath)
-          if (fs.listStatus(st.getPath).isEmpty) fs.delete(st.getPath, false)
-        }
-      }
-    }
-    if (!dryRun) sweep(deltaLog.dataPath)
-    if (logging) {
-      candidates.unpersist()
-      deltaLog.startTransaction().commit(Nil, Op.VacuumEnd,
-        operationParameters = Map("status" -> "COMPLETED"),
-        operationMetrics = Map(
-          "numDeletedFiles" -> (deletedCount + dvDeleted.size).toString))
-    }
-    if (!dryRun && deletedCount > 0 && icebergMeta) expireIcebergSnapshots()
-    VacuumResult(deletedCount + dvDeleted.size,
-      (deletedSample ++ dvDeleted).take(reportLimit))
-  }
-
-  /** VACUUM LITE — the log-driven sweep. The candidate set is the
-    * snapshot's reconciled tombstones past retention, NOT a filesystem
-    * listing: at 10^7 files the recursive object-store listing IS the
-    * cost of a full vacuum, while the tombstone set is O(removes
-    * retained in the log) and ships straight out of the checkpoint.
-    * Covers exactly the files the log knows it removed (a re-added path
-    * has an add as its newest action, so reconciliation excludes it);
-    * untracked orphans from crashed writers still need a periodic FULL
-    * [[vacuum]] — the standard LITE trade. Deletes run on executors with
-    * a bounded report, like the full sweep.
-    */
-  def vacuumLite(retentionMillis: Option[Long] = None,
-      dryRun: Boolean = false,
-      reportLimit: Int = 1000): VacuumResult = {
-    import spark.implicits._
-    val hadoopConf = spark.sessionState.newHadoopConf()
-    val fs = deltaLog.dataPath.getFileSystem(hadoopConf)
-    val s = snapshot
-    assertVacuumProtocol(s)
-    val retention = retentionMillis.getOrElse(
-      DeltaConfig.TombstoneRetention.fromMetadata(s.metadata))
-    val cutoff = deltaLog.clock.nowMillis - retention
-    val rootStr = fs.makeQualified(deltaLog.dataPath).toString
-    val serConf = new SerializableHadoopConf(hadoopConf)
-    val doDelete = !dryRun
-    val expired = s.tombstonesDF
-      .where($"deletionTimestamp".isNotNull && $"deletionTimestamp" <= cutoff)
-    // Guard: resolve each tombstone against the table root and DROP any
-    // that land outside it. A shallow clone's removes reference the
-    // SOURCE table's files by absolute URI; deleting through them would
-    // be cross-table data loss. The full vacuum is structurally immune
-    // (its candidates come from listing this table's directory) — LITE
-    // must enforce the same containment explicitly.
-    val candidates = expired
-      .select($"path").as[String]
-      .mapPartitions { it =>
-        val root = new Path(rootStr)
-        it.flatMap(p => FileNames.underTableRoot(root, p))
-      }
-    // DV sidecars are log-derived too: payload files referenced only by
-    // expired tombstone descriptors can go; a packed sidecar shared with
-    // any live descriptor stays (the referenced-set check). Discovered
-    // (with sizes) BEFORE the audit commits so START can account for them.
-    val live = s.allFilesDS
-      .flatMap(f => DeletionVectors.descriptor(f).toSeq.map(DeletionVectors.fileName))
-      .collect().toSet
-    val dvCandidates: Seq[(Path, Long)] = expired.as[RemoveFile]
-      .flatMap(r => Option(r.deletionVector).toSeq.map(DeletionVectors.fileName))
-      .collect().toSeq.distinct
-      .filter(n => n.nonEmpty && !live(n))
-      .map(n => new Path(new Path(deltaLog.dataPath, "_deletion_vectors"), n))
-      .flatMap(p =>
-        try Seq((p, fs.getFileStatus(p).getLen))
-        catch { case _: java.io.FileNotFoundException => Nil })
-
-    // VACUUM START/END audit commits, same trail as the FULL sweep (the
-    // bracketing history that makes a 100 TB deletion reviewable; DRY
-    // RUN writes neither). A tombstone can outlive its file (earlier
-    // full vacuum), so START's exact to-delete set needs one existence
-    // probe per candidate — the probed (path, len) set persists and the
-    // delete pass drains it from cache, so the log-derived single-pass
-    // shape is kept (probe + delete, never probe + probe + delete).
-    val logging = !dryRun &&
-      spark.conf.get("spark.graft.vacuum.logging", "true").toBoolean
-    val toDelete = candidates.mapPartitions { it =>
-      val f = new Path(rootStr).getFileSystem(serConf.value)
-      it.flatMap { p =>
-        try Iterator.single((p, f.getFileStatus(new Path(p)).getLen))
-        catch { case _: java.io.FileNotFoundException => Iterator.empty }
-      }
-    }
-    if (logging) {
-      import org.apache.spark.sql.functions.{coalesce, count, lit, sum}
-      toDelete.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val r = toDelete.toDF("p", "len")
-        .agg(count(lit(1)), coalesce(sum($"len"), lit(0L))).head()
-      deltaLog.startTransaction().commit(Nil, Op.VacuumStart,
-        operationParameters = Map(
-          "retentionMillis" -> retention.toString,
-          "specifiedRetention" -> retentionMillis.nonEmpty.toString,
-          "lite" -> "true"),
-        operationMetrics = Map(
-          "numFilesToDelete" -> (r.getLong(0) + dvCandidates.size).toString,
-          "sizeOfDataToDelete" ->
-            (r.getLong(1) + dvCandidates.map(_._2).sum).toString))
-    }
-    // with logging OFF the delete pass runs over the raw candidate set
-    // (delete's own return value is the existence probe — one FS op per
-    // file, the pre-audit shape); with logging ON it drains the cached
-    // probed set
-    val deleteSrc = if (logging) toDelete else candidates.map(p => (p, 0L))
-    val perTask = deleteSrc.mapPartitions { it =>
-      val f = new Path(rootStr).getFileSystem(serConf.value)
+    // exact count + bounded sample in one pass: each task returns its
+    // count and ≤reportLimit sample paths, trimmed on the driver
+    val perTask = candidates.select($"p").as[String].mapPartitions { it =>
+      val f = if (doDelete) new Path(rootStr).getFileSystem(serConf.value) else null
       var n = 0L
       val sample = Seq.newBuilder[String]
       var sampled = 0
-      it.foreach { case (p, _) =>
-        val path = new Path(p)
-        val hit = if (doDelete) f.delete(path, false) else f.exists(path)
-        if (hit) {
+      it.foreach { p =>
+        if (!doDelete || f.delete(new Path(p), false)) {
           n += 1
           if (sampled < reportLimit) { sample += p; sampled += 1 }
         }
       }
       Iterator.single((n, sample.result()))
     }.collect()
-    if (logging) toDelete.unpersist()
     val deletedCount = perTask.map(_._1).sum
-    val deletedSample = perTask.iterator.flatMap(_._2).take(reportLimit).toSeq
 
-    val dvDeleted = dvCandidates
-      .filter { case (p, _) => dryRun || fs.delete(p, false) }
-      .map(_._1.toUri.getPath)
-
-    if (logging)
+    if (doDelete) {
+      // empty partition dirs, O(partitions): LITE never lists
+      def dropEmptyDirs(dir: Path): Unit = fs.listStatus(dir).foreach { st =>
+        if (st.isDirectory && !st.getPath.getName.startsWith("_")) {
+          dropEmptyDirs(st.getPath)
+          if (fs.listStatus(st.getPath).isEmpty) fs.delete(st.getPath, false)
+        }
+      }
+      if (!lite) dropEmptyDirs(deltaLog.dataPath)
+      candidates.unpersist()
       deltaLog.startTransaction().commit(Nil, Op.VacuumEnd,
         operationParameters = Map("status" -> "COMPLETED"),
-        operationMetrics = Map(
-          "numDeletedFiles" -> (deletedCount + dvDeleted.size).toString))
-    if (!dryRun && deletedCount > 0 && fs.exists(new Path(
-        IcebergMetadata.metadataDir(deltaLog), "version-hint.text")))
-      expireIcebergSnapshots()
-    VacuumResult(deletedCount + dvDeleted.size,
-      (deletedSample ++ dvDeleted).take(reportLimit))
+        operationMetrics = Map("numDeletedFiles" -> deletedCount.toString))
+      if (deletedCount > 0 && icebergMeta) expireIcebergSnapshots()
+    }
+    VacuumResult(deletedCount, perTask.iterator.flatMap(_._2).take(reportLimit).toSeq)
   }
 
   /** After a VACUUM deleted files under a table with a `metadata/` dir:
@@ -2765,6 +2621,33 @@ object DeltaTable {
   private[delta] def lineage(id: Column, rcv: Column): Seq[Column] =
     Seq(id.cast("long").as(RowTracking.MatRowId),
       rcv.cast("long").as(RowTracking.MatRowCommitVersion))
+
+  /** Slash paths of the files inside the qualified table `root` that a
+    * file action references: its data file and its DV payload file.
+    * References outside the root (a shallow clone's) are dropped.
+    */
+  private def referencedFiles(root: String, path: String,
+      dv: Option[DeletionVectorDescriptor]): Seq[String] = {
+    val qualified = new Path(root)
+    val sidecar = dv.filter(_.storageType != "i")
+      .map(d => DeletionVectors.absolutePathOf(qualified, d).toUri.toString)
+    (Seq(path) ++ sidecar).flatMap(FileNames.underTableRoot(qualified, _))
+  }
+
+  private def hidden(name: String): Boolean =
+    name.startsWith("_") || name.startsWith(".")
+
+  /** VACUUM's rule for a listed or inventoried file `abs` under the
+    * table root's slash path: a `.parquet` file under no `_`- or
+    * `.`-prefixed segment and, on a table with Iceberg metadata, not
+    * under `metadata/` (its position-delete parquet files are
+    * referenced by no AddFile).
+    */
+  private def sweepable(rootPath: String, abs: String, icebergMeta: Boolean): Boolean = {
+    val segs = abs.substring(math.min(rootPath.length + 1, abs.length)).split("/")
+    abs.endsWith(".parquet") && !segs.exists(hidden) &&
+      !(icebergMeta && segs.headOption.contains("metadata"))
+  }
 
   /** `f` as a shallow clone references it: by absolute URI under the
     * source's qualified `root`. DV payloads stay in the SOURCE table's

@@ -919,16 +919,12 @@ case class GraftClusterByCommand(target: SqlTarget,
   * unfiltered COUNT(1), the child may contain only column-pruning
   * Projects above the relation (any Filter/Join/etc. bails), and EVERY
   * file must carry numRecords stats — one stats-less file falls back to
-  * the scan rather than guessing. Disable with
-  * `spark.graft.metadataOnlyCount=false`.
+  * the scan rather than guessing.
   */
 class GraftMetadataOnlyCountRule(spark: SparkSession) extends Rule[LogicalPlan] {
   import org.apache.spark.sql.catalyst.expressions.{Alias, Literal}
   import org.apache.spark.sql.catalyst.expressions.aggregate.{
     AggregateExpression, Complete, Count}
-
-  private def enabled: Boolean =
-    spark.conf.get("spark.graft.metadataOnlyCount", "true").toBoolean
 
   private sealed trait MetaAgg
   private case object MetaCount extends MetaAgg
@@ -1058,7 +1054,6 @@ class GraftMetadataOnlyCountRule(spark: SparkSession) extends Rule[LogicalPlan] 
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!enabled) return plan
     plan.transformDown {
       case a: Aggregate
           if a.groupingExpressions.isEmpty &&

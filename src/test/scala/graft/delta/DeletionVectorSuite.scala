@@ -193,6 +193,23 @@ class DeletionVectorSuite extends AnyFunSuite with SharedSpark {
     assert(t.toDF.agg(min($"id")).head().getLong(0) == 500L)
   }
 
+  test("VACUUM keeps a DV sidecar that only an unexpired tombstone references") {
+    import spark.implicits._
+    val t = dvBigTable()
+    val v1 = t.delete(col("id") < 500) // payload file
+    val sidecar = DeletionVectors.absolutePathOf(t.deltaLog.dataPath,
+      DeletionVectors.descriptor(dvFiles(t).head).get)
+    val fs = t.deltaLog.dataPath.getFileSystem(spark.sessionState.newHadoopConf())
+    // written a month ago; the second DELETE empties the file, so its
+    // remove carries the first DV and nothing live references the sidecar
+    fs.setTimes(sidecar, System.currentTimeMillis() - 30L * 86400000L, -1L)
+    t.delete(col("id") >= 500)
+    assert(t.snapshot.allFiles.isEmpty)
+    t.vacuum()
+    assert(fs.exists(sidecar), "VACUUM deleted the DV of a fresh tombstone")
+    assert(t.toDF(v1).select("id").as[Long].collect().sorted.toSeq == (500L until 1000L))
+  }
+
   test("first DV delete upgrades the protocol to reader 3 / writer 7 + feature") {
     val t = dvTable()
     val before = t.snapshot.protocol

@@ -706,12 +706,6 @@ class DeltaSuite extends AnyFunSuite with SharedSpark {
       .contains(res.deletedCount.toString), end.operationMetrics.toString)
     assert(end.operationParameters.get("status").contains("COMPLETED"))
     assert(t.deltaLog.update().version == v1 + 2)
-    // logging can be disabled: single-pass shape, zero commits
-    val v3 = t.deltaLog.update().version
-    spark.conf.set("spark.graft.vacuum.logging", "false")
-    try t.vacuum(Some(0))
-    finally spark.conf.unset("spark.graft.vacuum.logging")
-    assert(t.deltaLog.update().version == v3)
   }
 
   test("OPTIMIZE rewrites all partitions in one Spark pass, not one job each") {

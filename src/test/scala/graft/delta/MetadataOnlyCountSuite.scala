@@ -160,11 +160,5 @@ class MetadataOnlyCountSuite extends AnyFunSuite with SharedSpark {
     val grouped = base.groupBy(col("g")).count()
     assert(!optimizedPlan(grouped).contains("LocalRelation"))
     assert(grouped.count() == 5)
-    spark.conf.set("spark.graft.metadataOnlyCount", "false")
-    try {
-      val off = base.groupBy().count()
-      assert(!optimizedPlan(off).contains("LocalRelation"))
-      assert(off.head().getLong(0) == 50L)
-    } finally spark.conf.set("spark.graft.metadataOnlyCount", "true")
   }
 }

@@ -129,6 +129,30 @@ class VacuumInventorySuite extends AnyFunSuite with SharedSpark {
     assert(ex.getMessage.contains("INVENTORY"))
   }
 
+  test("retention keeps a file an unexpired tombstone references, listed or inventoried") {
+    // a file written long ago and removed just now: its mtime is past the
+    // default 1-week retention but its tombstone is not, so time travel
+    // to the version before the removal must keep reading it
+    def aged(dir: String): (DeltaTable, Seq[java.io.File]) = {
+      val t = DeltaTable.forPath(spark, dir)
+      t.write(sampleDF, SaveMode.Append)                             // v0
+      val old = t.snapshot.allFiles.map(f => new java.io.File(dir, f.path))
+      val monthAgo = System.currentTimeMillis() - 30L * 86400000L
+      old.foreach(f => assert(f.setLastModified(monthAgo)))
+      t.write(sampleDF.filter(col("id") <= 2), SaveMode.Overwrite)   // v1
+      (t, old)
+    }
+    val (tList, oldList) = aged(tmp())
+    tList.vacuum()
+    assert(oldList.forall(_.exists()), "listing VACUUM deleted a file of a fresh tombstone")
+    assert(tList.toDF(0).collect().length == 5)
+    val dirInv = tmp()
+    val (tInv, oldInv) = aged(dirInv)
+    tInv.vacuum(inventory = Some(inventoryOf(dirInv)))
+    assert(oldInv.forall(_.exists()), "inventory VACUUM deleted a file of a fresh tombstone")
+    assert(tInv.toDF(0).collect().length == 5)
+  }
+
   test("inventory missing required columns is rejected") {
     val dir = tmp()
     val t = seeded(dir)

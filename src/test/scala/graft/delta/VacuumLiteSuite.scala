@@ -176,6 +176,53 @@ class VacuumLiteSuite extends AnyFunSuite with SharedSpark {
       (st3.operationMetrics, en3.operationMetrics).toString)
   }
 
+  test("LITE keeps a packed DV sidecar an unexpired tombstone still shares") {
+    import spark.implicits._
+    val dir = tmp()
+    val t = DeltaTable.forPath(spark, dir)
+    val df = spark.range(0, 2000).select($"id", ($"id" % 2).as("half"))
+    val txn = t.deltaLog.startTransaction()
+    txn.updateMetadata(Metadata(schemaString = df.schema.json,
+      partitionColumns = Seq("half"),
+      configuration = Map("delta.enableDeletionVectors" -> "true")))
+    txn.commit(Nil, Op.CreateTable)
+    t.write(df.coalesce(1), SaveMode.Append, Seq("half")) // one file per half
+    // one shuffle partition: both files' DVs pack into one payload file
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    try t.delete(col("id") % 4 < 2)
+    finally spark.conf.unset("spark.sql.shuffle.partitions")
+    val Seq(a, b) = t.snapshot.allFiles.sortBy(_.path)
+    val sidecars = Seq(a, b).map(f =>
+      DeletionVectors.absolutePathOf(t.deltaLog.dataPath, DeletionVectors.descriptor(f).get))
+    assert(sidecars.distinct.size == 1, s"expected one packed sidecar: $sidecars")
+    // a's tombstone is a month old, b's is fresh
+    val now = System.currentTimeMillis()
+    t.deltaLog.startTransaction().commit(Seq(a.remove(now - 30L * 86400000L)), Op.Delete)
+    val vOnlyB = t.deltaLog.update().version
+    t.deltaLog.startTransaction().commit(Seq(b.remove(now)), Op.Delete)
+    val res = t.vacuumLite()
+    assert(res.deletedCount == 1, s"only a's data file is expired: ${res.sample}")
+    val fs = t.deltaLog.dataPath.getFileSystem(spark.sessionState.newHadoopConf())
+    assert(fs.exists(sidecars.head), "LITE deleted a sidecar a fresh tombstone shares")
+    assert(t.toDF(vOnlyB).collect().length == 500)
+  }
+
+  test("full and LITE VACUUM on a never-written table each write START and END") {
+    val t = DeltaTable.forPath(spark, tmp())
+    val txn = t.deltaLog.startTransaction()
+    txn.updateMetadata(Metadata(schemaString = sampleDF.schema.json))
+    txn.commit(Nil, Op.CreateTable)
+    def ops(from: Long): Seq[String] =
+      ((from + 1) to t.deltaLog.update().version).flatMap(v =>
+        t.deltaLog.commitInfoAt(v).map(_.operation))
+    val v0 = t.deltaLog.update().version
+    assert(t.vacuum(Some(0L)).deletedCount == 0)
+    assert(ops(v0) == Seq(Op.VacuumStart, Op.VacuumEnd), ops(v0))
+    val v2 = t.deltaLog.update().version
+    assert(t.vacuumLite(Some(0L)).deletedCount == 0)
+    assert(ops(v2) == Seq(Op.VacuumStart, Op.VacuumEnd), ops(v2))
+  }
+
   test("LITE leaves a foreign Iceberg metadata dir (adopted in place) untouched") {
     val dir = tmp()
     val uni = DeltaTable.forPath(spark, dir)
